@@ -102,6 +102,92 @@ object Checks {
     fact.join(dim, factKey === dimKey, "left")
       .filter(dimKey.isNull)
 
+  /** The post-publish Stage-5 sweep of [[graft.Pipeline.runAll]]
+    * (reference SQL:1616-1783), fused into three actions instead of
+    * one `count()` per check: [[factSweep]], [[dimSweep]] and
+    * [[dateSweep]]. Each returns exactly the counts the per-check
+    * functions above give when counted one by one (pinned by
+    * `SweepParitySpec`); the three are independent of each other, so
+    * a caller may run them concurrently.
+    *
+    * The fact sweep: `ref_<dim>` per entry of `dims` (stored
+    * non-Unknown surrogates that resolve to no `<dim>_id`, the
+    * reference's soft referential integrity, SQL:1746-1783) and
+    * `dup_fact_nk` (duplicate `sales_nk` groups), in one pass. Each
+    * dimension's id side is made distinct before the probe, so a
+    * duplicated surrogate id cannot fan a fact row out into a false
+    * duplicate. */
+  def factSweep(fact: DataFrame, dims: Seq[(String, DataFrame)]): Map[String, Long] = {
+    val probed = dims.foldLeft(fact.select(
+        (col("sales_nk") +: dims.map { case (d, _) => col(s"${d}_sk") }): _*)) {
+      case (f, (d, dim)) =>
+        val ids = dim.select(col(s"${d}_id").as("__id")).distinct()
+        f.join(ids, col(s"${d}_sk") === col("__id"), "left")
+          .withColumn(s"ref_$d", flag(col(s"${d}_sk") =!= -1L && col("__id").isNull))
+          .drop("__id", s"${d}_sk")
+    }
+    val refs = dims.map { case (d, _) => s"ref_$d" }
+    val perKey = probed.groupBy(col("sales_nk")).agg(count(lit(1)).as("__n"),
+      refs.map(r => sum(col(r)).as(r)): _*)
+    totals(perKey, flag(col("__n") > 1L).as("dup_fact_nk") +: refs.map(col))
+  }
+
+  /** The SCD2 sweep over `dims` = (name, natural key, table), as ONE
+    * window over their union keyed by (dimension, natural key):
+    * `multi_current_<name>` ([[multipleCurrent]]),
+    * `null_validity_<name>` ([[nullValidity]]) and `overlaps_<name>`
+    * ([[overlaps]] with the `active_to` tiebreak: versions can share
+    * an `active_from` — two changes at one timestamp give a zero-width
+    * version — and end-ordering puts the zero-width interval first so
+    * overlap-free chains never flag spuriously). Natural keys are
+    * compared as strings so dimensions with different key types can
+    * share the window; the cast is injective for the integral and
+    * string keys the warehouse uses. */
+  def dimSweep(dims: Seq[(String, String, DataFrame)]): Map[String, Long] = {
+    val all = dims.map { case (name, nk, dim) =>
+      dim.select(lit(name).as("__dim"), col(nk).cast("string").as("__nk"),
+        col("is_current"), col("active_from"), col("active_to"))
+    }.reduce(_ unionByName _)
+    val w = Window.partitionBy(col("__dim"), col("__nk"))
+      .orderBy(col("active_from").asc, col("active_to").asc)
+    val perKey = all.withColumn("__next_from", lead(col("active_from"), 1).over(w))
+      .groupBy(col("__dim"), col("__nk")).agg(
+        sum(flag(col("is_current") === 1L)).as("__current"),
+        sum(flag(col("active_from").isNull || col("active_to").isNull)).as("null_validity"),
+        sum(flag(col("__next_from").isNotNull &&
+          col("active_to") > col("__next_from"))).as("overlaps"))
+    val perDim = perKey.groupBy(col("__dim")).agg(
+        sum(flag(col("__current") > 1L)).as("multi_current"),
+        sum(col("null_validity")).as("null_validity"),
+        sum(col("overlaps")).as("overlaps"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    dims.flatMap { case (name, _, _) =>
+      Seq("multi_current", "null_validity", "overlaps").map(check =>
+        s"${check}_$name" -> perDim.get(name).map(_.getAs[Long](check)).getOrElse(0L))
+    }.toMap
+  }
+
+  /** The date-dimension sweep: its row count (`dim_date_rows`, not a
+    * violation) and `dup_date` (duplicate `date_value` groups, as
+    * [[duplicates]] counts them) in one pass. */
+  def dateSweep(dimDate: DataFrame): Map[String, Long] =
+    totals(dimDate.groupBy(col("date_value")).agg(count(lit(1)).as("__n")),
+      Seq(col("__n").as("dim_date_rows"), flag(col("__n") > 1L).as("dup_date")))
+
+  /** 1 where `cond` holds, else 0 (NULL counts as not holding, as in
+    * the filters of the per-check functions). */
+  private def flag(cond: Column): Column = when(cond, 1L).otherwise(0L)
+
+  /** Sum each named column of `df` into one driver-side row; an empty
+    * input sums to 0. */
+  private def totals(df: DataFrame, cols: Seq[Column]): Map[String, Long] = {
+    val named = df.select(cols: _*)
+    val row = named.agg(sum(col(named.columns.head)),
+      named.columns.tail.map(c => sum(col(c))): _*).first()
+    named.columns.zipWithIndex.map { case (c, i) =>
+      c -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }.toMap
+  }
+
   /** Pre-publish validation gate — the reference author's production
     * note ("checks should be in the pipeline and stop each stage on
     * error", SQL:1622): invariants run against the CANDIDATE frame,

@@ -100,23 +100,28 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
         if (inserted == 0L) None
         else Option(stats.getAs[LocalDateTime](1))
 
-      val existing: Option[DataFrame] =
-        if (pathExists(spark, dimPath)) Some(spark.read.parquet(dimPath))
-        else None
-
       // third element: the touched-NK scope for the pre-publish gate
       // (None = initial load, everything is new → validate all)
-      val keyed: Option[(DataFrame, Long, Option[DataFrame])] = existing match {
-        case None =>
+      val keyed: Option[(DataFrame, Long, Option[DataFrame])] =
+        if (!pathExists(spark, dimPath))
           Some((Scd2.withSurrogate(derive(deltaRows), skCol, identityCols),
             0L, None))
-        case Some(dim) =>
+        // no-op rerun with no snapshot to diff against: nothing can be
+        // touched, so neither the dimension nor the feed is scanned
+        else if (inserted == 0L && snapshotKeys.isEmpty) None
+        else {
+          val dim = spark.read.parquet(dimPath)
+          // an empty delta contributes no keys and no rows, so it is
+          // not scanned again; rows landing after the stats scan are
+          // re-read next run (J38)
+          val newRows = if (inserted == 0L) deltaRows.limit(0) else deltaRows
           // 3. recompute scope: keys with new versions or deletions
-          val deltaKeys = deltaRows.select(col(nk)).distinct()
+          val deltaKeys = newRows.select(col(nk)).distinct()
           val goneKeys = snapshotKeys match {
+            // no distinct on either side: `touched` dedups once below
             case Some(snap) => dim.filter(col("is_current") === 1L)
-              .select(col(nk)).distinct()
-              .join(snap.select(col(nk)).distinct(), Seq(nk), "left_anti")
+              .select(col(nk))
+              .join(snap.select(col(nk)), Seq(nk), "left_anti")
             case None => deltaKeys.limit(0)
           }
           val touched = deltaKeys.unionByName(goneKeys).distinct()
@@ -125,7 +130,7 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
             val untouched = dim.join(touched, Seq(nk), "left_anti")
             val touchedHistory = dim.select(attrs.map(col): _*)
               .join(touched, Seq(nk), "left_semi")
-              .unionByName(deltaRows)
+              .unionByName(newRows)
             val recomputed = derive(touchedHistory)
             // 4. stable surrogates: reuse by version identity,
             // append new versions after the existing max
@@ -155,7 +160,7 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
             Some((untouched.unionByName(kept.unionByName(fresh)), updated,
               Some(touched)))
           }
-      }
+        }
 
       keyed match {
         case None =>

@@ -1,5 +1,7 @@
 package graft.ext
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -31,28 +33,46 @@ object Pin {
   val ConfKey = "spark.graft.pin.storage"
 
   private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Names this JVM's dumps, so a later run writing to the same
+    * directory cannot overwrite an earlier run's evidence. */
+  private lazy val dumpRun: String =
+    f"${System.currentTimeMillis()}%x-${ProcessHandle.current().pid()}"
 
   /** Opt-in plan-evidence hook (round 13): when
     * `SPARK_GRAFT_PIN_EXPLAIN_DIR` names a directory, every pin
     * writes the formatted plan of the relation it is about to
-    * materialize there as `pin_NNNN.txt`. This is the only window
+    * materialize there as `pin_<run>_NNNN.txt`, `<run>` naming the
+    * JVM (clock at its first dump, hex, and pid). This is the only window
     * onto the iterating families' MID-LOOP round plans — each
     * round's expansion join is planned and executed inside the loop
     * and hides behind its checkpoint in the declared query's final
     * plan, so `ExplainDump` can never show whether the cached
     * adjacency side actually joins exchange-free. Off by default;
-    * one env read per pin when unset. */
+    * one env read per pin when unset. A dump that fails (say, an
+    * unwritable directory) is reported on stderr and skipped: the
+    * hook never fails the pin it observes. */
   private def dumpPlan(df: DataFrame): DataFrame = {
-    sys.env.get("SPARK_GRAFT_PIN_EXPLAIN_DIR").foreach { dir =>
-      val d = new java.io.File(dir)
-      d.mkdirs()
-      val w = new java.io.PrintWriter(new java.io.File(d,
-        f"pin_${dumpSeq.getAndIncrement()}%04d.txt"), "UTF-8")
+    sys.env.get("SPARK_GRAFT_PIN_EXPLAIN_DIR").foreach(dumpPlanTo(df, _))
+    df
+  }
+
+  /** Writes `df`'s formatted plan into `dir`; the file written, or
+    * None when the dump failed. */
+  private[graft] def dumpPlanTo(df: DataFrame, dir: String): Option[java.io.File] = {
+    val f = new java.io.File(dir,
+      f"pin_${dumpRun}_${dumpSeq.getAndIncrement()}%04d.txt")
+    try {
+      f.getParentFile.mkdirs()
+      val w = new java.io.PrintWriter(f, "UTF-8")
       try w.println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
       finally w.close()
+      Some(f)
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[pin] plan dump $f skipped: $e")
+        None
     }
-    df
   }
 
   def pin(df0: DataFrame): DataFrame = {

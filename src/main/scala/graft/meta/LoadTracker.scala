@@ -2,6 +2,8 @@ package graft.meta
 
 import java.time.LocalDateTime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -19,18 +21,35 @@ import org.apache.spark.sql.types._
   * one sanctioned driver-side materialization (SURVEY §7.6); the
   * watermark is then injected into source scans as a literal so
   * Parquet predicate pushdown prunes row groups at any scale.
+  *
+  * An instance reads the table ONCE, on first use, with the declared
+  * [[LoadTracker.schema]] (no schema-inference job), and afterwards
+  * serves watermarks from its in-memory copy; [[advance]] rewrites the
+  * table from that copy. This is sound under the single-writer
+  * assumption [[StagedWrite]] already documents: nothing but this
+  * instance writes the table while it lives. `Pipeline.runAll` makes
+  * one instance per run, so a run reads the tracker once instead of
+  * twice per load. A writer that may race another process must make a
+  * fresh instance per load. Not final: a test substitutes a tracker
+  * whose [[advance]] fails, to crash a load between publish and
+  * advance.
   */
-final class LoadTracker(spark: SparkSession, path: String) {
+class LoadTracker(spark: SparkSession, path: String) {
   import LoadTracker._
 
-  def read(): Map[String, LocalDateTime] = {
+  private var state: Option[Map[String, LocalDateTime]] = None
+
+  def read(): Map[String, LocalDateTime] = state.getOrElse {
     // heal a crashed publish first: without this, a tracker that died
     // between rename-aside and rename-in reads as "no tracker" and
     // every watermark silently resets to 1900 (full reload)
     StagedWrite.recover(spark, path)
-    if (!exists()) Map.empty
-    else spark.read.parquet(path).collect()
-      .map(r => r.getString(0) -> r.getAs[LocalDateTime](1)).toMap
+    val loaded =
+      if (!exists()) Map.empty[String, LocalDateTime]
+      else spark.read.schema(schema).parquet(path).collect()
+        .map(r => r.getString(0) -> r.getAs[LocalDateTime](1)).toMap
+    state = Some(loaded)
+    loaded
   }
 
   /** Data watermark for `table`, seeded to 1900-01-01 (SQL:252-255). */
@@ -39,16 +58,18 @@ final class LoadTracker(spark: SparkSession, path: String) {
 
   /** Advance after a successful load. `dataWatermark=None` means the
     * delta was empty: bump only the execution clock (SQL:643-651
-    * `IF @lastedit IS NOT NULL`). */
+    * `IF @lastedit IS NOT NULL`). The in-memory copy moves only after
+    * the publish commits. */
   def advance(table: String, dataWatermark: Option[LocalDateTime]): Unit = {
     val now = LocalDateTime.now()
     val cur = read()
-    val nextLoad = dataWatermark.getOrElse(cur.getOrElse(table, Epoch))
-    val rows = (cur - table).toSeq.map { case (k, v) => (k, v) } :+ (table -> nextLoad)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (k, v) => Row(k, v, now) }, 1),
-      schema)
-    StagedWrite.overwrite(df, path)
+    val next = cur + (table -> dataWatermark.getOrElse(cur.getOrElse(table, Epoch)))
+    // LocalRelation, not parallelize: rewriting a handful of rows
+    // should not schedule an RDD job beyond the write itself
+    val rows = next.toSeq.map { case (k, v) => Row(k, v, now) }
+    StagedWrite.overwrite(
+      spark.createDataFrame(rows.asJava, schema).coalesce(1), path)
+    state = Some(next)
   }
 
   private def exists(): Boolean = {

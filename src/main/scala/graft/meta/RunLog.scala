@@ -24,7 +24,9 @@ final class RunLog(spark: SparkSession, path: String) {
       .write.mode("append").parquet(path)
   }
 
-  def read(): DataFrame = spark.read.parquet(path)
+  /** Read with the declared [[RunLog.schema]]: no schema-inference
+    * job. */
+  def read(): DataFrame = spark.read.schema(schema).parquet(path)
 }
 
 object RunLog {
