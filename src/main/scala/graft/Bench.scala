@@ -10,50 +10,21 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // warmup: run every query once at the smallest scale factor so
     // codegen compilation + JIT of each query's operators isn't
     // billed to its timed run (steady-state measurement; the timed
-    // scale factor's data is NOT touched here — canonical-path compare
-    // so a trailing slash or symlink can't defeat the guard)
-    val warmupDir = "/root/testdata/sf0.001"
-    def canon(p: String) = new java.io.File(p).getCanonicalPath
-    if (new java.io.File(warmupDir).exists && canon(warmupDir) != canon(sfDir))
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmupDir).count()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    spark.range(1000).count()
+    // scale factor's data is NOT touched here)
+    SparkEntry.queries.foreach { case (_, fn) =>
+      Harness.warm(sfDir)(fn(spark, _).count())
+    }
     // best-of-2 per query: the sf0.001 warmup compiles most codegen,
     // but AQE re-plans at the timed scale factor, so a single shot
     // still bills one-off compilation to whichever query hits it —
-    // min-of-2 reports steady-state throughput. A failing query must
-    // NOT record its time-to-exception as a timing (a plan-time crash
-    // would read as a speedup): it reports -1 and lands in "failed".
+    // min-of-2 reports steady-state throughput. A failing query
+    // reports -1 and lands in "failed".
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Boolean, Double) = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $name failed: $e"); false
-          }
-        val w = (System.nanoTime() - t0) / 1e9
-        // drop persisted plan-cache entries AFTER the timer stops:
-        // the next trial must rebuild every pinned intermediate from
-        // the parquet inputs (the no-cross-run-caching contract), and
-        // a 330-query session must not accumulate every query's pin
-        // blocks (the cross-query memory pressure the quiet pass
-        // keeps measuring as "contended")
-        spark.sharedState.cacheManager.clearCache()
-        (ok, w)
-      }
+      def once() = Harness.trial(spark, s"bench $name")(fn(spark, sfDir).count())
       val runs = (1 to 2).map(_ => once())
       // adaptive third trial: when the two trials disagree by >1.5x,
       // something external (GC, page cache, a background process)
@@ -68,31 +39,21 @@ object Bench {
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-    val total = results.map(_._2).filter(_ >= 0).sum
     // build/search decomposition for the oracle-contract rebuild
     // queries (BenchDecomp): time the build leg alone (min-of-2, same
     // protocol), search = declared total − build. Not part of the
     // driver's total; a diagnostic block in the same artifact.
     val totalsByName = results.toMap
     def timedLeg(name: String,
-                 leg: (SparkSession, String) => Long): Option[Double] =
-      try {
-        // same warmup protocol as the main loop: compile the build
-        // leg's plan at the smallest SF so codegen isn't billed
-        // (without this, build_s can exceed the warmed total_s)
-        if (new java.io.File(warmupDir).exists &&
-            canon(warmupDir) != canon(sfDir))
-          try leg(spark, warmupDir)
-          catch { case scala.util.control.NonFatal(_) => () }
-        Some((1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          leg(spark, sfDir)
-          (System.nanoTime() - t0) / 1e9
-        }.min)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] decomp $name failed: $e"); None
-      }
+                 leg: (SparkSession, String) => Long): Option[Double] = {
+      // same warmup as the main loop: compile the build leg's plan at
+      // the smallest SF (without it, build_s can exceed the warmed
+      // total_s)
+      Harness.warm(sfDir)(leg(spark, _))
+      val runs = (1 to 2).map(_ =>
+        Harness.trial(spark, s"bench decomp $name")(leg(spark, sfDir)))
+      if (runs.forall(_._1)) Some(runs.map(_._2).min) else None
+    }
     val inQueryRows = BenchDecomp.legs.toSeq.sortBy(_._1).flatMap {
       case (name, leg) =>
         totalsByName.get(name).filter(_ >= 0).flatMap { t =>
@@ -111,110 +72,14 @@ object Bench {
         }
       }
     val decomp = (inQueryRows ++ persistedRows).mkString("{", ",", "}")
-    // Self-adjudicating quiet pass (VERDICT r10 Next #5): the
-    // all-queries single-JVM loop keeps measuring cross-query
-    // contention (r10: ann_ivf read 22.2s in-bench vs 1.90s under the
-    // judge's isolated BenchOne) — so the artifact now carries both
-    // numbers. For the top-K heaviest walls, fork a FRESH JVM each
-    // (graft.BenchQuiet: one sf0.001 warmup, then min-of-N at the
-    // bench SF) and emit quiet_s beside bench_s with a contended
-    // flag; a spike that the quiet number contradicts adjudicates
-    // itself in BENCH_r*.json instead of needing a judge re-measure.
-    // Bounded: K heavies, N runs, a global wall budget — partial
-    // coverage is declared in quiet_meta.skipped, never silent.
-    val quietK = sys.env.getOrElse("SPARK_GRAFT_QUIET_K", "10").toInt
-    val quietN = sys.env.getOrElse("SPARK_GRAFT_QUIET_N", "3").toInt
-    val quietOn = sys.env.getOrElse("SPARK_GRAFT_QUIET", "1") != "0"
-    val heavies = results.filter(_._2 >= 0).sortBy(-_._2).take(quietK)
-    // budget scales with the list it covers (r11 starved its own
-    // top-10: fixed 600 s vs 629 s of actual work, the two CHEAPEST
-    // heavies skipped): per child ~25 s fork+session overhead plus N
-    // timed runs at 1.5x the in-bench wall (quiet is usually FASTER,
-    // so 1.5x is slack, not estimate). An env override stays a hard
-    // cap for CI-style use.
-    val quietBudget = sys.env.get("SPARK_GRAFT_QUIET_BUDGET_S")
-      .map(_.toDouble)
-      .getOrElse(heavies.map { case (_, s) =>
-        25.0 + quietN * s * 1.5 }.sum.max(600.0))
-    // host calibration ruler (SCALE.md §51) — measured HERE, while
-    // the session is still alive: the first integrated run measured
-    // it after the quiet fork's spark.stop() and silently emitted {}
-    // (the failure only reached stderr). In-session placement also
-    // keeps the ruler's walls off the quiet children's budget.
+    // host calibration ruler (SCALE.md §51) — measured while the
+    // session is still alive
     val ruler =
       try { val (c, s) = HostRuler.measure(spark)
             s"""{"cpu_s":$c,"shuffle_s":$s}""" }
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] ruler failed: $e"); "{}" }
-    // all in-session measurement is done — release the parent's
-    // executors and heap BEFORE forking children, or the children
-    // measure the parent's memory pressure instead of the query (the
-    // r11 shakedown read the persisted link search at 16.7s under a
-    // resident 48g parent vs 7.1s beside an idle one)
-    if (quietOn && heavies.nonEmpty) { spark.stop(); System.gc() }
-    def runQuietChild(name: String, timeoutS: Double): Option[Double] =
-      try {
-        import scala.jdk.CollectionConverters._
-        val javaBin = System.getProperty("java.home") + "/bin/java"
-        // inherit the parent's module opens / -D flags; drop the
-        // pre-touch pair (a child shouldn't commit the full bench
-        // heap up front) and cap the child heap — the parent's heap
-        // stays committed while the child runs
-        val childMem = sys.env.getOrElse("SPARK_GRAFT_QUIET_MEM", "12g")
-        val jvmArgs = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments.asScala.toSeq
-          .filterNot(a => a.startsWith("-Xms") || a.startsWith("-Xmx") ||
-            a.contains("AlwaysPreTouch"))
-        val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(s"-Xmx$childMem",
-          "-cp", System.getProperty("java.class.path"),
-          "graft.BenchQuiet", sfDir, quietN.toString, name)
-        val pb = new ProcessBuilder(cmd.asJava)
-        pb.redirectErrorStream(false)
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val p = pb.start()
-        val outF = scala.concurrent.Future {
-          scala.io.Source.fromInputStream(p.getInputStream).getLines()
-            .find(_.startsWith("QUIET_JSON:"))
-        }(scala.concurrent.ExecutionContext.global)
-        val done = p.waitFor(math.max(30, timeoutS).toLong,
-          java.util.concurrent.TimeUnit.SECONDS)
-        if (!done) { p.destroyForcibly(); p.waitFor(); None }
-        else scala.concurrent.Await
-          .result(outF, scala.concurrent.duration.Duration(10, "s"))
-          .flatMap { l =>
-            // child emits {"<name>":<double>}; parse the one value
-            val v = l.substring(l.indexOf(':', l.indexOf("QUIET_JSON:") + 11) + 1)
-              .stripSuffix("}").trim.toDouble
-            if (v >= 0) Some(v) else None
-          }
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] quiet $name failed: $e"); None
-      }
-    val quietT0 = System.nanoTime()
-    def quietElapsed = (System.nanoTime() - quietT0) / 1e9
-    val quietRows = scala.collection.mutable.ArrayBuffer.empty[String]
-    val quietSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (quietOn) heavies.foreach { case (name, benchS) =>
-      val remaining = quietBudget - quietElapsed
-      // tolerate a 10% overrun before skipping: the list is sorted
-      // heaviest-first, so anything still pending is the cheap tail
-      // — skipping it saves little and blinds the artifact exactly
-      // where a future spike would hide (r11's two skips)
-      if (remaining <= -0.1 * quietBudget) quietSkipped += name
-      // floor the child wall at 90 s so a tolerance-window child
-      // (remaining ≤ 0) still gets warmup + N runs before the kill
-      else runQuietChild(name,
-          math.min(math.max(remaining, 60.0) + 30, 300.0)) match {
-        case Some(q) =>
-          val ratio = if (q > 0) benchS / q else 1.0
-          val contended = ratio > 1.5 && benchS - q > 0.5
-          quietRows += s""""$name":{"quiet_s":$q,"bench_s":$benchS,"ratio":${math.round(ratio * 100) / 100.0},"contended":$contended}"""
-        case None => quietSkipped += name
-      }
-    } else heavies.foreach(quietSkipped += _._1)
-    val quiet = quietRows.mkString("{", ",", "}")
-    val quietMeta = s"""{"fresh_jvm":true,"n":$quietN,"k":$quietK,"budget_s":$quietBudget,"elapsed_s":${math.round(quietElapsed * 10) / 10.0},"skipped":[${quietSkipped.map("\"" + _ + "\"").mkString(",")}]}"""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"decomp":$decomp,"quiet":$quiet,"quiet_meta":$quietMeta,"ruler":$ruler,"failed":[${failed.mkString(",")}],"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":$qs,"decomp":$decomp,"ruler":$ruler,"failed":${failed(results)},"sf":"$sfDir"}"""
     println(line)
     // stdout tail-capture has repeatedly truncated this line (the driver's
     // BENCH_r4/r5 artifacts lost the total); a file copy is the durable record
@@ -225,41 +90,56 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $out: $e")
     }
-    // The driver parses the LAST stdout line inside a 2000-char tail
-    // window (BENCH_r04..r07: the full ~8 KB line truncated mid-line and
-    // parsed as null; r08-r12's totals-only last line parsed but left the
-    // driver's per-query and scaling comparisons EMPTY — PERF_r12
-    // n_common=0). The complete 330-entry map can never fit the window
-    // (names alone are ~4.8 KB), so the last line now carries the
-    // HEAVIEST queries' seconds (ms precision, heaviest-first prefix)
-    // up to a strict byte budget: every query that matters for a perf
-    // comparison is in the window, the line stays parseable, and the
-    // complete per-query map remains in the first stdout line and the
-    // file copy above. Printed AFTER spark.stop() (keeps stray shutdown
-    // output above the line) and echoed to stderr for stderr-reading
-    // parsers. build.sbt sets showSuccess:=false so sbt appends no
-    // "[success]" banner after this line.
+    // Printed AFTER spark.stop() (keeps stray shutdown output above
+    // the line) and echoed to stderr for stderr-reading parsers.
+    // build.sbt sets showSuccess:=false so sbt appends no "[success]"
+    // banner after this line.
     spark.stop()
-    val lineBudget = 1900
-    val qHead =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":{"""
-    def qTail(omitted: Int) =
-      s"""},"n_queries":${results.size},"queries_omitted":$omitted,""" +
-        s""""failed":[${failed.mkString(",")}],"sf":"$sfDir"}"""
-    val byWeight = results.filter(_._2 >= 0).sortBy(-_._2).map {
-      case (k, v) => "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)
-    }
-    var used = qHead.length + qTail(results.size).length
-    val kept = byWeight.takeWhile { e =>
-      val fits = used + e.length + 1 <= lineBudget
-      if (fits) used += e.length + 1
-      fits
-    }
-    val compact =
-      qHead + kept.mkString(",") + qTail(results.size - kept.size)
+    val compact = compactLine(results, sfDir)
     System.err.println(compact)
     System.err.flush()
     println(compact)
     System.out.flush()
   }
+
+  private def total(results: Seq[(String, Double)]): Double =
+    results.map(_._2).filter(_ >= 0).sum
+
+  private def failed(results: Seq[(String, Double)]): String =
+    results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+
+  /** The last stdout line, frozen: at most `LineBudget` bytes. The
+    * driver parses the LAST stdout line inside a 2000-char tail window
+    * (BENCH_r04..r07: the full ~8 KB line truncated mid-line and
+    * parsed as null; r08-r12's totals-only last line parsed but left
+    * the driver's per-query and scaling comparisons EMPTY — PERF_r12
+    * n_common=0). The complete 330-entry map can never fit the window
+    * (names alone are ~4.8 KB), so this line carries the HEAVIEST
+    * queries' seconds (ms precision, heaviest-first prefix) up to the
+    * budget, plus `n_queries` and `queries_omitted`: every query that
+    * matters for a perf comparison is in the window and the line stays
+    * parseable; the complete per-query map is in the first stdout line
+    * and the file copy. Failed queries (-1) are listed in `failed`,
+    * never in `queries`. */
+  def compactLine(results: Seq[(String, Double)], sfDir: String): String = {
+    def bytes(s: String) = s.getBytes("UTF-8").length
+    val qHead =
+      s"""{"metric":"total","value":${total(results)},"unit":"sec","queries":{"""
+    def qTail(omitted: Int) =
+      s"""},"n_queries":${results.size},"queries_omitted":$omitted,""" +
+        s""""failed":${failed(results)},"sf":"$sfDir"}"""
+    val byWeight = results.filter(_._2 >= 0).sortBy(-_._2).map {
+      case (k, v) => "\"" + k + "\":" + (math.round(v * 1000) / 1000.0)
+    }
+    var used = bytes(qHead) + bytes(qTail(results.size))
+    val kept = byWeight.takeWhile { e =>
+      val fits = used + bytes(e) + 1 <= LineBudget
+      if (fits) used += bytes(e) + 1
+      fits
+    }
+    qHead + kept.mkString(",") + qTail(results.size - kept.size)
+  }
+
+  val LineBudget = 1900
 }

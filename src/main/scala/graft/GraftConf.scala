@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Executable cluster configuration — SURVEY §7.6's partitioning
   * prose as CHECKED DATA. Two halves:
   *
-  *  1. [[base]]: the session conf every harness builds from
-  *     (Bench/BenchOne/Verify call [[applyBase]] — one source of
-  *     truth, so a harness can't drift from the posture the plans
-  *     were tuned under). On a real cluster the same map is the
+  *  1. [[base]]: the session conf every entrypoint builds from
+  *     ([[Harness.session]] is the one caller of [[applyBase]] — one
+  *     source of truth, so no main can drift from the posture the
+  *     plans were tuned under). On a real cluster the same map is the
   *     `--conf` set; cores becomes executor parallelism (shuffle
   *     partitions ~2–3× total cores there, = cores on local[N]
   *     where there is no straggler variance to amortize).

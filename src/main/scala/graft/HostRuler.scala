@@ -38,11 +38,9 @@ object HostRuler {
   def measure(spark: SparkSession): (Double, Double) = {
     def timeMin(n: Int)(body: => Unit): Double = {
       body // warmup: codegen + JIT outside the timed window
-      (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      }.min
+      val runs = (1 to n).map(_ => Harness.trial(spark, "ruler")(body))
+      require(runs.forall(_._1), "a ruler leg failed")
+      runs.map(_._2).min
     }
     val cpu = timeMin(3) {
       spark.range(0L, 400000000L)
@@ -65,13 +63,7 @@ object HostRuler {
 
   /** Standalone: `graft.HostRuler` prints one JSON line. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val (cpu, sh) = measure(spark)
     spark.stop()
     println(s"""RULER_JSON:{"cpu_s":$cpu,"shuffle_s":$sh}""")

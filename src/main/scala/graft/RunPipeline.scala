@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry: build the full warehouse from a testdata dir.
   * Usage: graft.RunPipeline <sfDir> <warehouseRoot>
   * Prints one summary line per stage; exits nonzero on validation
@@ -10,17 +8,8 @@ import org.apache.spark.sql.SparkSession
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, root) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val res = Pipeline.runAll(spark, sfDir, root)
     println(s"[pipeline] dim_date rows=${res.dimDateRows}")
     res.dimInserts.toSeq.sortBy(_._1).foreach { case (d, n) =>

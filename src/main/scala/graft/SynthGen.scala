@@ -65,7 +65,7 @@ object SynthGen {
     * `g` is the fixed alternating-sign axis — the anisotropic corpus
     * shape (one direction carrying most of the variance) that the
     * PCA pre-pass exists to detect and the decorrelated PQ index
-    * exists to fix (tools/DecorrProf measures the recall A/B on it).
+    * exists to fix (the recall A/B on it is SCALE.md §48).
     * Default 0.0 keeps every existing decade probe bit-identical. */
   def embeddings(spark: SparkSession, n: Long, dim: Int = 64,
                  aniso: Double = 0.0): DataFrame = {
@@ -198,16 +198,8 @@ object SynthGen {
     val outDir = args(0)
     val mult = args(1).toDouble
     val skewHot = if (args.length > 2) args(2).toDouble else 0.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     def m(base: Long) = math.max(1L, (base * mult).toLong)
     val nCust = m(15000); val nPart = m(20000); val nSupp = m(1000)
     val tables: Seq[(String, DataFrame)] = Seq(

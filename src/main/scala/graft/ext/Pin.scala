@@ -8,30 +8,15 @@ import org.apache.spark.storage.StorageLevel
 /** The repo's single choke-point for "pin this intermediate" — the
   * load-bearing materializations (one shared boundary draw for the
   * two-phase ranks, one evaluation of a multiply-consumed edge set)
-  * all route through here, so the STORAGE POSTURE is a runtime dial
-  * instead of a hard-coded `localCheckpoint()` at every site.
+  * all route through here.
   *
-  * `spark.graft.pin.storage`:
-  *  - `"memory_and_disk"` (default) — plain `localCheckpoint()`:
-  *    deserialized rows in the JVM heap, spilling to disk. Fastest
-  *    re-reads; on a 1000-executor cluster each executor holds only
-  *    its slice, so heap pressure is a non-issue.
-  *  - `"disk_only"` — `localCheckpoint(eager, DISK_ONLY)`: rows
-  *    serialize straight to local disk and the heap retains NOTHING.
-  *    This is the local[32]/single-JVM posture for the ×30-scale
-  *    runs SCALE.md §30/§31 diagnosed: the checkpointed 18M-row
-  *    snapshots were driving GC, not compute — trading re-read
-  *    deserialization for a quiet heap. Semantics are identical
-  *    (still one eager materialization, one boundary draw).
-  *
-  * Both modes keep localCheckpoint's contract that makes the rank
-  * machinery exact: EAGER materialization, so every downstream
+  * [[pin]] is a plain `localCheckpoint()`: deserialized rows in the
+  * JVM heap, spilling to disk, materialized EAGERLY — the contract
+  * that makes the rank machinery exact, because every downstream
   * consumer reads the same computed partitions (same
   * RangePartitioner draw) instead of re-evaluating lineage.
   */
 object Pin {
-  val ConfKey = "spark.graft.pin.storage"
-
   private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
   /** Names this JVM's dumps, so a later run writing to the same
     * directory cannot overwrite an earlier run's evidence. */
@@ -75,14 +60,7 @@ object Pin {
     }
   }
 
-  def pin(df0: DataFrame): DataFrame = {
-    val df = dumpPlan(df0)
-    df.sparkSession.conf.getOption(ConfKey).map(_.toLowerCase) match {
-      case Some("disk_only") =>
-        df.localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
-      case _ => df.localCheckpoint()
-    }
-  }
+  def pin(df0: DataFrame): DataFrame = dumpPlan(df0).localCheckpoint()
 
   /** Pin a DETERMINISTIC relation so that its hash partitioning and
     * per-partition sort order SURVIVE into every consumer's plan —
@@ -103,7 +81,7 @@ object Pin {
     * keeps lineage, so an evicted partition is recomputed — fine
     * for hash-repartitioned derivations, wrong for anything seeded
     * by a nondeterministic draw (those stay on [[pin]]'s
-    * lineage-cutting checkpoint). Honors the same storage dial. */
+    * lineage-cutting checkpoint). */
   def pinByKey(df: DataFrame,
                keys: org.apache.spark.sql.Column*): DataFrame =
     pinByKeyN(df, df.sparkSession.sessionState.conf.numShufflePartitions,
@@ -138,14 +116,9 @@ object Pin {
       "pinByKey requires a checkpointed (lineage-unique) input below " +
         "it; pinning a pure-source derivation would let a cached plan " +
         "serve a later run without recomputing")
-    val level =
-      df.sparkSession.conf.getOption(ConfKey).map(_.toLowerCase) match {
-        case Some("disk_only") => StorageLevel.DISK_ONLY
-        case _ => StorageLevel.MEMORY_AND_DISK
-      }
     val p = df.repartition(numPartitions, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .persist(level)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     p.count()
     p
   }
@@ -180,12 +153,12 @@ object Pin {
     * units of work (ADVICE r12: the pins are strong CacheManager
     * refs, so neither periodicGC nor the ContextCleaner can reclaim
     * them; without this every graph/walk/link-predict call leaks a
-    * MEMORY_AND_DISK cache entry for the session lifetime). The
-    * bench harnesses (Bench, BenchQuiet, GraphDial's timeIt) already
-    * apply this per trial — it is also their anti-gaming discipline:
-    * clearing between runs forces every timed window to pay its own
-    * cache build. Queries in flight recompute from lineage (persist
-    * keeps it), so this is always safe, only ever a perf trade. */
+    * MEMORY_AND_DISK cache entry for the session lifetime).
+    * [[graft.Harness.trial]] applies this after every timed trial —
+    * it is also the anti-gaming discipline: clearing between runs
+    * forces every timed window to pay its own cache build. Queries
+    * in flight recompute from lineage (persist keeps it), so this is
+    * always safe, only ever a perf trade. */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sharedState.cacheManager.clearCache()
 }

@@ -66,7 +66,7 @@ object Profiler {
                                 value: Column, out: String): DataFrame = {
     // two-phase core shared with SuffixArray.denseRank — see
     // [[Rank.withPidAndBase]] for the boundary-draw consistency
-    // argument (checkpoint mode) and the heap-quiet fences dial.
+    // argument.
     // `order` must be ascending null-free keys (descending numeric
     // orders pass the negated column — paretoAbc does).
     val withPb = Rank.withPidAndBase(df, order, value)

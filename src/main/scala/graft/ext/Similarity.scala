@@ -2105,7 +2105,7 @@ object Similarity {
 
   /** recall@k of the IVF-PQ path under CALLER-SUPPLIED codebooks —
     * the production-dial audit ([[pqTrainCodebooks]]' Lloyd books at
-    * ksub=256 vs the sample init, same search legs; tools/PqDial). */
+    * ksub=256 vs the sample init, same search legs; SCALE.md §34). */
   def pqRecallWith(corpus: DataFrame, queries: DataFrame, cw: DataFrame,
                    k: Int, nCentroids: Int, nProbe: Int, m: Int,
                    dim: Int, rerank: Int): DataFrame =

@@ -82,7 +82,7 @@ object SuffixArray {
     val kCols = keys.map(col)
     // two-phase core shared with Profiler.globalCumsum — see
     // [[Rank.withPidAndBase]] for the boundary-draw consistency
-    // argument (checkpoint mode) and the heap-quiet fences dial
+    // argument
     val withPb = Rank.withPidAndBase(distinctKeys, kCols, lit(1L))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(kCols: _*)
     withPb.withColumn("__li", row_number().over(wLocal))

@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
-/** Banding audit for the simhash LSH (companion to [[graft.SkewStudy]]):
+/** Banding audit for the simhash LSH (the skew lens of SCALE.md §8):
   * splits `simhash_dedup`'s cost into signature computation vs band-join
   * candidate enumeration, and reports the candidate-pair volume
   * Σ n·(n−1)/2 per band plus the largest buckets. Candidate volume — not
@@ -16,15 +15,7 @@ import graft.ext.Dedup
 object BandStats {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     docs.count() // warm scan
@@ -54,24 +45,15 @@ object BandStats {
 
     // end-to-end pair enumeration (signature + band join + hamming),
     // repeated for a steady-state reading in this one JVM
-    (1 to 3).foreach { i =>
-      val t1 = System.nanoTime()
-      val n = Dedup.simhashPairs(
-        Dedup.simhash(docs, col("doc_id"), col("text")), 3).count()
-      println(f"pairs run $i: ${(System.nanoTime() - t1) / 1e9}%.2f s ($n pairs)")
-    }
+    graft.Harness.trials(spark, 3, "pairs ")(Dedup.simhashPairs(
+      Dedup.simhash(docs, col("doc_id"), col("text")), 3).count())
 
     // counterfactual: materialize the signature table once (the
     // lakehouse shape: sigs written, THEN band-joined) so the
     // self-join does not recompute the kernel on both sides
-    (1 to 3).foreach { i =>
-      val t1 = System.nanoTime()
-      val sigsOnce = Dedup.simhash(docs, col("doc_id"), col("text"))
-        .localCheckpoint()
-      val n = Dedup.simhashPairs(sigsOnce, 3).count()
-      println(f"pairs (sig materialized) run $i: " +
-        f"${(System.nanoTime() - t1) / 1e9}%.2f s ($n pairs)")
-    }
+    graft.Harness.trials(spark, 3, "pairs (sig materialized) ")(
+      Dedup.simhashPairs(Dedup.simhash(docs, col("doc_id"), col("text"))
+        .localCheckpoint(), 3).count())
     spark.stop()
   }
 }

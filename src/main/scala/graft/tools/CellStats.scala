@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -24,15 +23,7 @@ object CellStats {
     val minCos = if (args.length > 3) args(3).toDouble else 0.7
     val nSuper = if (args.length > 4) Some(args(4).toInt) else None
     val sProbe = if (args.length > 5) args(5).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
@@ -69,11 +60,7 @@ object CellStats {
       s"max=${occ.getLong(1)} p99=${occ.getDouble(2)} " +
       f"cand_pairs=${occ.getDouble(3)}%.3e")
 
-    (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = pairs().count()
-      println(f"pairs run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n pairs)")
-    }
+    graft.Harness.trials(spark, 3, "pairs ")(pairs().count())
     spark.stop()
   }
 }

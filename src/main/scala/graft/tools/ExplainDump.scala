@@ -1,16 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files —
   * the plan evidence the optimization rounds commit under
   * `plans/r12/`. Usage:
   *   ExplainDump <sfDir> <outDir> <suffix> <query> [query...]
   * writes `<outDir>/<query>_<suffix>.txt` per query. Plans are
-  * compiled under the same session conf as graft.Bench (cores from
-  * SPARK_GRAFT_CPUS) so join strategies and exchange counts match
-  * what the bench executes. The printed plan is the initial AQE
-  * plan, but constructing a query DOES run its eager pins
+  * compiled under the same session as graft.Bench ([[graft.Harness]])
+  * so join strategies and exchange counts match what the bench
+  * executes. The printed plan is the initial AQE plan, but
+  * constructing a query DOES run its eager pins
   * (localCheckpoint count / pinByKey persist+count) — so each dump
   * costs real work, and the cache is cleared after each query to
   * keep multi-query invocations bounded (ADVICE r12).
@@ -21,12 +19,7 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     new java.io.File(outDir).mkdirs()
     for (n <- names) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
@@ -36,7 +29,7 @@ object ExplainDump {
         new java.io.File(s"$outDir/${n}_$suffix.txt"), "UTF-8")
       try w.println(plan) finally w.close()
       println(s"wrote $outDir/${n}_$suffix.txt (${plan.length} chars)")
-      spark.sharedState.cacheManager.clearCache()
+      graft.ext.Pin.releaseAll(spark)
     }
     spark.stop()
   }

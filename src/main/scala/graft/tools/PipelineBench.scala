@@ -1,25 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.CorpusPipeline
 
 /** End-to-end corpus-pipeline throughput harness (`PipelineBench
   * <docsDir> [runs]`): per-stage rows + wall via the prepare
-  * accounting, then the single-action preparePack wall (the number an
+  * accounting, then the single-action preparePack walls (rows are
+  * packed sequences) and the best run's docs/s — the number an
   * LLM-data user asks first: raw docs in → packed train sequences
-  * out, docs/s). */
+  * out. */
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text", "lang", "source")
     val nDocs = docs.count()
@@ -33,14 +28,12 @@ object PipelineBench {
     counts.foreach(c => println(f"stage ${c.stage}%-20s ${c.rows}%10d rows  ${c.secs}%7.2f s"))
 
     // the end-to-end number: one action over the whole composition
-    for (i <- 1 to runs) {
-      val t0 = System.nanoTime()
-      val n = CorpusPipeline.preparePack(docs, evalPred, budget = 512,
-        nShards = 32, rates = Seq("en" -> 300)).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"preparePack run $i: $secs%.2f s ($n sequences, " +
-        f"${nDocs / secs}%.0f docs/s)")
-    }
+    val walls = graft.Harness.trials(spark, runs, "preparePack ")(
+      CorpusPipeline.preparePack(docs, evalPred, budget = 512,
+        nShards = 32, rates = Seq("en" -> 300)).count())
+      .filter(_ >= 0)
+    if (walls.nonEmpty)
+      println(f"preparePack best: ${nDocs / walls.min}%.0f docs/s")
     spark.stop()
   }
 }

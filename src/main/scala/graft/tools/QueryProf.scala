@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftext.ListenerBus
+
+import graft.Harness
 
 /** Generic per-stage decomposition for ANY declared query:
   * `QueryProf <sfDir> <query> [runs]` runs the registered query
@@ -18,27 +20,11 @@ object QueryProf {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val fn = graft.SparkEntry.queries(name)
-    val warmupDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmupDir).exists &&
-        new java.io.File(warmupDir).getCanonicalPath !=
-          new java.io.File(sfDir).getCanonicalPath)
-      try fn(spark, warmupDir).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    val walls = (1 to runs).map { i =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      val w = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      println(f"$name run $i: $w%.2f s ($n rows)")
-      w
-    }
+    Harness.warm(sfDir)(fn(spark, _).count())
+    val walls = Harness.trials(spark, runs, s"$name ")(fn(spark, sfDir).count())
+    require(walls.forall(_ >= 0), s"$name failed")
     println(f"$name min-of-$runs: ${walls.min}%.2f s")
     // instrumented run: stage walls
     case class St(id: Int, wall: Double, tasks: Int, shufRead: Long,
@@ -60,13 +46,13 @@ object QueryProf {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val dfRun = fn(spark, sfDir)
-    dfRun.count()
-    val total = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("QUERYPROF_PLAN"))
+    var dfRun: org.apache.spark.sql.DataFrame = null
+    val (ok, total) = Harness.trial(spark, name) {
+      dfRun = fn(spark, sfDir); dfRun.count() }
+    if (ok && sys.env.contains("QUERYPROF_PLAN"))
       println(dfRun.queryExecution.executedPlan.toString)
-    Thread.sleep(500) // let the listener bus drain
+    // every stage-completed event posted so far reaches the listener
+    ListenerBus.drain(spark.sparkContext)
     import scala.jdk.CollectionConverters._
     val sts = events.asScala.toSeq.sortBy(-_.wall)
     println(f"instrumented total: $total%.2f s, ${sts.size} stages")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.SemDedup
 
@@ -23,12 +22,7 @@ object SemStats {
     val k = if (args.length > 1) args(1).toInt else 16
     val tau = if (args.length > 2) args(2).toDouble else 0.4
     val nSuper = if (args.length > 3) Some(args(3).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftConf.applyBase(SparkSession.builder()
-        .master(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     println(s"config: n=${emb.count()} nClusters=$k tau=$tau" +
@@ -48,16 +42,12 @@ object SemStats {
       s"max=${occ.getLong(1)} " +
       f"cand_pairs=${occ.getDouble(2)}%.3e")
 
-    (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      val dropped = (nSuper match {
-        case Some(s) => SemDedup.semDedupHier(emb, "vec_id", "embedding",
-          k, s, tau)
-        case None => SemDedup.semDedup(emb, "vec_id", "embedding", k, tau)
-      }).filter(!col("keep")).count()
-      println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        s"($dropped dropped)")
-    }
+    // rows = dropped documents
+    graft.Harness.trials(spark, 3)((nSuper match {
+      case Some(s) => SemDedup.semDedupHier(emb, "vec_id", "embedding",
+        k, s, tau)
+      case None => SemDedup.semDedup(emb, "vec_id", "embedding", k, tau)
+    }).filter(!col("keep")).count())
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
@@ -20,15 +19,7 @@ object SrpStats {
     val planes = if (args.length > 1) args(1).toInt else 8
     val tables = if (args.length > 2) args(2).toInt else 4
     val minCos = if (args.length > 3) args(3).toDouble else 0.7
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
@@ -51,12 +42,8 @@ object SrpStats {
           f"max_bucket=${r.getLong(2)}%,d cand_pairs=${r.getDouble(3)}%,.0f")
       }
 
-    (1 to 2).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = Similarity.nearDupPairs(emb, "vec_id", "embedding",
-        dim, planes, minCos, tables).count()
-      println(f"pairs run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n pairs)")
-    }
+    graft.Harness.trials(spark, 2, "pairs ")(Similarity.nearDupPairs(emb,
+      "vec_id", "embedding", dim, planes, minCos, tables).count())
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
@@ -19,15 +18,7 @@ object WinnowIndexStats {
     val k = if (args.length > 1) args(1).toInt else 5
     val w = if (args.length > 2) args(2).toInt else 4
     val maxDf = if (args.length > 3) args(3).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     docs.count() // warm scan
@@ -60,13 +51,9 @@ object WinnowIndexStats {
     println(f"candidate volume: kept=${agg.getDouble(5)}%,.0f pairs, " +
       f"cut by df cap=${agg.getDouble(6)}%,.0f pairs")
 
-    (1 to 3).foreach { i =>
-      val t2 = System.nanoTime()
-      val n = Dedup.winnowOverlapPairs(docs, col("doc_id"), col("text"),
-        k, w, minShared = 2, maxDf = maxDf).count()
-      println(f"end-to-end $i: ${(System.nanoTime() - t2) / 1e9}%.2f s " +
-        f"($n%,d pairs)")
-    }
+    graft.Harness.trials(spark, 3, "end-to-end ")(Dedup.winnowOverlapPairs(
+      docs, col("doc_id"), col("text"), k, w, minShared = 2,
+      maxDf = maxDf).count())
     spark.stop()
   }
 }

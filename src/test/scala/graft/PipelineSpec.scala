@@ -4,9 +4,9 @@ import java.nio.file.Files
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.ListenerBus
 
 /** The reference's headline test (SQL:70-74): run the whole warehouse
   * build twice — second run must be a no-op (0 inserts everywhere) and
@@ -46,12 +46,12 @@ class PipelineSpec extends SparkSpec {
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    TestBus.drain(spark.sparkContext)
+    ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(counter)
     val second =
       try Pipeline.runAll(spark, sf, root, strict = true)
       finally {
-        TestBus.drain(spark.sparkContext)
+        ListenerBus.drain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(counter)
       }
     assert(jobs.get <= NoopJobCeiling,

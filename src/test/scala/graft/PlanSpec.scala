@@ -445,60 +445,6 @@ class PlanSpec extends SparkSpec {
       s"contract did not catch the broadcast->sort-merge drift:\n$p")
   }
 
-  test("pin storage dial: disk_only posture is honored and rank results " +
-    "are invariant to it") {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.storage.StorageLevel
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    def run() = ext.Profiler.paretoAbc(li, col("l_partkey"),
-      col("l_extendedprice")).orderBy("part_id").collect().toSeq
-    val base = run()
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set(ext.Pin.ConfKey, "disk_only")
-    try {
-      val dialed = run()
-      assert(dialed == base,
-        "two-phase rank must be bit-identical under the disk_only pin")
-      // the NEW pinned rdd(s) of this run carry DISK_ONLY, proving the
-      // dial reached the checkpoint (not just a conf no-op)
-      val fresh = spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }.values
-      assert(fresh.nonEmpty &&
-        fresh.forall(_.getStorageLevel == StorageLevel.DISK_ONLY),
-        s"expected fresh DISK_ONLY pins, got ${fresh.map(_.getStorageLevel)}")
-    } finally spark.conf.unset(ext.Pin.ConfKey)
-  }
-
-  test("rank mode dial: fences posture checkpoints nothing row-scale " +
-    "and rank results are invariant to it") {
-    import org.apache.spark.sql.functions.col
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // one desc-normalized cumsum (pareto), one multi-key dense rank
-    // (suffix prefix ranks) — the two shapes the shared core serves
-    def pareto() = ext.Profiler.paretoAbc(li, col("l_partkey"),
-      col("l_extendedprice")).orderBy("part_id").collect().toSeq
-    def sa() = ext.SuffixArray.prefixRanks(docs, col("doc_id"),
-      col("text"), 8).orderBy("doc_id", "pos").collect().toSeq
-    val (p0, s0) = (pareto(), sa())
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set(ext.Rank.ModeKey, "fences")
-    try {
-      assert(pareto() == p0,
-        "globalCumsum must be bit-identical under rank.mode=fences")
-      // the cumsum core alone may not have pinned ANY new rdd under
-      // fences — it materializes only driver-side fence stats.
-      // (Checked before sa(): the doubling loop's per-round id pins
-      // are mode-independent and would show up as fresh.)
-      val fresh = spark.sparkContext.getPersistentRDDs
-        .filter { case (id, _) => !before.contains(id) }
-      assert(fresh.isEmpty,
-        s"fences mode must not checkpoint row-scale state, pinned ${fresh.size}")
-      assert(sa() == s0,
-        "denseRank must be bit-identical under rank.mode=fences")
-    } finally spark.conf.unset(ext.Rank.ModeKey)
-  }
-
   test("link_predict_approx: equi-joins only — banding and array " +
       "verification never degenerate to a cartesian") {
     val p = plan("link_predict_approx")

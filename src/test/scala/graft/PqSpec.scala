@@ -190,7 +190,7 @@ class PqSpec extends SparkSpec {
   test("Lloyd beats the sample init at the production width (ksub=256)") {
     // the deployment dial SCALE.md §18 names: m=8 x ksub=256 (one
     // byte per code). Same objective guarantee must hold at this
-    // width — tools/PqDial measures the same pair at SynthGen x100.
+    // width — SCALE.md §34 measured the same pair at SynthGen x100.
     val m = 8; val ksub = 256
     val sample = Similarity.pqSampleCodebooks(emb, m, ksub, dim / m)
     val trained = Similarity.pqTrainCodebooks(emb, m, ksub, dim, iters = 2)
