@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, FuzzyJoin, Similarity, Corpus}
+import graft.schema.Tables
 
 /** Build/search decomposition for the queries whose ORACLE CONTRACT
   * forces an index rebuild inside the declared query (the DuckDB twin
@@ -36,9 +37,9 @@ import graft.ext.{Dedup, FuzzyJoin, Similarity, Corpus}
 object BenchDecomp {
 
   private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.src(s, d, "documents")
   private def emb(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/embeddings.parquet")
+    Tables.src(s, d, "embeddings")
 
   /** query name → build-leg thunk (returns a row count / scalar to
     * prove the action ran). Parameters mirror the declared queries
@@ -87,7 +88,7 @@ object BenchDecomp {
       try {
         graft.ext.Graph.linkApproxWriteIndex(
           graft.ext.Graph.coEdges(
-            s.read.parquet(s"$d/lineitem.parquet"),
+            Tables.src(s, d, "lineitem"),
             col("l_orderkey"), col("l_partkey")), dir)
         1L
       } finally {

@@ -26,14 +26,18 @@ object GraftConf {
     * runtime skew split beats explicit salting); 10 MiB broadcast
     * threshold (every warehouse dimension at any SF fits far under
     * it; no fact table ever does, so the threshold — not luck —
-    * decides the join strategies the contracts pin). */
+    * decides the join strategies the contracts pin); parquet
+    * TIMESTAMP(NANOS) read as long (the `events` fixture; `Queries`
+    * converts it), set for the whole session because a read takes
+    * its schema from this conf when it is planned. */
   def base(cores: Int): Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.autoBroadcastJoinThreshold" -> (10L * 1024 * 1024).toString)
+    "spark.sql.autoBroadcastJoinThreshold" -> (10L * 1024 * 1024).toString,
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** Fold [[base]] into a session builder, plus the CORE (non-SQL,
     * set-at-startup-only) confs: long sessions (the 330-query bench,

@@ -59,6 +59,9 @@ object Pipeline {
     *     `StagedWrite` of its own path would hold a stale file
     *     listing); the fact's dimension lookups, the marts and the
     *     sweep share those reads;
+    *   - every read goes through [[graft.schema.Tables.read]], which
+    *     takes the schema from one footer on the driver, so planning a
+    *     read runs no schema-inference job;
     *   - the Stage-5 sweep is three actions
     *     ([[graft.checks.Checks.factSweep]], `dimSweep`, `dateSweep`),
     *     not one `count()` per check.
@@ -79,7 +82,7 @@ object Pipeline {
     // 1. date dimension (reference Stage 2.2)
     StagedWrite.overwrite(DateDim.build(spark, "1995-01-01", "2001-12-31"),
       wh.int("dim_date"))
-    val dimDate = spark.read.parquet(wh.int("dim_date"))
+    val dimDate = Tables.read(spark, wh.int("dim_date"))
 
     // 2. SCD2 dims (reference Stage 2.3-2.5 / procs): static snapshot
     // sources, one initial version each
@@ -108,7 +111,7 @@ object Pipeline {
 
     // (name, natural key, table) of every SCD2 dim, read once
     val dims = (snapshotDims.map(d => d._1 -> d._2) :+ ("user_profile" -> "user_id"))
-      .map { case (name, nk) => (name, nk, spark.read.parquet(wh.int(s"dim_$name"))) }
+      .map { case (name, nk) => (name, nk, Tables.read(spark, wh.int(s"dim_$name"))) }
     val dimTable = dims.map(d => d._1 -> d._3).toMap
 
     // 3. fact load — always last (J46)
@@ -125,7 +128,7 @@ object Pipeline {
         "supplier" -> ((currentDim("supplier", "s_suppkey"),
           col("l_suppkey"), col("s_suppkey")))),
       wh.int("factsales"), tracker, log, preValidate = strict)
-    val fact = spark.read.parquet(wh.int("factsales"))
+    val fact = Tables.read(spark, wh.int("factsales"))
 
     // 4. marts (reference Stage 4) and 5. the validation sweep
     // (reference Stage 5), together; the run-history mart is written

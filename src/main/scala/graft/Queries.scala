@@ -9,6 +9,7 @@ import graft.checks.Checks
 import graft.dims.{DateDim, Scd2}
 import graft.ext.{Dedup, Multimodal, SemDedup, Sessions, Similarity, TextAnalysis}
 import graft.facts.FactLoader
+import graft.schema.Tables
 
 /** The declared query surface (SURVEY §7.3): one entry per operator
   * in SURVEY §2's inventory plus the training-data-pipeline extension
@@ -43,15 +44,14 @@ object Queries {
     "l_returnflag", "l_linestatus", "l_shipdate")
 
   /** Fixture reader. `events.ts` is parquet TIMESTAMP(NANOS), which
-    * Spark has no native type for: read it as long (legacy conf) and
-    * truncate to microsecond TimestampType (`div 1000` in integer
-    * space — a double division would lose precision above 2^53).
-    * DuckDB reads the same column as µs TIMESTAMP natively, so the
-    * oracle side needs nothing. */
+    * Spark has no native type for: read it as long (the legacy
+    * `nanosAsLong` conf, set in [[GraftConf.base]]) and truncate to
+    * microsecond TimestampType (`div 1000` in integer space — a double
+    * division would lose precision above 2^53). DuckDB reads the same
+    * column as µs TIMESTAMP natively, so the oracle side needs nothing. */
   private def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val df = Tables.src(spark, sfDir, name)
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
       // encoding-robust: a NANOS-encoded feed arrives as long under
       // the legacy conf (the fixtures); a MICROS-encoded feed (e.g.
       // SynthGen's, or any Spark-written upstream) arrives as a
@@ -63,7 +63,7 @@ object Queries {
         case _ =>
           df.withColumn("ts", col("ts").cast("timestamp_ntz"))
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else df
   }
 
   /** Scratch root for PERSISTED-index queries (`ann_pq_persisted`):
@@ -231,8 +231,7 @@ object Queries {
     * day and scanning a year at 100 TB. */
   def eventsSince(spark: SparkSession, sfDir: String,
                   wm: LocalDateTime): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/events.parquet")
+    val df = Tables.src(spark, sfDir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // NANOS-encoded feed. +999 ns: downstream semantics compare

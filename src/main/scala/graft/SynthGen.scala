@@ -60,15 +60,7 @@ object SynthGen {
       .withColumn("n_chars", length(col("text")))
   }
 
-  /** `aniso > 0` plants a DOMINANT COMMON DIRECTION: every vector
-    * gains `t · g` where `t ~ uniform(−aniso, aniso)` per vector and
-    * `g` is the fixed alternating-sign axis — the anisotropic corpus
-    * shape (one direction carrying most of the variance) that the
-    * PCA pre-pass exists to detect and the decorrelated PQ index
-    * exists to fix (the recall A/B on it is SCALE.md §48).
-    * Default 0.0 keeps every existing decade probe bit-identical. */
-  def embeddings(spark: SparkSession, n: Long, dim: Int = 64,
-                 aniso: Double = 0.0): DataFrame = {
+  def embeddings(spark: SparkSession, n: Long, dim: Int = 64): DataFrame = {
     // 10 label centroids with per-vector noise as LARGE as the centroid
     // signal, so co-cluster members do NOT read as near-duplicates
     // (matching the fixture, where only ~0.02% of pairs pass) — the
@@ -79,12 +71,9 @@ object SynthGen {
     val isNear = col("id") % 20 === 19
     val seed = when(isNear, col("id") - 1).otherwise(col("id"))
     val label = h(10, 0, seed)
-    val t = (h(1000, 4, seed).cast("double") / 1000.0 - 0.5) *
-      (2.0 * aniso)
     val vec = transform(sequence(lit(0), lit(dim - 1)), j =>
       ((h(1000, 1, label, j).cast("double") / 1000.0 - 0.5) +
         (h(1000, 2, seed, j).cast("double") / 1000.0 - 0.5) * 2.5 +
-        t * when(j % 2 === 0, 1.0).otherwise(-1.0) +
         when(isNear,
           (h(1000, 3, col("id"), j).cast("double") / 1000.0 - 0.5) * 0.01)
           .otherwise(lit(0.0))).cast("float"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.meta.{LoadTracker, RunLog, StagedWrite}
+import graft.schema.Tables
 
 /** A parameterized SCD2 dimension load — the generic form of the
   * reference's three per-dim stored procedures `etl_load_dimcustomer` /
@@ -110,7 +111,7 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
         // touched, so neither the dimension nor the feed is scanned
         else if (inserted == 0L && snapshotKeys.isEmpty) None
         else {
-          val dim = spark.read.parquet(dimPath)
+          val dim = Tables.read(spark, dimPath)
           // an empty delta contributes no keys and no rows, so it is
           // not scanned again; rows landing after the stats scan are
           // re-read next run (J38)

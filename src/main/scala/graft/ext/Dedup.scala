@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
+import graft.schema.Tables
 
 /** Document deduplication for large-scale training-data pipelines:
   * exact (canonical-key groupBy), MinHash+LSH, SimHash (hamming LSH),
@@ -2309,7 +2310,7 @@ object Dedup {
   def componentSplitFromIndex(spark: SparkSession, dir: String,
                               trainPct: Int = 90,
                               validPct: Int = 5): DataFrame =
-    spark.read.parquet(s"$dir/labels")
+    Tables.read(spark, s"$dir/labels")
       .select(col("doc_id"), col("component"),
         splitOfComponent(col("component"), trainPct, validPct).as("split"))
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.schema.Tables
+
 /** Distributed triangle counting over the item co-occurrence graph —
   * the graph-density audit behind "how clustered is my catalog /
   * near-dup graph?" (clustering coefficient, community density,
@@ -794,7 +796,7 @@ object Graph {
   def linkApproxCompactIndex(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Unit =
     graft.meta.MaintenanceLock.withLock(spark, dir) {
-      val sigs = spark.read.parquet(s"$dir/sigs")
+      val sigs = Tables.read(spark, s"$dir/sigs")
         .groupBy(col("a"), col("i")).agg(min(col("h")).as("h"))
       graft.meta.StagedWrite.overwrite(sigs, s"$dir/sigs")
       graft.sources.Sources.compact(spark, s"$dir/adj")
@@ -824,13 +826,13 @@ object Graph {
                                  minCn: Long = 2L,
                                  maxBucket: Int = DefaultMaxGroupSize,
                                  maxDegree: Int = DefaultMaxGroupSize): DataFrame = {
-    val adjAll = spark.read.parquet(s"$dir/adj")
+    val adjAll = Tables.read(spark, s"$dir/adj")
     val e = Pin.pin(adjAll.filter(col("a") < col("n"))
       .select(col("a").as("u"), col("n").as("v")))
     val okDeg = adjAll.groupBy(col("a")).agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") <= maxDegree).select(col("a"))
     val adj = adjAll.join(okDeg, Seq("a"), "left_semi")
-    val sigs = Pin.pin(spark.read.parquet(s"$dir/sigs")
+    val sigs = Pin.pin(Tables.read(spark, s"$dir/sigs")
       .groupBy(col("a"), col("i")).agg(min(col("h")).as("h"))
       .join(okDeg, Seq("a"), "left_semi"))
     approxRankTail(e, adj, sigs, k, minCn, maxBucket)

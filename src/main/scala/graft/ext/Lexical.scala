@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
+import graft.schema.Tables
 
 /** Persisted INVERTED INDEX for lexical (BM25) retrieval — the third
   * member of the build-once/search-many index family, beside the
@@ -135,7 +136,7 @@ object Lexical {
       .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket")
       .parquet(s"$dir/postings")
-    val seg = spark.read.parquet(s"$dir/stats")
+    val seg = Tables.read(spark, s"$dir/stats")
       .agg(max(col("seg"))).collect()(0).getLong(0) + 1L
     statsOf(docs, id, text, seg)
       .coalesce(1).write.mode("append").parquet(s"$dir/stats")
@@ -146,7 +147,7 @@ object Lexical {
     * postings scan (repair op, not the hot path). */
   def lexRepairStats(spark: SparkSession, dir: String): Unit =
     graft.meta.MaintenanceLock.withLock(spark, dir) {
-      spark.read.parquet(s"$dir/postings")
+      Tables.read(spark, s"$dir/postings")
         .groupBy(col("doc_id")).agg(first(col("doc_len")).as("doc_len"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_len")).as("toks"))
         .select(lit(0L).as("seg"), col("n_docs"),
@@ -169,14 +170,14 @@ object Lexical {
                      terms: Seq[String], k: Int,
                      nBuckets: Int = 64): DataFrame = {
     require(terms.nonEmpty && k > 0 && terms.distinct.size == terms.size)
-    val st = spark.read.parquet(s"$dir/stats")
+    val st = Tables.read(spark, s"$dir/stats")
       .agg(sum(col("n_docs")).as("n"), sum(col("toks")).as("t"))
       .collect()(0)
     val nDocs = st.getAs[Long]("n")
     val avgLenPpm = math.max(1L,
       st.getAs[Long]("t") * 1000000L / math.max(1L, nDocs))
     val buckets = terms.map(bucketOf(_, nBuckets)).distinct
-    val post = spark.read.parquet(s"$dir/postings")
+    val post = Tables.read(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets.map(Int.box): _*))
       .filter(col("term").isin(terms: _*))
     // df live from the pruned postings: |terms| longs to the driver
@@ -221,7 +222,7 @@ object Lexical {
                     queries: DataFrame, k: Int,
                     nBuckets: Int = 64): DataFrame = {
     require(k > 0)
-    val st = spark.read.parquet(s"$dir/stats")
+    val st = Tables.read(spark, s"$dir/stats")
       .agg(sum(col("n_docs")).as("n"), sum(col("toks")).as("t"))
       .collect()(0)
     val nDocs = st.getAs[Long]("n")
@@ -234,7 +235,7 @@ object Lexical {
       .collect().map(_.getString(0)).toSeq
     require(terms.nonEmpty, "lexSearchMany: empty query batch")
     val buckets = terms.map(bucketOf(_, nBuckets)).distinct
-    val post = spark.read.parquet(s"$dir/postings")
+    val post = Tables.read(spark, s"$dir/postings")
       .filter(col("bucket").isin(buckets.map(Int.box): _*))
       .filter(col("term").isin(terms: _*))
     // df in-plan: exact live doc frequency per term, broadcast back
@@ -312,8 +313,8 @@ object Lexical {
 
   /** One-row index audit: corpus stats + postings census. */
   def lexIndexStats(spark: SparkSession, dir: String): DataFrame = {
-    val post = spark.read.parquet(s"$dir/postings")
-    val stats = spark.read.parquet(s"$dir/stats")
+    val post = Tables.read(spark, s"$dir/postings")
+    val stats = Tables.read(spark, s"$dir/stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("toks")).as("toks"))
     stats.crossJoin(broadcast(
       post.agg(count(lit(1)).as("n_postings"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.schema.Tables
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`) — extension surface, SURVEY §7.6.
   *
@@ -1617,8 +1619,8 @@ object Similarity {
                                        dim: Int, dir: String): Unit = {
     val subLen = dim / m
     require(m * subLen == dim, s"m=$m must divide dim=$dim")
-    val cw = spark.read.parquet(s"$dir/codebooks")
-    val cb = spark.read.parquet(s"$dir/centroids").collect()
+    val cw = Tables.read(spark, s"$dir/codebooks")
+    val cb = Tables.read(spark, s"$dir/centroids").collect()
       .map { r =>
         val v = r.getSeq[Float](r.fieldIndex("c_emb"))
         var n2 = 0.0
@@ -1799,7 +1801,7 @@ object Similarity {
                             ksub: Int, dim: Int, dir: String,
                             thresholdPpm: Long,
                             trainIters: Int = 0): Boolean = {
-    val cw = spark.read.parquet(s"$dir/codebooks")
+    val cw = Tables.read(spark, s"$dir/codebooks")
     val row = pqDriftAudit(corpus, cw, m, dim, splitId).collect().head
     val nNew = row.getAs[Long]("n_new")
     val drifted =
@@ -1833,7 +1835,7 @@ object Similarity {
     val subLen = dim / m
     require(m * subLen == dim, s"m=$m must divide dim=$dim")
     require(rerank >= k, s"rerank=$rerank must be >= k=$k")
-    val cw = spark.read.parquet(s"$dir/codebooks")
+    val cw = Tables.read(spark, s"$dir/codebooks")
     // probe assignment as a broadcast JOIN against the persisted
     // centroid RELATION — not the compiled-shortlist kernel the
     // in-query paths use. The kernel needs the codebook as a plan
@@ -1849,8 +1851,8 @@ object Similarity {
     // for the bounded-query-batch search-service shape. The kernel
     // stays the right path where rows dominate cells (index build,
     // O(batch) append).
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val index = spark.read.parquet(s"$dir/codes")
+    val cents = Tables.read(spark, s"$dir/centroids")
+    val index = Tables.read(spark, s"$dir/codes")
       .withColumn("c_id", col("c_id").cast("long"))
     // spread the query batch first (the ivfPqSearchStages contract):
     // probe scoring and the downstream LUT/survivor decimal kernels

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
+import graft.schema.Tables
 
 /** Deterministic random walks over undirected edge relations — the
   * corpus-generation step of DeepWalk-style graph embeddings
@@ -197,7 +198,7 @@ object Walks {
   def walkReadCorpus(spark: org.apache.spark.sql.SparkSession,
                      dir: String): DataFrame = {
     val len = readLength(spark, dir)
-    spark.read.parquet(s"$dir/walks")
+    Tables.read(spark, s"$dir/walks")
       .select(col("walk_id").cast("long"),
         col("step").cast("long"), col("node_id").cast("long"))
       .filter(col("step") <= len)
@@ -215,7 +216,7 @@ object Walks {
     graft.meta.MaintenanceLock.withLock(spark, dir) {
       val from = readLength(spark, dir)
       val adj = rankedAdjacency(edges)
-      val frontier = Pin.pin(spark.read.parquet(s"$dir/walks")
+      val frontier = Pin.pin(Tables.read(spark, s"$dir/walks")
         .filter(col("step") === from)
         .select(col("walk_id").cast("long"),
           col("node_id").cast("long").as("cur")))
@@ -248,7 +249,7 @@ object Walks {
                          dir: String): Int = {
     require(walkCorpusExists(spark, dir),
       s"no complete walk corpus under $dir")
-    spark.read.parquet(s"$dir/meta").collect()(0).getLong(0).toInt
+    Tables.read(spark, s"$dir/meta").collect()(0).getLong(0).toInt
   }
 
   /** Per-node visit census of [[walks]] joined with the node degree:

@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.meta.{LoadTracker, RunLog, StagedWrite}
+import graft.schema.Tables
 
 /** Fact table load — reference `etl_load_factsales` (SQL:1339-1538),
   * the deepest pipeline in the script (SURVEY §3.2).
@@ -108,7 +109,7 @@ object FactLoader {
           dims.keys.toSeq.sorted.map(d => s"${d}_sk")).map(col): _*)
 
       val existing: Option[DataFrame] =
-        if (pathExists(spark, factPath)) Some(spark.read.parquet(factPath))
+        if (pathExists(spark, factPath)) Some(Tables.read(spark, factPath))
         else None
 
       if (existing.isDefined && inserted == 0) {

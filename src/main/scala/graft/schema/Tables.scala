@@ -1,6 +1,7 @@
 package graft.schema
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Source-table access over the driver-generated parquet fixtures
   * (TESTDATA.md) plus the warehouse directory layout.
@@ -13,7 +14,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def src(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without the Spark job its schema
+    * inference runs: the schema comes from one footer read on the
+    * driver ([[FooterSchema]]), so planning a read starts no job. A
+    * partitioned, missing or empty path goes to `spark.read.parquet`
+    * itself, so partition discovery and the errors stay Spark's. The
+    * schema depends on the session's parquet confs at call time
+    * (`nanosAsLong`, set in [[graft.GraftConf.base]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.of(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 }
 
 /** Warehouse layout (reference SQL:142-151 `CREATE SCHEMA` ×3 + meta). */

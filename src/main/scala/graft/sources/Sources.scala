@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.schema.Tables
+
 /** Source/sink layer (SURVEY §2.A). The reference's sources are SQL
   * Server tables behind staging views (A1-A4); the warehouse layer here
   * is parquet, with CSV/JSONL ingest for landing-zone files and
@@ -15,9 +17,6 @@ import org.apache.spark.sql.types.StructType
   * SQL:156-177).
   */
 object Sources {
-
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** CSV with header, explicit schema, strict mode (corrupt rows fail
     * loudly instead of becoming silent nulls). */
@@ -109,7 +108,7 @@ object Sources {
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
               partitionCols: Seq[String] = Seq.empty): Unit = {
-    val df = spark.read.parquet(path)
+    val df = Tables.read(spark, path)
     val repartitioned = if (partitionCols.nonEmpty) {
       df.repartition(partitionCols.map(df(_)): _*)
     } else {

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.schema.Tables
 
 /** Banding audit for the simhash LSH (the skew lens of SCALE.md §8):
   * splits `simhash_dedup`'s cost into signature computation vs band-join
@@ -17,7 +18,7 @@ object BandStats {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.Harness.session()
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.src(spark, dir, "documents")
     docs.count() // warm scan
 
     val t0 = System.nanoTime()

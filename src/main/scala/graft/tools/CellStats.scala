@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
+import graft.schema.Tables
 
 /** Cell-partition audit for [[graft.ext.Similarity.cellNearDupPairs]]
   * (companion to [[SrpStats]]): for an (nCells, nProbe) configuration,
@@ -25,7 +26,7 @@ object CellStats {
     val sProbe = if (args.length > 5) args(5).toInt else 2
     val spark = graft.Harness.session()
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.src(spark, dir, "embeddings")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     println(s"config: dim=$dim nCells=$nCells nProbe=$nProbe t=$minCos" +
       nSuper.map(s => s" nSuper=$s sProbe=$sProbe").getOrElse(""))

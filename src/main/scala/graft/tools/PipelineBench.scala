@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.ext.CorpusPipeline
+import graft.schema.Tables
 
 /** End-to-end corpus-pipeline throughput harness (`PipelineBench
   * <docsDir> [runs]`): per-stage rows + wall via the prepare
@@ -15,7 +16,7 @@ object PipelineBench {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val spark = graft.Harness.session()
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.src(spark, sfDir, "documents")
       .select("doc_id", "text", "lang", "source")
     val nDocs = docs.count()
     println(s"corpus: $nDocs docs")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.ext.SemDedup
+import graft.schema.Tables
 
 /** Cluster-occupancy audit + end-to-end timing for
   * [[graft.ext.SemDedup.semDedup]] (companion to [[CellStats]]).
@@ -24,7 +25,7 @@ object SemStats {
     val nSuper = if (args.length > 3) Some(args(3).toInt) else None
     val spark = graft.Harness.session()
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.src(spark, dir, "embeddings")
     println(s"config: n=${emb.count()} nClusters=$k tau=$tau" +
       nSuper.map(s => s" nSuper=$s").getOrElse(""))
 

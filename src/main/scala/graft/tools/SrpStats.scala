@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity
+import graft.schema.Tables
 
 /** SRP-LSH banding audit for the embedding near-dup path (companion
   * to [[BandStats]]): for a (planes, tables) configuration, reports
@@ -21,7 +22,7 @@ object SrpStats {
     val minCos = if (args.length > 3) args(3).toDouble else 0.7
     val spark = graft.Harness.session()
 
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = Tables.src(spark, dir, "embeddings")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     println(s"config: dim=$dim planes=$planes tables=$tables t=$minCos")
 

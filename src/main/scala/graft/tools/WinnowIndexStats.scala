@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.ext.Dedup
+import graft.schema.Tables
 
 /** Index audit for the winnowed-fingerprint overlap path: splits
   * `winnow_overlap`'s cost into kernel / posting-explode / df-filter /
@@ -20,7 +21,7 @@ object WinnowIndexStats {
     val maxDf = if (args.length > 3) args(3).toInt else 50
     val spark = graft.Harness.session()
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.src(spark, dir, "documents")
     docs.count() // warm scan
 
     val t0 = System.nanoTime()
