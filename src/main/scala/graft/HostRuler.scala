@@ -22,7 +22,9 @@ import org.apache.spark.sql.functions._
   *  - `cpu_s`: one whole-stage-codegen aggregation over
   *    `spark.range` — pure per-core integer throughput, zero
   *    exchange, zero disk. Decimal(38,0) sum so the work is the
-  *    same fixed-point arithmetic the query surface runs on.
+  *    same fixed-point arithmetic the query surface runs on. Timed
+  *    over [[CpuRows]] rows and reported per [[CpuUnitRows]] rows,
+  *    the unit every Bench artifact's `cpu_s` is in.
   *  - `shuffle_s`: a two-exchange hash aggregate + repartition join
   *    over generated keys — serialization, shuffle write/read, and
   *    memory bandwidth, the profile of the wedge-join family.
@@ -34,6 +36,11 @@ import org.apache.spark.sql.functions._
   * not "slower engine".
   */
 object HostRuler {
+  /** Rows the cpu leg sums. */
+  val CpuRows = 40000000L
+  /** Rows `cpu_s` is reported per: the wall scales linearly in rows. */
+  val CpuUnitRows = 400000000L
+
   /** (cpu_s, shuffle_s), each min-of-3 steady-state. */
   def measure(spark: SparkSession): (Double, Double) = {
     def timeMin(n: Int)(body: => Unit): Double = {
@@ -43,11 +50,11 @@ object HostRuler {
       runs.map(_._2).min
     }
     val cpu = timeMin(3) {
-      spark.range(0L, 400000000L)
+      spark.range(0L, CpuRows)
         .select(sum((col("id") % 1000007L).cast("decimal(38,0)") *
           (col("id") % 999983L)).as("s"))
         .collect()
-    }
+    } * CpuUnitRows / CpuRows
     val shuffle = timeMin(3) {
       val left = spark.range(0L, 8000000L)
         .select((col("id") % 500000L).as("k"), col("id").as("v"))

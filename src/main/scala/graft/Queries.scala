@@ -3709,8 +3709,8 @@ object Queries {
         |  CAST(1 AS BIGINT) AS within_bound
         |FROM events""".stripMargin)),
 
-    // Tumbling event-time windows: batch twin of the streaming
-    // windowed agg — stateless bucket projection + one hash agg
+    // Tumbling event-time windows: stateless bucket projection +
+    // one hash agg
     ("tumbling_window",
       (s: SparkSession, d: String) =>
         Sessions.tumblingAgg(t(s, d, "events"), "ts", "value", 60)

@@ -50,9 +50,8 @@ object Scd2 {
     * versions OPENED per month (by active_from) full-outer-joined
     * with versions CLOSED per month (by active_to of non-current
     * rows) — the dimension-volatility dashboard behind "why did the
-    * customer dim grow 3% this month". Shared by the `scd2_churn`
-    * declared query and the streaming churn sink so both modes
-    * publish one semantics. Output: (month_idx, n_opened, n_closed)
+    * customer dim grow 3% this month"; the `scd2_churn` declared
+    * query. Output: (month_idx, n_opened, n_closed)
     * with month_idx = year·12 + month − 1. */
   def churnByMonth(versions: DataFrame): DataFrame = {
     val mo = (c: org.apache.spark.sql.Column) =>

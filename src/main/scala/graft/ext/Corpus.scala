@@ -1568,8 +1568,8 @@ object Corpus {
   /** Fit the DSIR fixed-point LLR table: target/raw hashed-unigram
     * counts over `docs` → `dim` quantized log-likelihood-ratio
     * entries (the O(dim) driver hop). The returned array is the
-    * MODEL — persist it and [[dsirScoreCols]] scores any batch or
-    * stream against it as a pure projection. */
+    * MODEL: [[dsirWeights]] and [[dsirIncremental]] score documents
+    * against it as a pure projection (two int64 dots per doc). */
   def dsirFitLlr(docs: DataFrame, text: Column, target: Column,
                  dim: Int = 64): Array[Long] = {
     require(dim > 0, s"dim must be positive, got $dim")
@@ -1596,24 +1596,6 @@ object Corpus {
       java.math.BigDecimal.valueOf(v)
         .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
     }
-  }
-
-  /** Score documents against a fitted LLR table: (doc_id, n_toks,
-    * w_fp) — one compiled feature-hash pass (pinned behind the `__f`
-    * alias boundary, so the kernel runs once per row, not once per
-    * dot) + two codegen int64 dots. Stateless, so it runs unchanged
-    * on a STREAMING DataFrame (the deployment path: fit once
-    * offline, score every arriving micro-batch —
-    * [[graft.streaming.Streams.dsirScoreStream]]). */
-  def dsirScore(docs: DataFrame, id: Column, text: Column,
-                llr: Array[Long]): DataFrame = {
-    import org.apache.spark.sql.graftext.{FeatureHashBridge, LongVecDot}
-    docs.select(id.as("doc_id"),
-        FeatureHashBridge.column(text, llr.length, Hashing.P).as("__f"))
-      .select(col("doc_id"),
-        LongVecDot.dotColumn(col("__f"),
-          lit(Array.fill(llr.length)(1L))).as("n_toks"),
-        LongVecDot.dotColumn(col("__f"), lit(llr)).as("w_fp"))
   }
 
   private def dsirWeightsWith(docs: DataFrame, id: Column, text: Column,

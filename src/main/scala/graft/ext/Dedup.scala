@@ -753,9 +753,8 @@ object Dedup {
   /** One row per (doc, band): `band` index, the packed int64 band
     * value in `sig`, and the full per-doc band array in `sigs` (the
     * first-matching-band predicate needs it). The exploded form of a
-    * signature frame — also the PERSISTED index layout for
-    * incremental/streaming ingest (bucket by (band, sig) and the
-    * corpus side of the candidate join becomes a co-located lookup). */
+    * signature frame (bucket by (band, sig) and the corpus side of
+    * the candidate join becomes a co-located lookup). */
   def minhashBandRows(signatures: DataFrame, k: Int,
                       rowsPerBand: Int = 2): DataFrame = {
     require(k % rowsPerBand == 0, "k must divide into bands")
@@ -991,12 +990,10 @@ object Dedup {
     * matching band (see [[firstSimBandOnly]] — no pair-level distinct
     * shuffle). */
   /** One row per (doc, simhash band): the exploded band view of a
-    * [[simhash]] frame — the pair-join input of [[simhashPairs]] and
-    * the PERSISTED index layout for streaming ingest
-    * ([[graft.streaming.Streams.componentSplitIngestSink]]): the
-    * signature rides along so a batch-vs-index band collision can
-    * apply the exact hamming filter without a second lookup. */
-  private[graft] def simhashBandRows(sims: DataFrame): DataFrame =
+    * [[simhash]] frame — the pair-join input of [[simhashPairs]]; the
+    * signature rides along so a band collision can apply the exact
+    * hamming filter without a second lookup. */
+  private def simhashBandRows(sims: DataFrame): DataFrame =
     sims.select(col("doc_id"), col("simhash"),
       explode(array((0 until SimBands).map(b => struct(lit(b).as("band"),
         simBand(col("simhash"), b).as("bv"))): _*)).as("bs"))
@@ -2288,31 +2285,17 @@ object Dedup {
       splitOfComponent(col("component"), trainPct, validPct).as("split"))
   }
 
-  /** The deterministic component → split assignment [[componentSplit]]
-    * and its streaming twin share: a [[graft.functions.Hashing
-    * .permBucket]] bucket of the COMPONENT label against the cut
-    * points — engine-portable, so the stream, the batch op and the
-    * DuckDB twin all agree. */
-  private[graft] def splitOfComponent(component: Column, trainPct: Int,
-                                      validPct: Int): Column = {
+  /** The deterministic component → split assignment of
+    * [[componentSplit]]: a [[graft.functions.Hashing.permBucket]]
+    * bucket of the COMPONENT label against the cut points —
+    * engine-portable, so the Spark op and its DuckDB twin agree. */
+  private def splitOfComponent(component: Column, trainPct: Int,
+                               validPct: Int): Column = {
     val b = graft.functions.Hashing.permBucket(component, 1, 100)
     when(b < trainPct, lit("train"))
       .when(b < trainPct + validPct, lit("valid"))
       .otherwise(lit("test"))
   }
-
-  /** Read the split manifest a [[graft.streaming.Streams
-    * .componentSplitIngestSink]] stream maintains under `dir` —
-    * (doc_id, component, split), equal to [[componentSplit]] over the
-    * union of all streamed documents row-for-row (StreamsSpec pins
-    * it). One labels scan + the split projection; no signature work
-    * at read time. */
-  def componentSplitFromIndex(spark: SparkSession, dir: String,
-                              trainPct: Int = 90,
-                              validPct: Int = 5): DataFrame =
-    Tables.read(spark, s"$dir/labels")
-      .select(col("doc_id"), col("component"),
-        splitOfComponent(col("component"), trainPct, validPct).as("split"))
 
   /** DuckDB twin of [[componentSplit]] over `documents` (simhash and
     * minhash CTE families combined; the minhash chain is prefixed to

@@ -114,9 +114,9 @@ object Graph {
 
     // ONE degree aggregation, pinned: unpinned, the executed r12 plan
     // ran the explode+agg FOUR times (once per deg consumer in the
-    // twice-derived orientation subtree — plans/r12/
-    // graph_triangles_after.txt ops 7-9/18-20/32-34/43-45), each a
-    // full edge re-scan with its own exchange (guide §2.4)
+    // twice-derived orientation subtree — formatted-plan ops
+    // 7-9/18-20/32-34/43-45), each a full edge re-scan with its own
+    // exchange (guide §2.4)
     val deg = Dedup.spreadPinned(
       e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", col("n"))
@@ -392,7 +392,7 @@ object Graph {
     *  - ONE degree aggregation, pinned: unpinned it re-ran as five
     *    separate union+agg subtrees in the executed plan (the two
     *    semi-join caps, deg_u, deg_v — each a full adjacency re-scan
-    *    with two exchanges; plans/r12/link_predict_before.txt ops
+    *    with two exchanges; the r12 formatted plan's ops
     *    9-11/25-27/43-45/87-89/100-102).
     *  - Capped adjacency cached on `a`: every consumer keyed on the
     *    node — the Σdeg² wedge self-join (both sides), the signature
@@ -621,12 +621,8 @@ object Graph {
   }
 
   /** Per-(node, position) minhash MINIMA over the given adjacency
-    * rows — one agg, the signature kernel shared by the batch ranker
-    * and the streaming index's per-trigger delta
-    * ([[graft.streaming.Streams.linkApproxIngestSink]]). Min is
-    * associative, so minima over an adjacency DELTA min-merged with
-    * previously stored minima equal the full-set signature — the
-    * property that makes the persisted signature log incremental.
+    * rows — one agg, the signature kernel shared by the in-query
+    * ranker and the persisted index build ([[linkApproxWriteIndex]]).
     *
     * TWO permutation stages: polyHash of a short digit-string id is
     * tiny (≤ ~1.7e6 for 4-char ids), and a single (a·h+b) mod P2 of
@@ -640,8 +636,8 @@ object Graph {
     * deliberately OUTSIDE Perms — reusing a Perms member would make
     * that position's two stages the same affine map composed with
     * itself. */
-  private[graft] def neighborMinhash(adj: DataFrame,
-                                     nHashes: Int): DataFrame = {
+  private def neighborMinhash(adj: DataFrame,
+                              nHashes: Int): DataFrame = {
     import graft.functions.Hashing
     val as = typedLit(Hashing.Perms.take(nHashes).map(_._1))
     val bs = typedLit(Hashing.Perms.take(nHashes).map(_._2))
@@ -735,10 +731,9 @@ object Graph {
     * [[linkPredictApprox]]): the per-node signature agg — the
     * linear-but-large leg, O(edges · nHashes) — is paid once here;
     * every later [[linkPredictApproxFromIndex]] call pays only
-    * banding + verification. Layout is the
-    * [[graft.streaming.Streams.linkApproxIngestSink]] contract
-    * (`sigs/` minima log written first, `adj/` last so adj's
-    * `_SUCCESS` is the completion marker a crash can't fake). */
+    * banding + verification. Layout: `sigs/` minima written first,
+    * `adj/` last so adj's `_SUCCESS` is the completion marker a crash
+    * can't fake. */
   def linkApproxWriteIndex(edges: DataFrame, dir: String,
                            nHashes: Int = 8): Unit = {
     val spark = edges.sparkSession
@@ -770,57 +765,19 @@ object Graph {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Compact the persisted link index — the day-2 maintenance twin of
-    * [[graft.ext.Similarity.ivfPqCompactIndex]]: every
-    * [[graft.streaming.Streams.linkApproxIngestSink]] trigger appends
-    * one small file to `adj/` and one to `sigs/`, and the sigs LOG
-    * additionally accumulates duplicate (a, i) minima (each trigger's
-    * partial minimum — correct under the min-fold, but rows and files
-    * both grow with trigger count, not with graph size). Compaction
-    * folds the log down to one row per (a, i) — the idempotent
-    * min-merge, so ranking is unchanged by construction — and rewrites
-    * both stores through the staged-swap publisher (a crash never
-    * loses the index; GraphSpec pins compact → rank ≡ pre-compact).
-    *
-    * Concurrency is ENFORCED, not prose (the r11 gap): compaction is
-    * read-then-swap, and rows a concurrently running
-    * [[graft.streaming.Streams.linkApproxIngestSink]] trigger appends
-    * between the read and the swap would be lost in the rewrite —
-    * for `adj/` that would permanently diverge the ledger from the
-    * sigs log (edges whose sig minima survive but whose adjacency
-    * rows vanish are treated as already-settled forever). Both this
-    * compactor and the sink's trigger body therefore serialize
-    * through [[graft.meta.MaintenanceLock]] on `dir`: a trigger that
-    * fires mid-compaction blocks, then appends to the compacted
-    * stores — zero loss (StreamsSpec pins it). */
-  def linkApproxCompactIndex(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      val sigs = Tables.read(spark, s"$dir/sigs")
-        .groupBy(col("a"), col("i")).agg(min(col("h")).as("h"))
-      graft.meta.StagedWrite.overwrite(sigs, s"$dir/sigs")
-      graft.sources.Sources.compact(spark, s"$dir/adj")
-    }
-
   /** [[linkPredictApprox]] served from the PERSISTED signature index
-    * a [[graft.streaming.Streams.linkApproxIngestSink]] stream — or a
-    * [[linkApproxWriteIndex]] batch build — maintains under `dir`:
+    * a [[linkApproxWriteIndex]] build maintains under `dir`:
     *
-    *  - `adj/` — (a, n) adjacency rows, exactly-once by construction
-    *    (the sink's anti-join ledger);
-    *  - `sigs/` — an append-only LOG of per-(a, i) minhash minima;
-    *    the true signature is the min-fold over the log, taken here
-    *    as one hash agg. Replayed deltas append duplicate minima,
-    *    which the fold absorbs — idempotence via min's associativity
-    *    instead of a second ledger.
+    *  - `adj/` — (a, n) adjacency rows, one per distinct pair;
+    *  - `sigs/` — per-(a, i) minhash minima, min-folded at read (one
+    *    hash agg).
     *
     * The degree cap, band skip, verification and ranking are the
-    * batch tail verbatim, so the result equals [[linkPredictApprox]]
-    * over the union of all streamed edges row-for-row (StreamsSpec
-    * pins it). This is the steady-state economics of the persisted
-    * PQ index applied to the graph family: per trigger the stream
-    * pays O(batch · nHashes); ranking never recomputes a signature
-    * from scratch. */
+    * in-query tail verbatim, so the result equals
+    * [[linkPredictApprox]] over the indexed edges row-for-row
+    * (GraphSpec pins it). This is the economics of the persisted PQ
+    * index applied to the graph family: ranking never recomputes a
+    * signature from scratch. */
   def linkPredictApproxFromIndex(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, k: Int, nHashes: Int = 8,
                                  minCn: Long = 2L,

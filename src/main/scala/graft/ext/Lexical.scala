@@ -38,7 +38,7 @@ import graft.schema.Tables
   *
   * Day-2 ops, all serialized through [[graft.meta.MaintenanceLock]]
   * on `dir` (append vs compaction — the same lost-append race the
-  * PQ/link indexes close):
+  * PQ index closes):
   *  - [[lexAppendIndex]]: O(batch) — postings of the new docs land
   *    via dynamic-partition append, then one stats segment row.
   *    A crash BETWEEN the two writes leaves postings ahead of stats;
@@ -121,26 +121,15 @@ object Lexical {
                      text: Column, dir: String,
                      nBuckets: Int = 64): Unit =
     graft.meta.MaintenanceLock.withLock(spark, dir) {
-      lexAppendUnlocked(spark, docs, id, text, dir, nBuckets)
+      postingsOf(docs, id, text, nBuckets)
+        .repartition(col("bucket"))
+        .write.mode("append").partitionBy("bucket")
+        .parquet(s"$dir/postings")
+      val seg = Tables.read(spark, s"$dir/stats")
+        .agg(max(col("seg"))).collect()(0).getLong(0) + 1L
+      statsOf(docs, id, text, seg)
+        .coalesce(1).write.mode("append").parquet(s"$dir/stats")
     }
-
-  /** [[lexAppendIndex]] body without the lock — for callers that
-    * already hold it and need to compose more work under the same
-    * critical section (the streaming ingest sink's anti-join +
-    * append must be ONE unit, or a compaction could slip between). */
-  private[graft] def lexAppendUnlocked(spark: SparkSession,
-                                       docs: DataFrame, id: Column,
-                                       text: Column, dir: String,
-                                       nBuckets: Int): Unit = {
-    postingsOf(docs, id, text, nBuckets)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$dir/postings")
-    val seg = Tables.read(spark, s"$dir/stats")
-      .agg(max(col("seg"))).collect()(0).getLong(0) + 1L
-    statsOf(docs, id, text, seg)
-      .coalesce(1).write.mode("append").parquet(s"$dir/stats")
-  }
 
   /** Recompute `stats/` exactly from `postings/` — the idempotent
     * recovery for a crash between an append's two writes. One full

@@ -71,8 +71,8 @@ object Pca {
     * second moments (Σ q_i q_j). Moments are ADDITIVE — two slices'
     * moment tables merge by cell-wise sum into exactly the whole's
     * ([[mergeMoments]]), which is what makes covariance maintainable
-    * incrementally (a batch appends without a corpus rescan) and as
-    * a streaming sink.
+    * incrementally (a batch appends without a corpus rescan,
+    * [[covarianceIncremental]]).
     *
     * The expansion emits a FLAT array<long> in a fixed cell order
     * (for each i: the first moment q_i, then the tail products
@@ -616,13 +616,6 @@ object Pca {
   def mergeMoments(tables: Seq[DataFrame]): DataFrame =
     tables.reduce(_ unionByName _)
       .groupBy("i", "j")
-      .agg(sum(col("s")).cast(DecimalType(38, 0)).as("s"),
-        sum(col("cnt")).as("cnt"))
-
-  /** [[mergeMoments]] for grouped moment tables (`grp` in the key). */
-  def mergeMomentsBy(tables: Seq[DataFrame]): DataFrame =
-    tables.reduce(_ unionByName _)
-      .groupBy("grp", "i", "j")
       .agg(sum(col("s")).cast(DecimalType(38, 0)).as("s"),
         sum(col("cnt")).as("cnt"))
 

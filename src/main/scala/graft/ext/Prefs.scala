@@ -92,8 +92,7 @@ object Prefs {
   /** The sufficient statistics — the ONLY pass over the match log:
     * per unordered pair (p_lo < p_hi), total matches and wins of the
     * low-id side. One hash aggregate; output ≤ |players|² rows
-    * regardless of log size. Additive across shards/triggers (pure
-    * counts), which is what makes the streaming twin a fold. */
+    * regardless of log size. Additive across shards (pure counts). */
   def pairStats(matches: DataFrame): DataFrame =
     matches.groupBy(col("p_lo"), col("p_hi"))
       .agg(count(lit(1)).cast("long").as("n_matches"),

@@ -201,11 +201,9 @@ object RetrievalEval {
                          k: Int): DataFrame =
     rankedTopKOf(emb, emb.filter(col("vec_id") < qMax), k)
 
-  /** [[rankedTopK]] with an explicit query relation — the streaming
-    * twin's entry point. Queries must be corpus members (`n_rel` is
-    * the label population minus the query itself, and the scan
-    * excludes self by `vec_id`), which is the canary deployment's
-    * contract: re-score vectors the corpus already holds. */
+  /** [[rankedTopK]] with an explicit query relation. Queries must be
+    * corpus members (`n_rel` is the label population minus the query
+    * itself, and the scan excludes self by `vec_id`). */
   private def rankedTopKOf(corpus: DataFrame, queries: DataFrame,
                            k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
@@ -311,8 +309,7 @@ object RetrievalEval {
     labelEvalSummaryOf(emb, emb.filter(col("vec_id") < qMax), k)
 
   /** [[labelEvalSummary]] over an explicit query relation (corpus
-    * members — [[rankedTopKOf]]'s contract): the per-trigger body of
-    * the streaming eval canary. */
+    * members — [[rankedTopKOf]]'s contract). */
   def labelEvalSummaryOf(corpus: DataFrame, queries: DataFrame,
                          k: Int): DataFrame = {
     val w = dcgWeights(k)

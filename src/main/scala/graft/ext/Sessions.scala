@@ -156,10 +156,9 @@ object Sessions {
     |GROUP BY 1, 2 ORDER BY 1, 2
     |""".stripMargin.trim
 
-  /** Tumbling event-time window aggregate — the batch twin of the
-    * Structured Streaming windowed agg (`Streams.windowedCounts`
-    * uses the same `window()` bucketing): per `minutes`-wide bucket,
-    * event count and decimal-pinned value total. A stateless bucket
+  /** Tumbling event-time window aggregate (Spark's `window()`
+    * bucketing): per `minutes`-wide bucket, event count and
+    * decimal-pinned value total. A stateless bucket
     * projection + ONE hash agg (map-side combined) — the best
     * possible shape; time is never a skew key because buckets are
     * uniform by construction. */
@@ -357,8 +356,7 @@ object Sessions {
     * and the published value is the exact ppm ratio num·10⁶ div den.
     * Rows-based window (8 fixed lags, one type-keyed shuffle), tail
     * truncation at 2⁻⁸ < 0.4% of mass. Bit-identical across engines,
-    * and at 100 TB the state per key is 8 longs, which is also why the
-    * streaming twin of this fold needs no watermark gymnastics.
+    * and at 100 TB the state per key is 8 longs.
     *
     * COMPOSITION REQUIREMENT: the lags are over OBSERVED rows, so the
     * input series must be gap-free per type — on a sparse series the

@@ -1641,10 +1641,9 @@ object Similarity {
   /** Compact a persisted index's `codes` table — the day-2 half of
     * J43's index-rebuild discipline (reference SQL:870-875: the
     * maintenance window pays to restore scan shape). Every
-    * [[ivfPqAppendToIndex]] / [[graft.streaming.Streams.pqIngestSink]]
-    * micro-batch lands one small parquet file per touched cell; after
-    * months of appends the probe scan's cost tracks FILE COUNT, not
-    * code volume. Partitioned compaction ([[graft.sources.Sources
+    * [[ivfPqAppendToIndex]] call lands one small parquet file per
+    * touched cell; after months of appends the probe scan's cost
+    * tracks FILE COUNT, not code volume. Partitioned compaction ([[graft.sources.Sources
     * .compact]] with c_id) clusters each cell into one file while
     * preserving the hive layout — and with it dynamic partition
     * pruning and the append/search contracts (PersistedPqSpec pins
@@ -1653,11 +1652,10 @@ object Similarity {
     * loses the codes table.
     *
     * Concurrency is ENFORCED, not prose (the r11 gap): compaction is
-    * read-then-swap, and code rows a concurrently running
-    * [[graft.streaming.Streams.pqIngestSink]] trigger appends between
-    * the read and the swap would be dropped by the rewrite — silently,
-    * since the trigger has already committed its checkpoint and the
-    * source never replays those vectors. Both this compactor and
+    * read-then-swap, and code rows a concurrent
+    * [[ivfPqAppendToIndex]] lands between the read and the swap would
+    * be dropped by the rewrite — silently, since the append has
+    * already returned. Both this compactor and
     * [[ivfPqAppendToIndex]] therefore serialize through
     * [[graft.meta.MaintenanceLock]] on `dir`: an append that fires
     * mid-compaction blocks, then lands on the compacted table — zero

@@ -4,18 +4,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Mutual exclusion between a persisted index's APPEND path and its
-  * COMPACTION/REBUILD path — the code form of what used to be a
-  * scaladoc precondition ("stop the ingest stream first").
+  * COMPACTION/REBUILD path.
   *
   * The race it closes: compaction is read-then-staged-swap; rows an
   * append lands between the read and the swap are deleted by the
-  * swap, and since a streaming trigger has by then committed its
-  * checkpoint, the source never replays them — the loss is silent
-  * and, for the link index, permanently diverges the adj ledger from
-  * the sigs log. With the lock, an append that fires mid-compaction
-  * BLOCKS until the swap completes (then appends to the compacted
-  * table — zero loss), and a compaction that fires mid-append blocks
-  * until the append commits.
+  * swap, and the appender has already returned, so nothing replays
+  * them — the loss is silent. With the lock, an append that fires
+  * mid-compaction BLOCKS until the swap completes (then appends to
+  * the compacted table — zero loss), and a compaction that fires
+  * mid-append blocks until the append commits.
   *
   * Mechanics: one marker file `<dir>/_maintenance.lock` taken with
   * an atomic create-if-absent — `FileSystem.createNewFile` on HDFS

@@ -88,8 +88,8 @@ object Sources {
   }
 
   /** Small-file compaction: rewrite a directory into
-    * ceil(bytes / targetFileBytes) files. Streaming micro-batches and
-    * per-partition appends accumulate thousands of KB-scale files;
+    * ceil(bytes / targetFileBytes) files. Repeated per-partition
+    * appends accumulate thousands of KB-scale files;
     * scan cost then tracks FILE COUNT (open/footer/seek per file), not
     * data volume — at 100 TB an uncompacted table can spend longer
     * listing and opening than reading. Run periodically from the

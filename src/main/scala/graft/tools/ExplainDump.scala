@@ -1,8 +1,7 @@
 package graft.tools
 
-/** Dump `.explain("formatted")` for declared queries to files —
-  * the plan evidence the optimization rounds commit under
-  * `plans/r12/`. Usage:
+/** Dump `.explain("formatted")` for declared queries to files in an
+  * output dir — plan evidence for an optimization. Usage:
   *   ExplainDump <sfDir> <outDir> <suffix> <query> [query...]
   * writes `<outDir>/<query>_<suffix>.txt` per query. Plans are
   * compiled under the same session as graft.Bench ([[graft.Harness]])

@@ -132,4 +132,53 @@ class IncrementalScd2Spec extends SparkSpec {
       tracker, log)
     assert(n3 == 0)
   }
+
+  test("fact correction: a newer edit of a stored key replaces it " +
+      "(keep-latest), and reloading the same source changes nothing") {
+    import graft.facts.FactLoader
+    val root = Files.createTempDirectory("graft_fact_fix").toString
+    val tracker = new LoadTracker(spark, s"$root/tracker")
+    val log = new RunLog(spark, s"$root/log")
+    val factPath = s"$root/factsales"
+    val lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
+    val orders = spark.read.parquet(s"$sf/orders.parquet")
+    FactLoader.load(spark, lineitem, orders, Map.empty, factPath,
+      tracker, log)
+    val nRows = spark.read.parquet(factPath).count()
+
+    // the source gains a later edit of one stored line, quantity 999
+    val line = lineitem.orderBy(desc("l_orderkey"), desc("l_linenumber"))
+      .limit(1)
+    val nk = line.select(FactLoader.salesNk).first().getString(0)
+    val corrected = lineitem.unionByName(line
+      .withColumn("l_shipdate", lit("2099-01-01 00:00:00")
+        .cast(lineitem.schema("l_shipdate").dataType))
+      .withColumn("l_quantity",
+        lit(999).cast(lineitem.schema("l_quantity").dataType)))
+    assert(FactLoader.load(spark, corrected, orders, Map.empty, factPath,
+      tracker, log) == 1L)
+    def fact() = spark.read.parquet(factPath).orderBy("sales_nk").collect()
+    val got = fact()
+    assert(got.length == nRows)
+    assert(got.filter(_.getAs[String]("sales_nk") == nk)
+      .map(_.getAs[java.math.BigDecimal]("quantity").intValue).toSeq ==
+      Seq(999), s"key $nk must hold its latest edit")
+    val updated = log.read()
+      .filter(col("run_name") === "etl_load_factsales")
+      .orderBy("started_at").select("rows_updated").collect()
+      .map(_.getLong(0)).toSeq
+    assert(updated == Seq(0L, 1L), s"rows_updated per load: $updated")
+
+    // equal to keep-latest over everything delivered, in one load
+    val oneShot = s"$root/factsales_oneshot"
+    FactLoader.load(spark, corrected, orders, Map.empty, oneShot,
+      new LoadTracker(spark, s"$root/tracker2"), log)
+    assert(got.toSeq ==
+      spark.read.parquet(oneShot).orderBy("sales_nk").collect().toSeq)
+
+    // reloading the same source: nothing new past the watermark
+    assert(FactLoader.load(spark, corrected, orders, Map.empty, factPath,
+      tracker, log) == 0L)
+    assert(fact().toSeq == got.toSeq)
+  }
 }

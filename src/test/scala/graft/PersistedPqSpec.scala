@@ -137,97 +137,6 @@ class PersistedPqSpec extends SparkSpec {
       "an empty appended slice must never trigger a rebuild")
   }
 
-  test("pqIngestSink: streamed appends search identically to batch " +
-      "append; replays append nothing") {
-    import org.apache.spark.sql.types._
-    val dir = freshDir()
-    val srcDir = freshDir()
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    Similarity.ivfPqWriteIndex(base,
-      Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-      nCentroids, m, dim, dir)
-    // two stream files -> two micro-batches
-    batch.filter(col("vec_id") % 2 === 0).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    batch.filter(col("vec_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    def run(ckpt: String) = {
-      val q = graft.streaming.Streams.pqIngestSink(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir),
-        m, dim, dir, ckpt)
-      try q.awaitTermination() finally q.stop()
-    }
-    run(Files.createTempDirectory("pq-ingest-ckpt").toString)
-    val q10 = emb.filter(col("vec_id") < 10)
-    val got = Similarity.ivfPqSearchPersisted(spark, dir, emb, q10,
-        k = 5, nProbe = 4, m = m, dim = dim, rerank = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    val want = Similarity.ivfPqTopKWith(emb, q10,
-        Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-        5, nCentroids, 4, m, dim, 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(got.nonEmpty && got == want,
-      "streamed index drifted from base-codebook truth")
-    // replay with a FRESH checkpoint: the vec_id ledger (the codes
-    // table itself) must reject every row
-    val before = spark.read.parquet(s"$dir/codes").count()
-    run(Files.createTempDirectory("pq-ingest-ckpt2").toString)
-    assert(spark.read.parquet(s"$dir/codes").count() == before,
-      "replayed ingest appended duplicate codes")
-  }
-
-  test("annServeSink: each trigger's served results == the batch " +
-      "persisted search over that trigger's queries; replay is " +
-      "bit-stable per batch_id") {
-    import org.apache.spark.sql.types._
-    val dir = freshDir()
-    build(dir)
-    val srcDir = freshDir()
-    val outDir = freshDir() + "/served"
-    // two query files -> two triggers (maxFilesPerTrigger=1)
-    emb.filter(col("vec_id") < 5).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    emb.filter(col("vec_id") >= 5 && col("vec_id") < 10).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = graft.streaming.Streams.annServeSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir),
-      emb, dir, outDir, k = 5, nProbe = 4, m = m, dim = dim,
-      rerank = 20,
-      Files.createTempDirectory("ann-serve-ckpt").toString)
-    try q.awaitTermination() finally q.stop()
-    val served = spark.read.parquet(outDir)
-    assert(served.select("batch_id").distinct().count() == 2,
-      "two triggers must stamp two batch ids")
-    // serving is stateless: the union of served rows equals one
-    // batch search over the union of queries, column for column
-    val got = served.drop("batch_id")
-      .orderBy("query_id", "rank").collect().toSeq
-    val want = Similarity.ivfPqSearchPersisted(spark, dir, emb,
-        emb.filter(col("vec_id") < 10), k = 5, nProbe = 4, m = m,
-        dim = dim, rerank = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(got.nonEmpty && got == want,
-      "served stream drifted from the batch persisted search")
-    // per-trigger isolation: batch 0 served exactly the first file's
-    // queries (each trigger answers only its own requests)
-    val b0 = served.filter(col("batch_id") === 0)
-      .select("query_id").distinct()
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-      .collect().toSet
-    assert(b0 == (0L until 5L).toSet, s"batch 0 answered: $b0")
-  }
-
   test("compaction: append -> compact -> search == pre-compaction " +
       "search row-for-row; file count shrinks, layout + marker survive") {
     val dir = freshDir()

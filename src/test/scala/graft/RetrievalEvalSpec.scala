@@ -200,59 +200,6 @@ class RetrievalEvalSpec extends SparkSpec {
       s"weak label must separate below the strong one: $byLabel")
   }
 
-  test("retrievalEvalSink: per-trigger macro row == batch summary " +
-      "over that trigger's queries; singleton-only trigger appends " +
-      "nothing") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.types._
-    val srcDir = Files.createTempDirectory("eval-src").toString
-    val outDir = Files.createTempDirectory("eval-out").toString + "/m"
-    // trigger 0: queries {0,1}; trigger 1: queries {2,3}
-    fixture.filter(col("vec_id") < 2).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    fixture.filter(col("vec_id") >= 2).coalesce(1)
-      .write.mode("append").parquet(srcDir)
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val q = graft.streaming.Streams.retrievalEvalSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir),
-      fixture, outDir, k = 3,
-      Files.createTempDirectory("eval-ckpt").toString)
-    try q.awaitTermination() finally q.stop()
-    val got = spark.read.parquet(outDir)
-      .orderBy("batch_id")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val want = Seq(0L, 1L).map { b =>
-      val qs = fixture.filter(col("vec_id") >= b * 2 &&
-        col("vec_id") < (b + 1) * 2)
-      val r = RetrievalEval.labelEvalSummaryOf(fixture, qs, k = 3)
-        .as[(Long, Long, Long, Long)].head()
-      (r._1, r._2, r._3, r._4, b)
-    }
-    assert(got == want,
-      s"per-trigger macro drifted from the batch body: $got vs $want")
-
-    // a trigger whose only query has a singleton label appends nothing
-    val src2 = Files.createTempDirectory("eval-src2").toString
-    val out2 = Files.createTempDirectory("eval-out2").toString + "/m"
-    val singleton = Seq((7L, Array(0.2f, 0.9f), 9))
-      .toDF("vec_id", "embedding", "label")
-    val corpus2 = fixture.unionByName(singleton)
-    singleton.coalesce(1).write.mode("append").parquet(src2)
-    val q2 = graft.streaming.Streams.retrievalEvalSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src2),
-      corpus2, out2, k = 3,
-      Files.createTempDirectory("eval-ckpt2").toString)
-    try q2.awaitTermination() finally q2.stop()
-    assert(!new java.io.File(out2).exists() ||
-      spark.read.parquet(out2).isEmpty,
-      "singleton-label trigger must append no macro row")
-  }
-
   test("@k metrics inherit the singleton-label exclusion") {
     val singleton = Seq(
       (0L, Array(1.0f, 0.0f), 7),

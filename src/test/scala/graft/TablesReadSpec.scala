@@ -95,21 +95,27 @@ class TablesReadSpec extends SparkSpec {
     }
   }
 
-  test("src/main/scala/graft reads parquet with spark.read only in Tables and streaming/") {
-    val main = Paths.get("src/main/scala/graft")
-    assert(Files.isDirectory(main),
+  /** files under `dir` (relative, sorted) with a code line — not a
+    * comment — containing any of `needles` */
+  private def codeCallers(dir: Path, needles: String*): Seq[String] = {
+    assert(Files.isDirectory(dir),
       s"run from the repo root, not ${Paths.get(".").toAbsolutePath}")
-    val callers = Files.walk(main).iterator.asScala
+    Files.walk(dir).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .filter { f =>
         Files.readAllLines(f).asScala.exists { l =>
           val t = l.trim
-          !t.startsWith("*") && !t.startsWith("/") && t.contains(".read.parquet(")
+          !t.startsWith("*") && !t.startsWith("/") && needles.exists(t.contains)
         }
       }
-      .map(main.relativize(_).toString)
-      .filterNot(_.startsWith("streaming/")).toSeq
+      .map(dir.relativize(_).toString).toSeq.sorted
+  }
+
+  test("src/main reads parquet with spark.read only in Tables and has no stream") {
+    val callers = codeCallers(Paths.get("src/main/scala/graft"), ".read.parquet(")
     assert(callers == Seq("schema/Tables.scala"),
       s"spark.read.parquet outside Tables.read: $callers")
+    val streams = codeCallers(Paths.get("src/main"), "readStream", "writeStream")
+    assert(streams.isEmpty, s"Structured Streaming in src/main: $streams")
   }
 }
