@@ -32,7 +32,7 @@ object Queries {
 
   /** Fixed demo merge rules for `bpe_encode_count` — literals, so the
     * oracle replays the identical greedy fold (learned rules are
-    * corpus-dependent and spec-pinned instead; see Bpe.trainMerges).
+    * corpus-dependent).
     * Chosen to fire on the fixture vocabulary (spark/part, table,
     * merge, line/value). */
   val BpeFixedRules: Seq[(String, String)] =
@@ -1554,13 +1554,12 @@ object Queries {
       Some(Similarity.ivfPqTopKOracleSql(64, 5, 10, nCentroids = 16,
         nProbe = 4, m = 8, ksub = 16, rerank = 20))),
 
-    // The persisted index's REBUILD TRIGGER as data: exact
-    // quantization error of the appended slice (vec_id >= 400,
-    // encoded against the base slice's codebooks — the
-    // ann_pq_incremental contract) vs the base's own error, ratio in
-    // exact ppm. The day-2 audit ivfPqAppendToIndex's scaladoc names:
-    // append while drift_ppm holds, rebuild when it crosses the
-    // deployment's threshold (J43's rebuild half as a declared query)
+    // A PQ index's REBUILD TRIGGER as data: exact quantization error
+    // of the appended slice (vec_id >= 400, encoded against the base
+    // slice's codebooks — the ann_pq_incremental contract) vs the
+    // base's own error, ratio in exact ppm: append while drift_ppm
+    // holds, rebuild when it crosses the deployment's threshold
+    // (J43's rebuild half as a declared query)
     ("pq_drift_audit",
       (s: SparkSession, d: String) => {
         val emb = t(s, d, "embeddings")
@@ -3140,7 +3139,7 @@ object Queries {
         rates = Seq("en" -> 300)))),
 
     // Z-order layout keys: Morton interleave of customer and order-day
-    // (the curve writeZOrdered clusters by — a pure projection)
+    // (the curve a Z-ordered layout clusters by — a pure projection)
     ("zorder_key",
       (s: SparkSession, d: String) => {
         val o = t(s, d, "orders")
@@ -3511,7 +3510,7 @@ object Queries {
 
     // Quality-classifier training step: the exact integer first LR
     // gradient at w=0 (label = en target), per feature — the
-    // oracle-checked face of the Classifier.lrTrain loop
+    // oracle-checked face of LR training
     ("quality_lr_step",
       (s: SparkSession, d: String) =>
         ext.Classifier.lrStep0(t(s, d, "documents"),

@@ -241,12 +241,4 @@ object Checks {
                      touchedKeys: Option[DataFrame] = None): Unit =
     prePublish(Seq(
       "dup_nk" -> duplicates(scopeTo(candidate, nk, touchedKeys), Seq(nk))))
-
-  /** Source↔DW reconciliation (reference Stage X, SQL:1814-1839). */
-  def reconcile(source: DataFrame, dw: DataFrame, sourceSum: Column,
-                dwSum: Column): DataFrame = {
-    val s = source.agg(count(lit(1)).as("src_rows"), sourceSum.as("src_sum"))
-    val d = dw.agg(count(lit(1)).as("dw_rows"), dwSum.as("dw_sum"))
-    s.crossJoin(d)
-  }
 }

@@ -92,58 +92,12 @@ object Scd2 {
     * `monotonically_increasing_id` — nondeterministic across runs.
     * A global row_number is a single-partition sort — fine for
     * dimension tables (≤ millions of rows; facts store the dims'
-    * surrogates and never need their own), free of the extra job and
-    * pinned block-manager memory the distributed variant pays. Past
-    * ~10M rows switch to [[withSurrogateDistributed]] — identical
-    * keys, proven by Scd2Spec. For incremental appends pass
-    * `offset` = current max surrogate. */
+    * surrogates and never need their own). For incremental appends
+    * pass `offset` = current max surrogate. */
   def withSurrogate(dim: DataFrame, skName: String, order: Seq[String],
                     offset: Long = 0L): DataFrame = {
     val w = Window.orderBy(order.map(col(_).asc): _*)
     dim.withColumn(skName, row_number().over(w).cast("long") + lit(offset))
-  }
-
-  /** Distributed twin of [[withSurrogate]] producing IDENTICAL keys
-    * without the single-partition sort: range-partition on the order
-    * columns (equal keys stay co-located; partition ranges follow the
-    * total order), assign per-partition row_numbers, then add each
-    * partition's cumulative offset (a tiny cumsum over partition ids —
-    * the only single-partition step touches one row per partition, not
-    * one row per dim row). Use at 10M+ dim rows; below that the plain
-    * window is cheaper.
-    *
-    * `order` must be a total order (same requirement as
-    * [[withSurrogate]]) or ties make both variants nondeterministic. */
-  def withSurrogateDistributed(dim: DataFrame, skName: String,
-                               order: Seq[String], offset: Long = 0L,
-                               partitions: Int = 0): DataFrame = {
-    val n = if (partitions > 0) partitions
-      else dim.sparkSession.sessionState.conf.numShufflePartitions
-    val orderCols = order.map(col(_).asc)
-    // localCheckpoint pins the sampled range boundaries: the
-    // row_number branch and the offsets branch below both read this
-    // frame, and without materialization a branch that re-executes the
-    // exchange RESAMPLES the boundaries — the two branches then
-    // disagree on partition membership and the assembled keys are
-    // silently wrong (observed as off-by-dozens surrogate drift).
-    // Trade: lineage is truncated, so losing an executor during the
-    // assignment fails the job instead of recomputing — acceptable for
-    // a dimension-sized frame; use reliable checkpoint() if not
-    val parted = dim.repartitionByRange(n, order.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
-    val local = parted.withColumn("__rn",
-      row_number().over(
-        Window.partitionBy(col("__pid")).orderBy(orderCols: _*)).cast("long"))
-    val offsets = local.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__offset",
-        coalesce(sum(col("__cnt")).over(
-          Window.orderBy(col("__pid").asc)
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__offset"))
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(skName, col("__rn") + col("__offset") + lit(offset))
-      .drop("__pid", "__rn", "__offset")
   }
 
   /** The reference's Unknown member (nk = -1, SQL:622-631): appended to
@@ -183,61 +137,4 @@ object Scd2 {
       probeKey === dimKey && probeTs >= dim("active_from") &&
         probeTs < dim("active_to"),
       "left")
-
-  /** Scale-path twin of [[asOfJoin]] — identical result
-    * (Scd2Spec pins them together), different join shape. The classic
-    * formulation joins every probe against EVERY version of its key
-    * and post-filters the interval: fine when dims broadcast, but on a
-    * billion-probe × deep-history join the per-key cross product is
-    * the bottleneck. Here probe and version rows are unioned, sorted
-    * once per key by (ts, version-first), and each probe picks up the
-    * most recent version via a running `last(ignoreNulls)` window —
-    * ONE shuffle on the key, zero pair materialization, cost linear in
-    * probes + versions regardless of history depth.
-    *
-    * @param probe   probe rows; must not contain `dimAttrs` columns
-    * @param key     join key column name present in BOTH inputs
-    * @param probeTs probe timestamp column name
-    * @param dim     SCD2 versions with `active_from`/`active_to`
-    * @param dimAttrs dim attribute columns to carry onto the probes
-    */
-  def asOfJoinUnion(probe: DataFrame, key: String, probeTs: String,
-                    dim: DataFrame, dimAttrs: Seq[String]): DataFrame = {
-    val carried = dimAttrs :+ "active_from" :+ "active_to"
-    val probeCols = probe.columns.toSeq
-    // the whole version rides as ONE struct so the window picks a
-    // version atomically — per-column last(ignoreNulls) would skip a
-    // version's legitimately-NULL attribute and stitch fields from
-    // DIFFERENT versions into one output row
-    val vRows = dim.select(
-      (col(key) +: col("active_from").as("__ts") +: lit(0).as("__isprobe") +:
-        struct(carried.map(col): _*).as("__ver") +:
-        probeCols.filterNot(_ == key).map(c =>
-          lit(null).cast(probe.schema(c).dataType).as(c))): _*)
-    val verType = vRows.schema("__ver").dataType
-    val pRows = probe.select(
-      (col(key) +: col(probeTs).as("__ts") +: lit(1).as("__isprobe") +:
-        lit(null).cast(verType).as("__ver") +:
-        probeCols.filterNot(_ == key).map(col)): _*)
-    // versions sort before probes at equal ts (half-open [from, to):
-    // a probe AT active_from matches that version); versions TIED on
-    // active_from — zero-width [t,t) intervals from simultaneous
-    // changes — order by active_to so the live (widest) one is picked
-    // last, exactly the version the classic interval join matches.
-    // Precondition (guaranteed by deriveVersions): at most one version
-    // per (key, active_from, active_to).
-    val w = Window.partitionBy(col(key))
-      .orderBy(col("__ts").asc, col("__isprobe").asc,
-        col("__ver.active_to").asc_nulls_first)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val filled = vRows.unionByName(pRows)
-      .withColumn("__l", last(col("__ver"), ignoreNulls = true).over(w))
-    // the picked-up version only applies while it is still open at the
-    // probe's timestamp (delete close-outs leave gaps)
-    val live = col("__l").isNotNull && col("__ts") < col("__l.active_to")
-    filled.filter(col("__isprobe") === 1)
-      .select((probeCols.map(col) ++
-        (dimAttrs :+ "active_from" :+ "active_to").map(c =>
-          when(live, col(s"__l.$c")).otherwise(lit(null)).as(c))): _*)
-  }
 }

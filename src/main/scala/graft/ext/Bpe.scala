@@ -3,29 +3,26 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed BPE tokenizer training (Sennrich, Haddow, Birch, ACL
-  * 2016 — "Neural Machine Translation of Rare Words with Subword
-  * Units"): learn merge rules by repeatedly counting adjacent token
-  * pairs over the corpus and fusing the most frequent pair. No
-  * reference analog; this is the tokenizer-training leg of the
-  * training-data pipeline surface (SURVEY §7.6).
+/** BPE tokenizer statistics (Sennrich, Haddow, Birch, ACL 2016 —
+  * "Neural Machine Translation of Rare Words with Subword Units"):
+  * BPE learns merge rules by repeatedly counting adjacent token pairs
+  * over the corpus and fusing the most frequent pair. No reference
+  * analog; this is the tokenizer leg of the training-data pipeline
+  * surface (SURVEY §7.6). Served here: the pair counts of one
+  * training round and encoding under a fixed rule list.
   *
   * The classic scale trick makes this tractable at 100 TB: BPE
   * statistics depend only on the WORD HISTOGRAM, not the token
   * stream. One explode+agg collapses the corpus to (word, count) —
   * at trillion-token scale the distinct-word table is millions of
-  * rows, not trillions — and every subsequent merge round runs over
-  * that histogram. Per round the work is: one stateless projection
-  * applying the previous merge (a codegen'd `aggregate` fold over
-  * each word's token array — no UDF), one explode+agg pair count
-  * with map-side combine, and a 1-row `TakeOrdered` to pick the
-  * winner. Only the k winning pairs ever reach the driver (like the
-  * k·dim k-means cells, Similarity.scala) — the histogram itself
-  * never does.
+  * rows, not trillions — and pair counting and encoding run over
+  * that histogram: one explode+agg pair count with map-side combine,
+  * and merges applied as a codegen'd `aggregate` fold over each
+  * word's token array — no UDF.
   *
-  * Determinism: pair counts are exact int64; the winning pair is
-  * chosen by (count DESC, left ASC, right ASC) — a total order, so
-  * ties cannot make two runs (or two engines) diverge. Merges use
+  * Determinism: pair counts are exact int64, and a round's winning
+  * pair is the first by (count DESC, left ASC, right ASC) — a total
+  * order, so ties cannot make two engines diverge. Merges use
   * the standard left-to-right greedy fold: in `aaa` with merge
   * (a,a), the first two fuse, the third survives alone — the fold
   * can't re-fuse `aa`+`a` because the merged symbol no longer equals
@@ -70,36 +67,6 @@ object Bpe {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
         .otherwise(concat(acc, array(t))))
 
-  /** Train `nMerges` BPE merge rules over the corpus. Returns the
-    * learned rules in order. Driver holds only the k winning pairs;
-    * each round re-plans one projection + one agg over the cached
-    * histogram (localCheckpoint bounds plan growth, exactly like the
-    * k-means driver loop). */
-  def trainMerges(docs: DataFrame, text: Column,
-                  nMerges: Int): Seq[(String, String, Long)] = {
-    var hist = initialTokens(wordHistogram(docs, text))
-      .select(col("cnt"), col("toks")).localCheckpoint()
-    val rules = Seq.newBuilder[(String, String, Long)]
-    var round = 0
-    var done = false
-    while (round < nMerges && !done) {
-      val top = pairCounts(hist)
-        .orderBy(col("pair_cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val r = top(0)
-        val (a, b) = (r.getString(0), r.getString(1))
-        rules += ((a, b, r.getLong(2)))
-        hist = hist.select(col("cnt"),
-          applyMerge(col("toks"), a, b).as("toks"))
-          .localCheckpoint()
-      }
-      round += 1
-    }
-    rules.result()
-  }
-
   /** Encode a word column with learned rules applied in order —
     * `nRules` chained fold projections (fine for the tens-of-rules
     * demo scale; a production encoder compiles the rule table into
@@ -116,7 +83,7 @@ object Bpe {
     * twin can replay the identical greedy fold (`list_reduce`) and
     * the whole query is oracle-checkable — unlike learned rules,
     * which depend on the corpus and cannot be re-derived on the
-    * oracle side (the training loop is spec-pinned instead).
+    * oracle side.
     *
     * Scale shape: encode runs once per DISTINCT (stratum, word) —
     * the word-histogram trick again — then the stats are one hash

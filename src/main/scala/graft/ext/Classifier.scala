@@ -3,37 +3,29 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed quality-classifier training (extension surface,
-  * SURVEY §7.6): the fasttext-style linear filter every production
-  * corpus pipeline trains — "given a small trusted target set, score
-  * every document" (GPT-3/LLaMA-style quality classification) — as
-  * logistic regression over cheap per-document count features, run
-  * entirely as Spark aggregates (one pass per iteration, no MLlib
-  * dependency, no driver-side data).
+/** Quality classifier (extension surface, SURVEY §7.6): the
+  * fasttext-style linear filter every production corpus pipeline
+  * trains — "given a small trusted target set, score every document"
+  * (GPT-3/LLaMA-style quality classification) — as logistic
+  * regression over cheap per-document count features, run entirely
+  * as Spark aggregates and projections (no MLlib dependency, no
+  * driver-side data).
   *
-  * Two surfaces, following the k-means precedent
-  * ([[Similarity.kmeansUpdate]] / [[Similarity.kmeans]]):
-  *
-  *   - [[lrStep0]] — the declared, ORACLE-CHECKED query: the exact
-  *     first gradient at w=0. There σ(w·x) = 1/2 exactly, so the
+  *   - [[lrStep0]] — the declared, ORACLE-CHECKED training step: the
+  *     exact first gradient at w=0. There σ(w·x) = 1/2 exactly, so the
   *     doubled gradient 2·∇_j = Σ_d (1 − 2y_d)·x_dj is pure int64
   *     arithmetic — engine-exact with zero float folds.
-  *   - [[lrTrain]] — the driver-loop trainer: per-iteration
-  *     gradients are per-doc doubles (sigmoid needs exp) quantized
-  *     to fixed-point e9 BEFORE the sum, so the aggregation is
-  *     order-independent exact int64 (the
-  *     [[Similarity.kmeansUpdate]] determinism recipe) and a re-run
-  *     reproduces the identical weight trajectory. Driver traffic is
-  *     one (nFeatures+1)-long vector per iteration.
+  *   - [[scoreFixed]] and the audits over it — deployment scoring
+  *     under fixed literal weights, emitting the logit.
   *
   * Features are COUNTS (bias, words, chars, stopword hits, distinct
-  * tokens) so the declared step needs no float anywhere; the trainer
-  * normalizes them to O(1) ratios internally for conditioning.
+  * tokens) so the declared step needs no float anywhere; scoring
+  * normalizes them to O(1) ratios for conditioning.
   */
 object Classifier {
 
   /** Feature names, index-aligned with the x-columns of [[lrStep0]]
-    * and [[lrTrain]]. */
+    * and the weights of [[scoreFixed]]. */
   val FeatureNames: Seq[String] =
     Seq("bias", "n_words", "n_chars", "n_stop", "n_distinct")
 
@@ -110,8 +102,8 @@ object Classifier {
     |""".stripMargin.trim
   }
 
-  /** Normalized double features for the iterative trainer (O(1)
-    * ranges for conditioning): bias, words/100, chars/1000,
+  /** Normalized double features for scoring (O(1) ranges for
+    * conditioning): bias, words/100, chars/1000,
     * stop_ratio, distinct_ratio. `w` must be a PRE-SPLIT words
     * column pinned behind an alias boundary (see [[lrStep0]]). */
   private def normFeatureCols(text: Column, w: Column): Seq[Column] = {
@@ -126,56 +118,10 @@ object Classifier {
       size(array_distinct(w)).cast("double") / nw)
   }
 
-  /** Full-batch LR training loop: `iters` gradient-descent steps at
-    * rate `rate`. Each iteration is ONE aggregate over the corpus:
-    * per-doc gradient contributions (σ(w·x) − y)·x_j and the log-loss
-    * are quantized to e9 fixed point per row, then summed exactly —
-    * order-independent, so the weight trajectory is re-run identical
-    * (same recipe as [[Similarity.kmeans]]). Driver holds only the
-    * weight vector; returns (weights, per-iteration mean log-loss).
-    *
-    * At 100 TB each step is a map + 6-column reduce — the classic
-    * full-batch distributed LR; iterations multiply passes, so
-    * production runs few epochs on a sampled training slice and then
-    * SCORES the full corpus with [[scoreWith]] (one projection). */
-  def lrTrain(docs: DataFrame, text: Column, label: Column,
-              iters: Int, rate: Double): (Array[Double], Seq[Double]) = {
-    require(iters >= 0 && rate > 0.0)
-    val nF = FeatureNames.length
-    val base = docs.select(text.as("__text"),
-        when(label, 1.0).otherwise(0.0).as("__y"))
-      .withColumn("__w", split(col("__text"), " "))
-      .select((normFeatureCols(col("__text"), col("__w")).zipWithIndex.map {
-        case (c, i) => c.as(s"__x$i")
-      } :+ col("__y")): _*)
-      .localCheckpoint() // features computed once, reused every iter
-    val n = base.count().toDouble
-    var wv = Array.fill(nF)(0.0)
-    val losses = Seq.newBuilder[Double]
-    for (_ <- 0 until iters) {
-      val z = (0 until nF).map(i => lit(wv(i)) * col(s"__x$i"))
-        .reduce(_ + _)
-      val p = lit(1.0) / (lit(1.0) + exp(-z))
-      // fixed-point e9 per-row quantization before the sum: exact
-      // int64 reduce, fold-order independent
-      def fp(c: Column) = round(c * 1e9).cast("long")
-      val row = base.agg(
-        sum(fp(-(col("__y") * log(p) +
-          (lit(1.0) - col("__y")) * log(lit(1.0) - p)))).as("loss"),
-        (0 until nF).map(i =>
-          sum(fp((p - col("__y")) * col(s"__x$i"))).as(s"g$i")): _*)
-        .collect()(0)
-      losses += row.getAs[Long]("loss") / 1e9 / n
-      wv = Array.tabulate(nF)(i =>
-        wv(i) - rate * (row.getAs[Long](s"g$i") / 1e9) / n)
-    }
-    (wv, losses.result())
-  }
-
   /** Fixed demo weights for the DECLARED `quality_lr_score` query —
     * literals, so the oracle replays the identical arithmetic (the
     * [[graft.Queries.BpeFixedRules]] pattern: learned weights are
-    * corpus-dependent and spec-pinned via [[lrTrain]] instead).
+    * corpus-dependent).
     * Order = [[FeatureNames]] over the normalized features. */
   val FixedScoreWeights: Seq[Double] = Seq(-1.5, 0.8, 0.2, 4.0, -0.5)
 
@@ -296,8 +242,9 @@ object Classifier {
     |""".stripMargin.trim
   }
 
-  /** Score documents with trained weights: σ(w·x) as `lr_score` —
-    * a pure projection (the 100 TB deployment path). */
+  /** Score documents with given weights: σ(w·x) as `lr_score` — a
+    * pure projection. The reference the logit threshold of
+    * [[scoreFixed]] (`pred` = logit > 0 ⟺ σ > ½) is checked against. */
   def scoreWith(docs: DataFrame, id: Column, text: Column,
                 weights: Array[Double]): DataFrame = {
     require(weights.length == FeatureNames.length)

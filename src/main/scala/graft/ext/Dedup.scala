@@ -123,11 +123,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Word n-grams (shingles) of the text, empty when too short.
-    * Only for single-use contexts; hot paths pre-split (see
-    * [[wordGramsFrom]]). */
-  def wordGrams(text: Column, n: Int): Column = wordGramsFrom(words(text), n)
-
   /** (doc_id, gram) pairs, one row per distinct shingle — the shared
     * front of the minhash and jaccard pipelines, with the
     * split-once-per-doc projection boundary. */
@@ -137,7 +132,8 @@ object Dedup {
       .select(col("doc_id"),
         explode(array_distinct(wordGramsFrom(col("__w"), n))).as("gram"))
 
-  /** DuckDB twin of [[wordGrams]] as a SQL expression over `text`. */
+  /** DuckDB twin of [[wordGramsFrom]] over the words of `text`, as a
+    * SQL expression. */
   def wordGramsSql(n: Int): String = {
     val parts = (1 to n).map(k => s"w[i + $k]").mkString(" || ' ' || ")
     s"list_transform(range(greatest(len(str_split(text, ' ')) - ${n - 1}, 0)), " +

@@ -47,8 +47,7 @@ object Graph {
     * SKIPPED (their pairs are never emitted) — the quadratic-blowup
     * guard above. The skip is part of the operator's declared
     * semantics, mirrored in every oracle twin, so parity holds by
-    * construction even on data that trips the guard; use
-    * [[oversizeGroups]] for the audit of what was skipped.
+    * construction even on data that trips the guard.
     *
     * Guard shape: the oversize-group list is a map-side-combining
     * count + filter — at most n_items/maxGroupSize rows, and EMPTY
@@ -87,16 +86,6 @@ object Graph {
       .select(col("g"))
     Pin.pin(base.join(oversize, Seq("g"), "left_anti"))
   }
-
-  /** Audit of the groups [[coEdges]]/[[basketLift]] skip: every group
-    * whose distinct item count exceeds `maxGroupSize`, with the count
-    * — the "what did the guard eat" row a pipeline logs next to the
-    * graph build. Empty on healthy data. */
-  def oversizeGroups(df: DataFrame, group: Column, item: Column,
-                     maxGroupSize: Int = DefaultMaxGroupSize): DataFrame =
-    df.select(group.as("g"), item.cast("long").as("i")).distinct()
-      .groupBy(col("g")).agg(count(lit(1)).as("n_items"))
-      .filter(col("n_items") > maxGroupSize)
 
   /** Per-node triangle participation counts over undirected edges
     * (u < v). Output: (node_id, n_tri) for nodes in ≥1 triangle. */
@@ -1207,79 +1196,6 @@ object Graph {
         col("__sd2").cast("long").as("wedge_mass"),
         expr("(__sd2 * 1000000) div __sd").cast("long")
           .as("wedge_per_edge_ppm"))
-  }
-
-  /** A [[recommendRanker]] verdict: which common-neighbor ranker to
-    * run, the `maxDegree` cap to run it with, and the measured rule
-    * that picked it. */
-  final case class RankerPlan(choice: String, maxDegree: Long,
-                              reason: String)
-
-  /** The §41 regime rule as CODE instead of prose — reads the sizing
-    * facts [[degreeHistogram]] emits and returns the ranker a
-    * deployment should actually run (SCALE.md §39/§41/§42, all
-    * measured):
-    *
-    *  - organic degree spectrum → `exact-capped`
-    *    ([[linkPredict]] with the cap clamped at the p99.9 tail):
-    *    wedge mass is the cost model and it is benign, so exact CN
-    *    stays ahead of the screen (§39: 16.5 s exact vs 35.5 s
-    *    screened on sf0.1);
-    *  - hub-dominated → `screened` ([[linkPredictApprox]]): one
-    *    10⁵-degree hub is ~10⁹ distinct wedge pairs — §39 measured
-    *    the exact ranker KILLED at 46 min where the screen ranked
-    *    true-cn semantics in 35.5 s. Hub-dominated means
-    *    `d_max ≥ hubFactor · d_p999` (a hub the organic tail does
-    *    not explain — §41's fixture reads 982,639 vs p999=134) or
-    *    `wedge_per_edge ≥ wedgePerEdgeThreshold` (E[deg²]/E[deg],
-    *    the per-edge cost multiplier, "in the thousands" on hub
-    *    graphs vs ≈ mean degree on organic ones);
-    *  - hub-dominated AND rank-many (`rankRuns ≥ 2`) →
-    *    `screened-from-index` ([[linkPredictApproxFromIndex]] over a
-    *    [[linkApproxWriteIndex]] build): §42 measured the one-time
-    *    build paying for itself within ~one ranking at ×10 scale
-    *    (build 29.7 s vs 146 s saved per rank), 2.2× steady-state.
-    *
-    * The returned cap: p99.9 for exact (the §39 lesson — clamp at
-    * the organic tail or leave the default), [[DefaultMaxGroupSize]]
-    * for the screened paths (the §41 verify-payload contract). */
-  def recommendRanker(dP999: Long, dMax: Long, wedgePerEdgePpm: Long,
-                      rankRuns: Int = 1, hubFactor: Long = 10L,
-                      wedgePerEdgeThreshold: Long = 1000L): RankerPlan = {
-    val hubTail = dMax >= hubFactor * math.max(1L, dP999)
-    val wedgeHeavy = wedgePerEdgePpm >= wedgePerEdgeThreshold * 1000000L
-    if (!hubTail && !wedgeHeavy)
-      RankerPlan("exact-capped", math.max(1L, dP999),
-        s"organic spectrum (d_max=$dMax within ${hubFactor}x of " +
-          s"p999=$dP999, wedge_per_edge_ppm=$wedgePerEdgePpm): exact " +
-          "CN is wedge-mass-linear and ahead of the screen (SCALE " +
-          "39); cap clamped at the p99.9 tail")
-    else {
-      val why =
-        (if (hubTail) s"d_max=$dMax >= ${hubFactor}x p999=$dP999" else "") +
-          (if (hubTail && wedgeHeavy) "; " else "") +
-          (if (wedgeHeavy) s"wedge_per_edge_ppm=$wedgePerEdgePpm >= " +
-            s"${wedgePerEdgeThreshold}e6" else "")
-      if (rankRuns >= 2)
-        RankerPlan("screened-from-index", DefaultMaxGroupSize.toLong,
-          s"hub-dominated ($why) and rank-many (runs=$rankRuns): the " +
-            "signature index amortizes edge-set + signature derivation " +
-            "(SCALE 42: 2.2x steady-state at x10)")
-      else
-        RankerPlan("screened", DefaultMaxGroupSize.toLong,
-          s"hub-dominated ($why): exact CN pays the hub's deg-squared " +
-            "wedges (SCALE 39: killed at 46 min where the screen took " +
-            "35.5 s); cap = the verify-payload contract default")
-    }
-  }
-
-  /** [[recommendRanker]] over the [[degreeHistogram]] relation itself
-    * — the form a deployment calls: pre-flight, then let the
-    * pre-flight choose. */
-  def recommendRanker(hist: DataFrame, rankRuns: Int): RankerPlan = {
-    val r = hist.select(col("d_p999"), col("d_max"),
-      col("wedge_per_edge_ppm")).collect().head
-    recommendRanker(r.getLong(0), r.getLong(1), r.getLong(2), rankRuns)
   }
 
   /** DuckDB twin of [[degreeHistogram]] over the part co-order

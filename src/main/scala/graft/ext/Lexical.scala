@@ -8,18 +8,17 @@ import graft.schema.Tables
 /** Persisted INVERTED INDEX for lexical (BM25) retrieval — the third
   * member of the build-once/search-many index family, beside the
   * IVF-PQ vector index ([[Similarity.ivfPqWriteIndex]]) and the LSH
-  * link index ([[Graph.linkApproxWriteIndex]]). Dense retrieval got
-  * its day-2 lifecycle in rounds 9–12; sparse lexical retrieval at
-  * 100 TB is inverted-index-shaped for the same reason — re-scoring
+  * link index ([[Graph.linkApproxWriteIndex]]). Sparse lexical
+  * retrieval at 100 TB is inverted-index-shaped for the same reason
+  * as dense retrieval is index-shaped — re-scoring
   * the whole corpus per query ([[Corpus.bm25TopK]]'s one-pass form)
   * is a batch posture, while a search service pays |postings of the
   * query's terms|, not |corpus|.
   *
   * Layout under `dir`:
-  *  - `stats/` — per-ingest-segment rows (seg, n_docs, toks): the
-  *    corpus-level sufficient statistics of BM25's length norm.
-  *    ADDITIVE — append writes a new row, the reader sums — so
-  *    ingest never read-modify-writes a global row.
+  *  - `stats/` — one row (seg, n_docs, toks): the corpus-level
+  *    sufficient statistics of BM25's length norm (the reader sums
+  *    the table's rows).
   *  - `postings/` — (term, doc_id, tf, doc_len) hive-PARTITIONED BY
   *    `bucket` = polyHash(term) mod nBuckets. A query's terms prune
   *    to ≤ |terms| bucket directories (partition pruning on literal
@@ -29,25 +28,12 @@ import graft.schema.Tables
   *    one long per posting buys the length norm without a doc-table
   *    join on the search path. Document frequency is NOT stored —
   *    it is exact at read as `count(*)` per term over the pruned
-  *    postings, so df can never go stale under appends.
+  *    postings.
   *
   * Write order is crash-honest (the ivfPqWriteIndex rule): postings
   * are written LAST and their `_SUCCESS` marker gates
   * [[lexIndexExists]]; a crash mid-build leaves no marker and the
   * next caller rebuilds.
-  *
-  * Day-2 ops, all serialized through [[graft.meta.MaintenanceLock]]
-  * on `dir` (append vs compaction — the same lost-append race the
-  * PQ index closes):
-  *  - [[lexAppendIndex]]: O(batch) — postings of the new docs land
-  *    via dynamic-partition append, then one stats segment row.
-  *    A crash BETWEEN the two writes leaves postings ahead of stats;
-  *    df (live) and tf are still exact, only N/avgdl lag by the
-  *    partial batch. [[lexRepairStats]] recomputes stats from
-  *    postings exactly — the documented recovery, idempotent,
-  *    LexicalIndexSpec-pinned.
-  *  - [[lexCompactIndex]]: per-bucket file merge through StagedWrite
-  *    (search cost tracks file count after months of micro-appends).
   *
   * Search ([[lexSearchIndex]]) reproduces [[Corpus.bm25TopK]]'s
   * integer fixed-point scoring EXACTLY (same idf image, same
@@ -113,43 +99,6 @@ object Lexical {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/postings")
   }
-
-  /** O(batch) ingest: postings first (dynamic-partition append into
-    * only the batch's buckets), stats segment row second; see the
-    * crash-recovery contract in the object scaladoc. */
-  def lexAppendIndex(spark: SparkSession, docs: DataFrame, id: Column,
-                     text: Column, dir: String,
-                     nBuckets: Int = 64): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      postingsOf(docs, id, text, nBuckets)
-        .repartition(col("bucket"))
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$dir/postings")
-      val seg = Tables.read(spark, s"$dir/stats")
-        .agg(max(col("seg"))).collect()(0).getLong(0) + 1L
-      statsOf(docs, id, text, seg)
-        .coalesce(1).write.mode("append").parquet(s"$dir/stats")
-    }
-
-  /** Recompute `stats/` exactly from `postings/` — the idempotent
-    * recovery for a crash between an append's two writes. One full
-    * postings scan (repair op, not the hot path). */
-  def lexRepairStats(spark: SparkSession, dir: String): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      Tables.read(spark, s"$dir/postings")
-        .groupBy(col("doc_id")).agg(first(col("doc_len")).as("doc_len"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("doc_len")).as("toks"))
-        .select(lit(0L).as("seg"), col("n_docs"),
-          coalesce(col("toks"), lit(0L)).as("toks"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    }
-
-  /** Per-bucket file merge (StagedWrite swap under the lock). */
-  def lexCompactIndex(spark: SparkSession, dir: String): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      graft.sources.Sources.compact(spark, s"$dir/postings",
-        partitionCols = Seq("bucket"))
-    }
 
   /** BM25 top-k over the persisted index — [[Corpus.bm25TopK]]'s
     * exact integer scoring, paying |postings of the query terms|:

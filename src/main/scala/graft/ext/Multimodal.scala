@@ -1,38 +1,21 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing (extension surface, SURVEY §7.6).
   *
   * Image/audio/video payloads are opaque `binary` columns with typed
-  * metadata. Recognized still-image containers (JPEG, PNG, GIF) are
-  * parsed for real — width/height/channels straight from the encoded
-  * header bytes per the public container specs (ITU T.81 §B.2.2 for
-  * JPEG SOFn, RFC 2083 §4.1.1 for PNG IHDR, GIF89a §18 for the
-  * logical screen descriptor). Payloads that are not recognized media
-  * (e.g. the UTF-8 text payloads the synthetic corpus carries) fall
-  * back to [[MediaDecoder.synthetic]], the deterministic stand-in that
-  * keeps the end-to-end pipeline runnable on text-only fixtures and
-  * stays in lockstep with the oracle-checked [[featuresExpr]] twin.
-  * Full-pixel decode (the libjpeg equivalent) is out of scope in this
-  * container; the Spark-side shape — binary column schema,
-  * per-partition batch decode via `mapPartitions` (the Scala analog
-  * of `mapInPandas`: amortizes decoder init per partition, keeps
-  * memory bounded to a partition), and the feature-struct output
-  * schema a downstream trainer consumes — is real and tested.
+  * metadata. The synthetic corpus carries UTF-8 text payloads, so
+  * every operator here derives its media metadata deterministically
+  * from the payload bytes ([[featuresExpr]]: format and dimensions
+  * from the byte length), which keeps the end-to-end pipeline
+  * runnable on text-only fixtures and oracle-checkable. Full-pixel
+  * decode is out of scope; the Spark-side shape — binary column
+  * schema, per-frame and per-segment work lists, content-hash dedup —
+  * is real and tested.
   */
 object Multimodal {
-
-  case class MediaRecord(doc_id: Long, payload: Array[Byte])
-  /** Derived fields are Options: a null payload (null source text)
-    * yields a row of nulls, matching [[featuresExpr]] — not an NPE.
-    * `channels` is populated only for recognized media containers
-    * (header-parsed); the synthetic fallback leaves it None. */
-  case class MediaFeatures(doc_id: Long, n_bytes: Option[Long],
-                           format: Option[String], width: Option[Long],
-                           height: Option[Long], channels: Option[Long],
-                           checksum: Option[Long])
 
   /** Attach a binary payload column. In production this is the raw
     * image/audio bytes column of the table; here it is derived from
@@ -40,131 +23,10 @@ object Multimodal {
   def withPayload(docs: DataFrame): DataFrame =
     docs.withColumn("payload", encode(col("text"), "UTF-8"))
 
-  /** Header metadata decoder. Dispatches on magic bytes: real parsing
-    * for JPEG/PNG/GIF; [[synthetic]] fallback for everything else so a
-    * text-derived payload still yields deterministic metadata (and
-    * agrees with the DuckDB-expressible [[featuresExpr]]). Pure
-    * byte-array arithmetic — no libraries, safe on any executor. */
-  object MediaDecoder {
-    final case class Decoded(format: String, width: Long, height: Long,
-                             channels: Option[Long])
-
-    private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-    private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-        (u8(b, i + 2) << 8) | u8(b, i + 3)) & 0xffffffffL
-    private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-
-    /** JPEG (ITU T.81): walk the marker segments from SOI to the first
-      * frame header SOFn (C0–CF minus C4 DHT / C8 JPG / CC DAC), which
-      * carries sample precision, lines (height), samples-per-line
-      * (width), and component count. Stops at SOS/EOI — a JPEG whose
-      * entropy stream starts before any SOF is malformed. */
-    def parseJpeg(b: Array[Byte]): Option[Decoded] = {
-      if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
-      var i = 2
-      while (i + 3 < b.length) {
-        if (u8(b, i) != 0xff) return None // lost marker sync
-        var j = i
-        while (j + 1 < b.length && u8(b, j + 1) == 0xff) j += 1 // fill bytes
-        val marker = u8(b, j + 1)
-        if (marker == 0x01 || (marker >= 0xd0 && marker <= 0xd7)) {
-          i = j + 2 // standalone marker, no length field
-        } else if (marker == 0xd9 || marker == 0xda) {
-          return None // EOI / SOS before any SOF
-        } else {
-          if (j + 3 >= b.length) return None
-          val len = be16(b, j + 2)
-          if (len < 2) return None
-          val isSof = marker >= 0xc0 && marker <= 0xcf &&
-            marker != 0xc4 && marker != 0xc8 && marker != 0xcc
-          if (isSof) {
-            if (j + 9 >= b.length || len < 8) return None
-            val h = be16(b, j + 5)
-            val w = be16(b, j + 7)
-            val nc = u8(b, j + 9)
-            return Some(Decoded("jpeg", w.toLong, h.toLong, Some(nc.toLong)))
-          }
-          i = j + 2 + len
-        }
-      }
-      None
-    }
-
-    private val PngSig =
-      Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-
-    /** PNG (RFC 2083): 8-byte signature, then IHDR must be the first
-      * chunk — width/height as big-endian u32, colour type at byte 25
-      * mapped to its channel count. */
-    def parsePng(b: Array[Byte]): Option[Decoded] = {
-      if (b.length < 26) return None
-      if (!PngSig.indices.forall(k => u8(b, k) == PngSig(k))) return None
-      if (!(b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R'))
-        return None
-      val channels = u8(b, 25) match {
-        case 0 => 1L // greyscale
-        case 2 => 3L // truecolour
-        case 3 => 1L // indexed
-        case 4 => 2L // greyscale + alpha
-        case 6 => 4L // truecolour + alpha
-        case _ => return None
-      }
-      Some(Decoded("png", be32(b, 16), be32(b, 20), Some(channels)))
-    }
-
-    /** GIF87a/89a: 6-byte version signature, then the logical screen
-      * descriptor's little-endian u16 width/height. Palette output is
-      * RGB → 3 channels. */
-    def parseGif(b: Array[Byte]): Option[Decoded] = {
-      if (b.length < 10) return None
-      val sig = new String(b, 0, 6, "US-ASCII")
-      if (sig != "GIF87a" && sig != "GIF89a") return None
-      Some(Decoded("gif", le16(b, 6).toLong, le16(b, 8).toLong, Some(3L)))
-    }
-
-    /** Deterministic stand-in for unrecognized payloads (the corpus'
-      * text-derived bytes): metadata derived from byte length, kept
-      * bit-identical to [[featuresExpr]] so the mapPartitions path and
-      * the oracle-checked expression path agree on text fixtures. */
-    def synthetic(payload: Array[Byte]): Decoded = {
-      val n = payload.length.toLong
-      val format = if (n % 2 == 0) "jpeg" else "png"
-      Decoded(format, 64L + n % 640L, 64L + n % 480L, None)
-    }
-
-    def decode(payload: Array[Byte]): Decoded =
-      parsePng(payload)
-        .orElse(parseJpeg(payload))
-        .orElse(parseGif(payload))
-        .getOrElse(synthetic(payload))
-  }
-
-  /** Per-partition batch decode: one decoder per partition, streaming
-    * iterator in/out (never materializes a partition in memory). */
-  def decodeFeatures(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    media.mapPartitions { it =>
-      // decoder init happens once per partition here
-      it.map { rec =>
-        if (rec.payload == null)
-          MediaFeatures(rec.doc_id, None, None, None, None, None, None)
-        else {
-          val d = MediaDecoder.decode(rec.payload)
-          val checksum = rec.payload.foldLeft(0L)((acc, b) =>
-            (acc * 31 + (b & 0xff)) % 1000000007L)
-          MediaFeatures(rec.doc_id, Some(rec.payload.length.toLong),
-            Some(d.format), Some(d.width), Some(d.height), d.channels,
-            Some(checksum))
-        }
-      }
-    }
-  }
-
-  /** Expression-only twin of the stub decode, used by the declared
-    * oracle query (pure column ops — DuckDB-expressible; the
-    * mapPartitions path is covered by ScalaTest instead). */
+  /** Deterministic stand-in media metadata for the text-derived
+    * payload — byte count, format, width and height from the payload
+    * length — as pure column ops (DuckDB-expressible, oracle-checked
+    * by [[featuresOracleSql]]). */
   def featuresExpr(docs: DataFrame): DataFrame = {
     val n = octet_length(encode(col("text"), "UTF-8")).cast("long")
     docs.select(col("doc_id"),
@@ -191,9 +53,8 @@ object Multimodal {
     * stride sample of its frames — one output row per (doc, sampled
     * frame) with the frame index and its millisecond timestamp. This
     * is the step that turns a video column into the per-frame work
-    * list a decode/caption/embed stage consumes; the decode itself
-    * stays behind [[MediaDecoder]], the MANIFEST is the Spark-side
-    * plumbing and is exact.
+    * list a decode/caption/embed stage consumes; the MANIFEST is the
+    * Spark-side plumbing and is exact.
     *
     * `n_frames` comes from container metadata in production; here it
     * derives from payload length so the op runs end-to-end. Stride =

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   * ANY input. All quantities are positive int64, every per-pair
   * division truncates identically on Spark (`div`) and DuckDB
   * (`//`), and the sums are order-independent — the oracle twins are
-  * engine-exact with zero float folds (the [[graft.ext.Classifier]]
-  * / kmeans determinism recipe).
+  * engine-exact with zero float folds (the
+  * [[graft.ext.Similarity.kmeansUpdate]] determinism recipe).
   *
   * Overflow headroom: terms are bounded by max(W̃_i, ñ_ij)·S² ≤
   * n_matches·10¹² — int64-safe below ~9·10⁶ matches PER PAIR. A

@@ -42,9 +42,8 @@ object SemDedup {
   /** Per-vector top-1 centroid assignment with the cosine to that
     * centroid: (vid, e, n2, f2, cluster, cos_c). Centroids are the
     * sample codebook (`vec_id < nClusters` — the repo-wide
-    * oracle-replayable convention; a Lloyd-trained codebook from
-    * [[Similarity.kmeans]] drops in for the non-oracle production
-    * path). cos_c is exact-decimal dot / double sqrt norms —
+    * oracle-replayable convention). cos_c is exact-decimal dot /
+    * double sqrt norms —
     * bit-identical in DuckDB, so downstream ORDER BY / threshold
     * comparisons agree across engines. */
   private[graft] def semanticAssign(corpus: DataFrame, id: String,

@@ -1346,10 +1346,9 @@ object Similarity {
   /** Deterministic sample codebooks: codeword w of EVERY subspace is
     * corpus vector w (the first `ksub` by id), full-width. m·ksub
     * rows with per-subspace self-dots — broadcast-sized at any corpus
-    * scale. Production trains these with Lloyd instead
-    * ([[pqTrainCodebooks]]); the sample init is the deterministic,
-    * oracle-expressible variant and is itself the standard k-means++-
-    * free init for PQ training. */
+    * scale. The sample init is the deterministic, oracle-expressible
+    * codebook and is itself the standard k-means++-free init for PQ
+    * training. */
   def pqSampleCodebooks(corpus: DataFrame, m: Int, ksub: Int,
                         subLen: Int): DataFrame =
     corpus.filter(col("vec_id") < ksub)
@@ -1390,7 +1389,7 @@ object Similarity {
       .select(col(idCol), col("sub"), col("__m.cw_id").as("code"))
 
   /** IVF-PQ ANN top-k with the supplied codebook table (shape of
-    * [[pqSampleCodebooks]] / [[pqTrainCodebooks]]).
+    * [[pqSampleCodebooks]]).
     *
     * Scale shape, stage by stage:
     *  - index build: one corpus pass for the cell assignment
@@ -1550,14 +1549,9 @@ object Similarity {
     *    measured (SCALE.md §41): hive-DPP is the shipped default for
     *    the bounded-query-batch search shape — at ×100/1600 cells the
     *    bare probe-join walls are near-noise either way, but pruning
-    *    advantage grows with corpus size and the hive layout keeps
-    *    the partition-wise append/compaction lifecycle the day-2 ops
-    *    use. Re-layout via [[graft.sources.Sources.writeBucketed]] on
-    *    c_id when the cell count itself becomes the listing/
-    *    small-file bottleneck (file count is ∝ nCells here, constant
-    *    when bucketed) or when the dominant consumer is an
-    *    index×index join too big to broadcast (bucketing pre-shuffles
-    *    the codes side).
+    *    advantage grows with corpus size. File count is ∝ nCells
+    *    here; a bucketed layout keeps it constant and pre-shuffles the
+    *    codes side for an index×index join too big to broadcast.
     *
     * Raw floats never enter the index — re-rank fetches the survivor
     * handful from the corpus table. `codes/` is written LAST, so its
@@ -1597,82 +1591,12 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Append a NEW batch of vectors to a persisted index — the day-2
-    * ingest of build-once/search-many: the batch is assigned and
-    * PQ-encoded against the index's OWN codebooks + centroids (loaded
-    * from `dir`, never re-derived — the ann_pq_incremental contract),
-    * and its code rows land in the same cell-partitioned layout via
-    * dynamic-partition append (only the batch's cells' directories
-    * are touched). Cost is O(batch): one assignment pass + one
-    * encode argmin over the batch. Codebook drift is the declared
-    * trade of every IVF append path (reclustering is a rebuild);
-    * [[pqQuantizationError]] over the appended rows is the audit
-    * that decides when to rebuild. */
-  def ivfPqAppendToIndex(spark: SparkSession, batch: DataFrame,
-                         m: Int, dim: Int, dir: String): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      ivfPqAppendToIndexLocked(spark, batch, m, dim, dir)
-    }
-
-  private def ivfPqAppendToIndexLocked(spark: SparkSession,
-                                       batch: DataFrame, m: Int,
-                                       dim: Int, dir: String): Unit = {
-    val subLen = dim / m
-    require(m * subLen == dim, s"m=$m must divide dim=$dim")
-    val cw = Tables.read(spark, s"$dir/codebooks")
-    val cb = Tables.read(spark, s"$dir/centroids").collect()
-      .map { r =>
-        val v = r.getSeq[Float](r.fieldIndex("c_emb"))
-        var n2 = 0.0
-        v.foreach(x => n2 += x.toDouble * x.toDouble)
-        (r.getLong(r.fieldIndex("c_id")), v, math.sqrt(n2))
-      }.sortBy(_._1).toSeq
-    val b = Dedup.spread(batch.select(col("vec_id").as("cand_id"),
-      col("embedding").as("c_emb")), col("cand_id"))
-    val lists = assignedCells(b, cb, "cand_id", "c_emb", 1)
-      .select(col("cand_id"), col("c_id"))
-    val codes = pqEncode(b, cw, "cand_id", "c_emb", m, subLen)
-    lists.join(codes, Seq("cand_id"))
-      .repartition(col("c_id"))
-      .write.mode("append").partitionBy("c_id")
-      .parquet(s"$dir/codes")
-  }
-
-  /** Compact a persisted index's `codes` table — the day-2 half of
-    * J43's index-rebuild discipline (reference SQL:870-875: the
-    * maintenance window pays to restore scan shape). Every
-    * [[ivfPqAppendToIndex]] call lands one small parquet file per
-    * touched cell; after months of appends the probe scan's cost
-    * tracks FILE COUNT, not code volume. Partitioned compaction ([[graft.sources.Sources
-    * .compact]] with c_id) clusters each cell into one file while
-    * preserving the hive layout — and with it dynamic partition
-    * pruning and the append/search contracts (PersistedPqSpec pins
-    * append → compact → search ≡ pre-compaction search row-for-row).
-    * Publishes through StagedWrite, so a crash mid-compaction never
-    * loses the codes table.
-    *
-    * Concurrency is ENFORCED, not prose (the r11 gap): compaction is
-    * read-then-swap, and code rows a concurrent
-    * [[ivfPqAppendToIndex]] lands between the read and the swap would
-    * be dropped by the rewrite — silently, since the append has
-    * already returned. Both this compactor and
-    * [[ivfPqAppendToIndex]] therefore serialize through
-    * [[graft.meta.MaintenanceLock]] on `dir`: an append that fires
-    * mid-compaction blocks, then lands on the compacted table — zero
-    * loss (PersistedPqSpec pins it). */
-  def ivfPqCompactIndex(spark: SparkSession, dir: String): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      graft.sources.Sources.compact(spark, s"$dir/codes",
-        partitionCols = Seq("c_id"))
-    }
-
-  /** Codebook DRIFT audit — the number that decides when a persisted
-    * PQ index must be REBUILT rather than appended to
-    * ([[ivfPqAppendToIndex]]'s declared trade: appended batches are
-    * encoded against the BASE codebooks, and as the corpus
+  /** Codebook DRIFT audit — the number that decides when a PQ index
+    * must be REBUILT rather than appended to (rows appended after the
+    * build are encoded against the BASE codebooks, and as the corpus
     * distribution drifts those codebooks quantize new rows worse).
     * One row: per-slice totals of the exact min-subspace-L2
-    * quantization error ([[pqQuantizationError]]'s objective, in
+    * quantization error (the PQ training objective, in
     * exact picounits — every distance is a multiple of 10⁻¹²) for
     * the base slice (`vec_id < splitId` — what the codebooks saw)
     * and the appended slice, plus `drift_ppm` = mean-error(new) /
@@ -1770,53 +1694,6 @@ object Similarity {
     |""".stripMargin.trim
   }
 
-  /** The REBUILD half of the persisted PQ index's day-2 loop — J43's
-    * maintenance-window rebuild (reference SQL:870-875) as the policy
-    * that CONSUMES [[pqDriftAudit]] instead of leaving it a number in
-    * a report. Audits the appended slice (`vec_id >= splitId`, the
-    * ingest watermark at last build) against the index's OWN persisted
-    * codebooks, and when drift crosses `thresholdPpm` rebuilds the
-    * whole index from the current corpus via [[ivfPqWriteIndex]]
-    * (in-place; the marker-delete rule above keeps a crashed rebuild
-    * honest — callers wanting publish-then-swap wrap it the way the
-    * declared queries wrap builds). Returns true iff it rebuilt.
-    *
-    * Policy on the NULL drift sentinel (zero-error base): any nonzero
-    * appended error is infinite drift → rebuild; zero appended error
-    * (or nothing appended) → no signal → keep appending.
-    *
-    * Codebooks for the rebuild: `trainIters` = 0 re-derives the
-    * deterministic sample init (the declared queries' convention —
-    * rebuild then re-clusters coarse cells over the full corpus);
-    * > 0 runs [[pqTrainCodebooks]] Lloyd rounds, the production
-    * setting — on a DRIFTED distribution the sample init (first-ksub
-    * vectors = all base-slice) cannot adapt, while trained codebooks
-    * descend the quantization objective on the post-drift mix
-    * (measured: SCALE.md §43). Cost: one audit pass (linear, broadcast
-    * codebooks) + the rebuild itself only when triggered. */
-  def ivfPqRebuildIfDrifted(spark: SparkSession, corpus: DataFrame,
-                            splitId: Long, nCentroids: Int, m: Int,
-                            ksub: Int, dim: Int, dir: String,
-                            thresholdPpm: Long,
-                            trainIters: Int = 0): Boolean = {
-    val cw = Tables.read(spark, s"$dir/codebooks")
-    val row = pqDriftAudit(corpus, cw, m, dim, splitId).collect().head
-    val nNew = row.getAs[Long]("n_new")
-    val drifted =
-      if (nNew == 0L) false
-      else if (row.isNullAt(row.fieldIndex("drift_ppm")))
-        !row.isNullAt(row.fieldIndex("err_new_pico")) &&
-          row.getAs[Long]("err_new_pico") > 0L
-      else row.getAs[Long]("drift_ppm") >= thresholdPpm
-    if (drifted) {
-      val fresh =
-        if (trainIters > 0) pqTrainCodebooks(corpus, m, ksub, dim, trainIters)
-        else pqSampleCodebooks(corpus, m, ksub, dim / m)
-      ivfPqWriteIndex(corpus, fresh, nCentroids, m, dim, dir)
-    }
-    drifted
-  }
-
   /** Search a PERSISTED IVF-PQ index ([[ivfPqWriteIndex]] layout):
     * the steady-state leg a production deployment pays per query
     * batch — load codebooks + centroids (both driver/broadcast
@@ -1847,8 +1724,7 @@ object Similarity {
     // carries over) with a plan whose SIZE is constant in
     // nCentroids; |Q|·nCentroids scoring rows are the right trade
     // for the bounded-query-batch search-service shape. The kernel
-    // stays the right path where rows dominate cells (index build,
-    // O(batch) append).
+    // stays the right path where rows dominate cells (index build).
     val cents = Tables.read(spark, s"$dir/centroids")
     val index = Tables.read(spark, s"$dir/codes")
       .withColumn("c_id", col("c_id").cast("long"))
@@ -1872,90 +1748,6 @@ object Similarity {
         .filter(col("__prn") <= nProbe)
         .select(col("query_id"), col("c_id")))
     ivfPqSearchStages(index, corpus, q, cw, probes, k, m, subLen, rerank)
-  }
-
-  /** Lloyd-trained PQ codebooks, descending THE SAME L2 objective
-    * [[pqEncode]]/[[pqQuantizationError]] score (assignment = the
-    * shared exact-decimal subspace-L2 argmin; update = per-(subspace,
-    * codeword, position) mean in fixed-point nano units — the
-    * [[labelCentroids]] exactness scheme). Classic Lloyd guarantees
-    * the objective never increases round over round — the property
-    * PqSpec pins (a cosine-assignment trainer would not: it can
-    * RAISE the L2 objective on unnormalized subvectors). All m
-    * subspaces train in ONE distributed pass per round (the exploded
-    * cell relation is n·dim rows with map-side combine; driver state
-    * is m·ksub·subLen cells ≈ the codebook itself). Codewords stay
-    * full-width at their subspace offset so the result drops into
-    * [[ivfPqTopKWith]] unchanged; empty codewords keep their previous
-    * value. Training is iterative and hence not oracle-SQL-
-    * expressible; the green surface uses [[pqSampleCodebooks]]. */
-  def pqTrainCodebooks(corpus: DataFrame, m: Int, ksub: Int, dim: Int,
-                       iters: Int): DataFrame = {
-    val subLen = dim / m
-    require(m * subLen == dim, s"m=$m must divide dim=$dim")
-    require(iters >= 0, s"iters must be non-negative, got $iters")
-    val spark = corpus.sparkSession
-    val c = corpus.select(col("vec_id").as("cand_id"),
-      col("embedding").as("c_emb")).localCheckpoint()
-    // init = the sample codebooks' subvectors, as driver state
-    var books: Map[(Int, Long), Array[Float]] =
-      c.filter(col("cand_id") < ksub).collect().flatMap { r =>
-        val v = r.getSeq[Float](1)
-        (0 until m).map(j => (j, r.getLong(0)) ->
-          v.slice(j * subLen, (j + 1) * subLen).toArray)
-      }.toMap
-    def booksDf: DataFrame = {
-      import spark.implicits._
-      books.toSeq.sortBy(_._1).map { case ((sub, cwId), sv) =>
-        val full = new Array[Float](dim)
-        System.arraycopy(sv, 0, full, sub * subLen, subLen)
-        (sub, cwId, full.toSeq)
-      }.toDF("sub", "cw_id", "cw_emb")
-        .withColumn("cw_emb", col("cw_emb").cast("array<float>"))
-        .withColumn("cw_n2s",
-          dotSub(col("cw_emb"), col("cw_emb"), col("sub"), subLen))
-    }
-    for (_ <- 1 to iters) {
-      val cells = pqEncode(c, booksDf, "cand_id", "c_emb", m, subLen)
-        .join(c, Seq("cand_id"))
-        .select(col("sub"), col("code"), posexplode(
-          slice(col("c_emb"), col("sub") * subLen + 1, lit(subLen))))
-        .select(col("sub"), col("code"), col("pos"),
-          round(col("col").cast("double") * lit(1e9)).cast("long").as("q"))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(count(lit(1)).as("n"), sum(col("q")).as("sq"))
-        .collect()
-      val updated = cells.groupBy(r => (r.getInt(0), r.getLong(1)))
-        .map { case (key, rows) =>
-          val sv = books(key).clone()
-          rows.foreach { r =>
-            sv(r.getInt(2)) =
-              (r.getLong(4).toDouble / 1e9 / r.getLong(3)).toFloat
-          }
-          key -> sv
-        }
-      books = books ++ updated
-    }
-    booksDf
-  }
-
-  /** Total PQ quantization error (sum over rows and subspaces of the
-    * min subspace L2) for a codebook table — the training objective;
-    * used by PqSpec to verify Lloyd improves on the sample init. */
-  def pqQuantizationError(corpus: DataFrame, cw: DataFrame, m: Int,
-                          dim: Int): java.math.BigDecimal = {
-    val subLen = dim / m
-    val c = corpus.select(col("vec_id").as("cand_id"),
-      col("embedding").as("c_emb"))
-    c.withColumn("sub", explode(sequence(lit(0), lit(m - 1))))
-      .withColumn("__n2s", dotSub(col("c_emb"), col("c_emb"), col("sub"), subLen))
-      .join(broadcast(cw), Seq("sub"))
-      .withColumn("__d", col("__n2s") + col("cw_n2s") -
-        lit(2) * dotSub(col("c_emb"), col("cw_emb"), col("sub"), subLen))
-      .groupBy(col("cand_id"), col("sub"))
-      .agg(min(col("__d")).as("__dmin"))
-      .agg(sum(col("__dmin")).as("err"))
-      .collect()(0).getDecimal(0)
   }
 
   /** CTE chain shared by the IVF-PQ oracles (full and incremental) —
@@ -2101,16 +1893,6 @@ object Similarity {
                dim: Int, rerank: Int): DataFrame =
     recallVsExact(corpus, queries, k,
       ivfPqTopK(corpus, queries, k, nCentroids, nProbe, m, ksub, dim,
-        rerank))
-
-  /** recall@k of the IVF-PQ path under CALLER-SUPPLIED codebooks —
-    * the production-dial audit ([[pqTrainCodebooks]]' Lloyd books at
-    * ksub=256 vs the sample init, same search legs; SCALE.md §34). */
-  def pqRecallWith(corpus: DataFrame, queries: DataFrame, cw: DataFrame,
-                   k: Int, nCentroids: Int, nProbe: Int, m: Int,
-                   dim: Int, rerank: Int): DataFrame =
-    recallVsExact(corpus, queries, k,
-      ivfPqTopKWith(corpus, queries, cw, k, nCentroids, nProbe, m, dim,
         rerank))
 
   /** The IVF nProbe TUNING CURVE in one query: recall@k of the IVF
@@ -2965,8 +2747,7 @@ object Similarity {
   }
 
   /** Fixed-point member sums per (`key`, position) — the shared
-    * UPDATE kernel of [[labelCentroids]], [[kmeansUpdate]] and the
-    * [[kmeans]] loop. */
+    * UPDATE kernel of [[labelCentroids]] and [[kmeansUpdate]]. */
   private def fixedPointCellSums(assigned: DataFrame, key: String): DataFrame =
     assigned
       .select(col(key), posexplode(col("embedding")).as(Seq("pos", "__v")))
@@ -2991,66 +2772,6 @@ object Similarity {
         .select(col("vid").as("vec_id"), col("e").as("embedding"),
           element_at(col("cells"), 1).as("c_id")),
       "c_id")
-  }
-
-  /** Full k-means (spherical-flavored: cosine assignment, mean
-    * update): `iters` Lloyd rounds driven by a driver-side loop over
-    * [[kmeansUpdate]]'s two distributed stages. Per iteration the
-    * cluster means — k·dim cells, constant-size at any corpus scale —
-    * come back to the driver (the same sanctioned driver-side scalar
-    * pattern as watermark reads) and go out again as the next
-    * broadcast centroid table; the corpus itself never moves beyond
-    * one broadcast-join pass + one keyed agg per round. The corpus
-    * projection is localCheckpoint'ed once so the iterated lineage
-    * doesn't re-derive upstream stages every round.
-    *
-    * Deterministic end to end: init = the k lowest-id vectors,
-    * fixed-point member sums (order-independent), one double division
-    * per cell, ties broken by centroid id. Empty clusters keep their
-    * previous centroid. Returns (c_id, centroid float array,
-    * n_members as of the last assignment). */
-  def kmeans(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(iters >= 0, s"iters must be non-negative, got $iters")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val vecs = corpus.select(col("vec_id"), col("embedding"))
-      .localCheckpoint()
-    var cent: Seq[(Long, Seq[Float])] = vecs.filter(col("vec_id") < k)
-      .as[(Long, Seq[Float])].collect().toSeq.sortBy(_._1)
-    var members = Map.empty[Long, Long]
-    for (_ <- 1 to iters) {
-      // centroids are already driver-side state: feed them straight
-      // into the compiled-shortlist assignment (see kmeansUpdate) —
-      // no per-iteration crossJoin/window plan
-      val cb = cent.map { case (cid, v) =>
-        var n2 = 0.0
-        v.foreach(x => n2 += x.toDouble * x.toDouble)
-        (cid, v, math.sqrt(n2))
-      }
-      val cells = fixedPointCellSums(
-        assignWithCodebook(vecs, "vec_id", "embedding", cb, 1)
-          .select(col("vid").as("vec_id"), col("e").as("embedding"),
-            element_at(col("cells"), 1).as("c_id")),
-        "c_id").collect()
-      val byC = cells.groupBy(_.getLong(0))
-      members = byC.view.mapValues(_.head.getAs[Long]("n_vecs")).toMap
-      cent = cent.map { case (cId, old) =>
-        cId -> byC.get(cId).fold(old) { rows =>
-          val dim = old.length
-          val mean = Array.ofDim[Float](dim)
-          rows.foreach { r =>
-            mean(r.getAs[Long]("pos").toInt) =
-              (r.getAs[Long]("sum_q_e9").toDouble / 1e9 /
-                r.getAs[Long]("n_vecs")).toFloat
-          }
-          mean.toSeq
-        }
-      }
-    }
-    cent.map { case (cId, emb) =>
-      (cId, emb, members.getOrElse(cId, 0L))
-    }.toDF("c_id", "centroid", "n_members")
   }
 
   /** DuckDB twin of [[kmeansUpdate]] over `embeddings`. */

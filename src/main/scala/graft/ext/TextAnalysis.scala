@@ -114,12 +114,8 @@ object TextAnalysis {
         nTokens.cast("double")) * lit(0.7)
   }
 
-  /** [[qualityScoreFrom]] over raw text — convenience for one-off /
-    * small-input contexts; hot paths pre-split (see above). */
-  def qualityScore(text: Column): Column =
-    qualityScoreFrom(split(text, " "))
-
-  /** DuckDB twin of [[qualityScore]] over a `text` column. */
+  /** DuckDB twin of [[qualityScoreFrom]] over the words of a `text`
+    * column. */
   def qualityScoreSql(text: String): String = {
     val stop = Markers.head._2.map(x => s"'$x'").mkString(", ")
     s"(CAST(len(list_filter(str_split($text, ' '), t -> t IN ($stop))) AS DOUBLE)" +

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hashing
-import graft.schema.Tables
 
 /** Deterministic random walks over undirected edge relations — the
   * corpus-generation step of DeepWalk-style graph embeddings
@@ -117,7 +116,7 @@ object Walks {
     out
   }
 
-  /** Build-once / EXTEND-many: continue a persisted uniform walk
+  /** Build-once / EXTEND-many: continue a uniform walk
     * corpus (`prior`, rows (walk_id, step, node_id) of length
     * `fromLength`) by `extraSteps` more hops — WITHOUT re-walking
     * the prefix. Because the next-hop selection is a pure hash of
@@ -149,107 +148,6 @@ object Walks {
       p.select(col("walk_id"), col("step"), col("node_id")),
       from = fromLength, to = fromLength + extraSteps)
       .orderBy("walk_id", "step")
-  }
-
-  /** PERSISTED walk corpus — the day-2 symmetry the PQ and link
-    * indexes already have, for the walk family: build ONCE, extend
-    * MANY, never regenerate per epoch. Layout under `dir`:
-    *
-    *  - `walks/` — (walk_id, node_id) hive-PARTITIONED BY step: an
-    *    extension appends only NEW step partitions, and the extend
-    *    leg's frontier read (`step = L`) prunes to one partition —
-    *    the corpus is length-priced on disk exactly as it is in
-    *    compute;
-    *  - `meta/` — one row (length), published LAST through the
-    *    staged-swap publisher: it is both the completion marker
-    *    (a crash mid-extension leaves meta at the OLD length, and
-    *    the orphan step partitions beyond it are overwritten by the
-    *    retry — dynamic partition overwrite, never read) and the
-    *    extension's cursor.
-    *
-    * Extensions serialize through [[graft.meta.MaintenanceLock]] on
-    * `dir` (two racing extenders would append duplicate step
-    * partitions). Because the next-hop selection is a pure hash of
-    * (walk_id, step), the persisted chain is bit-identical to the
-    * from-scratch walk at every length — WalksSpec pins
-    * build(L) + extend(k) + extend(k') == walks(e, L+k+k'). */
-  def walkWriteCorpus(edges: DataFrame, length: Int,
-                      dir: String): Unit = {
-    val spark = edges.sparkSession
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      walks(edges, length)
-        .write.mode("overwrite").partitionBy("step")
-        .parquet(s"$dir/walks")
-      writeMeta(spark, dir, length)
-    }
-  }
-
-  /** True iff a complete corpus (meta published) exists under `dir`. */
-  def walkCorpusExists(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta/_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** The persisted corpus as (walk_id, step, node_id) with the
-    * declared long schema (hive partition inference reads `step`
-    * narrow), truncated to the published length — orphan partitions
-    * from a crashed extension are invisible. */
-  def walkReadCorpus(spark: org.apache.spark.sql.SparkSession,
-                     dir: String): DataFrame = {
-    val len = readLength(spark, dir)
-    Tables.read(spark, s"$dir/walks")
-      .select(col("walk_id").cast("long"),
-        col("step").cast("long"), col("node_id").cast("long"))
-      .filter(col("step") <= len)
-  }
-
-  /** Extend the persisted corpus by `extraSteps` hops for the
-    * MARGINAL cost: one partition-pruned frontier read (`step = L`),
-    * `extraSteps` rounds of the shared selection kernel over the
-    * frontier, an append of only the new step partitions, then the
-    * meta cursor swap. The prefix is never re-walked and never
-    * re-written. */
-  def walkExtendPersisted(spark: org.apache.spark.sql.SparkSession,
-                          edges: DataFrame, dir: String,
-                          extraSteps: Int): Unit =
-    graft.meta.MaintenanceLock.withLock(spark, dir) {
-      val from = readLength(spark, dir)
-      val adj = rankedAdjacency(edges)
-      val frontier = Pin.pin(Tables.read(spark, s"$dir/walks")
-        .filter(col("step") === from)
-        .select(col("walk_id").cast("long"),
-          col("node_id").cast("long").as("cur")))
-      val empty = frontier.sparkSession.createDataFrame(
-        frontier.sparkSession.sparkContext
-          .emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("walk_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("step",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("node_id",
-            org.apache.spark.sql.types.LongType))))
-      walkSteps(adj, frontier, empty, from = from,
-          to = from + extraSteps)
-        .write.mode("overwrite").partitionBy("step")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$dir/walks")
-      writeMeta(spark, dir, from + extraSteps)
-    }
-
-  private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, length: Int): Unit = {
-    import spark.implicits._
-    graft.meta.StagedWrite.overwrite(
-      Seq(length.toLong).toDF("length"), s"$dir/meta")
-  }
-
-  private def readLength(spark: org.apache.spark.sql.SparkSession,
-                         dir: String): Int = {
-    require(walkCorpusExists(spark, dir),
-      s"no complete walk corpus under $dir")
-    Tables.read(spark, s"$dir/meta").collect()(0).getLong(0).toInt
   }
 
   /** Per-node visit census of [[walks]] joined with the node degree:
@@ -430,7 +328,7 @@ object Walks {
   }
 
   /** [[extendWalks]] for the BIASED variant: the second-order state
-    * is (prev, cur), both recoverable from the persisted corpus's
+    * is (prev, cur), both recoverable from the prior corpus's
     * last two steps — so a biased corpus extends without re-walking
     * too, bit-identical to the from-scratch longer walk (the
     * declared query's oracle IS the length-(L+k) biased chain).

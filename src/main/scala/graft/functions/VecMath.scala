@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftext.FloatVecDot
 
 /** Public API over the codegen'd vector expressions
@@ -14,8 +13,4 @@ object VecMath {
 
   /** Codegen'd dot product of two `array<float>` columns (double). */
   def dotF(a: Column, b: Column): Column = FloatVecDot.dotColumn(a, b)
-
-  /** Codegen'd cosine similarity of two `array<float>` columns. */
-  def cosineF(a: Column, b: Column): Column =
-    dotF(a, b) / (sqrt(dotF(a, a)) * sqrt(dotF(b, b)))
 }

@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
   * the clustering technique behind "OPTIMIZE ZORDER BY" in modern
   * lakehouse engines: interleave the bits of two sort keys so rows
   * close in EITHER dimension land in the same files and row groups,
-  * and min/max statistics prune scans filtered on either key (the
-  * one-column [[graft.sources.Sources.writeSorted]] layout only
-  * prunes its leading column).
+  * and min/max statistics prune scans filtered on either key (a
+  * layout sorted on one column only prunes that column).
   *
   * The interleave is an unrolled sum of `2·bits` shift/mask terms —
   * pure int64 arithmetic, whole-stage codegen inlines it, and the

@@ -7,25 +7,6 @@ import graft.ext.Bpe
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("trainMerges learns the hand-computed BPE sequence") {
-    // corpus: "low" x5, "lower" x2, "newest" x6, "widest" x3 — the
-    // canonical Sennrich et al. worked example (word histogram form).
-    val docs = (
-      Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-        Seq.fill(6)("newest") ++ Seq.fill(3)("widest")
-      ).mkString(" ")
-    val df = Seq((1L, docs)).toDF("doc_id", "text")
-    val rules = Bpe.trainMerges(df, col("text"), 4)
-    // round 1: (e,s) 9  — newest(6) + widest(3)
-    // round 2: (es,t) 9 — fused pair dominates again
-    // round 3: (est?) no — next: (l,o) 7 = low(5)+lower(2)
-    // round 4: (lo,w) 7
-    assert(rules.map(r => (r._1, r._2)) ==
-      Seq(("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w")),
-      s"got $rules")
-    assert(rules.head._3 == 9L && rules(2)._3 == 7L)
-  }
-
   test("applyMerge is greedy left-to-right and cannot re-fuse output") {
     val df = Seq(Tuple1("aaa")).toDF("word")
     val out = df.select(

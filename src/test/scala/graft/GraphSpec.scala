@@ -73,8 +73,8 @@ class GraphSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("coEdges guard: a planted oversize basket is skipped, audited, " +
-    "and never emits its quadratic pairs") {
+  test("coEdges guard: a planted oversize basket is skipped and " +
+    "never emits its quadratic pairs") {
     // 20 two-item baskets + one pathological 500-item basket
     val small = (1 to 20).flatMap(o => Seq((o.toLong, 2L * o), (o.toLong, 2L * o + 1)))
     val big = (1 to 500).map(i => (999L, 100000L + i))
@@ -82,13 +82,9 @@ class GraphSpec extends SparkSpec {
     val edges = Graph.coEdges(df, col("g"), col("i"), maxGroupSize = 100)
     assert(edges.count() == 20, "only the small baskets' edges survive")
     assert(edges.filter(col("u") >= 100000L).count() == 0)
-    val audit = Graph.oversizeGroups(df, col("g"), col("i"), 100)
-      .as[(Long, Long)].collect().toSeq
-    assert(audit == Seq((999L, 500L)))
     // at the default bound the same basket is under the cap -> included
     assert(Graph.coEdges(df, col("g"), col("i")).count() ==
       20 + 500L * 499 / 2)
-    assert(Graph.oversizeGroups(df, col("g"), col("i")).count() == 0)
   }
 
   test("basketLift guard: oversize basket skips pair emission but still " +
@@ -205,55 +201,6 @@ class GraphSpec extends SparkSpec {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .delete(p, true)
     }
-  }
-
-  test("recommendRanker: the measured regime rule over the SCALE " +
-    "39/41 fixture shapes, table-driven") {
-    // (name, d_p999, d_max, wedge_per_edge_ppm, rankRuns, expected)
-    val cases = Seq(
-      // sf0.1 organic co-order graph (SCALE 39: max deg < 300,
-      // per-edge multiplier ~ mean degree): exact stays ahead
-      ("sf0.1 organic", 250L, 290L, 90L * 1000000L, 1, "exact-capped"),
-      // organic + rank-many: the index only serves the SCREEN family,
-      // so repeats never flip an organic graph off exact
-      ("sf0.1 organic, rank-many", 250L, 290L, 90L * 1000000L, 10,
-        "exact-capped"),
-      // the SCALE 39 x3 hub catalog (one 58,943-degree hub, organic
-      // tail in the hundreds): exact died at 46 min, screen took 35.5s
-      ("39 hub catalog", 400L, 58943L, 3000L * 1000000L, 1, "screened"),
-      // the SCALE 41 10^6-node fixture: hub 982,639 vs p999=134,
-      // wedge_per_edge ~ 11,690
-      ("41 mega-hub", 134L, 982639L, 11690L * 1000000L, 1, "screened"),
-      // same graph, steady-state ranking: the persisted signature
-      // index amortizes (SCALE 42, 2.2x at x10)
-      ("41 mega-hub, rank-many", 134L, 982639L, 11690L * 1000000L, 5,
-        "screened-from-index"),
-      // hub by tail-ratio alone (wedge multiplier still modest):
-      // the d_max >> p999 condition fires on its own
-      ("tail-ratio hub", 50L, 5000L, 60L * 1000000L, 1, "screened"),
-      // wedge-heavy without a single dominant hub (many mid hubs):
-      // the multiplier condition fires on its own
-      ("diffuse wedge-heavy", 9000L, 9500L, 1500L * 1000000L, 1,
-        "screened"))
-    cases.foreach { case (name, p999, dMax, wpe, runs, want) =>
-      val plan = Graph.recommendRanker(p999, dMax, wpe, runs)
-      assert(plan.choice == want,
-        s"$name: got ${plan.choice} (${plan.reason}), want $want")
-    }
-    // cap semantics: exact clamps at the organic tail, screened keeps
-    // the verify-payload contract default
-    assert(Graph.recommendRanker(250L, 290L, 90000000L, 1)
-      .maxDegree == 250L)
-    assert(Graph.recommendRanker(134L, 982639L, 11690000000L, 1)
-      .maxDegree == Graph.DefaultMaxGroupSize.toLong)
-    // and the DataFrame adapter reads the declared pre-flight's row:
-    // the sf-fixture co-order graph is organic, so exact-capped
-    val hist = Graph.degreeHistogram(Graph.coEdges(
-      spark.read.parquet(s"$sf/lineitem.parquet"),
-      col("l_orderkey"), col("l_partkey")))
-    val plan = Graph.recommendRanker(hist, rankRuns = 1)
-    assert(plan.choice == "exact-capped",
-      s"fixture graph must read organic: ${plan.reason}")
   }
 
   test("linkPredict: 4-cycle + chord — only the open pair is ranked") {

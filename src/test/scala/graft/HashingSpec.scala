@@ -28,6 +28,9 @@ class HashingSpec extends SparkSpec {
         Hashing.polyHashHof(col("s")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(bad == 0)
+    // hand-computed: ((0*31+97)*31+98)*31+99 = 96354
+    assert(cases.limit(1).select(Hashing.polyHash(lit("abc"))).first()
+      .getLong(0) == 96354L)
     // null propagates
     val n = cases.limit(1).select(
       Hashing.polyHash(lit(null).cast("string"))).collect()

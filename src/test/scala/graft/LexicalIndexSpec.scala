@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ext.{Lexical, Corpus}
 
-/** Day-2 lifecycle pins for the persisted lexical index: search
-  * parity with the one-pass bm25TopK, append ≡ rebuild, compaction
-  * invariance, stats repair, and the driver/engine hash-twin. */
+/** Pins for the persisted lexical index: search parity with the
+  * one-pass bm25TopK, bucket pruning, the batch search form, and the
+  * driver/engine hash-twin. */
 class LexicalIndexSpec extends SparkSpec {
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -39,51 +39,6 @@ class LexicalIndexSpec extends SparkSpec {
     val onePass = rows(Corpus.bm25TopK(docs, col("doc_id"), col("text"),
       terms, 20))
     assert(persisted == onePass)
-  }
-
-  test("append ≡ rebuild: same search, same stats") {
-    val full = tmpDir("full"); val inc = tmpDir("inc")
-    Lexical.lexWriteIndex(docs, col("doc_id"), col("text"), full, 16)
-    Lexical.lexWriteIndex(docs.filter(col("doc_id") < 30),
-      col("doc_id"), col("text"), inc, 16)
-    Lexical.lexAppendIndex(spark, docs.filter(col("doc_id") >= 30),
-      col("doc_id"), col("text"), inc, 16)
-    assert(rows(Lexical.lexSearchIndex(spark, inc, terms, 20, 16)) ==
-      rows(Lexical.lexSearchIndex(spark, full, terms, 20, 16)))
-    val sInc = Lexical.lexIndexStats(spark, inc).collect()(0)
-    val sFull = Lexical.lexIndexStats(spark, full).collect()(0)
-    assert(sInc.toSeq == sFull.toSeq)
-  }
-
-  test("compaction: one file per bucket, search unchanged") {
-    val dir = tmpDir("compact")
-    Lexical.lexWriteIndex(docs.filter(col("doc_id") < 30),
-      col("doc_id"), col("text"), dir, 4)
-    Lexical.lexAppendIndex(spark, docs.filter(col("doc_id") >= 30),
-      col("doc_id"), col("text"), dir, 4)
-    val before = rows(Lexical.lexSearchIndex(spark, dir, terms, 20, 4))
-    Lexical.lexCompactIndex(spark, dir)
-    assert(rows(Lexical.lexSearchIndex(spark, dir, terms, 20, 4)) == before)
-    val root = new java.io.File(s"$dir/postings")
-    val perBucket = root.listFiles().filter(_.getName.startsWith("bucket="))
-    assert(perBucket.nonEmpty)
-    perBucket.foreach { b =>
-      val files = b.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1, s"${b.getName}: ${files.length} files")
-    }
-  }
-
-  test("lexRepairStats recovers exact stats from postings alone") {
-    val dir = tmpDir("repair")
-    Lexical.lexWriteIndex(docs, col("doc_id"), col("text"), dir, 8)
-    val good = Lexical.lexIndexStats(spark, dir).collect()(0).toSeq
-    // simulate the crash window: stats wiped (postings intact)
-    val statsDir = new java.io.File(s"$dir/stats")
-    statsDir.listFiles().foreach(_.delete())
-    spark.range(0).select(lit(0L).as("seg"), lit(0L).as("n_docs"),
-      lit(0L).as("toks")).write.mode("overwrite").parquet(s"$dir/stats")
-    Lexical.lexRepairStats(spark, dir)
-    assert(Lexical.lexIndexStats(spark, dir).collect()(0).toSeq == good)
   }
 
   test("search scan is bucket-pruned (partition filter in the plan)") {

@@ -6,84 +6,6 @@ import graft.ext.Multimodal
 
 class MultimodalSpec extends SparkSpec {
 
-  test("mapPartitions decode path: schema, row-count, determinism") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val media = Multimodal.withPayload(docs)
-      .select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-    val feats = Multimodal.decodeFeatures(media)
-    assert(feats.count() == docs.count())
-    // deterministic: run twice, same checksums
-    val a = feats.orderBy("doc_id").collect().map(f => (f.doc_id, f.checksum))
-    val b = Multimodal.decodeFeatures(media).orderBy("doc_id").collect()
-      .map(f => (f.doc_id, f.checksum))
-    assert(a.toSeq == b.toSeq)
-    // payload length survives the decode
-    val sizes = feats.filter(col("n_bytes") <= 0).count()
-    assert(sizes == 0)
-  }
-
-  test("expression twin agrees with mapPartitions stub on shared fields") {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val exprSide = Multimodal.featuresExpr(docs)
-      .select("doc_id", "n_bytes", "format", "width", "height")
-    val media = Multimodal.withPayload(docs)
-      .select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-    val dsSide = Multimodal.decodeFeatures(media)
-      .select("doc_id", "n_bytes", "format", "width", "height")
-    assert(exprSide.exceptAll(dsSide).count() == 0)
-    assert(dsSide.exceptAll(exprSide).count() == 0)
-  }
-
-  test("MediaDecoder returns true dimensions for real encoded images") {
-    import java.awt.image.BufferedImage
-    import java.io.ByteArrayOutputStream
-    import javax.imageio.ImageIO
-    import Multimodal.MediaDecoder
-    def encodeImg(fmt: String, w: Int, h: Int, imgType: Int): Array[Byte] = {
-      val img = new BufferedImage(w, h, imgType)
-      // non-uniform pixels so the encoder can't degenerate-case the file
-      for (x <- 0 until w; y <- 0 until h)
-        img.setRGB(x, y, (x * 31 + y * 17) & 0xffffff)
-      val bos = new ByteArrayOutputStream()
-      assert(ImageIO.write(img, fmt, bos), s"JDK cannot encode $fmt")
-      bos.toByteArray
-    }
-    val png = MediaDecoder.decode(
-      encodeImg("png", 321, 87, BufferedImage.TYPE_INT_RGB))
-    assert(png.format == "png" && png.width == 321 && png.height == 87 &&
-      png.channels.contains(3L))
-    val pngA = MediaDecoder.decode(
-      encodeImg("png", 40, 23, BufferedImage.TYPE_INT_ARGB))
-    assert(pngA.format == "png" && pngA.width == 40 && pngA.height == 23 &&
-      pngA.channels.contains(4L))
-    val jpg = MediaDecoder.decode(
-      encodeImg("jpg", 640, 479, BufferedImage.TYPE_INT_RGB))
-    assert(jpg.format == "jpeg" && jpg.width == 640 && jpg.height == 479 &&
-      jpg.channels.contains(3L))
-    val gif = MediaDecoder.decode(
-      encodeImg("gif", 130, 66, BufferedImage.TYPE_INT_RGB))
-    assert(gif.format == "gif" && gif.width == 130 && gif.height == 66)
-    // and through the distributed mapPartitions path
-    import spark.implicits._
-    val media = Seq(
-      Multimodal.MediaRecord(1L, encodeImg("png", 321, 87,
-        BufferedImage.TYPE_INT_RGB)),
-      Multimodal.MediaRecord(2L, encodeImg("jpg", 640, 479,
-        BufferedImage.TYPE_INT_RGB)),
-      Multimodal.MediaRecord(3L, "plain text payload".getBytes("UTF-8"))
-    ).toDS()
-    val feats = Multimodal.decodeFeatures(media)
-      .collect().map(f => f.doc_id -> f).toMap
-    assert(feats(1L).width.contains(321L) && feats(1L).height.contains(87L))
-    assert(feats(2L).width.contains(640L) && feats(2L).height.contains(479L))
-    // unrecognized payload falls back to the synthetic featuresExpr twin
-    val n = "plain text payload".getBytes("UTF-8").length
-    assert(feats(3L).width.contains(64L + n % 640) && feats(3L).channels.isEmpty)
-  }
-
   test("frameSample: uniform stride covering frame 0, bounded per doc") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val target = 8

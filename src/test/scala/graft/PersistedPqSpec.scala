@@ -72,148 +72,6 @@ class PersistedPqSpec extends SparkSpec {
         "would read every cell directory instead of the probed ones")
   }
 
-  test("append path: build(base) + append(batch) searches == " +
-      "build(base) with the batch encoded against base codebooks") {
-    val dir = freshDir()
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    Similarity.ivfPqWriteIndex(base,
-      Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-      nCentroids, m, dim, dir)
-    Similarity.ivfPqAppendToIndex(spark, batch, m, dim, dir)
-    val q = emb.filter(col("vec_id") < 10)
-    val appended = Similarity.ivfPqSearchPersisted(spark, dir, emb, q,
-        k = 5, nProbe = 4, m = m, dim = dim, rerank = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    // truth: the incremental contract — codebooks/centroids from the
-    // BASE side only, full corpus searched
-    val want = Similarity.ivfPqTopKWith(emb, q,
-        Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-        5, nCentroids, 4, m, dim, 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(appended.nonEmpty)
-    assert(appended == want, "append path drifted from base-codebook truth")
-  }
-
-  test("rebuild policy: ivfPqRebuildIfDrifted consumes the drift " +
-      "audit — below threshold appends stand, above it the rebuilt " +
-      "index searches == a fresh full-corpus build row-for-row") {
-    val dir = freshDir()
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    Similarity.ivfPqWriteIndex(base,
-      Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-      nCentroids, m, dim, dir)
-    Similarity.ivfPqAppendToIndex(spark, batch, m, dim, dir)
-    val q = emb.filter(col("vec_id") < 10)
-    def search() = Similarity.ivfPqSearchPersisted(spark, dir, emb, q,
-        k = 5, nProbe = 4, m = m, dim = dim, rerank = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    val appended = search()
-    // below threshold: no rebuild, the appended index stands untouched
-    assert(!Similarity.ivfPqRebuildIfDrifted(spark, emb, splitId = 400L,
-      nCentroids, m, ksub, dim, dir, thresholdPpm = Long.MaxValue))
-    assert(search() == appended,
-      "a declined rebuild must leave the index untouched")
-    // above threshold (0 ppm = always): rebuild fires and the index
-    // now equals a FRESH build over the full corpus, search for search
-    assert(Similarity.ivfPqRebuildIfDrifted(spark, emb, splitId = 400L,
-      nCentroids, m, ksub, dim, dir, thresholdPpm = 0L))
-    assert(Similarity.ivfPqIndexExists(spark, dir),
-      "rebuild must leave a complete index")
-    val freshd = freshDir()
-    Similarity.ivfPqWriteIndex(emb,
-      Similarity.pqSampleCodebooks(emb, m, ksub, dim / m),
-      nCentroids, m, dim, freshd)
-    val want = Similarity.ivfPqSearchPersisted(spark, freshd, emb, q,
-        k = 5, nProbe = 4, m = m, dim = dim, rerank = 20)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(search() == want,
-      "rebuilt index must search identically to a fresh full build")
-    // nothing appended since the rebuild -> no drift signal -> no-op
-    assert(!Similarity.ivfPqRebuildIfDrifted(spark, emb,
-      splitId = Long.MaxValue, nCentroids, m, ksub, dim, dir,
-      thresholdPpm = 0L),
-      "an empty appended slice must never trigger a rebuild")
-  }
-
-  test("compaction: append -> compact -> search == pre-compaction " +
-      "search row-for-row; file count shrinks, layout + marker survive") {
-    val dir = freshDir()
-    val base = emb.filter(col("vec_id") < 400)
-    val batch = emb.filter(col("vec_id") >= 400)
-    Similarity.ivfPqWriteIndex(base,
-      Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-      nCentroids, m, dim, dir)
-    // two appends = the small-files accumulation compaction exists for
-    Similarity.ivfPqAppendToIndex(spark,
-      batch.filter(col("vec_id") % 2 === 0), m, dim, dir)
-    Similarity.ivfPqAppendToIndex(spark,
-      batch.filter(col("vec_id") % 2 === 1), m, dim, dir)
-    val q = emb.filter(col("vec_id") < 10)
-    def search(): Seq[org.apache.spark.sql.Row] =
-      Similarity.ivfPqSearchPersisted(spark, dir, emb, q,
-          k = 5, nProbe = 4, m = m, dim = dim, rerank = 20)
-        .orderBy("query_id", "rank").collect().toSeq
-    def parquetFiles(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$dir/codes"))
-        .count(_.getName.endsWith(".parquet"))
-    }
-    val before = search()
-    val nBefore = parquetFiles()
-    Similarity.ivfPqCompactIndex(spark, dir)
-    assert(Similarity.ivfPqIndexExists(spark, dir),
-      "compaction lost the completion marker")
-    assert(parquetFiles() < nBefore,
-      s"compaction did not reduce file count ($nBefore)")
-    val cellDirs = new java.io.File(s"$dir/codes").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("c_id="))
-    assert(cellDirs.length > 1,
-      "compaction flattened the cell partitioning — DPP is gone")
-    assert(search() == before,
-      "search result drifted across compaction")
-  }
-
-  test("append racing compaction loses ZERO rows (maintenance lock): " +
-      "appends block mid-compaction, land on the compacted table") {
-    val dir = freshDir()
-    val base = emb.filter(col("vec_id") < 300)
-    Similarity.ivfPqWriteIndex(base,
-      Similarity.pqSampleCodebooks(base, m, ksub, dim / m),
-      nCentroids, m, dim, dir)
-    // hammer the interleaving: one thread compacts repeatedly while
-    // the other appends disjoint batches — without the lock this
-    // drops whichever batch lands between a compaction's read and
-    // its staged swap
-    val batches = (0 until 4).map(i =>
-      emb.filter(col("vec_id") >= 300 + i * 75 &&
-        col("vec_id") < 300 + (i + 1) * 75).localCheckpoint())
-    @volatile var compactErr: Option[Throwable] = None
-    val compactor = new Thread(() => {
-      try (1 to 4).foreach { _ =>
-        Similarity.ivfPqCompactIndex(spark, dir)
-      } catch { case t: Throwable => compactErr = Some(t) }
-    })
-    compactor.start()
-    batches.foreach(b =>
-      Similarity.ivfPqAppendToIndex(spark, b, m, dim, dir))
-    compactor.join(300000)
-    assert(compactErr.isEmpty, s"compactor failed: $compactErr")
-    assert(!graft.meta.MaintenanceLock.isHeld(spark, dir))
-    // zero loss: every appended vector has exactly m code rows
-    val got = spark.read.parquet(s"$dir/codes")
-      .groupBy("cand_id").count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wantIds = emb.filter(col("vec_id") < 600)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(got.keySet == wantIds,
-      s"rows lost in the race: missing ${wantIds -- got.keySet}")
-    assert(got.values.forall(_ == m.toLong),
-      "duplicated or partial code rows after the race")
-  }
-
   test("reuse is gated by the completion marker; rebuild heals") {
     val dir = freshDir()
     assert(!Similarity.ivfPqIndexExists(spark, dir))

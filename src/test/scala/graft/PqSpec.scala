@@ -171,43 +171,6 @@ class PqSpec extends SparkSpec {
     assert(out.forall(_.getLong(1) < 300), "batch ids leaked as candidates")
   }
 
-  test("Lloyd-trained codebooks reduce total quantization error") {
-    val m = 8; val ksub = 8; val subLen = dim / m
-    val sample = Similarity.pqSampleCodebooks(emb, m, ksub, subLen)
-    val trained = Similarity.pqTrainCodebooks(emb, m, ksub, dim, iters = 5)
-    assert(trained.count() == m.toLong * ksub)
-    val e0 = Similarity.pqQuantizationError(emb, sample, m, dim)
-    val e1 = Similarity.pqQuantizationError(emb, trained, m, dim)
-    assert(e1.compareTo(e0) < 0,
-      s"training must strictly reduce the PQ objective: $e1 !< $e0")
-    // and the trained codebooks drop into the search path unchanged
-    val out = Similarity.ivfPqTopKWith(emb, emb.filter(col("vec_id") < 3),
-      trained, 3, nCentroids = 8, nProbe = 3, m = m, dim = dim, rerank = 10)
-      .collect()
-    assert(out.groupBy(_.getLong(0)).forall(_._2.length == 3))
-  }
-
-  test("Lloyd beats the sample init at the production width (ksub=256)") {
-    // the deployment dial SCALE.md §18 names: m=8 x ksub=256 (one
-    // byte per code). Same objective guarantee must hold at this
-    // width — SCALE.md §34 measured the same pair at SynthGen x100.
-    val m = 8; val ksub = 256
-    val sample = Similarity.pqSampleCodebooks(emb, m, ksub, dim / m)
-    val trained = Similarity.pqTrainCodebooks(emb, m, ksub, dim, iters = 2)
-    assert(trained.count() == m.toLong * ksub)
-    val e0 = Similarity.pqQuantizationError(emb, sample, m, dim)
-    val e1 = Similarity.pqQuantizationError(emb, trained, m, dim)
-    assert(e1.compareTo(e0) < 0,
-      s"training must reduce the PQ objective at ksub=256: $e1 !< $e0")
-    // and recall under the trained books is computable via the same
-    // search legs (pqRecallWith — the dial-audit face)
-    val rec = Similarity.pqRecallWith(emb, emb.filter(col("vec_id") < 3),
-      trained, 3, nCentroids = 8, nProbe = 3, m = m, dim = dim, rerank = 10)
-      .collect()
-    assert(rec.length == 3)
-    rec.foreach(r => assert(r.getAs[Double]("recall_at_k") >= 0.0))
-  }
-
   test("pqDriftAudit: zero-error base yields the NULL drift sentinel " +
     "on both engines' formulations") {
     // base slice == the codewords themselves (splitId = ksub): every

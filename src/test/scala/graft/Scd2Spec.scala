@@ -16,17 +16,6 @@ import graft.dims.Scd2
   */
 class Scd2Spec extends SparkSpec {
 
-  test("withSurrogateDistributed assigns identical keys to the global window") {
-    val c = spark.read.parquet(s"$sf/customer.parquet")
-    val global = Scd2.withSurrogate(c, "sk", Seq("c_custkey"))
-      .select("sk", "c_custkey").orderBy("sk").collect()
-    val dist = Scd2.withSurrogateDistributed(c, "sk", Seq("c_custkey"),
-        partitions = 7)
-      .select("sk", "c_custkey").orderBy("sk").collect()
-    assert(global.length == dist.length && global.nonEmpty)
-    global.zip(dist).foreach { case (g, d) => assert(g == d) }
-  }
-
   private val schema = StructType(Seq(
     StructField("nk", LongType), StructField("attr", StringType),
     StructField("ts", TimestampNTZType), StructField("tie", LongType)))
@@ -135,55 +124,66 @@ class Scd2Spec extends SparkSpec {
     assert(matched.toSeq == Seq("v1", "v2"))
   }
 
-  test("asOfJoinUnion equals the classic interval join on property histories") {
+  private def mkProbes(rows: Seq[(Long, LocalDateTime, Long)]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        rows.map { case (pk, ts, pid) => Row(pk, ts, pid) }),
+      StructType(Seq(StructField("pk", LongType),
+        StructField("probe_ts", TimestampNTZType),
+        StructField("pid", LongType))))
+
+  private def mkDim(rows: Seq[(Long, String, LocalDateTime, LocalDateTime)]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        rows.map { case (nk, a, from, to) => Row(nk, a, from, to) }),
+      StructType(Seq(StructField("nk", LongType),
+        StructField("attr", StringType),
+        StructField("active_from", TimestampNTZType),
+        StructField("active_to", TimestampNTZType))))
+
+  test("asOfJoin on property histories: one row per probe, matched iff " +
+    "at or after the key's first change") {
     val samples = Iterator.continually(historyGen.sample)
       .flatten.take(25)
     samples.foreach { rows =>
       val dim = Scd2.deriveVersions(mkHistory(rows), "nk", "ts", Seq("tie"))
         .select("nk", "attr", "active_from", "active_to")
-      val probes = mkHistory(rows.map { case (nk, a, ts, tie) =>
-        // probe at, just after, and before each change point
-        (nk, a, ts.plusSeconds(tie % 3 - 1), tie)
-      }).select(col("nk"), col("ts").as("probe_ts"), col("tie").as("pid"))
-      val classic = Scd2.asOfJoin(probes, dim, probes("nk"), dim("nk"),
-          probes("probe_ts"))
-        .select(probes("nk"), col("probe_ts"), col("pid"), col("attr"),
-          col("active_from"), col("active_to"))
-        .collect().map(_.toSeq).toSet
-      val union = Scd2.asOfJoinUnion(probes, "nk", "probe_ts", dim,
-          Seq("attr"))
-        .select(col("nk"), col("probe_ts"), col("pid"), col("attr"),
-          col("active_from"), col("active_to"))
-        .collect().map(_.toSeq).toSet
-      assert(union == classic,
-        s"missing=${(classic -- union).take(3)} extra=${(union -- classic).take(3)}")
+      // probe at, just after, and before each change point
+      val probeRows = rows.map { case (nk, _, ts, tie) =>
+        (nk, ts.plusSeconds(tie % 3 - 1), tie)
+      }
+      val out = Scd2.asOfJoin(mkProbes(probeRows), dim, col("pk"),
+          col("nk"), col("probe_ts"))
+        .select(col("pid"), col("attr"), col("active_from"))
+        .collect()
+      assert(out.length == probeRows.length, "a probe fanned out or vanished")
+      val first = rows.groupBy(_._1).map { case (nk, rs) =>
+        nk -> rs.map(_._3).reduce((a, b) => if (a.isBefore(b)) a else b)
+      }
+      val byPid = out.map(r => r.getLong(0) -> r).toMap
+      probeRows.foreach { case (nk, ts, pid) =>
+        val r = byPid(pid)
+        assert(r.isNullAt(2) == ts.isBefore(first(nk)),
+          s"probe $pid at $ts (key $nk, first change ${first(nk)})")
+      }
     }
   }
 
-  test("asOfJoinUnion never stitches fields from different versions") {
+  test("asOfJoin never stitches fields from different versions") {
     // v2 has a legitimately-NULL attr: probes in v2's interval must
     // see NULL attr WITH v2's bounds, not v1's attr carried forward
-    val dim = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, "x", base, base.plusHours(1)),
-        Row(1L, null, base.plusHours(1), Scd2.MaxTs))),
-      StructType(Seq(StructField("nk", LongType),
-        StructField("attr", StringType),
-        StructField("active_from", TimestampNTZType),
-        StructField("active_to", TimestampNTZType))))
-    val probes = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, base.plusHours(2), 1L))),
-      StructType(Seq(StructField("nk", LongType),
-        StructField("probe_ts", TimestampNTZType),
-        StructField("pid", LongType))))
-    val out = Scd2.asOfJoinUnion(probes, "nk", "probe_ts", dim, Seq("attr"))
-      .collect().head
-    assert(out.isNullAt(out.fieldIndex("attr")), "v1's attr leaked into v2")
-    assert(out.getAs[java.time.LocalDateTime]("active_from") ==
-      base.plusHours(1))
+    val dim = mkDim(Seq((1L, "x", base, base.plusHours(1)),
+      (1L, null, base.plusHours(1), Scd2.MaxTs)))
+    val out = Scd2.asOfJoin(mkProbes(Seq((1L, base.plusHours(2), 1L))),
+        dim, col("pk"), col("nk"), col("probe_ts"))
+      .collect()
+    assert(out.length == 1)
+    assert(out.head.isNullAt(out.head.fieldIndex("attr")),
+      "v1's attr leaked into v2")
+    assert(out.head.getAs[LocalDateTime]("active_from") == base.plusHours(1))
   }
 
-  test("asOfJoinUnion picks the live version among tied active_from") {
+  test("asOfJoin picks the live version among tied active_from") {
     // three simultaneous changes at t: two zero-width [t,t) versions
     // and the live [t,max) one — a probe at/after t must get the live
     // version deterministically
@@ -192,35 +192,21 @@ class Scd2Spec extends SparkSpec {
         (1L, "live", base, 2L))),
       "nk", "ts", Seq("tie"))
       .select("nk", "attr", "active_from", "active_to")
-    val probes = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, base, 1L), Row(1L, base.plusHours(1), 2L))),
-      StructType(Seq(StructField("nk", LongType),
-        StructField("probe_ts", TimestampNTZType),
-        StructField("pid", LongType))))
-    val out = Scd2.asOfJoinUnion(probes, "nk", "probe_ts", dim, Seq("attr"))
+    val out = Scd2.asOfJoin(
+        mkProbes(Seq((1L, base, 1L), (1L, base.plusHours(1), 2L))),
+        dim, col("pk"), col("nk"), col("probe_ts"))
       .orderBy("pid").collect()
     assert(out.map(_.getAs[String]("attr")).toSeq == Seq("live", "live"))
   }
 
-  test("asOfJoinUnion respects gaps left by close-outs") {
+  test("asOfJoin respects gaps left by close-outs") {
     // version closed at +2h: probes after the close-out must NOT match
-    val dim = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, "v1", base, base.plusHours(2)))),
-      StructType(Seq(StructField("nk", LongType),
-        StructField("attr", StringType),
-        StructField("active_from", TimestampNTZType),
-        StructField("active_to", TimestampNTZType))))
-    val probes = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, base.plusHours(1), 1L),    // inside -> v1
-        Row(1L, base.plusHours(2), 2L),    // at close-out -> no match
-        Row(1L, base.plusHours(3), 3L))),  // after -> no match
-      StructType(Seq(StructField("nk", LongType),
-        StructField("probe_ts", TimestampNTZType),
-        StructField("pid", LongType))))
-    val out = Scd2.asOfJoinUnion(probes, "nk", "probe_ts", dim, Seq("attr"))
+    val dim = mkDim(Seq((1L, "v1", base, base.plusHours(2))))
+    val out = Scd2.asOfJoin(mkProbes(Seq(
+        (1L, base.plusHours(1), 1L),    // inside -> v1
+        (1L, base.plusHours(2), 2L),    // at close-out -> no match
+        (1L, base.plusHours(3), 3L))),  // after -> no match
+        dim, col("pk"), col("nk"), col("probe_ts"))
       .orderBy("pid").collect()
     assert(out.length == 3)
     assert(out(0).getAs[String]("attr") == "v1")

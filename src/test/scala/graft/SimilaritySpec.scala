@@ -99,6 +99,18 @@ class SimilaritySpec extends SparkSpec {
     assert(nullElem.head.isNullAt(0))
   }
 
+  test("codegen LongVecDot: hand-computed dot, NULL on length mismatch") {
+    import org.apache.spark.sql.graftext.LongVecDot
+    // `id` (0) keeps the inputs non-foldable, so the generated code runs
+    val r = spark.range(1).select(
+      LongVecDot.dotColumn(array(col("id") + 1, lit(-2L), lit(3L)),
+        typedLit(Seq(4L, 5L, 6L))),
+      // length mismatch scores NULL, not a truncated dot
+      LongVecDot.dotColumn(array(col("id") + 1, lit(2L)), typedLit(Seq(3L))))
+      .first()
+    assert(r.getLong(0) == 12L && r.isNullAt(1))
+  }
+
   test("decimal kernels survive non-finite elements like the HOF fold") {
     val one = emb.limit(1)
     // NaN product -> NULL dot on both formulations (never an exception)
@@ -398,26 +410,6 @@ class SimilaritySpec extends SparkSpec {
       assert(hits == want && hits >= 0 && hits <= k)
       assert(r == hits.toDouble / k)
     }
-  }
-
-  test("kmeans: deterministic loop, full partition, means in range") {
-    val k = 4
-    val a = Similarity.kmeans(emb, k, 3).collect().sortBy(_.getLong(0))
-    val b = Similarity.kmeans(emb, k, 3).collect().sortBy(_.getLong(0))
-    assert(a.length == k)
-    // two runs produce bit-identical centroids (fixed-point sums)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.getSeq[Float](1) == y.getSeq[Float](1))
-      assert(x.getAs[Long]("n_members") == y.getAs[Long]("n_members"))
-    }
-    // last assignment covered the whole corpus exactly once
-    assert(a.map(_.getAs[Long]("n_members")).sum == emb.count())
-    // every mean component lies inside the corpus value envelope
-    val (lo, hi) = emb.select(posexplode(col("embedding")))
-      .agg(min("col").cast("double"), max("col").cast("double"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1))).head
-    a.foreach(_.getSeq[Float](1).foreach(v =>
-      assert(v >= lo - 1e-6 && v <= hi + 1e-6)))
   }
 
   test("kmeansUpdate partitions the corpus across centroids exactly once") {

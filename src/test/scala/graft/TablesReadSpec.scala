@@ -72,7 +72,7 @@ class TablesReadSpec extends SparkSpec {
   test("a partitioned walk corpus falls back and keeps its step column") {
     val dir = Files.createTempDirectory("graft_walk_read").toString
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("u", "v")
-    Walks.walkWriteCorpus(edges, 3, dir)
+    Walks.walks(edges, 3).write.partitionBy("step").parquet(s"$dir/walks")
     val schema = Tables.read(spark, s"$dir/walks").schema
     assert(schema.fieldNames.contains("step"))
     assert(schema == spark.read.parquet(s"$dir/walks").schema)
@@ -117,5 +117,18 @@ class TablesReadSpec extends SparkSpec {
       s"spark.read.parquet outside Tables.read: $callers")
     val streams = codeCallers(Paths.get("src/main"), "readStream", "writeStream")
     assert(streams.isEmpty, s"Structured Streaming in src/main: $streams")
+  }
+
+  test("tools/reach.py lists no src/main member or type that no root reaches") {
+    assert(Files.isRegularFile(Paths.get("tools/reach.py")),
+      s"run from the repo root, not ${Paths.get(".").toAbsolutePath}")
+    val out = scala.sys.process.Process(Seq("python3", "tools/reach.py"))
+      .!!.split("\n").toSeq
+    assert(out.headOption.exists(_.startsWith("# members and types")),
+      out.take(3).mkString("\n"))
+    val unreached = out.drop(1).takeWhile(!_.startsWith("# kept"))
+    assert(unreached.isEmpty,
+      s"unreached from SparkEntry, Pipeline.runAll, every main and the " +
+        s"test references:\n${unreached.mkString("\n")}")
   }
 }

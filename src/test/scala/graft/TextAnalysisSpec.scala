@@ -140,6 +140,11 @@ class TextAnalysisSpec extends SparkSpec {
       .count()
     assert(bad == 0)
     assert(fh.count() == docs.count())
+    // hand-computed: 'a b a' -> 8 buckets, mass 3, the repeated token 2
+    val v = docs.limit(1).select(
+      org.apache.spark.sql.graftext.FeatureHashBridge.column(lit("a b a"), 8,
+        graft.functions.Hashing.P)).first().getSeq[Long](0)
+    assert(v.length == 8 && v.sum == 3L && v.max == 2L)
   }
 
   test("phraseBigrams: hand-counted collocations, discount drops " +

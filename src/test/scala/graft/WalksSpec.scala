@@ -71,68 +71,6 @@ class WalksSpec extends SparkSpec {
     assert(extended == full)
   }
 
-  test("persisted corpus: build(3) + extend(2) + extend(1) equals " +
-      "walks(6) bit-for-bit; frontier read prunes to one partition") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("walk-corpus-spec").toString + "/wc"
-    assert(!Walks.walkCorpusExists(spark, dir))
-    Walks.walkWriteCorpus(bridged, 3, dir)
-    assert(Walks.walkCorpusExists(spark, dir))
-    Walks.walkExtendPersisted(spark, bridged, dir, 2)
-    Walks.walkExtendPersisted(spark, bridged, dir, 1)
-    val got = Walks.walkReadCorpus(spark, dir)
-      .orderBy("walk_id", "step")
-      .as[(Long, Long, Long)].collect().toSeq
-    val want = Walks.walks(bridged, 6)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(got == want,
-      "persisted extend chain drifted from the from-scratch walk")
-    // the on-disk layout is step-partitioned: the prefix is never
-    // rewritten (step=0..3 files predate the second extension) and
-    // the extend leg's frontier read prunes by partition
-    val stepDirs = new java.io.File(s"$dir/walks").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("step="))
-    assert(stepDirs.map(_.getName).toSet ==
-      (0 to 6).map(i => s"step=$i").toSet)
-    val pruned = spark.read.parquet(s"$dir/walks")
-      .filter(col("step") === 6)
-    assert(pruned.count() == 6L)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-        plan.replaceAll("#\\d+", "").contains("(step = 6)"),
-      s"frontier read did not prune to the step partition:\n$plan")
-    // extension under a held maintenance lock fails loudly instead
-    // of racing (two extenders would duplicate step partitions)
-    assert(graft.meta.MaintenanceLock.tryAcquire(spark, dir))
-    intercept[IllegalStateException] {
-      graft.meta.MaintenanceLock.withLock(spark, dir,
-        waitMs = 300, pollMs = 50) { fail("must not run") }
-    }
-    graft.meta.MaintenanceLock.release(spark, dir)
-  }
-
-  test("a crashed extension (orphan step partitions, stale meta) is " +
-      "invisible to readers and healed by the retry") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("walk-crash-spec").toString + "/wc"
-    Walks.walkWriteCorpus(bridged, 3, dir)
-    // simulate the crash window: new step partitions landed, meta
-    // cursor still at the old length
-    Walks.walks(bridged, 5).filter(col("step") > 3)
-      .write.mode("append").partitionBy("step").parquet(s"$dir/walks")
-    val before = Walks.walkReadCorpus(spark, dir)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    val want3 = Walks.walks(bridged, 3)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(before == want3, "orphan partitions leaked past the cursor")
-    // the retry overwrites the orphans dynamically and lands whole
-    Walks.walkExtendPersisted(spark, bridged, dir, 2)
-    val after = Walks.walkReadCorpus(spark, dir)
-      .orderBy("walk_id", "step").as[(Long, Long, Long)].collect().toSeq
-    assert(after == Walks.walks(bridged, 5)
-      .as[(Long, Long, Long)].collect().toSeq)
-  }
-
   test("walks are deterministic across reruns") {
     val a = Walks.walks(bridged, 3).collect().toSeq
     val b = Walks.walks(bridged, 3).collect().toSeq

@@ -37,6 +37,14 @@ class WinnowShuffleSpec extends SparkSpec {
     val ek = Dedup.winnowedFingerprints(edge, col("doc_id"), col("text"))
     val eh = Dedup.winnowedFingerprintsHof(edge, col("doc_id"), col("text"))
     assert(ek.exceptAll(eh).isEmpty && eh.exceptAll(ek).isEmpty)
+    // the kernel column: fewer than k tokens -> NULL (the row the
+    // filter drops); 8 words -> a non-empty set of distinct values
+    val raw = Seq("a b", "a b c d e f g h").toDF("text").select(
+      org.apache.spark.sql.graftext.WinnowBridge.column(col("text"), 5, 4,
+        graft.functions.Hashing.P)).collect()
+    assert(raw(0).isNullAt(0))
+    val fps = raw(1).getSeq[Long](0)
+    assert(fps.nonEmpty && fps.toSet.size == fps.length)
   }
 
   test("winnowing density is ~2/(w+1) and never above full gram count") {

@@ -4,19 +4,24 @@
 Usage: python3 tools/reach.py [repoRoot]
 
 Roots: the driver contract SparkEntry.{queries, oracleSql, entry} (the
-declared-query registry), Pipeline.runAll and every `def main`. Each
-top-level object/class/trait member (a line at two-space indent
-declaring def/val/var/object/class/trait) is a node; its body
-runs to the next member. A body that mentions an identifier reaches every
-member of that name in any file, and every type of that name: a class or
-trait reached is reached whole (the engine calls its overrides), an object
-reached reaches its eager vals and its apply/unapply.
+declared-query registry), Pipeline.runAll, every `def main`, and the
+test reference implementations (TEST_REFS: executable formulations the
+specs compare the engine against). Each top-level object/class/trait
+member (a line at two-space indent declaring def/val/var/object/class/
+trait) is a node; its body runs to the next member. A body that
+mentions an identifier reaches every member of that name in any file,
+and every type of that name: a class or trait reached is reached whole
+(the engine calls its overrides), an object reached reaches its eager
+vals and its apply/unapply.
 
 The scan over-approximates: names are not resolved, so two members that
-share a name are reached together, and comments are the only text left
-out. A member it reports unreached has no caller by name from a root.
-Prints the public members of objects that no root reaches, one per line
-(`path:line Object.member`), test reference implementations apart.
+share a name are reached together, and a bare local name (a `val` or
+parameter inside a reached body) reaches every member of that name too;
+comments are the only text left out. A member it reports unreached has
+no caller by name from a root. Prints every object member, public or
+private, and every top-level class or trait that no root reaches, one
+per line (`path:line Owner.member`, `path:line Type`); then the test
+reference implementations the other roots do not reach.
 """
 import os
 import re
@@ -25,7 +30,8 @@ import sys
 ROOTS = [("SparkEntry", "queries"), ("SparkEntry", "oracleSql"),
          ("SparkEntry", "entry"), ("Pipeline", "runAll")]
 # executable reference formulations the specs compare the engine against
-TEST_REFS = re.compile(r"(Brute|Hof|ViaAgg)$|^zValueRef$")
+TEST_REFS = re.compile(
+    r"(Brute|Hof|ViaAgg)$|^(zValueRef|ngramJaccardPairs|scoreWith)$")
 
 TYPE_RE = re.compile(
     r"^(?:(?:final|sealed|abstract|case|private(?:\[\w+\])?|implicit)\s+)*"
@@ -91,6 +97,7 @@ def parse(root):
                 if m:
                     cur = {"kind": m.group(1), "name": m.group(2),
                            "path": os.path.relpath(path, root),
+                           "line": no,
                            "header": [line], "members": []}
                     types.setdefault(cur["name"], []).append(cur)
                     continue
@@ -101,8 +108,6 @@ def parse(root):
                     mods = line[:mm.start(1)]
                     mem = {"owner": cur, "kind": mm.group(1),
                            "name": mm.group(2), "line": no,
-                           "public": not re.search(r"private|protected",
-                                                   mods),
                            "lazy": "lazy" in mods, "body": [line]}
                     cur["members"].append(mem)
                     members.append(mem)
@@ -114,10 +119,13 @@ def parse(root):
 
 
 def scan(root):
+    """-> (unreached members and types, test references the other
+    roots do not reach)."""
     members, types = parse(root)
     by_name = {}
     for m in members:
         by_name.setdefault(m["name"], []).append(m)
+    refs = [m for m in members if TEST_REFS.search(m["name"])]
 
     reached, seen_types, work = set(), set(), []
 
@@ -137,6 +145,14 @@ def scan(root):
                     m["name"] in ("apply", "unapply"):
                 reach_member(m)
 
+    def close():
+        while work:
+            for ident in set(IDENT_RE.findall(work.pop())):
+                for m in by_name.get(ident, []):
+                    reach_member(m)
+                for t in types.get(ident, []):
+                    reach_type(t)
+
     for t in types.get("SparkEntry", []) + types.get("Pipeline", []):
         reach_type(t)
     for owner, name in ROOTS:
@@ -146,32 +162,36 @@ def scan(root):
     for m in by_name.get("main", []):
         reach_member(m)
         reach_type(m["owner"])
-
-    while work:
-        for ident in set(IDENT_RE.findall(work.pop())):
-            for m in by_name.get(ident, []):
-                reach_member(m)
-            for t in types.get(ident, []):
-                reach_type(t)
+    close()
+    kept = [m for m in refs if id(m) not in reached]
+    for m in kept:
+        reach_member(m)
+    close()
 
     unreached = [m for m in members
-                 if id(m) not in reached and m["public"]
-                 and m["owner"]["kind"] == "object"]
-    return sorted(unreached, key=lambda m: (m["owner"]["path"], m["line"]))
+                 if id(m) not in reached and m["owner"]["kind"] == "object"]
+    unreached += [t for ts in types.values() for t in ts
+                  if t["kind"] != "object" and id(t) not in seen_types]
+    key = lambda m: (m["path"] if "path" in m else m["owner"]["path"],
+                     m["line"])
+    return sorted(unreached, key=key), sorted(kept, key=key)
+
+
+def fmt(m):
+    if "owner" not in m:
+        return "%s:%d %s" % (m["path"], m["line"], m["name"])
+    return "%s:%d %s.%s" % (m["owner"]["path"], m["line"],
+                            m["owner"]["name"], m["name"])
 
 
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else "."
-    unreached = scan(root)
-    refs = [m for m in unreached if TEST_REFS.search(m["name"])]
-    rest = [m for m in unreached if not TEST_REFS.search(m["name"])]
-    fmt = lambda m: "%s:%d %s.%s" % (m["owner"]["path"], m["line"],
-                                      m["owner"]["name"], m["name"])
-    print("# public object members no root reaches (%d)" % len(rest))
-    for m in rest:
+    unreached, kept = scan(root)
+    print("# members and types no root reaches (%d)" % len(unreached))
+    for m in unreached:
         print(fmt(m))
-    print("# kept: test reference implementations (%d)" % len(refs))
-    for m in refs:
+    print("# kept: test reference implementations (%d)" % len(kept))
+    for m in kept:
         print(fmt(m))
 
 
