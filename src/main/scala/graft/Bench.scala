@@ -24,7 +24,7 @@ object Bench {
     // min-of-2 reports steady-state throughput. A failing query
     // reports -1 and lands in "failed".
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once() = Harness.trial(spark, s"bench $name")(fn(spark, sfDir).count())
+      def once() = Harness.trial(s"bench $name")(fn(spark, sfDir).count())
       val runs = (1 to 2).map(_ => once())
       // adaptive third trial: when the two trials disagree by >1.5x,
       // something external (GC, page cache, a background process)
@@ -51,7 +51,7 @@ object Bench {
       // total_s)
       Harness.warm(sfDir)(leg(spark, _))
       val runs = (1 to 2).map(_ =>
-        Harness.trial(spark, s"bench decomp $name")(leg(spark, sfDir)))
+        Harness.trial(s"bench decomp $name")(leg(spark, sfDir)))
       if (runs.forall(_._1)) Some(runs.map(_._2).min) else None
     }
     val inQueryRows = BenchDecomp.legs.toSeq.sortBy(_._1).flatMap {

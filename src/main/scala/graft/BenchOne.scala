@@ -13,7 +13,7 @@ object BenchOne {
     val n = if (args.length > 2) args(2).toInt else 3
     val spark = Harness.session()
     val fn = SparkEntry.queries(name)
-    val walls = Harness.trials(spark, n)(fn(spark, sfDir).count())
+    val walls = Harness.trials(n)(fn(spark, sfDir).count())
     if (sys.env.contains("EXPLAIN")) fn(spark, sfDir).explain("formatted")
     spark.stop()
     if (walls.exists(_ < 0)) sys.exit(1)

@@ -41,7 +41,7 @@ object GraftConf {
 
   /** Fold [[base]] into a session builder, plus the CORE (non-SQL,
     * set-at-startup-only) confs: long sessions (the 330-query bench,
-    * a day-2 service) accumulate dead checkpoint/persist blocks
+    * a day-2 service) accumulate dead checkpoint blocks
     * between collections — a 48 GiB heap GCs so rarely that the
     * ContextCleaner never runs and block memory pressure bleeds into
     * later queries (the r11/r12 quiet passes kept adjudicating

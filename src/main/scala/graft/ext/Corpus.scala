@@ -1039,11 +1039,10 @@ object Corpus {
     // materialized once: both the totals branch and the keep-audit
     // join consume it, and the token-count split is the expensive
     // part of the row (measured 2× at 100×)
-    val grouped = docs
+    val grouped = Pin.pin(docs
       .select(id.as("doc_id"), g.as("g"),
         size(Dedup.words(text)).cast("long").as("__t"),
-        Hashing.permBucket(id, 3, M.toInt).cast("long").as("__bucket"))
-      .localCheckpoint()
+        Hashing.permBucket(id, 3, M.toInt).cast("long").as("__bucket")))
     val all = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val totals = grouped.groupBy(col("g"))

@@ -34,60 +34,6 @@ object Dedup {
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       keys: _*)
 
-  /** [[spread]] + pin + the §43/§47 DISCIPLINE ASSERTION, for the
-    * iterating families' round inputs (textrank, hits, bfs, sssp,
-    * lpa, kcore, walks): these relations are byte-light but CPU-heavy
-    * per round, and AQE's byte-proportional sizing coalesces them to
-    * ONE task — serializing every round's expansion join (999 idle
-    * executors on a 1000-executor cluster). The explicit
-    * repartition-by-num is AQE-exempt, so the checkpoint must land
-    * with the full shuffle width at ANY data size; the assertion is
-    * the regression tripwire that fires if a future edit, a spread
-    * rewrite, or a Spark-upgrade AQE change silently collapses it
-    * (SpreadDisciplineSpec drives the whole registry through it). */
-  private[graft] def spreadPinned(df: DataFrame, tag: String,
-                                  keys: Column*): DataFrame =
-    assertSpread(Pin.pin(spread(df, keys: _*)), tag)
-
-  /** [[spreadPinned]]'s partitioning-PRESERVING sibling for the
-    * iterating families' loop-invariant relations (adjacency lists,
-    * edge lookups): [[Pin.pinByKey]] + the same discipline
-    * assertion. Where [[spreadPinned]]'s checkpoint erases the hash
-    * partitioning (so every round's join re-exchanges the full
-    * relation), this keeps it visible to the planner — each round's
-    * expansion join exchanges only the frontier. Deterministic
-    * relations only (persist keeps lineage; see [[Pin.pinByKey]]). */
-  private[graft] def spreadCached(df: DataFrame, tag: String,
-                                  keys: Column*): DataFrame =
-    assertSpread(Pin.pinByKey(df, keys: _*), tag)
-
-  /** [[spreadCached]] at `mult`× the session shuffle width — for
-    * inputs whose consumer stage amplifies rows (wedge joins, pair
-    * expansions), where the consumer's partial-agg state is
-    * amplification-sized and narrower widths spill
-    * (see [[Pin.pinByKeyN]]). */
-  private[graft] def spreadCachedWide(df: DataFrame, tag: String,
-                                      mult: Int, keys: Column*)
-      : DataFrame =
-    assertSpread(Pin.pinByKeyN(df,
-      mult * df.sparkSession.sessionState.conf.numShufflePartitions,
-      keys: _*), tag)
-
-  /** The discipline check alone: a round-checkpoint relation in an
-    * iterating family must carry more than one partition whenever
-    * the session is parallel at all. */
-  private[graft] def assertSpread(pinned: DataFrame,
-                                  tag: String): DataFrame = {
-    val want =
-      pinned.sparkSession.sessionState.conf.numShufflePartitions
-    val got = pinned.rdd.getNumPartitions
-    require(want <= 1 || got > 1,
-      s"[$tag] iterating-round input landed on $got partition(s) " +
-        s"with numShufflePartitions=$want — the AQE single-task trap " +
-        "(SCALE.md §43/§47); a spread was dropped or rewritten")
-    pinned
-  }
-
   /** Whitespace tokens. */
   def words(text: Column): Column = split(text, " ")
 
@@ -360,9 +306,8 @@ object Dedup {
     // materialized: the cands/uniq branches below both consume the
     // h-keyed count window — without the checkpoint the corpus-wide
     // window (and the tile/hash projection under it) executes twice
-    val perTile = tiled
-      .withColumn("__cand", count(lit(1)).over(Window.partitionBy("h")))
-      .localCheckpoint()
+    val perTile = Pin.pin(tiled
+      .withColumn("__cand", count(lit(1)).over(Window.partitionBy("h"))))
     val cands = perTile.filter(col("__cand") >= 2)
       .withColumn("__ex",
         count(lit(1)).over(Window.partitionBy("h", "__chunk")))
@@ -780,7 +725,7 @@ object Dedup {
     // on the 100× corpus (SCALE.md §9). Storage is n rows × k longs —
     // the distributed analog of writing the signature table before
     // band-joining it, which is the lakehouse shape at 100 TB.
-    val bands = minhashBandRows(signatures.localCheckpoint(), k, rowsPerBand)
+    val bands = minhashBandRows(Pin.pin(signatures), k, rowsPerBand)
     val a = spread(bands.select(col("band"), col("sig"),
       col("doc_id").as("d1"), col("sigs").as("sigs1")),
       col("band"), col("sig"))
@@ -1002,7 +947,7 @@ object Dedup {
     // the materialized form ~4× faster steady-state at 100×, SCALE.md
     // §9). n rows × 16 bytes — the signature table written once, then
     // band-joined, as a warehouse would lay it out.
-    val sigs = sims.localCheckpoint()
+    val sigs = Pin.pin(sims)
     val bands = simhashBandRows(sigs)
     val a = spread(bands.select(col("band"), col("bv"),
       col("doc_id").as("d1"), col("simhash").as("s1")),
@@ -1273,11 +1218,10 @@ object Dedup {
           .orderBy(col("df").asc, col("gram").asc)))
       .withColumn("n_grams", count(lit(1)).over(
         Window.partitionBy(col("doc_id"))))
-    ranked.filter(col("rank") <= col("n_grams") -
+    Pin.pin(ranked.filter(col("rank") <= col("n_grams") -
         expr(s"(n_grams * $thresholdNum + ${thresholdDen - 1}) " +
           s"div $thresholdDen") + 1)
-      .select(col("gram"), col("doc_id"), col("n_grams"))
-      .localCheckpoint()
+      .select(col("gram"), col("doc_id"), col("n_grams")))
   }
 
   /** Prefix-collision candidates → exact verification (the second half
@@ -1291,15 +1235,14 @@ object Dedup {
     // lemma derivation), cross-multiplied to integers — prunes the
     // cross-length collisions a common gram would otherwise emit,
     // which is most of the candidate volume on low-diversity corpora
-    val cand = spread(prefix.select(col("gram"), col("doc_id").as("d1"),
+    val cand = Pin.pin(spread(prefix.select(col("gram"), col("doc_id").as("d1"),
         col("n_grams").as("__n1")), col("gram"))
       .join(prefix.select(col("gram").as("__g2"), col("doc_id").as("d2"),
         col("n_grams").as("__n2")),
         col("gram") === col("__g2") && col("d1") < col("d2") &&
           col("__n1") * lit(thresholdNum) <= col("__n2") * lit(thresholdDen) &&
           col("__n2") * lit(thresholdNum) <= col("__n1") * lit(thresholdDen))
-      .select(col("d1"), col("d2")).distinct()
-      .localCheckpoint()
+      .select(col("d1"), col("d2")).distinct())
     // gram sets only for docs that appear in a candidate pair — same
     // scoping as [[ngramJaccardViaMinhash]]: verification work tracks
     // the candidate set, not the corpus
@@ -1361,9 +1304,8 @@ object Dedup {
     // consume these (lineage reuse is not execution reuse — without
     // the checkpoints the prefix branch re-runs the gram scan + df
     // agg from scratch)
-    val grams = explodedGrams(docs, id, text, n).localCheckpoint()
-    val gdf = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-      .localCheckpoint()
+    val grams = Pin.pin(explodedGrams(docs, id, text, n))
+    val gdf = Pin.pin(grams.groupBy(col("gram")).agg(count(lit(1)).as("df")))
     val sPrefix = grams.filter(col("doc_id") % sampleMod === 0)
       .join(gdf, "gram")
       .withColumn("rank", row_number().over(
@@ -1504,9 +1446,8 @@ object Dedup {
     // materialize the candidate pairs (pair-count-sized, tiny next to
     // the corpus) so the id-scoping below doesn't re-execute the
     // signature + band join subplan
-    val cand = minhashCandidates(
-      minhashSignature(docs, id, text, n, k), k, rowsPerBand)
-      .localCheckpoint()
+    val cand = Pin.pin(minhashCandidates(
+      minhashSignature(docs, id, text, n, k), k, rowsPerBand))
     // gram sets ONLY for docs that appear in a candidate pair: the
     // unscoped alternative shuffles every document's distinct-gram
     // array through the groupBy — a corpus-sized shuffle at 100 TB,
@@ -1560,7 +1501,7 @@ object Dedup {
                            shingle: Int, k: Int,
                            rowsPerBand: Int = 2): DataFrame =
     minhashEstimateAuditWith(docs, id, text,
-      minhashSignature(docs, id, text, shingle, k).localCheckpoint(),
+      Pin.pin(minhashSignature(docs, id, text, shingle, k)),
       shingle, k, rowsPerBand)
 
   /** [[minhashEstimateAudit]] over a PRECOMPUTED (already
@@ -1570,7 +1511,7 @@ object Dedup {
                                        text: Column, sigs: DataFrame,
                                        shingle: Int, k: Int,
                                        rowsPerBand: Int): DataFrame = {
-    val cand = minhashCandidates(sigs, k, rowsPerBand).localCheckpoint()
+    val cand = Pin.pin(minhashCandidates(sigs, k, rowsPerBand))
     val a = sigs.select(col("doc_id").as("d1") +:
       (0 until k).map(i => col(s"mh$i").as(s"__a$i")): _*)
     val b = sigs.select(col("doc_id").as("d2") +:
@@ -1697,8 +1638,7 @@ object Dedup {
     // arm takes its k-component PREFIX (shared permutations), so the
     // dominant shingle->minhash kernel runs once, not |arms| times
     val kMax = configs.map(_._1).max
-    val sigsMax = minhashSignature(docs, id, text, shingle, kMax)
-      .localCheckpoint()
+    val sigsMax = Pin.pin(minhashSignature(docs, id, text, shingle, kMax))
     configs.map { case (k, r) =>
       val sigsK = sigsMax.select(col("doc_id") +:
         (0 until k).map(i => col(s"mh$i")): _*)
@@ -2027,9 +1967,8 @@ object Dedup {
     // one distinct-signature row per group, materialized once — it
     // feeds the exact-drop join AND both sides of the band self-join
     // (three evaluations of the signature aggregation otherwise)
-    val reps = sims.groupBy(col("simhash"))
-      .agg(min(col("doc_id")).as("rep"))
-      .localCheckpoint()
+    val reps = Pin.pin(sims.groupBy(col("simhash"))
+      .agg(min(col("doc_id")).as("rep")))
     val exactDrops = sims.join(reps, "simhash")
       .filter(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("d2"))
@@ -2096,9 +2035,8 @@ object Dedup {
     * verification pass — no per-round driver probes. */
   private[graft] def starComponents(pairsIn: DataFrame,
                                     vertices: DataFrame): DataFrame = {
-    val pairs = pairsIn
-      .select(col("d2").as("u"), col("d1").as("v")).distinct()
-      .localCheckpoint()
+    val pairs = Pin.pin(pairsIn
+      .select(col("d2").as("u"), col("d1").as("v")).distinct())
     // Size the ITERATION frames by the measured edge count — the same
     // input-sized reasoning AQE applies, at the checkpoint boundaries
     // AQE cannot see across: a rep graph that fits one task iterates
@@ -2135,18 +2073,18 @@ object Dedup {
 
     def contract(start: DataFrame, rounds: Int): DataFrame = {
       var e = start
-      for (_ <- 1 to rounds) e = smallStar(largeStar(e)).localCheckpoint()
+      for (_ <- 1 to rounds) e = Pin.pin(smallStar(largeStar(e)))
       e
     }
     // labels: out-edge target (the star root), or self for roots and
     // edge-less vertices. min() is defensive — at the fixpoint every
     // non-root has exactly one out-edge.
-    def labelsOf(e: DataFrame): DataFrame = vertices.select(col("doc_id"))
+    def labelsOf(e: DataFrame): DataFrame = Pin.pin(vertices
+      .select(col("doc_id"))
       .join(e.groupBy(col("u").as("doc_id"))
         .agg(min(col("v")).as("__c")), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        coalesce(col("__c"), col("doc_id")).as("component"))
-      .localCheckpoint()
+        coalesce(col("__c"), col("doc_id")).as("component")))
     // the verification pass: the labeling must be constant across
     // every candidate edge (see nearDupComponents scaladoc for why
     // this is complete)
@@ -2167,8 +2105,7 @@ object Dedup {
     val bound = (64 - java.lang.Long.numberOfLeadingZeros(
       math.max(2L, nEdges))).toInt + 2
     val optimistic = math.min(4, bound)
-    val seed = (if (loopParts == 1) pairs.coalesce(1) else pairs)
-      .localCheckpoint()
+    val seed = Pin.pin(if (loopParts == 1) pairs.coalesce(1) else pairs)
     var e = contract(seed, optimistic)
     var labels = labelsOf(e)
     if (!consistent(labels)) {
@@ -2195,9 +2132,8 @@ object Dedup {
     // corpus-sized frame in the block manager is exactly what this
     // decomposition avoids at scale; it is scanned twice — here and
     // in the membership join — same as the pre-collapse design.)
-    val bySig = sims.filter(col("simhash").isNotNull)
-      .groupBy(col("simhash")).agg(min(col("doc_id")).as("rep"))
-      .localCheckpoint()
+    val bySig = Pin.pin(sims.filter(col("simhash").isNotNull)
+      .groupBy(col("simhash")).agg(min(col("doc_id")).as("rep")))
     val reps = bySig.select(col("rep").as("doc_id"), col("simhash"))
     // candidate edges, directed large→small (simhashPairs guarantees
     // d1 < d2); the shared contraction core materializes them once
@@ -2592,9 +2528,8 @@ object Dedup {
     // df histogram and both sides of the self-join) would otherwise
     // each re-run scan + winnow kernel + explode (same rule as the
     // simhash / minhash band indexes above)
-    val postings = winnowedFingerprints(docs, id, text, k, w)
-      .select(col("doc_id"), explode(col("fps")).as("fp"))
-      .localCheckpoint()
+    val postings = Pin.pin(winnowedFingerprints(docs, id, text, k, w)
+      .select(col("doc_id"), explode(col("fps")).as("fp")))
     // the kept-fp set is ~6% of distinct fps (df≥2 on a mostly-unique
     // index) — broadcast it so the 10M-row postings NEVER shuffle for
     // the df filter; the only shuffle left is the fp-keyed self-join
@@ -2623,9 +2558,8 @@ object Dedup {
   def winnowOverlapIncremental(docs: DataFrame, id: Column, text: Column,
                                k: Int = 5, w: Int = 4, minShared: Int = 2,
                                maxDf: Int = 50, newFrom: Long): DataFrame = {
-    val postings = winnowedFingerprints(docs, id, text, k, w)
-      .select(col("doc_id"), explode(col("fps")).as("fp"))
-      .localCheckpoint()
+    val postings = Pin.pin(winnowedFingerprints(docs, id, text, k, w)
+      .select(col("doc_id"), explode(col("fps")).as("fp")))
     val kept = postings.groupBy(col("fp"))
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
@@ -2753,31 +2687,28 @@ object Dedup {
   def pairPageRank(pairs: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val Scale = 1000000000000L
-    val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+    val edges = Pin.pin(pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // n (node count) rides along as a 1-row broadcast crossJoin — the
     // C8 scalar-injection pattern, so the base term needs no driver hop
     val nodes = deg.select(col("src").as("doc_id"), col("deg"))
       .crossJoin(broadcast(deg.agg(count(lit(1)).as("__n"))))
-    var ranks = nodes
-      .withColumn("pr_fp", expr(s"$Scale DIV __n"))
-      .localCheckpoint()
+    var ranks = Pin.pin(nodes
+      .withColumn("pr_fp", expr(s"$Scale DIV __n")))
     for (_ <- 1 to iters) {
       val contrib = edges
         .join(ranks.select(col("doc_id").as("src"),
           expr("pr_fp DIV deg").as("__c")), "src")
         .groupBy(col("dst")).agg(sum(col("__c")).as("__in"))
-      ranks = ranks.drop("pr_fp")
+      ranks = Pin.pin(ranks.drop("pr_fp")
         .join(contrib.withColumnRenamed("dst", "doc_id"),
           Seq("doc_id"), "left")
         .withColumn("pr_fp", expr(
           s"(15 * ($Scale DIV __n)) DIV 100 + " +
             "(85 * coalesce(__in, 0L)) DIV 100"))
-        .drop("__in")
-        .localCheckpoint()
+        .drop("__in"))
     }
     ranks.select(col("doc_id"), col("deg"), col("pr_fp"))
   }

@@ -106,28 +106,29 @@ object Graph {
     // twice-derived orientation subtree — formatted-plan ops
     // 7-9/18-20/32-34/43-45), each a full edge re-scan with its own
     // exchange (guide §2.4)
-    val deg = Dedup.spreadPinned(
+    val deg = Pin.pin(
       e.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", col("n"))
+        .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", Seq(col("n")))
 
     // total order (d, n): orient low -> high so out-degree <= O(sqrt m)
     val withDeg = e
       .join(deg.withColumnRenamed("n", "u").withColumnRenamed("d", "du"), "u")
       .join(deg.withColumnRenamed("n", "v").withColumnRenamed("d", "dv"), "v")
-    // oriented edges cached PARTITIONING-VISIBLY on the apex at wedge
-    // width — the same treatment [[linkPredict]]'s capped adjacency
-    // got in r12: both wedge sides read ONE cached relation hashed
+    // oriented edges pinned keyed on the apex at wedge width — the
+    // same treatment [[linkPredict]]'s capped adjacency gets: both
+    // wedge sides read ONE pinned relation hashed
     // and sorted on `src`, so the Σ outdeg² wedge self-join runs with
     // zero exchange and zero sort on either side (the r12 plan
     // derived the whole deg-join orientation subtree TWICE, with an
     // exchange+sort pair on each side of the wedge join)
-    val oriented = Dedup.spreadCachedWide(withDeg.select(
+    val oriented = Pin.pin(withDeg.select(
       when(col("du") < col("dv") ||
            (col("du") === col("dv") && col("u") < col("v")), col("u"))
         .otherwise(col("v")).as("src"),
       when(col("du") < col("dv") ||
            (col("du") === col("dv") && col("u") < col("v")), col("v"))
-        .otherwise(col("u")).as("dst")), "tri.oriented", 4, col("src"))
+        .otherwise(col("u")).as("dst")), "tri.oriented", Seq(col("src")),
+      widthMult = 4)
 
     // wedges at the apex: (apex)->(b), (apex)->(c) with b ordered
     // before c in the SAME orientation order is unnecessary — any
@@ -375,38 +376,36 @@ object Graph {
 
   /** The shared front of the exact AND approx link-prediction
     * rankers: pinned one-pass degree aggregation + the degree-capped
-    * adjacency cached PARTITIONING-VISIBLY on the apex at 4× session
-    * width.
+    * adjacency pinned keyed on the apex at 4× session width.
     *
     *  - ONE degree aggregation, pinned: unpinned it re-ran as five
     *    separate union+agg subtrees in the executed plan (the two
     *    semi-join caps, deg_u, deg_v — each a full adjacency re-scan
     *    with two exchanges; the r12 formatted plan's ops
     *    9-11/25-27/43-45/87-89/100-102).
-    *  - Capped adjacency cached on `a`: every consumer keyed on the
+    *  - Capped adjacency pinned keyed on `a`: every consumer keyed on the
     *    node — the Σdeg² wedge self-join (both sides), the signature
     *    agg (grouped on (a, i), a prefix), the verify tail's
     *    neighbor-array agg (grouped on a) — runs with zero exchange
     *    and zero sort on this side. 4× width because the wedge
-    *    consumer AMPLIFIES rows (see [[Pin.pinByKeyN]]); the extra
+    *    consumer AMPLIFIES rows (see the keyed [[Pin.pin]]); the extra
     *    width is harmless to the prefix-keyed aggs.
     *
     * Factored out in round 13 so [[linkPredictApproxRecall]] builds
     * this front ONCE for its two rankers — before, exact and approx
     * each pinned their own edge copy, re-derived the adjacency,
-    * re-aggregated degrees and built two separate caches of the SAME
-    * capped relation (guide §2.4: the cheapest shuffle is the one
-    * not run twice). `e` must be pinned (lineage-unique) per the
-    * [[Pin.pinByKey]] no-cross-run-cache tripwire. */
+    * re-aggregated degrees and pinned two copies of the SAME capped
+    * relation (guide §2.4: the cheapest shuffle is the one not run
+    * twice). */
   private def cappedAdjacency(e: DataFrame, maxDegree: Int,
                               tag: String): (DataFrame, DataFrame) = {
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
-    val deg = Dedup.spreadPinned(adj.groupBy(col("a"))
-      .agg(count(lit(1)).as("degree")), s"$tag.deg", col("a"))
-    val adjOk = Dedup.spreadCachedWide(adj.join(
+    val deg = Pin.pin(adj.groupBy(col("a"))
+      .agg(count(lit(1)).as("degree")), s"$tag.deg", Seq(col("a")))
+    val adjOk = Pin.pin(adj.join(
       deg.filter(col("degree") <= maxDegree).select(col("a")), Seq("a"),
-      "left_semi"), s"$tag.adj", 4, col("a"))
+      "left_semi"), s"$tag.adj", Seq(col("a")), widthMult = 4)
     (deg, adjOk)
   }
 
@@ -416,7 +415,7 @@ object Graph {
     * "narrower types: halve the column, halve its shuffle bytes",
     * here applied to the Σ deg² aggregation state). One driver read
     * of an ALREADY-pinned tiny aggregate (never a source scan), so
-    * the check costs a cached-partition fold at plan time. */
+    * the check costs a pinned-partition fold at plan time. */
   private def idsPackable(rel: DataFrame, idCol: String): Boolean = {
     val r = rel.agg(min(col(idCol)), max(col(idCol))).first()
     r.isNullAt(0) || (r.getLong(0) >= 0L && r.getLong(1) < (1L << 31))
@@ -424,7 +423,7 @@ object Graph {
 
   /** The exact common-neighbor ranking tail over a pre-built front —
     * see [[linkPredict]] for the semantics; factored out so
-    * [[linkPredictApproxRecall]] can run it against the SAME cached
+    * [[linkPredictApproxRecall]] can run it against the SAME pinned
     * adjacency its approx side uses. */
   private def linkPredictTail(e: DataFrame, deg: DataFrame,
                               adjOk: DataFrame, minCn: Long,
@@ -485,14 +484,14 @@ object Graph {
       col("v").cast("long").as("v")))
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
-    // same pinned-degree + cached-apex-partitioned discipline as
+    // same pinned-degree + apex-keyed pin discipline as
     // [[linkPredict]] (one degree agg, zero-exchange wedge join)
-    val deg = Dedup.spreadPinned(adj.groupBy(col("a"))
-      .agg(count(lit(1)).as("degree")), "linkpred.ra.deg", col("a"))
-    val adjOk = Dedup.spreadCachedWide(adj.join(
+    val deg = Pin.pin(adj.groupBy(col("a"))
+      .agg(count(lit(1)).as("degree")), "linkpred.ra.deg", Seq(col("a")))
+    val adjOk = Pin.pin(adj.join(
         deg.filter(col("degree") <= maxDegree), Seq("a"))
       .withColumn("wt", expr("1000000L div degree")),
-      "linkpred.ra.adj", 4, col("a"))
+      "linkpred.ra.adj", Seq(col("a")), widthMult = 4)
     val w1 = adjOk.select(col("a"), col("wt"), col("n").as("u"))
     val w2 = adjOk.select(col("a"), col("n").as("v"))
     w1.join(w2, Seq("a")).filter(col("u") < col("v"))
@@ -597,11 +596,11 @@ object Graph {
     // degree cap FIRST: one count agg + a semi join, so hub nodes
     // never reach the signature agg, the band join, or the
     // collect_list verify arrays — the O(deg) payload bound. The
-    // shared [[cappedAdjacency]] front caches the capped relation
-    // partitioned on the node: the signature agg (grouped on (a, i)
+    // shared [[cappedAdjacency]] front pins the capped relation
+    // keyed on the node: the signature agg (grouped on (a, i)
     // — a prefix match) and the verify tail's neighbor-array agg
     // (grouped on a) both run exchange-free over it, and the minhash
-    // explode inherits the full cached width instead of the 2-task
+    // explode inherits the full pinned width instead of the 2-task
     // stage AQE carved from its byte-light input (the §43 trap,
     // measured here as a 2.0 s 2-task stage).
     val (_, adj) = cappedAdjacency(e, maxDegree, "linkpred.approx")
@@ -653,18 +652,18 @@ object Graph {
       .agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") > maxBucket)
       .select(col("i"), col("h"))
-    // the surviving signatures CACHED partitioned on the band key at
+    // the surviving signatures PINNED keyed on the band key at
     // full width: the band self-join's pair emission is byte-light in
     // and CPU-heavy out, so every shuffle-fed form of this relation
     // ended up on an AQE-coalesced 2-task read (measured 2.2 s — the
     // §43 trap; a plain explicit spread does not survive the
     // optimizer either, which pushes the anti join below a
-    // repartition and strips it as redundant). A cached scan cannot
+    // repartition and strips it as redundant). A pinned scan cannot
     // be coalesced and serves BOTH sides of the self-join with zero
     // exchange and zero sort.
-    val banded = Dedup.spreadCached(
+    val banded = Pin.pin(
       sigs.join(oversize, Seq("i", "h"), "left_anti"),
-      "linkpred.banded", col("i"), col("h"))
+      "linkpred.banded", Seq(col("i"), col("h")))
     val cand = banded.select(col("i"), col("h"), col("a").as("u"))
       .join(banded.select(col("i"), col("h"), col("a").as("v")),
         Seq("i", "h"))
@@ -683,7 +682,7 @@ object Graph {
     // SCALE.md §39).
     // INT neighbor arrays when every id fits (round 13, guide §2.3
     // "narrower types"): the first attach join is exchange-free on
-    // the array side (nbrs inherits adj's cached partitioning), but
+    // the array side (nbrs inherits adj's pinned partitioning), but
     // the second attach must ship each candidate's first array to
     // its v-partition — the one unavoidable array-carrying exchange
     // of this tail (433 MB at sf0.1, the r12 "not yet" item). Ids
@@ -738,9 +737,9 @@ object Graph {
       .delete(marker, false)
     val e = edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v"))
-    val adj = e.select(col("u").as("a"), col("v").as("n"))
+    val adj = Pin.pin(e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
-      .dropDuplicates(Seq("a", "n")).localCheckpoint()
+      .dropDuplicates(Seq("a", "n")))
     neighborMinhash(adj, nHashes)
       .write.mode("overwrite").parquet(s"$dir/sigs")
     adj.write.mode("overwrite").parquet(s"$dir/adj")
@@ -799,9 +798,9 @@ object Graph {
       col("v").cast("long").as("v")))
     // ONE shared front for both rankers (round-13, guide §2.4): the
     // exact and approx tails read the SAME pinned degree agg and the
-    // SAME cached capped adjacency. Before, each ranker re-pinned the
+    // SAME pinned capped adjacency. Before, each ranker re-pinned the
     // edge set, re-derived the adjacency, re-aggregated degrees and
-    // built its own cache of the identical capped relation — this
+    // pinned its own copy of the identical capped relation — this
     // query paid the whole front twice (it was the suite's top wall,
     // 21.5 s isolated; the front is data-identical on both paths, so
     // the ranked rows cannot change). Both rankers use the default
@@ -1035,8 +1034,8 @@ object Graph {
         col("n_nodes").cast("long").as("n_nodes"),
         col("n_edges").cast("long").as("n_edges"))
     }
-    var e = Dedup.spreadPinned(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")), "kcore.edges", col("u"))
+    var e = Pin.pin(edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")), "kcore.edges", Seq(col("u")))
     var out = census(0, e)
     for (r <- 1 to rounds) {
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
@@ -1047,8 +1046,8 @@ object Graph {
       // no CPU-dense kernel), so AQE's byte sizing is the right
       // width and a forced per-round spread measured 1.9s vs 1.7s
       // at sf0.1 (pure added exchange). The spread discipline is for
-      // byte-LIGHT/CPU-HEAVY round inputs; the one-time input above
-      // carries the tripwire for this family.
+      // byte-LIGHT/CPU-HEAVY round inputs; the one-time keyed pin
+      // above carries the single-task check for this family.
       e = Pin.pin(e
         .join(keep.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("n").as("v")), Seq("v"), "left_semi")
@@ -1280,27 +1279,25 @@ object Bfs {
     // (AQE would coalesce a small agg to one partition and serialize
     // every level's expansion join)
     val e = Pin.pin(edges)
-    val adj = Dedup.spreadCached(e
+    val adj = Pin.pin(e
       .select(col("u").cast("long").as("x"), col("v").cast("long").as("y"))
       .unionByName(e.select(col("v").cast("long").as("x"),
         col("u").cast("long").as("y")))
-      .distinct(), "bfs.adj", col("x"))
-    var visited = adj.select(col("x")).distinct()
+      .distinct(), "bfs.adj", Seq(col("x")))
+    var visited = Pin.pin(adj.select(col("x")).distinct()
       .filter(col("x") < seedMax)
       .select(col("x").as("seed"), col("x").as("node_id"),
-        lit(0L).as("dist"))
-      .localCheckpoint()
+        lit(0L).as("dist")))
     var frontier = visited
     for (lvl <- 1 to maxHops) {
-      val next = frontier
+      val next = Pin.pin(frontier
         .select(col("seed"), col("node_id").as("x"))
         .join(adj, Seq("x"))
         .select(col("seed"), col("y").as("node_id")).distinct()
         .join(visited.select(col("seed"), col("node_id")),
           Seq("seed", "node_id"), "left_anti")
-        .withColumn("dist", lit(lvl.toLong))
-        .localCheckpoint()
-      visited = visited.unionByName(next).localCheckpoint()
+        .withColumn("dist", lit(lvl.toLong)))
+      visited = Pin.pin(visited.unionByName(next))
       frontier = next
     }
     visited
@@ -1406,17 +1403,16 @@ object Sssp {
   def sssp(edges: DataFrame, seedMax: Long, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val e = Pin.pin(edges)
-    val adj = Dedup.spreadCached(e.select(col("u").cast("long").as("x"),
+    val adj = Pin.pin(e.select(col("u").cast("long").as("x"),
         col("v").cast("long").as("y"),
         expr("1000000 DIV w").as("len"))
       .unionByName(e.select(col("v").cast("long").as("x"),
         col("u").cast("long").as("y"), expr("1000000 DIV w").as("len"))),
-      "sssp.adj", col("x"))
-    var dist = adj.select(col("x")).distinct()
+      "sssp.adj", Seq(col("x")))
+    var dist = Pin.pin(adj.select(col("x")).distinct()
       .filter(col("x") < seedMax)
       .select(col("x").as("seed"), col("x").as("node_id"),
-        lit(0L).as("dist_fp"))
-      .localCheckpoint()
+        lit(0L).as("dist_fp")))
     // NOT frontier-only: the queue discipline of textbook
     // Bellman-Ford (propose candidates only from last round's
     // improvements) was implemented and MEASURED SLOWER here —
@@ -1433,10 +1429,9 @@ object Sssp {
         .join(adj, Seq("x"))
         .select(col("seed"), col("y").as("node_id"),
           (col("dist_fp") + col("len")).as("dist_fp"))
-      dist = dist.unionByName(cand)
+      dist = Pin.pin(dist.unionByName(cand)
         .groupBy(col("seed"), col("node_id"))
-        .agg(min(col("dist_fp")).as("dist_fp"))
-        .localCheckpoint()
+        .agg(min(col("dist_fp")).as("dist_fp")))
     }
     dist
   }
@@ -1538,8 +1533,8 @@ object Sssp {
   * and ranks initialize AT the teleport vector so round 1 already
   * reads as one surfer step from the seeds.
   *
-  * Scale shape: adjacency spread+pinned once
-  * ([[graft.ext.Dedup.spreadPinned]] — the §43/§47 iterating-family
+  * Scale shape: adjacency pinned keyed on the source once
+  * ([[graft.ext.Pin.pin]] — the §43/§47 iterating-family
   * discipline), per round one shuffle keyed on the edge source + one
   * keyed agg; score state is |V| rows, localCheckpoint'd per round
   * (bounded plan depth). Mass leaks only by DIV truncation (no
@@ -1559,7 +1554,7 @@ object Ppr {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "ppr.adj", col("src"))
+    val adj = Pin.pin(e, "ppr.adj", Seq(col("src")))
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val ns = deg.filter(col("src") < seedMax)
       .agg(count(lit(1)).as("__ns"))
@@ -1571,20 +1566,18 @@ object Ppr {
         expr(s"CASE WHEN is_seed = 1 THEN $Scale DIV __ns " +
           "ELSE 0L END"))
       .drop("__ns")
-    var ranks = nodes.withColumn("pr_fp", col("tele_fp"))
-      .localCheckpoint()
+    var ranks = Pin.pin(nodes.withColumn("pr_fp", col("tele_fp")))
     for (_ <- 1 to iters) {
       val contrib = adj
         .join(ranks.select(col("node_id").as("src"),
           expr("pr_fp DIV deg").as("__c")), "src")
         .groupBy(col("dst")).agg(sum(col("__c")).as("__in"))
-      ranks = ranks.drop("pr_fp")
+      ranks = Pin.pin(ranks.drop("pr_fp")
         .join(contrib.withColumnRenamed("dst", "node_id"),
           Seq("node_id"), "left")
         .withColumn("pr_fp", expr(
           "(15 * tele_fp) DIV 100 + (85 * coalesce(__in, 0L)) DIV 100"))
-        .drop("__in")
-        .localCheckpoint()
+        .drop("__in"))
     }
     ranks.select(col("node_id"), col("deg"), col("is_seed"),
       col("pr_fp").as("ppr_fp"))
@@ -1668,15 +1661,13 @@ object Ppr {
         col("v").cast("long").as("dst"))
       .unionByName(edges.select(col("v").cast("long").as("src"),
         col("u").cast("long").as("dst")))
-    val adj = Dedup.spreadCached(e, "ppr.rec.adj", col("src"))
-    val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node_id"), col("deg"))
-      .localCheckpoint()
+    val adj = Pin.pin(e, "ppr.rec.adj", Seq(col("src")))
+    val deg = Pin.pin(adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node_id"), col("deg")))
     val seeds = deg.filter(col("node_id") < seedMax)
       .select(col("node_id").as("seed"))
-    var st = seeds.select(col("seed"), col("seed").as("node_id"),
-        lit(Scale).as("pr_fp"))
-      .localCheckpoint()
+    var st = Pin.pin(seeds.select(col("seed"), col("seed").as("node_id"),
+        lit(Scale).as("pr_fp")))
     for (_ <- 1 to iters) {
       val contrib = st.join(deg, Seq("node_id"))
         .select(col("seed"), col("node_id").as("src"),
@@ -1687,14 +1678,13 @@ object Ppr {
         .unionByName(seeds.select(col("seed"),
           col("seed").as("node_id")))
         .distinct()
-      st = dom
+      st = Pin.pin(dom
         .join(contrib.withColumnRenamed("dst", "node_id"),
           Seq("seed", "node_id"), "left")
         .withColumn("pr_fp", expr(
           s"CASE WHEN node_id = seed THEN (15 * ${Scale}L) DIV 100 " +
             "ELSE 0L END + (85 * coalesce(__in, 0L)) DIV 100"))
-        .drop("__in")
-        .localCheckpoint()
+        .drop("__in"))
     }
     val known = adj.filter(col("src") < seedMax)
       .select(col("src").as("seed"), col("dst").as("node_id"))

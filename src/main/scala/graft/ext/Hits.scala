@@ -49,35 +49,33 @@ object Hits {
     * max-score = 1e6 within each kind. */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // ONE evaluation of the upstream edge build, then TWO cached
-    // orientations — each half-round joins the full edge relation on
+    // ONE evaluation of the upstream edge build, then TWO keyed
+    // pins — each half-round joins the full edge relation on
     // its own key (c for the authority update, s for the hub update),
-    // so a single pinned copy re-exchanged the edges every half-round;
-    // two partitioning-visible pins make both edge sides exchange-free
+    // so a single unkeyed copy re-exchanged the edges every half-round;
+    // two keyed pins make both edge sides exchange-free
     // for every iteration (the per-round shuffles that remain are the
     // keyed aggregations, i.e. the transposes themselves)
     val e0 = Pin.pin(edges.select(col("c").cast("long").as("c"),
       col("s").cast("long").as("s")))
-    val eC = Dedup.spreadCached(e0, "hits.edges.c", col("c"))
-    val eS = Dedup.spreadCached(e0, "hits.edges.s", col("s"))
-    var h = eC.select(col("c")).distinct()
-      .withColumn("h", lit(Scale)).localCheckpoint()
+    val eC = Pin.pin(e0, "hits.edges.c", Seq(col("c")))
+    val eS = Pin.pin(e0, "hits.edges.s", Seq(col("s")))
+    var h = Pin.pin(eC.select(col("c")).distinct()
+      .withColumn("h", lit(Scale)))
     var a: DataFrame = null
     for (_ <- 1 to iters) {
       val ar = eC.join(h, Seq("c")).groupBy("s")
         .agg(sum(col("h").cast(DecimalType(38, 0))).as("ar"))
       val am = ar.agg(max(col("ar")).as("mx"))
-      a = ar.crossJoin(broadcast(am))
+      a = Pin.pin(ar.crossJoin(broadcast(am))
         .select(col("s"),
-          expr(s"CAST((ar * $Scale) DIV mx AS BIGINT)").as("a"))
-        .localCheckpoint()
+          expr(s"CAST((ar * $Scale) DIV mx AS BIGINT)").as("a")))
       val hr = eS.join(a, Seq("s")).groupBy("c")
         .agg(sum(col("a").cast(DecimalType(38, 0))).as("hr"))
       val hm = hr.agg(max(col("hr")).as("mx"))
-      h = hr.crossJoin(broadcast(hm))
+      h = Pin.pin(hr.crossJoin(broadcast(hm))
         .select(col("c"),
-          expr(s"CAST((hr * $Scale) DIV mx AS BIGINT)").as("h"))
-        .localCheckpoint()
+          expr(s"CAST((hr * $Scale) DIV mx AS BIGINT)").as("h")))
     }
     a.select(lit("supplier").as("kind"), col("s").as("node_id"),
         col("a").as("score_fp"))

@@ -16,9 +16,10 @@ import graft.schema.Tables
   * query's terms|, not |corpus|.
   *
   * Layout under `dir`:
-  *  - `stats/` — one row (seg, n_docs, toks): the corpus-level
-  *    sufficient statistics of BM25's length norm (the reader sums
-  *    the table's rows).
+  *  - `stats/` — one row (n_docs, toks): the corpus-level
+  *    sufficient statistics of BM25's length norm (the readers sum
+  *    the table's rows, so an index with one row per segment, the
+  *    earlier layout, still reads).
   *  - `postings/` — (term, doc_id, tf, doc_len) hive-PARTITIONED BY
   *    `bucket` = polyHash(term) mod nBuckets. A query's terms prune
   *    to ≤ |terms| bucket directories (partition pruning on literal
@@ -73,13 +74,11 @@ object Lexical {
       .withColumn("bucket",
         (Hashing.polyHash(col("term")) % nBuckets).cast("int"))
 
-  private def statsOf(docs: DataFrame, id: Column, text: Column,
-                      seg: Long): DataFrame =
+  private def statsOf(docs: DataFrame, id: Column, text: Column): DataFrame =
     docs.select(id.as("doc_id"), split(text, " ").as("__w"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(col("__w")).cast("long")).as("toks"))
-      .select(lit(seg).as("seg"), col("n_docs"),
-        coalesce(col("toks"), lit(0L)).as("toks"))
+      .select(col("n_docs"), coalesce(col("toks"), lit(0L)).as("toks"))
 
   /** Full build into `dir` (callers wanting atomic publish wrap in
     * the fingerprinted publisher, as the registered query does). */
@@ -92,7 +91,7 @@ object Lexical {
     val marker = new org.apache.hadoop.fs.Path(s"$dir/postings/_SUCCESS")
     marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(marker, false)
-    statsOf(docs, id, text, seg = 0L)
+    statsOf(docs, id, text)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     postingsOf(docs, id, text, nBuckets)
       .repartition(col("bucket"))

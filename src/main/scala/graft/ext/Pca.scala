@@ -201,7 +201,7 @@ object Pca {
     * ~3.6e13 at |x| ≤ 3, far inside int64. */
   def outliers(emb: DataFrame, id: Column, vec: Column, dim: Int,
                k: Int): DataFrame = {
-    val mom = moments(emb, id, vec, dim).localCheckpoint()
+    val mom = Pin.pin(moments(emb, id, vec, dim))
     val rows = mom.collect()
     val n = rows.find(r => r.getLong(0) == 1L && r.getLong(1) == 0L)
       .map(_.getLong(3)).getOrElse(0L)
@@ -245,8 +245,7 @@ object Pca {
                       vec: Column, dim: Int, k: Int): DataFrame = {
     val sess = emb.sparkSession
     import sess.implicits._
-    val mom = momentsBy(emb, group.cast("long"), id, vec, dim)
-      .localCheckpoint()
+    val mom = Pin.pin(momentsBy(emb, group.cast("long"), id, vec, dim))
     val rows = mom.select("i", "j", "s", "cnt", "grp").collect()
     require(rows.nonEmpty, "outliersByLabel: empty corpus")
     val stats = rows.groupBy(_.getLong(4)).toSeq.map { case (g, rs) =>
@@ -323,7 +322,7 @@ object Pca {
     * buckets on the coordinates, and never rescans raw embeddings. */
   def enrich(emb: DataFrame, id: Column, vec: Column, dim: Int,
              iters: Int): DataFrame = {
-    val mom = moments(emb, id, vec, dim).localCheckpoint()
+    val mom = Pin.pin(moments(emb, id, vec, dim))
     val rows = mom.collect()
     val n = rows.find(r => r.getLong(0) == 1L && r.getLong(1) == 0L)
       .map(_.getLong(3)).getOrElse(0L)
@@ -383,8 +382,7 @@ object Pca {
                     vec: Column, dim: Int, iters: Int): DataFrame = {
     val sess = emb.sparkSession
     import sess.implicits._
-    val mom = momentsBy(emb, group.cast("long"), id, vec, dim)
-      .localCheckpoint()
+    val mom = Pin.pin(momentsBy(emb, group.cast("long"), id, vec, dim))
     val rows = mom.select("i", "j", "s", "cnt", "grp").collect()
     require(rows.nonEmpty, "enrichByLabel: empty corpus")
     val stats = rows.groupBy(_.getLong(4)).toSeq.map { case (g, rs) =>
@@ -607,8 +605,8 @@ object Pca {
 
   /** Per-label covariance over `embeddings` in ONE corpus pass. */
   def covarianceByLabel(emb: DataFrame, dim: Int): DataFrame =
-    covFromMomentsBy(momentsBy(emb, col("label"), col("vec_id"),
-      col("embedding"), dim).localCheckpoint())
+    covFromMomentsBy(Pin.pin(momentsBy(emb, col("label"), col("vec_id"),
+      col("embedding"), dim)))
       .withColumnRenamed("grp", "label")
 
   /** Cell-wise sum of moment tables — exact (integer sums), so
@@ -636,7 +634,7 @@ object Pca {
     * exists to avoid at 100 TB. */
   def covariance(emb: DataFrame, id: Column, vec: Column,
                  dim: Int): DataFrame =
-    covFromMoments(moments(emb, id, vec, dim).localCheckpoint())
+    covFromMoments(Pin.pin(moments(emb, id, vec, dim)))
 
   /** Incremental covariance: a settled base moment table (persisted
     * state or a prior slice's [[moments]]) absorbs an arriving batch
@@ -647,8 +645,8 @@ object Pca {
   def covarianceIncremental(baseMoments: DataFrame, batch: DataFrame,
                             id: Column, vec: Column,
                             dim: Int): DataFrame =
-    covFromMoments(mergeMoments(Seq(baseMoments,
-      moments(batch, id, vec, dim))).localCheckpoint())
+    covFromMoments(Pin.pin(mergeMoments(Seq(baseMoments,
+      moments(batch, id, vec, dim)))))
 
   /** Collected mirrored matrix at matvec scale `cs = cov_fp DIV 1e3`
     * — the bounded-driver-state hop (d(d+1)/2 cells, codebook-class).

@@ -2,19 +2,22 @@ package graft.ext
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.KeyedCheckpoint
 
-/** The repo's single choke-point for "pin this intermediate" — the
-  * load-bearing materializations (one shared boundary draw for the
-  * two-phase ranks, one evaluation of a multiply-consumed edge set)
-  * all route through here.
+/** The one place `src/main` materializes an intermediate. Every pin is
+  * an eager `localCheckpoint`: rows in the executors' block stores
+  * (memory, spilling to disk), lineage cut, computed exactly once — the
+  * contract that makes the rank machinery exact, because every
+  * downstream consumer reads the same computed partitions (same
+  * RangePartitioner draw) instead of re-evaluating lineage. Nothing is
+  * registered in the CacheManager, so no query can be served a pin an
+  * earlier one built; the blocks go when the ContextCleaner collects
+  * the pinned relation.
   *
-  * [[pin]] is a plain `localCheckpoint()`: deserialized rows in the
-  * JVM heap, spilling to disk, materialized EAGERLY — the contract
-  * that makes the rank machinery exact, because every downstream
-  * consumer reads the same computed partitions (same
-  * RangePartitioner draw) instead of re-evaluating lineage.
+  * Two forms: the plain [[pin]], and the keyed [[pin]], which lays the
+  * rows out hash-partitioned and sorted on its keys and keeps that
+  * layout visible to the planner.
   */
 object Pin {
   private val dumpSeq = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -31,7 +34,7 @@ object Pin {
     * onto the iterating families' MID-LOOP round plans — each
     * round's expansion join is planned and executed inside the loop
     * and hides behind its checkpoint in the declared query's final
-    * plan, so `ExplainDump` can never show whether the cached
+    * plan, so `ExplainDump` can never show whether the pinned
     * adjacency side actually joins exchange-free. Off by default;
     * one env read per pin when unset. A dump that fails (say, an
     * unwritable directory) is reported on stderr and skipped: the
@@ -62,74 +65,50 @@ object Pin {
 
   def pin(df0: DataFrame): DataFrame = dumpPlan(df0).localCheckpoint()
 
-  /** Pin a DETERMINISTIC relation so that its hash partitioning and
-    * per-partition sort order SURVIVE into every consumer's plan —
-    * the round-12 optimization-round discovery (guide §2.4, "remove
-    * shuffles outright"): `localCheckpoint` erases partitioning
-    * (`LogicalRDD` reports `UnknownPartitioning`), so every
-    * per-round join in the iterating graph families re-exchanged
-    * the FULL adjacency every round. An eager `persist` keeps the
-    * logical plan, and `InMemoryTableScan` reports the cached
-    * plan's `outputPartitioning`/`outputOrdering` — so a join or
-    * groupBy keyed on `keys` runs with ZERO exchange and ZERO sort
-    * on the pinned side, every round (measured: the probe plan
-    * shows SortMergeJoin directly over InMemoryTableScan).
+  /** Pin `df` hash-partitioned on `keys` at `widthMult` × the session
+    * shuffle width and sorted on `keys` within each partition, with
+    * that layout visible to the planner ([[KeyedCheckpoint]]): a join
+    * or groupBy keyed on `keys` over the result plans no exchange and
+    * no sort on this side. The iterating graph families pin their
+    * loop-invariant relations (adjacency lists, edge lookups) and round
+    * inputs this way, so each round's join exchanges only its frontier.
     *
-    * Same eager one-evaluation contract as [[pin]] (the `count()`
-    * materializes every partition before any consumer plans against
-    * it). ONLY for deterministically-derived relations: persist
-    * keeps lineage, so an evicted partition is recomputed — fine
-    * for hash-repartitioned derivations, wrong for anything seeded
-    * by a nondeterministic draw (those stay on [[pin]]'s
-    * lineage-cutting checkpoint). */
-  def pinByKey(df: DataFrame,
-               keys: org.apache.spark.sql.Column*): DataFrame =
-    pinByKeyN(df, df.sparkSession.sessionState.conf.numShufflePartitions,
-      keys: _*)
+    * The explicit width is exempt from AQE's coalescing: byte-light,
+    * CPU-heavy round relations would otherwise fold to ONE task and
+    * serialize every round's expansion join (SCALE.md §43/§47); the
+    * pin fails through [[assertSpread]] if that ever happens anyway.
+    * A `widthMult` above 1 is for inputs whose consumer AMPLIFIES rows
+    * (a wedge join emits Σ deg²/2 rows from Σ deg inputs): the
+    * consumer's partial-agg state is amplification-sized, and a
+    * narrower stage spills (link_predict's wedge stage spilled 810 MB
+    * at width 32 and nothing at width 128). */
+  def pin(df: DataFrame, tag: String, keys: Seq[Column],
+          widthMult: Int = 1): DataFrame = {
+    val width =
+      widthMult * df.sparkSession.sessionState.conf.numShufflePartitions
+    val laid = df.repartition(width, keys: _*).sortWithinPartitions(keys: _*)
+    assertSpread(KeyedCheckpoint.withFinalLayout(laid, pin(laid)), tag)
+  }
 
-  /** [[pinByKey]] at an explicit width — for pair-expansion inputs
-    * whose consumer stage AMPLIFIES rows (a wedge join emits
-    * Σ deg²/2 rows from Σ deg inputs): the consumer's partial-agg
-    * hash state is amplification-sized, so the stage width must
-    * scale with the amplification, not the input bytes, or the agg
-    * spills (measured: link_predict's wedge stage spilled 810 MB at
-    * width 32 and zero at width 128 — guide §5). */
-  def pinByKeyN(df0: DataFrame, numPartitions: Int,
-                keys: org.apache.spark.sql.Column*): DataFrame = {
-    val df = dumpPlan(df0)
-    // no-cross-run-cache tripwire: persist matches by canonicalized
-    // plan, so a pinned subtree built PURELY from source scans would
-    // be silently served from cache on a bench's second timed run —
-    // exactly the cross-run memoization the driver contract bans.
-    // Every caller must sit above a lineage-unique leaf (a [[pin]]
-    // checkpoint produces a fresh RDD per run, so plans never match
-    // across runs). Fail loudly instead of quietly reusing.
-    require(df.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      // literal in-memory relations (tests, VALUES) carry their data
-      // in the plan itself — a cache hit re-serves the same literals,
-      // so there is no file re-read being skipped
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        true
-      case _ => false
-    },
-      "pinByKey requires a checkpointed (lineage-unique) input below " +
-        "it; pinning a pure-source derivation would let a cached plan " +
-        "serve a later run without recomputing")
-    val p = df.repartition(numPartitions, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
+  /** The discipline check of the keyed [[pin]]: a pinned round relation
+    * must carry more than one partition whenever the session is
+    * parallel at all. */
+  private[graft] def assertSpread(pinned: DataFrame,
+                                  tag: String): DataFrame = {
+    val want =
+      pinned.sparkSession.sessionState.conf.numShufflePartitions
+    val got = pinned.rdd.getNumPartitions
+    require(want <= 1 || got > 1,
+      s"[$tag] iterating-round input landed on $got partition(s) " +
+        s"with numShufflePartitions=$want — the AQE single-task trap " +
+        "(SCALE.md §43/§47); a spread was dropped or rewritten")
+    pinned
   }
 
   /** [[pin]] UNLESS `df` already sits shallowly on a checkpoint/local
     * leaf — i.e. only narrow ops (project/filter/alias) above a
     * LogicalRDD or LocalRelation, so re-evaluation is a cheap scan
-    * and a second checkpoint would only copy rows AND fork the
-    * lineage (forked lineage = derived pinByKey caches that can no
-    * longer dedup through the CacheManager; see
-    * graph_walks_biased_extended / clustering_coeff, round 13).
+    * and a second checkpoint would only copy the rows again.
     * "Shallow" matters: merely containing a checkpoint somewhere
     * below (coEdges pins its guarded front under the quadratic pair
     * join) must still pin, or the expensive derivation re-runs per
@@ -146,19 +125,4 @@ object Pin {
     }
     if (shallow(df.queryExecution.analyzed)) df else pin(df)
   }
-
-  /** Release every relation [[pinByKey]]/[[pinByKeyN]] registered in
-    * the session's CacheManager — the lifecycle hook a long-lived
-    * caller (a day-2 service, a REPL) must invoke between logical
-    * units of work (ADVICE r12: the pins are strong CacheManager
-    * refs, so neither periodicGC nor the ContextCleaner can reclaim
-    * them; without this every graph/walk/link-predict call leaks a
-    * MEMORY_AND_DISK cache entry for the session lifetime).
-    * [[graft.Harness.trial]] applies this after every timed trial —
-    * it is also the anti-gaming discipline: clearing between runs
-    * forces every timed window to pay its own cache build. Queries
-    * in flight recompute from lineage (persist keeps it), so this is
-    * always safe, only ever a perf trade. */
-  def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sharedState.cacheManager.clearCache()
 }

@@ -62,8 +62,8 @@ object RetrievalEval {
     * BOTH engines. |labels|² output rows — driver-scale by the
     * bounded-label contract. */
   def labelSeparation(emb: DataFrame, dim: Int): DataFrame = {
-    val m = Pca.momentsBy(emb, col("label"), col("vec_id"),
-      col("embedding"), dim).localCheckpoint()
+    val m = Pin.pin(Pca.momentsBy(emb, col("label"), col("vec_id"),
+      col("embedding"), dim))
     val s1 = m.filter(col("j") === 0)
     val n = s1.filter(col("i") === 1)
       .select(col("grp"), col("cnt").as("n"))
@@ -814,10 +814,9 @@ object RetrievalEval {
   def tripletManifest(emb: DataFrame, qMax: Long, marginMilli: Int,
                       maxNegs: Int): DataFrame = {
     val margin = lit(marginMilli).cast("double") / lit(1000.0)
-    val scored = Similarity.scoredPairs(emb,
+    val scored = Pin.pin(Similarity.scoredPairs(emb,
         emb.filter(col("vec_id") < qMax),
-        qCarry = Seq("label"), cCarry = Seq("label"))
-      .localCheckpoint()
+        qCarry = Seq("label"), cCarry = Seq("label")))
     val wp = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").asc, col("cand_id").asc)
     val pos = scored.filter(col("c_label") === col("q_label"))

@@ -139,7 +139,7 @@ object SemDedup {
 
   private def semDedupFrom(assign: DataFrame, tau: Double): DataFrame = {
     require(tau > 0, s"tau must be positive, got $tau")
-    val a = assign.localCheckpoint()
+    val a = Pin.pin(assign)
     val l = Dedup.spread(
       a.select(col("cluster"), col("vid").as("d1"), col("e").as("e1"),
         col("n2").as("n1"), col("f2").as("fn1"), col("cos_c").as("c1")),

@@ -247,20 +247,19 @@ object Similarity {
     // vector — linear in the corpus, vs. pair-count × embedding for
     // the fetch-after-distinct shape, and pairs on a clustered corpus
     // are the quadratic term.
-    val withB = corpus.select(col(id).as("vid"), col(emb).as("e"),
+    val withB = Pin.pin(corpus.select(col(id).as("vid"), col(emb).as("e"),
         array((0 until nTables).map(tbl =>
           srpBucket(col(emb), dim, nPlanes, tbl * nPlanes)): _*).as("bks"))
       .withColumn("n2", dot(col("e"), col("e")))
       // float squared norm, once per vector: the prefilter then costs
       // ONE float dot per candidate pair (dot >= t·√(f1·f2) ⟺
       // cosine >= t for t > 0) instead of three
-      .withColumn("f2", graft.functions.VecMath.dotF(col("e"), col("e")))
+      .withColumn("f2", graft.functions.VecMath.dotF(col("e"), col("e"))))
       // materialized ONCE before the self-join — both sides otherwise
       // re-evaluate the SRP-projection + norm lineage (Spark reuses
       // exchanges, not identical subtrees; same finding as the dedup
       // band joins, SCALE.md §9). n rows × (dim floats + tables longs)
       // — the bucketed-signature table a lakehouse would persist.
-      .localCheckpoint()
     val exploded = withB.select(col("vid"), col("e"), col("n2"), col("f2"),
         col("bks"), explode(sequence(lit(0), lit(nTables - 1))).as("tbl"))
       .withColumn("bk", element_at(col("bks"), col("tbl") + 1))
@@ -352,10 +351,9 @@ object Similarity {
                minCosine: Double, configs: Seq[(Int, Int)]): DataFrame = {
     require(configs.nonEmpty, "sweep needs at least one config")
     import graft.functions.VecMath
-    val base = corpus.select(col(id).as("vid"), col(emb).as("e"))
+    val base = Pin.pin(corpus.select(col(id).as("vid"), col(emb).as("e"))
       .withColumn("n2", dot(col("e"), col("e")))
-      .withColumn("f2", VecMath.dotF(col("e"), col("e")))
-      .localCheckpoint()
+      .withColumn("f2", VecMath.dotF(col("e"), col("e"))))
     val a = Dedup.spread(base.select(col("vid").as("d1"),
       col("e").as("e1"), col("n2").as("n1"), col("f2").as("fn1")),
       col("d1"))
@@ -368,13 +366,12 @@ object Similarity {
       else
         VecMath.dotF(col("e1"), col("e2")) /
           sqrt(col("fn1") * col("fn2")) >= lit(minCosine - 1e-3)
-    val exact = a.crossJoin(b).filter(col("d1") < col("d2"))
+    val exact = Pin.pin(a.crossJoin(b).filter(col("d1") < col("d2"))
       .filter(preFilter)
       .withColumn("cos", cosine(
         dot(col("e1"), col("e2")), col("n1"), col("n2b")))
       .filter(col("cos") >= minCosine)
-      .select(col("d1"), col("d2"))
-      .localCheckpoint()
+      .select(col("d1"), col("d2")))
     configs.map { case (p, tb) =>
       val found = nearDupPairs(corpus, id, emb, dim, p, minCosine, tb)
         .select(col("d1"), col("d2"), lit(1L).as("__hit"))
@@ -558,7 +555,7 @@ object Similarity {
     // assignment is n × nCells float dots — the single most expensive
     // leg — and would otherwise run twice
     cellPairsFromAssignment(
-      withNearestCells(corpus, id, emb, nCells, nProbe).localCheckpoint(),
+      Pin.pin(withNearestCells(corpus, id, emb, nCells, nProbe)),
       minCosine)
 
   /** Pair enumeration shared by the flat and hierarchical cell paths:
@@ -688,7 +685,7 @@ object Similarity {
                k: Int, nCells: Int, nProbe: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     knnGraphFromAssignment(
-      withNearestCells(corpus, id, emb, nCells, nProbe).localCheckpoint(), k)
+      Pin.pin(withNearestCells(corpus, id, emb, nCells, nProbe)), k)
   }
 
   /** [[knnGraph]] with the two-level O(n·√nCells) cell assignment
@@ -706,8 +703,8 @@ object Similarity {
                    sProbe: Int = 2): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
     knnGraphFromAssignment(
-      withNearestCellsHier(corpus, id, emb, nCells, nSuper, nProbe, sProbe)
-        .localCheckpoint(), k)
+      Pin.pin(withNearestCellsHier(corpus, id, emb, nCells, nSuper, nProbe,
+        sProbe)), k)
   }
 
   private def knnGraphFromAssignment(withCells: DataFrame,
@@ -939,8 +936,8 @@ object Similarity {
                            minCosine: Double, nProbe: Int = 2,
                            sProbe: Int = 2): DataFrame =
     cellPairsFromAssignment(
-      withNearestCellsHier(corpus, id, emb, nCells, nSuper, nProbe, sProbe)
-        .localCheckpoint(), minCosine)
+      Pin.pin(withNearestCellsHier(corpus, id, emb, nCells, nSuper, nProbe,
+        sProbe)), minCosine)
 
   /** DuckDB oracle for [[cellNearDupPairsHier]]: the flat oracle's
     * CTEs plus the super level — `child` re-derives the cell→super
@@ -1049,10 +1046,8 @@ object Similarity {
                              nProbe: Int = 2): DataFrame = {
     import graft.functions.VecMath
     val cb = collectCodebook(index, id, emb, nCells)
-    val idx = assignWithCodebook(index, id, emb, cb, nProbe)
-      .localCheckpoint()
-    val bat = assignWithCodebook(batch, id, emb, cb, nProbe)
-      .localCheckpoint()
+    val idx = Pin.pin(assignWithCodebook(index, id, emb, cb, nProbe))
+    val bat = Pin.pin(assignWithCodebook(batch, id, emb, cb, nProbe))
     val a = Dedup.spread(
       idx.select(explode(col("cells")).as("cell"), col("vid").as("d1"),
         col("e").as("e1"), col("n2").as("n1"), col("f2").as("fn1"),
@@ -1915,8 +1910,8 @@ object Similarity {
     // identical subtrees, so an unmaterialized exact frame would
     // re-run its corpus×queries join per arm)
     val cb = collectCodebook(corpus, "vec_id", "embedding", nCentroids)
-    val exact = cosineTopK(corpus, queries, k)
-      .select(col("query_id"), col("cand_id")).localCheckpoint()
+    val exact = Pin.pin(cosineTopK(corpus, queries, k)
+      .select(col("query_id"), col("cand_id")))
     probes.map { np =>
       recallFrom(exact, k,
         ivfCosineTopKWith(corpus, queries, k, cb, np))
@@ -2027,10 +2022,10 @@ object Similarity {
     // table in the same pass that builds the index (the
     // embedding_enrich write-back shape); in-query, localCheckpoint
     // is that materialization.
-    val rc = Pca.residualize(corpus, col("vec_id"), col("embedding"),
-      v1, v2).localCheckpoint()
-    val rq = Pca.residualize(queries, col("vec_id"), col("embedding"),
-      v1, v2).localCheckpoint()
+    val rc = Pin.pin(Pca.residualize(corpus, col("vec_id"), col("embedding"),
+      v1, v2))
+    val rq = Pin.pin(Pca.residualize(queries, col("vec_id"), col("embedding"),
+      v1, v2))
     val cw = pqSampleCodebooks(rc, m, ksub, subLen)
     val cb = collectCodebook(rc, "vec_id", "embedding", nCentroids)
     val index = ivfPqIndex(rc, cw, nCentroids, m, dim)

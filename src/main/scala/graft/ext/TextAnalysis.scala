@@ -903,28 +903,26 @@ object TextAnalysis {
     // (row_number over the sorted vocab — same class as the bounded
     // TakeOrdered) and joins back broadcast only on the k survivors.
     val pairsP = Pin.pin(pairs)
-    val dict = pairsP.select(col("u").as("word"))
+    val dict = Pin.pin(pairsP.select(col("u").as("word"))
       .unionByName(pairsP.select(col("v").as("word")))
       .distinct()
       .withColumn("nid", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("word")))
-        .cast("long"))
-      .localCheckpoint()
+        .cast("long")))
     val pairsN = pairsP
       .join(broadcast(dict.select(col("word").as("u"),
         col("nid").as("un"))), Seq("u"))
       .join(broadcast(dict.select(col("word").as("v"),
         col("nid").as("vn"))), Seq("v"))
       .select(col("un"), col("vn"), col("w"))
-    val adj = graft.ext.Dedup.spreadCached(pairsN
+    val adj = Pin.pin(pairsN
       .select(col("un").as("src"), col("vn").as("dst"), col("w"))
       .unionByName(pairsN.select(col("vn").as("src"),
-        col("un").as("dst"), col("w"))), "textrank.adj", col("src"))
+        col("un").as("dst"), col("w"))), "textrank.adj", Seq(col("src")))
     val wsum = adj.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    var ranks = wsum
+    var ranks = Pin.pin(wsum
       .crossJoin(broadcast(wsum.agg(count(lit(1)).as("__n"))))
-      .withColumn("pr_fp", expr(s"$Scale DIV __n"))
-      .localCheckpoint()
+      .withColumn("pr_fp", expr(s"$Scale DIV __n")))
     for (_ <- 1 to iters) {
       val contrib = adj
         .join(ranks.select(col("src"), col("pr_fp"), col("wsum")),
@@ -934,13 +932,12 @@ object TextAnalysis {
         .groupBy(col("dst"))
         .agg(sum(col("__c").cast(
           org.apache.spark.sql.types.DecimalType(38, 0))).as("__in"))
-      ranks = ranks.drop("pr_fp")
+      ranks = Pin.pin(ranks.drop("pr_fp")
         .join(contrib.withColumnRenamed("dst", "src"), Seq("src"), "left")
         .withColumn("pr_fp", expr(
           s"(15 * ($Scale DIV __n)) DIV 100 + " +
             "(85 * coalesce(CAST(__in AS BIGINT), 0L)) DIV 100"))
-        .drop("__in")
-        .localCheckpoint()
+        .drop("__in"))
     }
     ranks
       .orderBy(col("pr_fp").desc, col("src").asc)

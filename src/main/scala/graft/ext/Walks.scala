@@ -43,23 +43,23 @@ object Walks {
   private val (wa, wb) = Hashing.Perms(0)
   private val stride = Hashing.Stage2._2
 
-  /** Directed adjacency with neighbor ranks and degrees, pinned
-    * PARTITIONING-VISIBLY on `node` ([[Dedup.spreadCached]]): every
-    * walk step joins it on the current node, and with the hash
-    * partitioning preserved each step's join exchanges ONLY the
+  /** Directed adjacency with neighbor ranks and degrees, the uniform
+    * walk's whole graph state, pinned keyed on `node` ([[Pin.pin]]):
+    * every walk step joins it on the current node, and with the hash
+    * partitioning visible each step's join exchanges ONLY the
     * frontier — the adjacency (the big side at 100 TB) is shuffled
-    * exactly once, at build. Deterministic derivation (row_number
-    * over distinct edges), so the persist-based pin is safe. */
-  private def rankedAdjacency(edges: DataFrame): DataFrame = {
+    * exactly once, at build. Build it once per query and pass it to
+    * every walk over the same graph ([[walksOn]], [[extendWalks]]). */
+  private[graft] def rankedAdjacency(edges: DataFrame): DataFrame = {
     val adj = edges
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(edges
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr")))
-    Dedup.spreadCached(adj
+    Pin.pin(adj
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("node")).orderBy(col("nbr"))) - 1L)
       .withColumn("d", count(lit(1)).over(Window.partitionBy(col("node")))
-        .cast("long")), "walks.adj", col("node"))
+        .cast("long")), "walks.adj", Seq(col("node")))
   }
 
   /** The hash-selected neighbor index at step `s` for `walk_id`,
@@ -73,7 +73,11 @@ object Walks {
     * `edges`: rows (walk_id, step, node_id), step 0 = the start
     * node. Output is walks·(length+1) rows. */
   def walks(edges: DataFrame, length: Int): DataFrame =
-    walksKernel(edges, length).orderBy("walk_id", "step")
+    walksOn(rankedAdjacency(edges), length)
+
+  /** [[walks]] over a built [[rankedAdjacency]]. */
+  private[graft] def walksOn(adj: DataFrame, length: Int): DataFrame =
+    walksKernel(adj, length).orderBy("walk_id", "step")
 
   /** [[walks]] without the declared output ordering — the form the
     * derived consumers ([[visitStats]], [[cooccurrence]],
@@ -81,8 +85,7 @@ object Walks {
     * corpus-wide range sort their own aggregation immediately
     * destroys (guide §2.4: an `orderBy` used only for deterministic
     * output is an exchange the consumer should not inherit). */
-  private[ext] def walksKernel(edges: DataFrame, length: Int): DataFrame = {
-    val adj = rankedAdjacency(edges)
+  private def walksKernel(adj: DataFrame, length: Int): DataFrame = {
     val starts = Pin.pin(adj.select(col("node")).distinct()
       .select(col("node").as("walk_id"), col("node").as("cur")))
     val out0 = starts.select(col("walk_id"), lit(0L).as("step"),
@@ -123,21 +126,21 @@ object Walks {
     * (walk_id, step), the extension is bit-identical to having run
     * the longer walk from scratch:
     *
-    *   extendWalks(walks(e, L), e, L, k) == walks(e, L + k)
+    *   extendWalks(walks(e, L), rankedAdjacency(e), L, k) == walks(e, L + k)
     *
     * — a property true-RNG walk generation cannot offer at any
     * price (the oracle twin of the declared query IS the from-
     * scratch L+k chain, so the equivalence is hash-checked, not
     * asserted). The day-2 read: walk corpora are length-priced, and
     * a curriculum that wants longer contexts later extends the
-    * existing corpus for the marginal cost of the new steps. */
-  def extendWalks(prior: DataFrame, edges: DataFrame, fromLength: Int,
+    * existing corpus for the marginal cost of the new steps. `adj` is
+    * the graph's [[rankedAdjacency]], the one the prior walked. */
+  def extendWalks(prior: DataFrame, adj: DataFrame, fromLength: Int,
                   extraSteps: Int): DataFrame = {
-    val adj = rankedAdjacency(edges)
     // ONE evaluation of the prior corpus (round 13, guide §2.4): it
     // feeds the frontier read AND the output prefix, and a caller
     // passing a freshly-built ordered corpus (graph_walks_extended
-    // builds walks(e, L) inline) would otherwise re-run its
+    // builds walksOn(adj, L) inline) would otherwise re-run its
     // corpus-wide range sort per consumer. A prior that is already
     // a bare checkpoint scan is used as-is (Pin.ensure).
     val p = Pin.ensure(prior)
@@ -169,7 +172,7 @@ object Walks {
       .select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy(col("node_id"))
       .agg(count(lit(1)).cast("long").as("degree"))
-    val w = walksKernel(edges, length)
+    val w = walksKernel(rankedAdjacency(edges), length)
     val visits = w.groupBy(col("node_id"))
       .agg(count(lit(1)).cast("long").as("visits"))
     val tot = visits.agg(sum(col("visits")).as("__tv"))
@@ -188,11 +191,11 @@ object Walks {
     * training run inspects before generating the full pair set. */
   def cooccurrence(edges: DataFrame, length: Int, window: Int,
                    k: Int): DataFrame = {
-    // pin the corpus partitioned on walk_id: both sides of the
-    // window self-join read the same cached partitioning, so the
-    // pair expansion runs with zero exchanges before its own agg
-    val w = Dedup.spreadCached(walksKernel(edges, length),
-      "walks.cooc", col("walk_id"))
+    // pin the corpus keyed on walk_id: both sides of the window
+    // self-join read the same pinned partitioning, so the pair
+    // expansion runs with zero exchanges before its own agg
+    val w = Pin.pin(walksKernel(rankedAdjacency(edges), length),
+      "walks.cooc", Seq(col("walk_id")))
     val a = w.select(col("walk_id"), col("step").as("__s1"),
       col("node_id").as("__n1"))
     val b = w.select(col("walk_id"), col("step").as("__s2"),
@@ -214,29 +217,33 @@ object Walks {
     * so the two walk variants don't correlate. */
   private val (ba, bb) = Hashing.Perms(1)
 
-  /** Per-node SORTED neighbor arrays, cached partitioning-visibly on
-    * `node` — the biased walk's whole graph state in ONE relation
+  /** Per-node SORTED neighbor arrays, pinned keyed on `node` — the
+    * biased walk's whole graph state in ONE relation
     * (round 13, guide §2.3/§2.4 "shuffle keys and metadata, not
     * payloads … remove shuffles outright"): each biased step attaches
     * `prev`'s and `cur`'s arrays with two frontier-sized joins whose
-    * array side is the cache (zero exchange, zero sort), and the
+    * array side is the pin (zero exchange, zero sort), and the
     * classification + weighted pick run as pure array expressions
     * INSIDE the frontier row — the per-step O(Σ deg) expansion rows,
     * their (least, greatest) classification shuffle and the per-walk
     * running-sum window (two full-expansion exchanges per step in
     * the r12 plan) no longer exist. Array order = ascending neighbor
     * id = exactly [[rankedAdjacency]]'s rk order, so every selection
-    * is bit-identical by construction.
-    *
-    * `e` must be pinned (the [[Pin.pinByKey]] tripwire). */
-  private def neighborArrays(e: DataFrame): DataFrame = {
+    * is bit-identical by construction. Build it once per query and
+    * pass it to every biased walk over the same graph
+    * ([[biasedWalksOn]], [[extendBiasedWalks]]). The long-typed edge
+    * projection is pinned first unless it already sits on one
+    * ([[Pin.ensure]]): both halves of the mirror union read it. */
+  private[graft] def neighborArrays(edges: DataFrame): DataFrame = {
+    val e = Pin.ensure(edges.select(col("u").cast("long").as("u"),
+      col("v").cast("long").as("v")))
     val adj = e
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
       .unionAll(e
         .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr")))
-    Dedup.spreadCached(adj.groupBy(col("node"))
+    Pin.pin(adj.groupBy(col("node"))
       .agg(sort_array(collect_list(col("nbr"))).as("nbrs")),
-      "walks.nbrs", col("node"))
+      "walks.nbrs", Seq(col("node")))
   }
 
   /** node2vec-style SECOND-ORDER biased walks (Grover & Leskovec
@@ -258,40 +265,20 @@ object Walks {
     * price, paid per step, never squared. Hubs cost deg rows. */
   def biasedWalks(edges: DataFrame, length: Int, wReturn: Long,
                   wCommon: Long, wOut: Long): DataFrame =
-    biasedWalksKernel(edges, length, wReturn, wCommon, wOut)
+    biasedWalksOn(neighborArrays(edges), length, wReturn, wCommon, wOut)
+
+  /** [[biasedWalks]] over built [[neighborArrays]]. */
+  private[graft] def biasedWalksOn(nbrArr: DataFrame, length: Int,
+                                   wReturn: Long, wCommon: Long,
+                                   wOut: Long): DataFrame =
+    biasedWalksKernel(nbrArr, length, wReturn, wCommon, wOut)
       .orderBy("walk_id", "step")
 
-  /** Pin the long-typed edge projection UNLESS it already sits on a
-    * checkpoint/local leaf (round 13, guide §2.4): re-checkpointing
-    * an already-pinned relation copies the rows AND gives the derived
-    * neighbor-array cache a fresh lineage — so the from-scratch and
-    * extension legs of graph_walks_biased_extended each built their
-    * OWN cache of the same arrays (two full adjacency aggs + double
-    * the resident blocks, the r12-ADVICE walkBiasAudit bug in its
-    * second home). With the shared leaf, both legs' [[neighborArrays]]
-    * plans canonicalize identically and the second persist resolves
-    * to the FIRST cache entry. The [[Pin.pinByKey]] tripwire stays
-    * satisfied either way (a LogicalRDD/LocalRelation leaf is exactly
-    * what this checks for). */
-  private def ensurePinned(df: DataFrame): DataFrame = Pin.ensure(df)
-
-  /** [[biasedWalks]] without the declared output ordering — see
+  /** [[biasedWalksOn]] without the declared output ordering — see
     * [[walksKernel]]. */
-  private[ext] def biasedWalksKernel(edges: DataFrame, length: Int,
-                                     wReturn: Long, wCommon: Long,
-                                     wOut: Long): DataFrame =
-    biasedWalksKernelPinned(
-      ensurePinned(edges.select(col("u").cast("long").as("u"),
-        col("v").cast("long").as("v"))),
-      length, wReturn, wCommon, wOut)
-
-  /** [[biasedWalksKernel]] over an ALREADY-pinned (u, v) long edge
-    * relation — the overload [[walkBiasAudit]] uses so its biased leg
-    * rides the audit's one edge pin instead of re-checkpointing the
-    * same rows (ADVICE r12). */
-  private def biasedWalksKernelPinned(e: DataFrame, length: Int,
-                                      wReturn: Long, wCommon: Long,
-                                      wOut: Long): DataFrame = {
+  private def biasedWalksKernel(nbrArr: DataFrame, length: Int,
+                                wReturn: Long, wCommon: Long,
+                                wOut: Long): DataFrame = {
     // all three weights strictly positive: a walk sitting at a
     // degree-1 node whose only neighbor is `prev` has total weight
     // wReturn — at 0 the pick modulus is 0, where Spark nulls and
@@ -300,7 +287,6 @@ object Walks {
     // step total by construction.
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "biased-walk weights must be strictly positive")
-    val nbrArr = neighborArrays(e)
     val starts = Pin.pin(nbrArr.select(col("node"))
       .select(col("node").as("walk_id"), col("node").as("cur")))
     var out = starts.select(col("walk_id"), lit(0L).as("step"),
@@ -308,7 +294,7 @@ object Walks {
     // step 1: uniform ranked pick, shared with the unbiased variant —
     // the sorted array IS the rank order, so indexing it at the hash
     // pick selects the same neighbor [[walkSteps]]'s rk-residual join
-    // does (one frontier-sized join, array side cached)
+    // does (one frontier-sized join, array side pinned)
     var frontier = Pin.pin(starts
       .join(nbrArr.select(col("node").as("cur"), col("nbrs").as("__cn")),
         Seq("cur"))
@@ -332,16 +318,14 @@ object Walks {
     * last two steps — so a biased corpus extends without re-walking
     * too, bit-identical to the from-scratch longer walk (the
     * declared query's oracle IS the length-(L+k) biased chain).
-    * Requires `fromLength ≥ 1` (step 0 alone has no prev). */
-  def extendBiasedWalks(prior: DataFrame, edges: DataFrame,
+    * Requires `fromLength ≥ 1` (step 0 alone has no prev). `nbrArr`
+    * is the graph's [[neighborArrays]], the one the prior walked. */
+  def extendBiasedWalks(prior: DataFrame, nbrArr: DataFrame,
                         fromLength: Int, extraSteps: Int, wReturn: Long,
                         wCommon: Long, wOut: Long): DataFrame = {
     require(fromLength >= 1, "biased extension needs steps 0 and 1")
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "biased-walk weights must be strictly positive")
-    val e = ensurePinned(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
-    val nbrArr = neighborArrays(e)
     // ONE evaluation of the prior corpus — it feeds the two frontier
     // reads (steps L and L−1) and the output prefix; see
     // [[extendWalks]] (round 13)
@@ -368,7 +352,7 @@ object Walks {
     * from-scratch by construction.
     *
     * Round-13 form (guide §2.3/§2.4): two frontier-sized joins attach
-    * `cur`'s and `prev`'s cached sorted neighbor arrays, then the
+    * `cur`'s and `prev`'s pinned sorted neighbor arrays, then the
     * whole node2vec hop — classification, total weight, hash target,
     * running-sum pick — runs as array expressions INSIDE the row.
     * Selection is bit-identical to the r12 expansion+window form:
@@ -444,12 +428,13 @@ object Walks {
           col("n_returns"),
           expr("(n_returns * 1000000L) div n_steps").as("return_ppm"))
     }
-    returns(Dedup.spreadCached(walksKernel(edges, length),
-        "walks.audit.u", col("walk_id")), "uniform")
+    returns(Pin.pin(walksKernel(rankedAdjacency(edges), length),
+        "walks.audit.u", Seq(col("walk_id"))), "uniform")
       .unionAll(returns(
-        Dedup.spreadCached(
-          biasedWalksKernelPinned(edges, length, wReturn, wCommon, wOut),
-          "walks.audit.b", col("walk_id")),
+        Pin.pin(
+          biasedWalksKernel(neighborArrays(edges), length, wReturn,
+            wCommon, wOut),
+          "walks.audit.b", Seq(col("walk_id"))),
         "biased"))
       .orderBy("variant")
   }

@@ -109,7 +109,7 @@ object FactLoader {
           dims.keys.toSeq.sorted.map(d => s"${d}_sk")).map(col): _*)
 
       val existing: Option[DataFrame] =
-        if (pathExists(spark, factPath)) Some(Tables.read(spark, factPath))
+        if (StagedWrite.exists(spark, factPath)) Some(Tables.read(spark, factPath))
         else None
 
       if (existing.isDefined && inserted == 0) {
@@ -164,10 +164,5 @@ object FactLoader {
           Some(String.valueOf(e.getMessage)))
         throw e
     }
-  }
-
-  private def pathExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }

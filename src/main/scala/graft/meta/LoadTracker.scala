@@ -45,7 +45,7 @@ class LoadTracker(spark: SparkSession, path: String) {
     // every watermark silently resets to 1900 (full reload)
     StagedWrite.recover(spark, path)
     val loaded =
-      if (!exists()) Map.empty[String, LocalDateTime]
+      if (!StagedWrite.exists(spark, path)) Map.empty[String, LocalDateTime]
       else spark.read.schema(schema).parquet(path).collect()
         .map(r => r.getString(0) -> r.getAs[LocalDateTime](1)).toMap
     state = Some(loaded)
@@ -70,11 +70,6 @@ class LoadTracker(spark: SparkSession, path: String) {
     StagedWrite.overwrite(
       spark.createDataFrame(rows.asJava, schema).coalesce(1), path)
     state = Some(next)
-  }
-
-  private def exists(): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 }
 

@@ -53,6 +53,12 @@ object StagedWrite {
     if (fs.exists(old)) fs.delete(old, true)
   }
 
+  /** Whether `path` exists on its filesystem. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Heal a crashed publish. Idempotent; call before reading `target`. */
   def recover(spark: SparkSession, target: String): Unit = {
     val tgt = new Path(target)

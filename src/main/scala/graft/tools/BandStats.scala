@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.ext.Dedup
+import graft.ext.{Dedup, Pin}
 import graft.schema.Tables
 
 /** Banding audit for the simhash LSH (the skew lens of SCALE.md §8):
@@ -46,15 +46,15 @@ object BandStats {
 
     // end-to-end pair enumeration (signature + band join + hamming),
     // repeated for a steady-state reading in this one JVM
-    graft.Harness.trials(spark, 3, "pairs ")(Dedup.simhashPairs(
+    graft.Harness.trials(3, "pairs ")(Dedup.simhashPairs(
       Dedup.simhash(docs, col("doc_id"), col("text")), 3).count())
 
     // counterfactual: materialize the signature table once (the
     // lakehouse shape: sigs written, THEN band-joined) so the
     // self-join does not recompute the kernel on both sides
-    graft.Harness.trials(spark, 3, "pairs (sig materialized) ")(
-      Dedup.simhashPairs(Dedup.simhash(docs, col("doc_id"), col("text"))
-        .localCheckpoint(), 3).count())
+    graft.Harness.trials(3, "pairs (sig materialized) ")(
+      Dedup.simhashPairs(Pin.pin(Dedup.simhash(docs, col("doc_id"),
+        col("text"))), 3).count())
     spark.stop()
   }
 }

@@ -61,7 +61,7 @@ object CellStats {
       s"max=${occ.getLong(1)} p99=${occ.getDouble(2)} " +
       f"cand_pairs=${occ.getDouble(3)}%.3e")
 
-    graft.Harness.trials(spark, 3, "pairs ")(pairs().count())
+    graft.Harness.trials(3, "pairs ")(pairs().count())
     spark.stop()
   }
 }

@@ -7,10 +7,8 @@ package graft.tools
   * compiled under the same session as graft.Bench ([[graft.Harness]])
   * so join strategies and exchange counts match what the bench
   * executes. The printed plan is the initial AQE plan, but
-  * constructing a query DOES run its eager pins
-  * (localCheckpoint count / pinByKey persist+count) — so each dump
-  * costs real work, and the cache is cleared after each query to
-  * keep multi-query invocations bounded (ADVICE r12).
+  * constructing a query DOES run its eager pins (each a
+  * localCheckpoint job) — so each dump costs real work.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -28,7 +26,6 @@ object ExplainDump {
         new java.io.File(s"$outDir/${n}_$suffix.txt"), "UTF-8")
       try w.println(plan) finally w.close()
       println(s"wrote $outDir/${n}_$suffix.txt (${plan.length} chars)")
-      graft.ext.Pin.releaseAll(spark)
     }
     spark.stop()
   }

@@ -29,7 +29,7 @@ object PipelineBench {
     counts.foreach(c => println(f"stage ${c.stage}%-20s ${c.rows}%10d rows  ${c.secs}%7.2f s"))
 
     // the end-to-end number: one action over the whole composition
-    val walls = graft.Harness.trials(spark, runs, "preparePack ")(
+    val walls = graft.Harness.trials(runs, "preparePack ")(
       CorpusPipeline.preparePack(docs, evalPred, budget = 512,
         nShards = 32, rates = Seq("en" -> 300)).count())
       .filter(_ >= 0)

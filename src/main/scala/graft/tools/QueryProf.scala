@@ -23,7 +23,7 @@ object QueryProf {
     val spark = Harness.session()
     val fn = graft.SparkEntry.queries(name)
     Harness.warm(sfDir)(fn(spark, _).count())
-    val walls = Harness.trials(spark, runs, s"$name ")(fn(spark, sfDir).count())
+    val walls = Harness.trials(runs, s"$name ")(fn(spark, sfDir).count())
     require(walls.forall(_ >= 0), s"$name failed")
     println(f"$name min-of-$runs: ${walls.min}%.2f s")
     // instrumented run: stage walls
@@ -47,7 +47,7 @@ object QueryProf {
     }
     spark.sparkContext.addSparkListener(listener)
     var dfRun: org.apache.spark.sql.DataFrame = null
-    val (ok, total) = Harness.trial(spark, name) {
+    val (ok, total) = Harness.trial(name) {
       dfRun = fn(spark, sfDir); dfRun.count() }
     if (ok && sys.env.contains("QUERYPROF_PLAN"))
       println(dfRun.queryExecution.executedPlan.toString)

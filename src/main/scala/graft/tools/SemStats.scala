@@ -44,7 +44,7 @@ object SemStats {
       f"cand_pairs=${occ.getDouble(2)}%.3e")
 
     // rows = dropped documents
-    graft.Harness.trials(spark, 3)((nSuper match {
+    graft.Harness.trials(3)((nSuper match {
       case Some(s) => SemDedup.semDedupHier(emb, "vec_id", "embedding",
         k, s, tau)
       case None => SemDedup.semDedup(emb, "vec_id", "embedding", k, tau)

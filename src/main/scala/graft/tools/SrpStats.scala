@@ -43,7 +43,7 @@ object SrpStats {
           f"max_bucket=${r.getLong(2)}%,d cand_pairs=${r.getDouble(3)}%,.0f")
       }
 
-    graft.Harness.trials(spark, 2, "pairs ")(Similarity.nearDupPairs(emb,
+    graft.Harness.trials(2, "pairs ")(Similarity.nearDupPairs(emb,
       "vec_id", "embedding", dim, planes, minCos, tables).count())
     spark.stop()
   }

@@ -52,7 +52,7 @@ object WinnowIndexStats {
     println(f"candidate volume: kept=${agg.getDouble(5)}%,.0f pairs, " +
       f"cut by df cap=${agg.getDouble(6)}%,.0f pairs")
 
-    graft.Harness.trials(spark, 3, "end-to-end ")(Dedup.winnowOverlapPairs(
+    graft.Harness.trials(3, "end-to-end ")(Dedup.winnowOverlapPairs(
       docs, col("doc_id"), col("text"), k, w, minShared = 2,
       maxDf = maxDf).count())
     spark.stop()

@@ -5,14 +5,10 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.functions.col
-
-import graft.ext.Pin
 
 /** The one entrypoint harness (session, warmup guard, timed trial)
   * and Bench's frozen last stdout line. */
 class HarnessSpec extends SparkSpec {
-  import spark.implicits._
 
   private def warmedOn(sfDir: String): Option[String] = {
     var seen = Option.empty[String]
@@ -38,23 +34,8 @@ class HarnessSpec extends SparkSpec {
     } finally { Files.delete(link); Files.delete(tmp) }
   }
 
-  test("trial leaves no CacheManager entry after a pinByKey'd body") {
-    val cm = spark.sharedState.cacheManager
-    Pin.releaseAll(spark)
-    var pinned = false
-    val (ok, wall) = Harness.trial(spark) {
-      val df = Pin.pinByKey(
-        Pin.pin(Seq((1L, 2L), (3L, 4L)).toDF("a", "b")), col("a"))
-      pinned = !cm.isEmpty
-      df.count()
-    }
-    assert(ok && wall >= 0)
-    assert(pinned, "the body's pinByKey registered no cache entry")
-    assert(cm.isEmpty, "trial left a CacheManager entry behind")
-  }
-
   test("a throwing trial body yields ok = false and records no wall") {
-    val (ok, wall) = Harness.trial(spark)(
+    val (ok, wall) = Harness.trial()(
       throw new IllegalStateException("planned failure"))
     assert(!ok)
     assert(wall < 0)

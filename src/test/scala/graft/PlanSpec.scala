@@ -430,6 +430,47 @@ class PlanSpec extends SparkSpec {
       s"AQE skew split did not engage on a 50%-hot-key join:\n$p")
   }
 
+  test("the keyed pin keeps its hash layout: a groupBy and a self-join " +
+      "on the key plan no Exchange and no Sort; a plain pin keeps none") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+      UnknownPartitioning}
+    import org.apache.spark.sql.functions.col
+    import graft.ext.Pin
+    // AQE on, as the harnesses run; no broadcast, so the self-join
+    // must plan as a keyed shuffle join
+    val s2 = spark.newSession()
+    GraftConf.base(4).foreach { case (k, v) => s2.conf.set(k, v) }
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val src = s2.range(0, 5000)
+      .select((col("id") % 97).as("k"), col("id").as("v"))
+    val keyed = Pin.pin(src, "plan-spec", Seq(col("k")))
+    keyed.queryExecution.executedPlan.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions ==
+          s2.sessionState.conf.numShufflePartitions, h)
+      case other => fail(s"keyed pin reports $other")
+    }
+    val grouped = keyed.groupBy("k").count()
+    val joined = keyed.join(
+      keyed.select(col("k"), col("v").as("v2")), "k")
+    for (df <- Seq(grouped, joined)) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange"), s"exchange over the keyed pin:\n$p")
+      assert("\\bSort \\[".r.findFirstIn(p).isEmpty,
+        s"sort over the keyed pin:\n$p")
+    }
+    assert(joined.queryExecution.executedPlan.toString
+      .contains("SortMergeJoin"))
+    // and the rows are the unpinned relation's
+    val byKey = src.groupBy("k").count().collect().toSet
+    assert(grouped.collect().toSet == byKey)
+    assert(joined.count() ==
+      byKey.toSeq.map(r => r.getLong(1) * r.getLong(1)).sum)
+    val plain = Pin.pin(src.repartition(8, col("k")))
+    assert(plain.queryExecution.executedPlan.outputPartitioning
+      .isInstanceOf[UnknownPartitioning])
+  }
+
   test("conf drift detection: threshold=-1 flips fact_build to sort-merge") {
     // the drift the contracts exist to catch, demonstrated: kill the
     // broadcast threshold and the warehouse star silently becomes a

@@ -70,14 +70,13 @@ class SpreadDisciplineSpec extends SparkSpec {
     import spark.implicits._
     val df = (1L to 100L).toDF("x").coalesce(1).localCheckpoint()
     val e = intercept[IllegalArgumentException] {
-      graft.ext.Dedup.assertSpread(df, "canary")
+      graft.ext.Pin.assertSpread(df, "canary")
     }
     assert(e.getMessage.contains("single-task trap"))
-    // and the real helper lands wide at ANY size — repartition-by-num
+    // and the keyed pin lands wide at ANY size — repartition-by-num
     // is AQE-exempt, so even 100 rows carry the full shuffle width
-    val ok = graft.ext.Dedup.spreadPinned(
-      (1L to 100L).toDF("x"), "canary-ok", org.apache.spark.sql
-        .functions.col("x"))
+    val ok = graft.ext.Pin.pin((1L to 100L).toDF("x"), "canary-ok",
+      Seq(org.apache.spark.sql.functions.col("x")))
     assert(ok.rdd.getNumPartitions ==
       spark.sessionState.conf.numShufflePartitions)
   }

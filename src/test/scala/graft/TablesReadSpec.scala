@@ -119,6 +119,17 @@ class TablesReadSpec extends SparkSpec {
     assert(streams.isEmpty, s"Structured Streaming in src/main: $streams")
   }
 
+  test("src/main materializes only through Pin: no cache, no persist, " +
+      "no localCheckpoint elsewhere") {
+    val main = Paths.get("src/main")
+    val cached = codeCallers(main, "persist(", ".cache()", "CacheManager")
+    val pins = codeCallers(main, ".localCheckpoint(").filterNot(Set(
+      "scala/graft/ext/Pin.scala",
+      "scala/org/apache/spark/sql/execution/KeyedCheckpoint.scala"))
+    assert(cached.isEmpty && pins.isEmpty,
+      s"CacheManager use: $cached; localCheckpoint outside Pin: $pins")
+  }
+
   test("tools/reach.py lists no src/main member or type that no root reaches") {
     assert(Files.isRegularFile(Paths.get("tools/reach.py")),
       s"run from the repo root, not ${Paths.get(".").toAbsolutePath}")

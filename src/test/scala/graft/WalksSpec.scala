@@ -65,8 +65,8 @@ class WalksSpec extends SparkSpec {
   test("extendWalks(walks(3), 2) equals walks(5) bit-for-bit") {
     val full = Walks.walks(bridged, 5)
       .as[(Long, Long, Long)].collect().toSeq
-    val extended = Walks.extendWalks(Walks.walks(bridged, 3), bridged,
-        fromLength = 3, extraSteps = 2)
+    val extended = Walks.extendWalks(Walks.walks(bridged, 3),
+        Walks.rankedAdjacency(bridged), fromLength = 3, extraSteps = 2)
       .as[(Long, Long, Long)].collect().toSeq
     assert(extended == full)
   }
@@ -171,8 +171,9 @@ class WalksSpec extends SparkSpec {
     val full = Walks.biasedWalks(bridged, 5, 1L, 4L, 2L)
       .as[(Long, Long, Long)].collect().toSeq
     val extended = Walks.extendBiasedWalks(
-        Walks.biasedWalks(bridged, 3, 1L, 4L, 2L), bridged,
-        fromLength = 3, extraSteps = 2, 1L, 4L, 2L)
+        Walks.biasedWalks(bridged, 3, 1L, 4L, 2L),
+        Walks.neighborArrays(bridged), fromLength = 3, extraSteps = 2,
+        1L, 4L, 2L)
       .as[(Long, Long, Long)].collect().toSeq
     assert(extended == full)
   }
