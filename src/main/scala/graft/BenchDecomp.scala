@@ -82,51 +82,26 @@ object BenchDecomp {
     * total_s (= build + search)}` — the "first query pays build,
     * every later query pays search" ledger of a real deployment. */
   val persistedLegs: Map[String, (SparkSession, String) => Long] = Map(
-    "link_predict_approx_persisted" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bench-link").toString
-      try {
-        graft.ext.Graph.linkApproxWriteIndex(
-          graft.ext.Graph.coEdges(
-            Tables.src(s, d, "lineitem"),
-            col("l_orderkey"), col("l_partkey")), dir)
-        1L
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
-    }),
-    "ann_pq_persisted" -> ((s, d) => {
-      val e = emb(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bench-pq").toString
-      try {
-        Similarity.ivfPqWriteIndex(e,
-          Similarity.pqSampleCodebooks(e, 8, 16, 8), 16, 8, 64, dir)
-        1L
-      } finally {
-        // the thunk runs 2-3 times per bench (warmup + trials);
-        // without cleanup every run leaves a full index copy in /tmp.
-        // Deleting a freshly-written small index is ms-scale noise
-        // inside a multi-second build wall.
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
-    }),
-    "bm25_persisted" -> ((s, d) => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-bench-lex").toString
-      try {
-        graft.ext.Lexical.lexWriteIndex(docs(s, d), col("doc_id"),
-          col("text"), dir, nBuckets = 16)
-        1L
-      } finally {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-      }
-    })
+    "link_predict_approx_persisted" ->
+      freshBuild("lineitem", Queries.writeLinkApproxIndex),
+    "ann_pq_persisted" -> freshBuild("embeddings", Queries.writePqIndex),
+    "bm25_persisted" -> freshBuild("documents", Queries.writeLexIndex)
   )
+
+  /** One build+write of the index `write` makes from fixture `table`,
+    * into a fresh scratch dir that is deleted afterwards: the thunk
+    * runs 2-3 times per bench (warmup + trials), and without cleanup
+    * every run would leave a full index copy in the temp dir. */
+  private def freshBuild(table: String, write: (DataFrame, String) => Unit)
+      : (SparkSession, String) => Long = (s, d) => {
+    val dir = java.nio.file.Files
+      .createTempDirectory(s"graft-bench-$table").toString
+    try {
+      write(Tables.src(s, d, table), dir)
+      1L
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 }

@@ -109,6 +109,46 @@ object Queries {
     java.lang.Long.toHexString(h)
   }
 
+  /** The directory of a persisted index over fixture `table`, built
+    * from that table with `write` and published first if no complete
+    * build (`exists`) is there. */
+  private def persistedIndex(s: SparkSession, d: String, tag: String,
+                             table: String,
+                             exists: (SparkSession, String) => Boolean)
+                            (write: (DataFrame, String) => Unit): String = {
+    val dir = indexScratch(d, tag, table)
+    if (!exists(s, dir))
+      publishIndexAtomic(s, dir, exists)(write(t(s, d, table), _))
+    dir
+  }
+
+  /** The IVF-PQ index over `embeddings`: 16 centroids, m = 8
+    * subspaces of 16 codewords, dim 64 — the tag's dials. */
+  private def pqIndex(s: SparkSession, d: String): String =
+    persistedIndex(s, d, "pq_v1_c16_m8_k16_d64", "embeddings",
+      Similarity.ivfPqIndexExists)(writePqIndex)
+  private[graft] def writePqIndex(emb: DataFrame, dir: String): Unit =
+    Similarity.ivfPqWriteIndex(emb,
+      Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, dir)
+
+  /** The lexical inverted index over `documents`, 16 buckets. */
+  private def lexIndex(s: SparkSession, d: String): String =
+    persistedIndex(s, d, "lex_v1_b16", "documents",
+      ext.Lexical.lexIndexExists)(writeLexIndex)
+  private[graft] def writeLexIndex(docs: DataFrame, dir: String): Unit =
+    ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"), dir,
+      nBuckets = 16)
+
+  /** The link-prediction signature index over the part co-order
+    * graph of `lineitem`, 8 hashes. */
+  private def linkApproxIndex(s: SparkSession, d: String): String =
+    persistedIndex(s, d, "linkapprox_v1_h8", "lineitem",
+      ext.Graph.linkApproxIndexExists)(writeLinkApproxIndex)
+  private[graft] def writeLinkApproxIndex(lineitem: DataFrame,
+                                          dir: String): Unit =
+    ext.Graph.linkApproxWriteIndex(ext.Graph.coEdges(lineitem,
+      col("l_orderkey"), col("l_partkey")), dir)
+
   /** Build-and-publish an index dir ATOMICALLY: `build` writes into a
     * unique temp sibling, which is then rename(2)-published to `dir`.
     * Concurrent builders each build their own copy; exactly one
@@ -116,12 +156,11 @@ object Queries {
     * a reader can never observe two builds interleaved under `dir`.
     * A crash LEFTOVER at `dir` (partial build, no codes/_SUCCESS —
     * possible only for pre-atomic builds or a torn filesystem) is
-    * deleted and the publish retried, so the heal path of
-    * [[graft.ext.Similarity.ivfPqIndexExists]] terminates instead of
-    * rebuilding forever against an unpublishable destination. */
+    * deleted and the publish retried, so the heal path behind
+    * `exists` (the index's completion-marker check) terminates instead
+    * of rebuilding forever against an unpublishable destination. */
   private def publishIndexAtomic(s: SparkSession, dir: String,
-                                 exists: (SparkSession, String) => Boolean =
-                                   ext.Similarity.ivfPqIndexExists)
+                                 exists: (SparkSession, String) => Boolean)
                                 (build: String => Unit): Unit = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val dest = Paths.get(dir)
@@ -1540,12 +1579,7 @@ object Queries {
     ("ann_pq_persisted",
       (s: SparkSession, d: String) => {
         val emb = t(s, d, "embeddings")
-        val dir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, dir))
-          publishIndexAtomic(s, dir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
-        Similarity.ivfPqSearchPersisted(s, dir, emb,
+        Similarity.ivfPqSearchPersisted(s, pqIndex(s, d), emb,
           emb.filter(col("vec_id") < 10), 5, nProbe = 4, m = 8,
           dim = 64, rerank = 20).orderBy("query_id", "rank")
       },
@@ -2271,12 +2305,7 @@ object Queries {
     ("hard_negatives_pq",
       (s: SparkSession, d: String) => {
         val emb = t(s, d, "embeddings")
-        val pqDir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, pqDir))
-          publishIndexAtomic(s, pqDir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
-        ext.RetrievalEval.hardNegativesPq(s, pqDir, emb, qMax = 50L,
+        ext.RetrievalEval.hardNegativesPq(s, pqIndex(s, d), emb, qMax = 50L,
           k = 5, depth = 20, nProbe = 4, m = 8, dim = 64, rerank = 20)
       },
       Some(ext.RetrievalEval.hardNegativesPqOracleSql(dim = 64,
@@ -2288,12 +2317,7 @@ object Queries {
     ("hard_negatives_pq_recall",
       (s: SparkSession, d: String) => {
         val emb = t(s, d, "embeddings")
-        val pqDir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, pqDir))
-          publishIndexAtomic(s, pqDir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
-        ext.RetrievalEval.hardNegativesPqRecall(s, pqDir, emb,
+        ext.RetrievalEval.hardNegativesPqRecall(s, pqIndex(s, d), emb,
           qMax = 50L, k = 5, depth = 20, nProbe = 4, m = 8, dim = 64,
           rerank = 20)
       },
@@ -2866,15 +2890,9 @@ object Queries {
     // construction (min-fold over the log = the full-set signature),
     // so the oracle replays the same chain from the raw tables.
     ("link_predict_approx_persisted",
-      (s: SparkSession, d: String) => {
-        val dir = indexScratch(d, "linkapprox_v1_h8", "lineitem")
-        if (!ext.Graph.linkApproxIndexExists(s, dir))
-          publishIndexAtomic(s, dir, ext.Graph.linkApproxIndexExists)(
-            tmp => ext.Graph.linkApproxWriteIndex(
-              ext.Graph.coEdges(t(s, d, "lineitem"),
-                col("l_orderkey"), col("l_partkey")), tmp))
-        ext.Graph.linkPredictApproxFromIndex(s, dir, k = 100)
-      },
+      (s: SparkSession, d: String) =>
+        ext.Graph.linkPredictApproxFromIndex(s, linkApproxIndex(s, d),
+          k = 100),
       Some(ext.Graph.linkPredictApproxOracleSql(k = 100))),
 
     // What the estimator costs: overlap of the approx top-k with the
@@ -4049,31 +4067,17 @@ object Queries {
     // oracle adjudicates both paths
     // ------------------------------------------------------------
     ("bm25_persisted",
-      (s: SparkSession, d: String) => {
-        val docs = t(s, d, "documents")
-        val dir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, dir))
-          publishIndexAtomic(s, dir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        ext.Lexical.lexSearchIndex(s, dir,
-          Seq("spark", "merge", "window", "customer"), 20, nBuckets = 16)
-      },
+      (s: SparkSession, d: String) =>
+        ext.Lexical.lexSearchIndex(s, lexIndex(s, d),
+          Seq("spark", "merge", "window", "customer"), 20, nBuckets = 16),
       Some(ext.Corpus.bm25TopKOracleSql(
         Seq("spark", "merge", "window", "customer"), 20))),
 
     // Index audit: segment-summed corpus stats + postings census,
     // oracled straight from the documents table
     ("lex_index_stats",
-      (s: SparkSession, d: String) => {
-        val docs = t(s, d, "documents")
-        val dir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, dir))
-          publishIndexAtomic(s, dir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        ext.Lexical.lexIndexStats(s, dir)
-      },
+      (s: SparkSession, d: String) =>
+        ext.Lexical.lexIndexStats(s, lexIndex(s, d)),
       Some(ext.Lexical.lexIndexStatsOracleSql)),
 
     // Serve-path hybrid: the SAME RRF composition as hybrid_rrf_topk
@@ -4083,18 +4087,9 @@ object Queries {
     // contract (priced by ann_pq_recall); the oracle reproduces it
     ("hybrid_rrf_serve",
       (s: SparkSession, d: String) => {
-        val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
-        val lexDir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, lexDir))
-          publishIndexAtomic(s, lexDir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        val pqDir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, pqDir))
-          publishIndexAtomic(s, pqDir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
+        val lexDir = lexIndex(s, d)
+        val pqDir = pqIndex(s, d)
         Similarity.hybridServeTopK(s, lexDir, pqDir, emb,
           Seq("spark", "merge", "window", "customer"), 0L, 10,
           depth = 20, nBuckets = 16, nProbe = 4, m = 8, dim = 64,
@@ -4109,12 +4104,7 @@ object Queries {
     // request-batch posture the per-query form can't amortize
     ("lex_search_batch",
       (s: SparkSession, d: String) => {
-        val docs = t(s, d, "documents")
-        val dir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, dir))
-          publishIndexAtomic(s, dir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
+        val dir = lexIndex(s, d)
         import s.implicits._
         val q = Seq(0L -> "spark", 0L -> "merge", 1L -> "window",
           1L -> "customer", 2L -> "merge", 2L -> "window",
@@ -4133,16 +4123,8 @@ object Queries {
       (s: SparkSession, d: String) => {
         val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
-        val lexDir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, lexDir))
-          publishIndexAtomic(s, lexDir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        val pqDir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, pqDir))
-          publishIndexAtomic(s, pqDir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
+        val lexDir = lexIndex(s, d)
+        val pqDir = pqIndex(s, d)
         Similarity.hybridServeRecall(s, lexDir, pqDir, docs, emb,
           Seq("spark", "merge", "window", "customer"), 0L, 10,
           depth = 20, nBuckets = 16, nProbe = 4, m = 8, dim = 64,
@@ -4159,12 +4141,7 @@ object Queries {
     ("lex_retrieval_mrr",
       (s: SparkSession, d: String) => {
         val docs = t(s, d, "documents")
-        val dir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, dir))
-          publishIndexAtomic(s, dir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        ext.RetrievalEval.lexRetrievalMrr(s, dir, docs, qMax = 50L,
+        ext.RetrievalEval.lexRetrievalMrr(s, lexIndex(s, d), docs, qMax = 50L,
           nTerms = 3, depth = 20, nBuckets = 16)
       },
       Some(ext.RetrievalEval.lexRetrievalMrrOracleSql(qMax = 50L,
@@ -4175,18 +4152,9 @@ object Queries {
     // persisted indexes amortized over the batch
     ("hybrid_serve_batch",
       (s: SparkSession, d: String) => {
-        val docs = t(s, d, "documents")
         val emb = t(s, d, "embeddings")
-        val lexDir = indexScratch(d, "lex_v1_b16", "documents")
-        if (!ext.Lexical.lexIndexExists(s, lexDir))
-          publishIndexAtomic(s, lexDir, ext.Lexical.lexIndexExists)(tmp =>
-            ext.Lexical.lexWriteIndex(docs, col("doc_id"), col("text"),
-              tmp, nBuckets = 16))
-        val pqDir = indexScratch(d, "pq_v1_c16_m8_k16_d64", "embeddings")
-        if (!Similarity.ivfPqIndexExists(s, pqDir))
-          publishIndexAtomic(s, pqDir)(tmp =>
-            Similarity.ivfPqWriteIndex(emb,
-              Similarity.pqSampleCodebooks(emb, 8, 16, 8), 16, 8, 64, tmp))
+        val lexDir = lexIndex(s, d)
+        val pqDir = pqIndex(s, d)
         import s.implicits._
         val qTerms = Seq(0L -> "spark", 0L -> "merge", 1L -> "window",
           1L -> "customer", 2L -> "merge", 2L -> "window",

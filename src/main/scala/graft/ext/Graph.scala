@@ -680,23 +680,8 @@ object Graph {
     // the array form moves the same information as |cand| rows of
     // array payload with no re-aggregation (19.8 s — 9.5× faster,
     // SCALE.md §39).
-    // INT neighbor arrays when every id fits (round 13, guide §2.3
-    // "narrower types"): the first attach join is exchange-free on
-    // the array side (nbrs inherits adj's pinned partitioning), but
-    // the second attach must ship each candidate's first array to
-    // its v-partition — the one unavoidable array-carrying exchange
-    // of this tail (433 MB at sf0.1, the r12 "not yet" item). Ids
-    // are compared and counted, never summed, so int arrays halve
-    // that exchange with bit-identical cn/deg (sizes and intersect
-    // are value-equal; outputs were already cast explicitly below).
-    val narrowIds = {
-      val r = adj.agg(min(least(col("a"), col("n"))),
-        max(greatest(col("a"), col("n")))).first()
-      r.isNullAt(0) || (r.getLong(0) >= 0L && r.getLong(1) < (1L << 31))
-    }
     val nbrs = adj.groupBy(col("a"))
-      .agg(sort_array(collect_list(
-        if (narrowIds) col("n").cast("int") else col("n"))).as("nbr"))
+      .agg(sort_array(collect_list(col("n"))).as("nbr"))
     cand
       .join(nbrs.select(col("a").as("u"), col("nbr").as("__nu")), "u")
       .join(nbrs.select(col("a").as("v"), col("nbr").as("__nv")), "v")

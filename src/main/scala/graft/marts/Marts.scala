@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * column-pruned BI projections of the dims plus a passthrough fact
   * view. Kept as pure DataFrame functions so Catalyst inlines them
   * into consumer plans (the Spark analog of SQL Server view inlining,
-  * SURVEY §3.2); `Pipeline` optionally materializes them.
+  * SURVEY §3.2). `Pipeline.runAll` writes three of them through
+  * `StagedWrite` on every run: `dim_customer_current` ([[current]]),
+  * `factsales` ([[fact]]) and `run_history` ([[runHistory]]).
   */
 object Marts {
 

@@ -214,6 +214,27 @@ class GraphSpec extends SparkSpec {
     assert(got == Seq((2L, 4L, 2L, 2L, 2L, 1000000L)))
   }
 
+  test("constructing triangleCounts, linkPredict and linkPredictApprox " +
+      "stays within its job ceiling") {
+    // K4 on {1,2,3,4} plus the pendant path 4-5-6. Each ceiling is the
+    // kernel's pins' jobs, plus the 2 of the id min/max `.first()` that
+    // picks the packed pair key of triangleCounts and linkPredict; a
+    // driver-side scan added to a constructor raises the count
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
+      (3L, 4L), (4L, 5L), (5L, 6L)).toDF("u", "v")
+    val jobs = Map(
+      "triangleCounts" -> jobsDuring(Graph.triangleCounts(edges))._2,
+      "linkPredict" -> jobsDuring(Graph.linkPredict(edges, 1, 10))._2,
+      "linkPredictApprox" ->
+        jobsDuring(Graph.linkPredictApprox(edges, 10))._2)
+    val ceilings =
+      Map("triangleCounts" -> 8, "linkPredict" -> 8, "linkPredictApprox" -> 11)
+    ceilings.foreach { case (kernel, max) =>
+      assert(jobs(kernel) <= max,
+        s"constructing $kernel started ${jobs(kernel)} jobs, over $max")
+    }
+  }
+
   test("linkPredict: apex-degree guard suppresses hub wedges") {
     // star hub 1 with 9 leaves: every leaf pair shares only apex 1;
     // with maxDegree=3 the hub is skipped as wedge builder -> empty

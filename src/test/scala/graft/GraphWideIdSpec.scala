@@ -2,19 +2,19 @@ package graft
 
 import graft.ext.Graph
 
-/** The id ≥ 2³¹ fallbacks of the graph kernels. `triangleCounts` and
-  * the exact link-prediction tail pack an id pair into one long
-  * (hi·2³² | lo), and the approx verifier narrows neighbor ids to int,
-  * only when every id is nonnegative and below 2³¹. One wider id
-  * forces the two-column-key and long-array paths; their rows must
-  * equal the same graph's rows with that id relabelled below 2³¹ and
+/** The graph kernels over an id that does not fit an int.
+  * `triangleCounts` and `linkPredict` pack an id pair into one long
+  * (hi·2³² | lo) only when every id is nonnegative and below 2³¹, and
+  * key on the two long ids otherwise; `linkPredictApprox` keeps long
+  * neighbor arrays for every input. A graph with one id ≥ 2³¹ must give
+  * the rows of the same graph with that id relabelled below 2³¹ and
   * mapped back. */
 class GraphWideIdSpec extends SparkSpec {
   import spark.implicits._
 
-  // 2³² + 5 is past the guard and truncates to the int 5, a node of
-  // the same graph — so a path that packed or narrowed it anyway
-  // would merge the two nodes and change the rows
+  // 2³² + 5 truncates to the int 5, a node of the same graph — so a
+  // kernel that packed an id pair into one long or narrowed ids to
+  // int would merge the two nodes and change the rows
   private val Wide = (1L << 32) + 5L
   // its narrow stand-in: the largest id of each graph, as Wide is, so
   // u < v orientation and every ORDER BY tie-break are unchanged
@@ -39,8 +39,8 @@ class GraphWideIdSpec extends SparkSpec {
   private val openPairs = Seq((1L, 5L), (1L, 100L), (2L, 3L), (2L, 4L),
     (3L, 4L), (5L, 100L)).map { case (u, v) => (u, v, 3L, 3L, 3L, 1000000L) }
 
-  test("triangleCounts: a wide id takes the two-column closing probe, " +
-    "same counts") {
+  test("triangleCounts: a wide id counts the same as its relabelled " +
+    "graph") {
     val (narrow, wide) = graphs(triangleEdges)
     def run(df: org.apache.spark.sql.DataFrame) =
       Graph.triangleCounts(df).as[(Long, Long)].collect().toMap
@@ -49,7 +49,7 @@ class GraphWideIdSpec extends SparkSpec {
     assert(run(wide) == want.map { case (n, t) => widen(n) -> t })
   }
 
-  test("linkPredict: a wide id takes the two-long wedge key, same rows") {
+  test("linkPredict: a wide id ranks the same as its relabelled graph") {
     val (narrow, wide) = graphs(bipartiteEdges)
     def run(df: org.apache.spark.sql.DataFrame) =
       Graph.linkPredict(df, minCn = 2, k = 10)
@@ -59,8 +59,8 @@ class GraphWideIdSpec extends SparkSpec {
       openPairs.map(r => r.copy(_1 = widen(r._1), _2 = widen(r._2))))
   }
 
-  test("linkPredictApprox: a wide id keeps long neighbor arrays, " +
-    "same rows") {
+  test("linkPredictApprox: a wide id ranks the same as its relabelled " +
+    "graph") {
     val (narrow, wide) = graphs(bipartiteEdges)
     def run(df: org.apache.spark.sql.DataFrame) =
       Graph.linkPredictApprox(df, k = 10)
