@@ -29,7 +29,8 @@ object GraftConf {
     * decides the join strategies the contracts pin); parquet
     * TIMESTAMP(NANOS) read as long (the `events` fixture; `Queries`
     * converts it), set for the whole session because a read takes
-    * its schema from this conf when it is planned. */
+    * its schema from this conf when it is planned; timestamps are
+    * written as INT64 micros, not INT96. */
   def base(cores: Int): Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.sql.session.timeZone" -> "UTC",
@@ -37,7 +38,8 @@ object GraftConf {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     "spark.sql.autoBroadcastJoinThreshold" -> (10L * 1024 * 1024).toString,
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
   /** Fold [[base]] into a session builder, plus the CORE (non-SQL,
     * set-at-startup-only) confs: long sessions (the 330-query bench,

@@ -14,8 +14,7 @@ object Harness {
   /** `local[SPARK_GRAFT_CPUS]` (default min(32, host cores)), or the
     * master `SPARK_GRAFT_MASTER` names (a standalone cluster); base
     * conf, UI off, WARN logging, and one tiny job so session start-up
-    * is billed to no measurement. Callers that write parquet set
-    * `spark.sql.parquet.outputTimestampType` on the returned session. */
+    * is billed to no measurement. */
   def session(): SparkSession = {
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors))

@@ -4,19 +4,21 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.checks.Checks
 import graft.dims.{DateDim, Scd2Dimension}
 import graft.facts.FactLoader
-import graft.marts.Marts
 import graft.meta.{LoadTracker, RunLog, StagedWrite}
 import graft.schema.{Tables, Warehouse}
 
 /** End-to-end warehouse build — the reference's documented run order
   * (SQL:1799-1811): date dim, then SCD2 dims, then the fact (always
-  * last, J46), then marts and validation (run together). Re-running is the
+  * last, J46), then validation. The build writes the reference's
+  * tables, the `int/` and `meta/` ones; its marts are views
+  * (SQL:1548-1612), so they are [[graft.marts.Marts]] functions over
+  * these tables and nothing writes them. Re-running is the
   * reference's headline test (SQL:70-74): every load must be
   * idempotent — second run inserts 0 rows and leaves tables unchanged.
   *
@@ -57,8 +59,8 @@ object Pipeline {
     *   - every source is read once, and every warehouse table once,
     *     right after its last write (a DataFrame made before a
     *     `StagedWrite` of its own path would hold a stale file
-    *     listing); the fact's dimension lookups, the marts and the
-    *     sweep share those reads;
+    *     listing); the fact's dimension lookups and the sweep share
+    *     those reads;
     *   - every read goes through [[graft.schema.Tables.read]], which
     *     takes the schema from one footer on the driver, so planning a
     *     read runs no schema-inference job;
@@ -69,10 +71,10 @@ object Pipeline {
     * The loads run one after another, the fact last (J46): each
     * depends on the ones before it through the tracker and the
     * dimension lookups, and each `etl_run_log` row times its load
-    * alone. The post-load stage — the three mart writes and the three
-    * sweep actions — only reads published tables, so it runs together
-    * on a fixed driver pool and is joined before the structure check
-    * and the strict throw; any failure among them fails the run. */
+    * alone. The three sweep actions only read published tables, so
+    * they run together on a fixed driver pool and are joined before
+    * the structure check and the strict throw; any failure among them
+    * fails the run. */
   def runAll(spark: SparkSession, sfDir: String, root: String,
              strict: Boolean = false): RunResult = {
     val wh = Warehouse(root)
@@ -130,29 +132,19 @@ object Pipeline {
       wh.int("factsales"), tracker, log, preValidate = strict)
     val fact = Tables.read(spark, wh.int("factsales"))
 
-    // 4. marts (reference Stage 4) and 5. the validation sweep
-    // (reference Stage 5), together; the run-history mart is written
-    // after the loads so it covers this run's own log rows
-    def write(df: => DataFrame, path: String): () => Map[String, Long] =
-      () => { StagedWrite.overwrite(df, path); Map.empty }
+    // 4. the validation sweep (reference Stage 5); the marts (reference
+    // Stage 4) are views, see graft.marts.Marts
     val counts = concurrently(Seq(
-      write(Marts.current(dimTable("customer"),
-        Seq("customer_id", "c_custkey", "c_name", "c_mktsegment")),
-        wh.mart("dim_customer_current")),
-      write(Marts.fact(fact), wh.mart("factsales")),
-      write(Marts.runHistory(log.read()), wh.mart("run_history")),
       () => Checks.factSweep(fact, snapshotDims.map(d => d._1 -> dimTable(d._1))),
       () => Checks.dimSweep(dims),
       () => Checks.dateSweep(dimDate))).reduce(_ ++ _)
 
     // warehouse structure (reference Stage 5.1, SQL:1626-1638): the
-    // expected table list must exist on disk once the marts have landed
+    // tables the build writes must exist on disk
     val expectedTables =
-      (Seq("dim_date", "dim_customer", "dim_part", "dim_supplier",
+      Seq("dim_date", "dim_customer", "dim_part", "dim_supplier",
         "dim_user_profile", "factsales").map(n => n -> wh.int(n)) ++
-        Seq("dim_customer_current", "factsales", "run_history").map(n =>
-          s"mart_$n" -> wh.mart(n)) ++
-        Seq("etl_load_tracker", "etl_run_log").map(n => n -> wh.meta(n)))
+        Seq("etl_load_tracker", "etl_run_log").map(n => n -> wh.meta(n))
     val violations = counts - "dim_date_rows" +
       ("structure_missing" -> Checks.structure(spark, expectedTables).count())
 
@@ -170,7 +162,7 @@ object Pipeline {
   /** Runs `tasks` together on a fixed driver pool and waits for every
     * one of them; then rethrows the first failure, if any. The pool is
     * shut down whatever happens. */
-  private def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+  private[graft] def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
     val pool = Executors.newFixedThreadPool(tasks.size)
     try {
       val pending = tasks.map(t => pool.submit(new Callable[A] { def call(): A = t() }))

@@ -500,8 +500,8 @@ object Queries {
     // A7: current-only mart projection
     ("mart_current",
       (s: SparkSession, d: String) =>
-        scd2Versions(s, d).filter(col("is_current") === 1L)
-          .select("nk", "attr_type", "attr_value").orderBy("nk"),
+        marts.Marts.current(scd2Versions(s, d),
+          Seq("nk", "attr_type", "attr_value")).orderBy("nk"),
       Some(s"""WITH $scd2Cte
         |SELECT nk, attr_type, attr_value FROM v WHERE is_current = 1
         |ORDER BY nk""".stripMargin)),

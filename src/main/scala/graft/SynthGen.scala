@@ -188,7 +188,6 @@ object SynthGen {
     val mult = args(1).toDouble
     val skewHot = if (args.length > 2) args(2).toDouble else 0.0
     val spark = Harness.session()
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     def m(base: Long) = math.max(1L, (base * mult).toLong)
     val nCust = m(15000); val nPart = m(20000); val nSupp = m(1000)
     val tables: Seq[(String, DataFrame)] = Seq(

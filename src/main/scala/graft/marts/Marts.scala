@@ -3,13 +3,13 @@ package graft.marts
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Mart publishing — reference Stage 4 (SQL:1548-1612): current-only,
-  * column-pruned BI projections of the dims plus a passthrough fact
-  * view. Kept as pure DataFrame functions so Catalyst inlines them
-  * into consumer plans (the Spark analog of SQL Server view inlining,
-  * SURVEY §3.2). `Pipeline.runAll` writes three of them through
-  * `StagedWrite` on every run: `dim_customer_current` ([[current]]),
-  * `factsales` ([[fact]]) and `run_history` ([[runHistory]]).
+/** Mart views — reference Stage 4 (SQL:1548-1612), where every mart
+  * is a view: current-only, column-pruned BI projections of the dims,
+  * the run-history view and the star rollups. A view is a pure
+  * DataFrame function here, so Catalyst inlines it into the consumer's
+  * plan (the Spark analog of SQL Server view inlining, SURVEY §3.2);
+  * nothing writes a mart. The reference's passthrough fact view
+  * (SQL:1597-1612) is the `int/factsales` table itself.
   */
 object Marts {
 
@@ -17,11 +17,6 @@ object Marts {
     * (reference SQL:1555-1565). */
   def current(dim: DataFrame, columns: Seq[String]): DataFrame =
     dim.filter(col("is_current") === 1L).select(columns.map(col): _*)
-
-  /** Passthrough fact view (reference SQL:1597-1612): the fact is
-    * already surrogate-resolved; marts only prune audit columns. */
-  def fact(fact: DataFrame, dropColumns: Seq[String] = Nil): DataFrame =
-    fact.drop(dropColumns: _*)
 
   /** Region-revenue rollup (the TPC-H Q5 join shape): revenue per
     * (region, nation, order-year) through the five-way star

@@ -32,15 +32,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StagedWrite {
 
-  def overwrite(df: DataFrame, target: String,
-                partitionCols: Seq[String] = Seq.empty): Unit = {
+  def overwrite(df: DataFrame, target: String): Unit = {
     val spark = df.sparkSession
     recover(spark, target)
     val staging =
       new Path(target + ".staging-" + UUID.randomUUID().toString.take(8))
-    val writer = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
-     else writer).parquet(staging.toString)
+    df.write.mode("overwrite").parquet(staging.toString)
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tgt = new Path(target)
     val old = new Path(target + ".old")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
   *
   * Reference analog: the staging/int/mart schema split of the mini-DW
   * (reference `code/SQL_1_Assignment_2_David_Färm.sql:135-152`). Our
-  * "schemas" are directories under a warehouse root; a real deployment
+  * "schemas" are directories under a warehouse root (the `mart` schema
+  * holds only views, [[graft.marts.Marts]]); a real deployment
   * would point these at object-store prefixes and register them in a
   * catalog — nothing here assumes a local filesystem beyond the paths.
   */
@@ -28,9 +29,9 @@ object Tables {
       .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 }
 
-/** Warehouse layout (reference SQL:142-151 `CREATE SCHEMA` ×3 + meta). */
+/** Warehouse layout (reference SQL:142-151 `CREATE SCHEMA` ×3 + meta);
+  * marts are views, so they have no path. */
 final case class Warehouse(root: String) {
   def int(table: String): String  = s"$root/int/$table"
-  def mart(table: String): String = s"$root/mart/$table"
   def meta(table: String): String = s"$root/meta/$table"
 }

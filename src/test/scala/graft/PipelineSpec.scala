@@ -1,8 +1,12 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
+
+import graft.marts.Marts
 
 /** The reference's headline test (SQL:70-74): run the whole warehouse
   * build twice — second run must be a no-op (0 inserts everywhere) and
@@ -11,12 +15,12 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkSpec {
 
   /** Jobs of a no-op strict rerun on the sf0.001 fixture with this
-    * suite's session: 46 measured, plus a slack of 5 for planner
+    * suite's session: 42 measured, plus a slack of 5 for planner
     * changes (AQE can split or fold a stage). The per-check sweep and
     * per-load tracker re-reads ran 133 jobs in the benchmark's
     * `etl_warehouse` rerun; parquet schema inference, one job per
     * table read, another 16. */
-  private val NoopJobCeiling = 51
+  private val NoopJobCeiling = 47
 
   test("runAll is idempotent and passes all validation checks") {
     val root = Files.createTempDirectory("graft_wh").toString
@@ -58,9 +62,9 @@ class PipelineSpec extends SparkSpec {
     val log = spark.read.parquet(s"$root/meta/etl_run_log")
     assert(log.filter(col("status") === "SUCCESS").count() >= 10L)
 
-    // run-history mart: one row per log entry, exactly one latest per
+    // run-history view: one row per log entry, exactly one latest per
     // run name, non-negative durations, touched = inserted+updated+deleted
-    val hist = spark.read.parquet(s"$root/mart/run_history")
+    val hist = Marts.runHistory(log)
     assert(hist.count() == log.count(),
       "run_history must cover every run-log row")
     val latestPerName = hist.filter(col("is_latest") === 1L)
@@ -75,11 +79,22 @@ class PipelineSpec extends SparkSpec {
     val tracker = spark.read.parquet(s"$root/meta/etl_load_tracker")
     assert(tracker.count() >= 5L)
 
-    // a failure in the concurrent post-load stage fails the run: no
-    // mart can land under a regular file
-    val mart = new java.io.File(s"$root/mart")
-    org.apache.commons.io.FileUtils.deleteDirectory(mart)
-    assert(mart.createNewFile())
-    intercept[Exception](Pipeline.runAll(spark, sf, root))
+    // the marts are views: the build writes no mart directory
+    assert(!Files.exists(Paths.get(root, "mart")))
+  }
+
+  test("concurrently rethrows a task's failure only after every task has finished") {
+    val boom = new IllegalStateException("boom")
+    val thrown = new CountDownLatch(1)
+    val finished = new AtomicInteger(0)
+    val slow = (1 to 3).map(_ => () => {
+      thrown.await()
+      Thread.sleep(200)
+      finished.incrementAndGet()
+    })
+    val failing = () => { thrown.countDown(); throw boom }
+    val e = intercept[IllegalStateException](Pipeline.concurrently(failing +: slow))
+    assert(e eq boom, s"rethrew $e, not the task's own exception")
+    assert(finished.get == 3, s"${finished.get} of 3 tasks had finished")
   }
 }

@@ -26,11 +26,11 @@ class TablesReadSpec extends SparkSpec {
       .filter(Files.isDirectory(_)).flatMap(children)
       .filter(_.endsWith(".parquet"))
 
-  /** every int/mart/meta table of a strict sf0.001 build */
+  /** every int and meta table of a strict sf0.001 build */
   private lazy val warehouse: Seq[String] = {
     val root = Files.createTempDirectory("graft_tables_read")
     Pipeline.runAll(spark, sf, root.toString, strict = true)
-    Seq("int", "mart", "meta").flatMap(l => children(root.resolve(l)))
+    Seq("int", "meta").flatMap(l => children(root.resolve(l)))
   }
 
   /** reads every path both ways: the schemas must match and the helper
@@ -50,7 +50,7 @@ class TablesReadSpec extends SparkSpec {
   }
 
   test("warehouse tables: spark.read.parquet's schema and rows, no Spark job") {
-    assert(warehouse.size == 11, s"warehouse: $warehouse")
+    assert(warehouse.size == 8, s"warehouse: $warehouse")
     assertSameSchemas(warehouse)
     val fact = warehouse.find(_.endsWith("/int/factsales")).get
     val got = Tables.read(spark, fact).orderBy("sales_nk").collect().toSeq
