@@ -4005,11 +4005,11 @@ object Queries {
     // steps; oracle = the from-scratch length-5 biased chain
     ("graph_walks_biased_extended",
       (s: SparkSession, d: String) => {
-        // one set of neighbor arrays: both legs walk it
-        val nbrArr = ext.Walks.neighborArrays(ext.Graph.coEdges(
+        // one ranked adjacency: both legs walk it
+        val adj = ext.Walks.rankedAdjacency(ext.Graph.coEdges(
           t(s, d, "lineitem"), col("l_orderkey"), col("l_partkey")))
         ext.Walks.extendBiasedWalks(
-          ext.Walks.biasedWalksOn(nbrArr, length = 3, 1L, 4L, 2L), nbrArr,
+          ext.Walks.biasedWalksOn(adj, length = 3, 1L, 4L, 2L), adj,
           fromLength = 3, extraSteps = 2, 1L, 4L, 2L)
       },
       Some(ext.Walks.biasedWalksOracleSql(5, 1L, 4L, 2L))),

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -106,9 +106,9 @@ object Graph {
     // twice-derived orientation subtree — formatted-plan ops
     // 7-9/18-20/32-34/43-45), each a full edge re-scan with its own
     // exchange (guide §2.4)
-    val deg = Pin.pin(
+    val (deg, packable) = pinDegrees(
       e.select(explode(array(col("u"), col("v"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", Seq(col("n")))
+        .groupBy("n").agg(count(lit(1)).as("d")), "tri.deg", "n")
 
     // total order (d, n): orient low -> high so out-degree <= O(sqrt m)
     val withDeg = e
@@ -144,7 +144,7 @@ object Graph {
     // [[linkPredictTail]]'s packed wedge agg; the fallback keeps the
     // two-column key, same rows either way.
     val tris =
-      if (idsPackable(deg, "n")) {
+      if (packable) {
         val wedges = o1.join(o2, Seq("a")).filter(col("b") < col("c"))
           .select(col("a"),
             shiftleft(col("b"), 32).bitwiseOR(col("c")).as("bc"))
@@ -370,13 +370,14 @@ object Graph {
                   maxDegree: Int = DefaultMaxGroupSize): DataFrame = {
     val e = Pin.pin(edges.select(col("u").cast("long").as("u"),
       col("v").cast("long").as("v")))
-    val (deg, adjOk) = cappedAdjacency(e, maxDegree, "linkpred")
-    linkPredictTail(e, deg, adjOk, minCn, k)
+    val (deg, adjOk, packable) = cappedAdjacency(e, maxDegree, "linkpred")
+    linkPredictTail(e, deg, adjOk, packable, minCn, k)
   }
 
   /** The shared front of the exact AND approx link-prediction
-    * rankers: pinned one-pass degree aggregation + the degree-capped
-    * adjacency pinned keyed on the apex at 4× session width.
+    * rankers: pinned one-pass degree aggregation (with its
+    * [[pinDegrees]] packed-id guard) + the degree-capped adjacency
+    * pinned keyed on the apex at 4× session width.
     *
     *  - ONE degree aggregation, pinned: unpinned it re-ran as five
     *    separate union+agg subtrees in the executed plan (the two
@@ -398,27 +399,33 @@ object Graph {
     * relation (guide §2.4: the cheapest shuffle is the one not run
     * twice). */
   private def cappedAdjacency(e: DataFrame, maxDegree: Int,
-                              tag: String): (DataFrame, DataFrame) = {
+                              tag: String): (DataFrame, DataFrame, Boolean) = {
     val adj = e.select(col("u").as("a"), col("v").as("n"))
       .unionByName(e.select(col("v").as("a"), col("u").as("n")))
-    val deg = Pin.pin(adj.groupBy(col("a"))
-      .agg(count(lit(1)).as("degree")), s"$tag.deg", Seq(col("a")))
+    val (deg, packable) = pinDegrees(adj.groupBy(col("a"))
+      .agg(count(lit(1)).as("degree")), s"$tag.deg", "a")
     val adjOk = Pin.pin(adj.join(
       deg.filter(col("degree") <= maxDegree).select(col("a")), Seq("a"),
       "left_semi"), s"$tag.adj", Seq(col("a")), widthMult = 4)
-    (deg, adjOk)
+    (deg, adjOk, packable)
   }
 
-  /** True iff every id in `rel.$idCol` fits the packed single-long
-    * pair form `hi·2³² | lo` (nonnegative, < 2³¹) — the round-13
-    * guard for halving wedge-aggregation key bytes (guide §2.3
-    * "narrower types: halve the column, halve its shuffle bytes",
-    * here applied to the Σ deg² aggregation state). One driver read
-    * of an ALREADY-pinned tiny aggregate (never a source scan), so
-    * the check costs a pinned-partition fold at plan time. */
-  private def idsPackable(rel: DataFrame, idCol: String): Boolean = {
-    val r = rel.agg(min(col(idCol)), max(col(idCol))).first()
-    r.isNullAt(0) || (r.getLong(0) >= 0L && r.getLong(1) < (1L << 31))
+  /** A degree aggregation pinned keyed on its node column `idCol`,
+    * and whether every id fits the packed single-long pair form
+    * `hi·2³² | lo` (nonnegative, < 2³¹) — the guard for halving
+    * wedge-aggregation key bytes (guide §2.3 "narrower types: halve
+    * the column, halve its shuffle bytes", here applied to the Σ deg²
+    * aggregation state). The id range is an [[Observation]] under the
+    * pin, read off the pin's own job: the guard starts no job of its
+    * own. */
+  private def pinDegrees(deg: DataFrame, tag: String,
+                         idCol: String): (DataFrame, Boolean) = {
+    val ids = Observation()
+    val pinned = Pin.pin(deg.observe(ids, min(col(idCol)).as("lo"),
+      max(col(idCol)).as("hi")), tag, Seq(col(idCol)))
+    val r = ids.get
+    (pinned, r("lo") == null || (r("lo").asInstanceOf[Long] >= 0L &&
+      r("hi").asInstanceOf[Long] < (1L << 31)))
   }
 
   /** The exact common-neighbor ranking tail over a pre-built front —
@@ -426,19 +433,19 @@ object Graph {
     * [[linkPredictApproxRecall]] can run it against the SAME pinned
     * adjacency its approx side uses. */
   private def linkPredictTail(e: DataFrame, deg: DataFrame,
-                              adjOk: DataFrame, minCn: Long,
-                              k: Int): DataFrame = {
+                              adjOk: DataFrame, packable: Boolean,
+                              minCn: Long, k: Int): DataFrame = {
     val w1 = adjOk.select(col("a"), col("n").as("u"))
     val w2 = adjOk.select(col("a"), col("n").as("v"))
     // the wedge count agg keyed on ONE packed long instead of two
     // (round 13, guide §2.3): the Σ deg² partial-agg hash state and
     // its exchange carry an 8-byte key instead of 16, and the
     // group-key compare is a single long equality. Pack/unpack is
-    // lossless under the [[idsPackable]] guard (part keys are ≥ 0
+    // lossless under the [[pinDegrees]] guard (part keys are ≥ 0
     // and far below 2³¹ at every SF; a catalog that outgrows the
     // guard falls back to the two-long key, same rows either way).
     val cnAgg =
-      if (idsPackable(deg, "a"))
+      if (packable)
         w1.join(w2, Seq("a")).filter(col("u") < col("v"))
           .select(shiftleft(col("u"), 32).bitwiseOR(col("v")).as("uv"))
           .groupBy(col("uv")).agg(count(lit(1)).as("cn"))
@@ -603,7 +610,7 @@ object Graph {
     // explode inherits the full pinned width instead of the 2-task
     // stage AQE carved from its byte-light input (the §43 trap,
     // measured here as a 2.0 s 2-task stage).
-    val (_, adj) = cappedAdjacency(e, maxDegree, "linkpred.approx")
+    val (_, adj, _) = cappedAdjacency(e, maxDegree, "linkpred.approx")
     approxRankTail(e, adj, Pin.pin(neighborMinhash(adj, nHashes)),
       k, minCn, maxBucket)
   }
@@ -790,9 +797,9 @@ object Graph {
     // 21.5 s isolated; the front is data-identical on both paths, so
     // the ranked rows cannot change). Both rankers use the default
     // maxDegree, which is what the previous nested calls used too.
-    val (deg, adjOk) = cappedAdjacency(e, DefaultMaxGroupSize,
+    val (deg, adjOk, packable) = cappedAdjacency(e, DefaultMaxGroupSize,
       "linkpred.recall")
-    val exact = linkPredictTail(e, deg, adjOk, minCn, k)
+    val exact = linkPredictTail(e, deg, adjOk, packable, minCn, k)
       .select(col("u"), col("v"))
     val approx = approxRankTail(e, adjOk,
       Pin.pin(neighborMinhash(adjOk, nHashes)), k, minCn,

@@ -31,9 +31,9 @@ import graft.functions.Hashing
   *
   * Scale shape: one pinned adjacency with per-node neighbor ranks
   * (row_number over the 2m-row relation — deg rows per hub, never
-  * deg²), then per step exactly two equi-joins keyed on the current
-  * node (degree lookup → pick, then (node, rank) lookup → next
-  * node). A length-L walk set over n start nodes costs L joins of an
+  * deg²) is the graph state of every walk, then per uniform step one
+  * equi-join keyed on the current node, the pick a residual on the
+  * rank. A length-L walk set over n start nodes costs L joins of an
   * n-row frontier — linear in walks·length, no pair blowup anywhere.
   * Walks may revisit nodes (standard for DeepWalk corpora).
   */
@@ -43,13 +43,14 @@ object Walks {
   private val (wa, wb) = Hashing.Perms(0)
   private val stride = Hashing.Stage2._2
 
-  /** Directed adjacency with neighbor ranks and degrees, the uniform
-    * walk's whole graph state, pinned keyed on `node` ([[Pin.pin]]):
-    * every walk step joins it on the current node, and with the hash
-    * partitioning visible each step's join exchanges ONLY the
-    * frontier — the adjacency (the big side at 100 TB) is shuffled
-    * exactly once, at build. Build it once per query and pass it to
-    * every walk over the same graph ([[walksOn]], [[extendWalks]]). */
+  /** Directed adjacency with neighbor ranks and degrees, the whole
+    * graph state of every walk in this family, pinned keyed on `node`
+    * ([[Pin.pin]]): every walk step joins it on the current node, and
+    * with the hash partitioning visible each step's join exchanges
+    * ONLY the frontier — the adjacency (the big side at 100 TB) is
+    * shuffled exactly once, at build. Build it once per query and
+    * pass it to every walk over the same graph ([[walksOn]],
+    * [[extendWalks]], [[biasedWalksOn]], [[extendBiasedWalks]]). */
   private[graft] def rankedAdjacency(edges: DataFrame): DataFrame = {
     val adj = edges
       .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
@@ -62,12 +63,11 @@ object Walks {
         .cast("long")), "walks.adj", Seq(col("node")))
   }
 
-  /** The hash-selected neighbor index at step `s` for `walk_id`,
-    * given degree expression `dExpr` — nonnegative ids only (graph
-    * node ids here are part keys ≥ 0), so `%` agrees across
-    * engines. */
-  private def pickExpr(s: Int, dExpr: String = "d"): String =
-    s"(((walk_id % $P2) + $s * $stride) * $wa + $wb) % $P2 % $dExpr"
+  /** The hash-selected neighbor index at step `s` for `walk_id` —
+    * nonnegative ids only (graph node ids here are part keys ≥ 0),
+    * so `%` agrees across engines. */
+  private def pickExpr(s: Int): String =
+    s"(((walk_id % $P2) + $s * $stride) * $wa + $wb) % $P2 % d"
 
   /** `length`-step deterministic walks, one walk per node of
     * `edges`: rows (walk_id, step, node_id), step 0 = the start
@@ -85,39 +85,50 @@ object Walks {
     * corpus-wide range sort their own aggregation immediately
     * destroys (guide §2.4: an `orderBy` used only for deterministic
     * output is an exchange the consumer should not inherit). */
-  private def walksKernel(adj: DataFrame, length: Int): DataFrame = {
+  private def walksKernel(adj: DataFrame, length: Int): DataFrame =
+    walksFromStarts(adj, length)((f, s) => uniformHop(adj)(f, s).drop("prev"))
+
+  /** One walk per node of `adj`, started at that node: the step-0
+    * rows, then steps 1 .. `length` of `hop` ([[walkSteps]]). */
+  private def walksFromStarts(adj: DataFrame, length: Int)(
+      hop: (DataFrame, Int) => DataFrame): DataFrame = {
     val starts = Pin.pin(adj.select(col("node")).distinct()
       .select(col("node").as("walk_id"), col("node").as("cur")))
-    val out0 = starts.select(col("walk_id"), lit(0L).as("step"),
-      col("cur").as("node_id"))
-    walkSteps(adj, starts, out0, from = 0, to = length)
+    walkSteps(starts, starts.select(col("walk_id"), lit(0L).as("step"),
+      col("cur").as("node_id")), from = 0, to = length)(hop)
   }
 
-  /** The uniform-walk recursion from an existing frontier: steps
-    * `from+1 .. to` appended to `out`. Factored out so [[walks]] and
-    * [[extendWalks]] share one selection kernel — the consistency
-    * property below is BY CONSTRUCTION only because both paths run
-    * this exact code.
-    *
-    * ONE fused join per step (was two): the adjacency row already
-    * carries the node's degree `d`, so the hash pick is evaluated as
-    * a join-time residual (`rk = pick(walk_id, s, d)`) instead of a
-    * separate degree-lookup join — same integers, same selected
-    * neighbor, one less frontier shuffle per step. */
-  private def walkSteps(adj: DataFrame, frontier0: DataFrame,
-                        out0: DataFrame, from: Int, to: Int): DataFrame = {
+  /** The walk recursion from an existing frontier: steps
+    * `from+1 .. to` appended to `out0`, where `hop(frontier, s)` is
+    * step s's next frontier with its new node in `cur`, pinned before
+    * the next step reads it. Every walk — uniform and biased, from
+    * scratch and extended — runs this one loop, so the extension
+    * property below holds BY CONSTRUCTION: both paths run the same
+    * hops. */
+  private def walkSteps(frontier0: DataFrame, out0: DataFrame, from: Int,
+                        to: Int)(hop: (DataFrame, Int) => DataFrame): DataFrame = {
     var frontier = frontier0
     var out = out0
     for (s <- from + 1 to to) {
-      frontier = Pin.pin(frontier
-        .join(adj, col("cur") === col("node") &&
-          col("rk") === expr(pickExpr(s)))
-        .select(col("walk_id"), col("nbr").as("cur")))
+      frontier = Pin.pin(hop(frontier, s))
       out = out.unionAll(frontier.select(col("walk_id"),
         lit(s.toLong).as("step"), col("cur").as("node_id")))
     }
     out
   }
+
+  /** The uniform hop at step `s`: (walk_id, prev, cur), `cur` the
+    * hash-picked neighbor of the frontier's `cur`. ONE fused join:
+    * the adjacency row already carries the node's degree `d`, so the
+    * hash pick is evaluated as a join-time residual
+    * (`rk = pick(walk_id, s, d)`) instead of a separate degree-lookup
+    * join — one frontier shuffle per step. */
+  private def uniformHop(adj: DataFrame)(frontier: DataFrame,
+                                         s: Int): DataFrame =
+    frontier
+      .join(adj, col("cur") === col("node") &&
+        col("rk") === expr(pickExpr(s)))
+      .select(col("walk_id"), col("cur").as("prev"), col("nbr").as("cur"))
 
   /** Build-once / EXTEND-many: continue a uniform walk
     * corpus (`prior`, rows (walk_id, step, node_id) of length
@@ -147,9 +158,10 @@ object Walks {
     val frontier = Pin.pin(p
       .filter(col("step") === fromLength.toLong)
       .select(col("walk_id"), col("node_id").as("cur")))
-    walkSteps(adj, frontier,
+    walkSteps(frontier,
       p.select(col("walk_id"), col("step"), col("node_id")),
-      from = fromLength, to = fromLength + extraSteps)
+      from = fromLength, to = fromLength + extraSteps)(
+      (f, s) => uniformHop(adj)(f, s).drop("prev"))
       .orderBy("walk_id", "step")
   }
 
@@ -217,35 +229,6 @@ object Walks {
     * so the two walk variants don't correlate. */
   private val (ba, bb) = Hashing.Perms(1)
 
-  /** Per-node SORTED neighbor arrays, pinned keyed on `node` — the
-    * biased walk's whole graph state in ONE relation
-    * (round 13, guide §2.3/§2.4 "shuffle keys and metadata, not
-    * payloads … remove shuffles outright"): each biased step attaches
-    * `prev`'s and `cur`'s arrays with two frontier-sized joins whose
-    * array side is the pin (zero exchange, zero sort), and the
-    * classification + weighted pick run as pure array expressions
-    * INSIDE the frontier row — the per-step O(Σ deg) expansion rows,
-    * their (least, greatest) classification shuffle and the per-walk
-    * running-sum window (two full-expansion exchanges per step in
-    * the r12 plan) no longer exist. Array order = ascending neighbor
-    * id = exactly [[rankedAdjacency]]'s rk order, so every selection
-    * is bit-identical by construction. Build it once per query and
-    * pass it to every biased walk over the same graph
-    * ([[biasedWalksOn]], [[extendBiasedWalks]]). The long-typed edge
-    * projection is pinned first unless it already sits on one
-    * ([[Pin.ensure]]): both halves of the mirror union read it. */
-  private[graft] def neighborArrays(edges: DataFrame): DataFrame = {
-    val e = Pin.ensure(edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
-    val adj = e
-      .select(col("u").cast("long").as("node"), col("v").cast("long").as("nbr"))
-      .unionAll(e
-        .select(col("v").cast("long").as("node"), col("u").cast("long").as("nbr")))
-    Pin.pin(adj.groupBy(col("node"))
-      .agg(sort_array(collect_list(col("nbr"))).as("nbrs")),
-      "walks.nbrs", Seq(col("node")))
-  }
-
   /** node2vec-style SECOND-ORDER biased walks (Grover & Leskovec
     * 2016): from step 2 on, the hop out of `cur` (arrived from
     * `prev`) weights each neighbor by its relation to `prev` —
@@ -265,20 +248,72 @@ object Walks {
     * price, paid per step, never squared. Hubs cost deg rows. */
   def biasedWalks(edges: DataFrame, length: Int, wReturn: Long,
                   wCommon: Long, wOut: Long): DataFrame =
-    biasedWalksOn(neighborArrays(edges), length, wReturn, wCommon, wOut)
+    biasedWalksOn(rankedAdjacency(edges), length, wReturn, wCommon, wOut)
 
-  /** [[biasedWalks]] over built [[neighborArrays]]. */
-  private[graft] def biasedWalksOn(nbrArr: DataFrame, length: Int,
+  /** [[biasedWalks]] over a built [[rankedAdjacency]]. */
+  private[graft] def biasedWalksOn(adj: DataFrame, length: Int,
                                    wReturn: Long, wCommon: Long,
                                    wOut: Long): DataFrame =
-    biasedWalksKernel(nbrArr, length, wReturn, wCommon, wOut)
+    biasedWalksKernel(adj, length, wReturn, wCommon, wOut)
       .orderBy("walk_id", "step")
 
   /** [[biasedWalksOn]] without the declared output ordering — see
     * [[walksKernel]]. */
-  private def biasedWalksKernel(nbrArr: DataFrame, length: Int,
+  private def biasedWalksKernel(adj: DataFrame, length: Int,
                                 wReturn: Long, wCommon: Long,
-                                wOut: Long): DataFrame = {
+                                wOut: Long): DataFrame =
+    walksFromStarts(adj, length)(biasedHop(adj, wReturn, wCommon, wOut))
+
+  /** [[extendWalks]] for the BIASED variant: the second-order state
+    * is (prev, cur), both recoverable from the prior corpus's
+    * last two steps — so a biased corpus extends without re-walking
+    * too, bit-identical to the from-scratch longer walk (the
+    * declared query's oracle IS the length-(L+k) biased chain).
+    * Requires `fromLength ≥ 1` (step 0 alone has no prev). `adj` is
+    * the graph's [[rankedAdjacency]], the one the prior walked. */
+  def extendBiasedWalks(prior: DataFrame, adj: DataFrame,
+                        fromLength: Int, extraSteps: Int, wReturn: Long,
+                        wCommon: Long, wOut: Long): DataFrame = {
+    require(fromLength >= 1, "biased extension needs steps 0 and 1")
+    val hop = biasedHop(adj, wReturn, wCommon, wOut)
+    // ONE evaluation of the prior corpus — it feeds the two frontier
+    // reads (steps L and L−1) and the output prefix; see
+    // [[extendWalks]] (round 13)
+    val p = Pin.ensure(prior)
+    val frontier = Pin.pin(p
+      .filter(col("step") === fromLength.toLong)
+      .select(col("walk_id"), col("node_id").as("cur"))
+      .join(p.filter(col("step") === (fromLength - 1).toLong)
+        .select(col("walk_id"), col("node_id").as("prev")), Seq("walk_id"))
+      .select(col("walk_id"), col("prev"), col("cur")))
+    walkSteps(frontier, p.select(col("walk_id"), col("step"), col("node_id")),
+      from = fromLength, to = fromLength + extraSteps)(hop)
+      .orderBy("walk_id", "step")
+  }
+
+  /** The biased walk's hop, shared by [[biasedWalks]] and
+    * [[extendBiasedWalks]] so extension equals from-scratch by
+    * construction: step 1 is the [[uniformHop]], every later step
+    * the classify-weight-pick over `adj`, the relational twin of
+    * [[biasedCtes]]' `c$s`/`x$s`/`b$s`:
+    *
+    *  - candidates: the frontier joined to `adj` on `cur`, one row
+    *    per adjacency row (a duplicated edge row is a candidate
+    *    twice, as in the neighbor list);
+    *  - classification: a left join on (prev, nbr) against the
+    *    distinct (node, nbr) pairs of `adj` — both orientations are
+    *    in it, so it holds whatever the caller's edge orientation, and
+    *    `distinct` keeps it a membership test (a duplicated edge row
+    *    cannot double a weight);
+    *  - the three-way weight, the per-walk running sum ordered by
+    *    `nbr` and the total, and the straddle filter picking the ONE
+    *    candidate whose weight interval holds raw mod total.
+    *
+    * The lookup is pinned keyed on its probe, on the first biased
+    * step of each call, so no step exchanges it or the adjacency:
+    * a step's exchanges move only its frontier and candidates. */
+  private def biasedHop(adj: DataFrame, wReturn: Long, wCommon: Long,
+                        wOut: Long): (DataFrame, Int) => DataFrame = {
     // all three weights strictly positive: a walk sitting at a
     // degree-1 node whose only neighbor is `prev` has total weight
     // wReturn — at 0 the pick modulus is 0, where Spark nulls and
@@ -287,118 +322,26 @@ object Walks {
     // step total by construction.
     require(wReturn > 0 && wCommon > 0 && wOut > 0,
       "biased-walk weights must be strictly positive")
-    val starts = Pin.pin(nbrArr.select(col("node"))
-      .select(col("node").as("walk_id"), col("node").as("cur")))
-    var out = starts.select(col("walk_id"), lit(0L).as("step"),
-      col("cur").as("node_id"))
-    // step 1: uniform ranked pick, shared with the unbiased variant —
-    // the sorted array IS the rank order, so indexing it at the hash
-    // pick selects the same neighbor [[walkSteps]]'s rk-residual join
-    // does (one frontier-sized join, array side pinned)
-    var frontier = Pin.pin(starts
-      .join(nbrArr.select(col("node").as("cur"), col("nbrs").as("__cn")),
-        Seq("cur"))
-      .select(col("walk_id"), col("cur").as("prev"),
-        element_at(col("__cn"),
-          (expr(pickExpr(1, "size(__cn)")) + 1).cast("int")).as("cur")))
-    out = out.unionAll(frontier.select(col("walk_id"), lit(1L).as("step"),
-      col("cur").as("node_id")))
-    for (s <- 2 to length) {
-      val sel = biasedStep(frontier, nbrArr, s, wReturn, wCommon, wOut)
-      frontier = Pin.pin(sel.select(col("walk_id"),
-        col("cur").as("prev"), col("nbr").as("cur")))
-      out = out.unionAll(frontier.select(col("walk_id"),
-        lit(s.toLong).as("step"), col("cur").as("node_id")))
-    }
-    out
-  }
-
-  /** [[extendWalks]] for the BIASED variant: the second-order state
-    * is (prev, cur), both recoverable from the prior corpus's
-    * last two steps — so a biased corpus extends without re-walking
-    * too, bit-identical to the from-scratch longer walk (the
-    * declared query's oracle IS the length-(L+k) biased chain).
-    * Requires `fromLength ≥ 1` (step 0 alone has no prev). `nbrArr`
-    * is the graph's [[neighborArrays]], the one the prior walked. */
-  def extendBiasedWalks(prior: DataFrame, nbrArr: DataFrame,
-                        fromLength: Int, extraSteps: Int, wReturn: Long,
-                        wCommon: Long, wOut: Long): DataFrame = {
-    require(fromLength >= 1, "biased extension needs steps 0 and 1")
-    require(wReturn > 0 && wCommon > 0 && wOut > 0,
-      "biased-walk weights must be strictly positive")
-    // ONE evaluation of the prior corpus — it feeds the two frontier
-    // reads (steps L and L−1) and the output prefix; see
-    // [[extendWalks]] (round 13)
-    val p = Pin.ensure(prior)
-    var frontier = Pin.pin(p
-      .filter(col("step") === fromLength.toLong)
-      .select(col("walk_id"), col("node_id").as("cur"))
-      .join(p.filter(col("step") === (fromLength - 1).toLong)
-        .select(col("walk_id"), col("node_id").as("prev")), Seq("walk_id"))
-      .select(col("walk_id"), col("prev"), col("cur")))
-    var out = p.select(col("walk_id"), col("step"), col("node_id"))
-    for (s <- fromLength + 1 to fromLength + extraSteps) {
-      val sel = biasedStep(frontier, nbrArr, s, wReturn, wCommon, wOut)
-      frontier = Pin.pin(sel.select(col("walk_id"),
-        col("cur").as("prev"), col("nbr").as("cur")))
-      out = out.unionAll(frontier.select(col("walk_id"),
-        lit(s.toLong).as("step"), col("cur").as("node_id")))
-    }
-    out.orderBy("walk_id", "step")
-  }
-
-  /** One biased hop: classify, weight, running-sum pick — shared by
-    * [[biasedWalks]] and [[extendBiasedWalks]], so extension equals
-    * from-scratch by construction.
-    *
-    * Round-13 form (guide §2.3/§2.4): two frontier-sized joins attach
-    * `cur`'s and `prev`'s pinned sorted neighbor arrays, then the
-    * whole node2vec hop — classification, total weight, hash target,
-    * running-sum pick — runs as array expressions INSIDE the row.
-    * Selection is bit-identical to the r12 expansion+window form:
-    * the sorted array IS the window's nbr-ascending order, the
-    * per-element weight is the same three-way CASE (`x = prev` →
-    * wReturn; `x` adjacent to prev, i.e. in cn∩pn, → wCommon; else
-    * wOut — membership in prev's array ⟺ the old (least, greatest)
-    * edge-lookup hit), the total is the aggregate of those SAME
-    * weights (never a closed form, so duplicate edges or self-loops
-    * in a caller's relation can't split target from scan), and the
-    * pick keeps the old straddle rule: first x with cum(x) > raw %
-    * tot. What no longer exists per step: the O(Σ deg) candidate
-    * expansion, its classification-join shuffle, and the two
-    * per-walk window passes over it. */
-  private def biasedStep(frontier: DataFrame, nbrArr: DataFrame, s: Int,
-                         wReturn: Long, wCommon: Long,
-                         wOut: Long): DataFrame = {
-    // per-element weight — referenced by both the total and the scan,
-    // so the two agree expression-for-expression
-    def w(x: String) =
-      s"""CASE WHEN $x = prev THEN ${wReturn}L
-         |     WHEN array_contains(__ca, $x) THEN ${wCommon}L
-         |     ELSE ${wOut}L END""".stripMargin
-    frontier
-      .join(nbrArr.select(col("node").as("cur"), col("nbrs").as("__cn")),
-        Seq("cur"))
-      .join(nbrArr.select(col("node").as("prev"), col("nbrs").as("__pn")),
-        Seq("prev"))
-      // cn ∩ pn (order/dedup irrelevant — only membership is read):
-      // one hash-set pass per row, so the scan's wCommon test probes
-      // the small common-neighbor array, not all of pn
-      .withColumn("__ca", array_intersect(col("__cn"), col("__pn")))
-      .withColumn("__tot",
-        expr(s"aggregate(__cn, CAST(0 AS BIGINT), (acc, x) -> acc + ${w("x")})"))
-      .withColumn("__t",
-        expr(s"((((walk_id % $P2) + $s * $stride) * $ba + $bb) % $P2) % __tot"))
-      .withColumn("nbr", expr(
-        s"""aggregate(__cn,
-           |  named_struct('cum', CAST(0 AS BIGINT),
-           |               'sel', CAST(NULL AS BIGINT)),
-           |  (acc, x) -> named_struct(
-           |    'cum', acc.cum + ${w("x")},
-           |    'sel', CASE WHEN acc.sel IS NULL AND acc.cum + ${w("x")} > __t
-           |                THEN x ELSE acc.sel END),
-           |  acc -> acc.sel)""".stripMargin))
-      .select(col("walk_id"), col("cur"), col("nbr"))
+    lazy val edges = Pin.pin(adj.select(col("node").as("prev"), col("nbr"))
+      .distinct(), "walks.edges", Seq(col("prev"), col("nbr")))
+    val upTo = Window.partitionBy(col("walk_id")).orderBy(col("nbr"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    (frontier, s) =>
+      if (s == 1) uniformHop(adj)(frontier, s)
+      else frontier
+        .join(adj.select(col("node").as("cur"), col("nbr")), Seq("cur"))
+        .join(edges.withColumn("__e", lit(true)), Seq("prev", "nbr"), "left")
+        .withColumn("__w", when(col("nbr") === col("prev"), lit(wReturn))
+          .when(col("__e").isNotNull, lit(wCommon))
+          .otherwise(lit(wOut)))
+        .withColumn("__raw",
+          expr(s"(((walk_id % $P2) + $s * $stride) * $ba + $bb) % $P2"))
+        .withColumn("__hi", sum(col("__w")).over(upTo))
+        .withColumn("__tot",
+          sum(col("__w")).over(Window.partitionBy(col("walk_id"))))
+        .filter(col("__raw") % col("__tot") >= col("__hi") - col("__w") &&
+          col("__raw") % col("__tot") < col("__hi"))
+        .select(col("walk_id"), col("cur").as("prev"), col("nbr").as("cur"))
   }
 
   /** Backtrack audit: for each walk variant, the share of steps
@@ -406,12 +349,8 @@ object Walks {
     * measurable the bias dial exists to move (wReturn < wOut must
     * push return_ppm below the unbiased walk's). One row per
     * variant. */
-  def walkBiasAudit(edges0: DataFrame, length: Int, wReturn: Long,
+  def walkBiasAudit(edges: DataFrame, length: Int, wReturn: Long,
                     wCommon: Long, wOut: Long): DataFrame = {
-    // both variants walk the SAME graph — pin the edge build once
-    // instead of once per variant
-    val edges = Pin.pin(edges0.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v")))
     def returns(w: DataFrame, variant: String): DataFrame = {
       // compare node_t with node_{t+2}: shift the later step back by
       // 2 and equi-join on (walk_id, step) — one comparison per
@@ -428,12 +367,12 @@ object Walks {
           col("n_returns"),
           expr("(n_returns * 1000000L) div n_steps").as("return_ppm"))
     }
-    returns(Pin.pin(walksKernel(rankedAdjacency(edges), length),
+    // both variants walk the SAME graph state
+    val adj = rankedAdjacency(edges)
+    returns(Pin.pin(walksKernel(adj, length),
         "walks.audit.u", Seq(col("walk_id"))), "uniform")
       .unionAll(returns(
-        Pin.pin(
-          biasedWalksKernel(neighborArrays(edges), length, wReturn,
-            wCommon, wOut),
+        Pin.pin(biasedWalksKernel(adj, length, wReturn, wCommon, wOut),
           "walks.audit.b", Seq(col("walk_id"))),
         "biased"))
       .orderBy("variant")

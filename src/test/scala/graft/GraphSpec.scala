@@ -217,9 +217,9 @@ class GraphSpec extends SparkSpec {
   test("constructing triangleCounts, linkPredict and linkPredictApprox " +
       "stays within its job ceiling") {
     // K4 on {1,2,3,4} plus the pendant path 4-5-6. Each ceiling is the
-    // kernel's pins' jobs, plus the 2 of the id min/max `.first()` that
-    // picks the packed pair key of triangleCounts and linkPredict; a
-    // driver-side scan added to a constructor raises the count
+    // kernel's pins' jobs: the id range that picks the packed pair key
+    // of triangleCounts and linkPredict is observed under the degree
+    // pin, so a driver-side scan added to a constructor raises the count
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L)).toDF("u", "v")
     val jobs = Map(
@@ -228,11 +228,17 @@ class GraphSpec extends SparkSpec {
       "linkPredictApprox" ->
         jobsDuring(Graph.linkPredictApprox(edges, 10))._2)
     val ceilings =
-      Map("triangleCounts" -> 8, "linkPredict" -> 8, "linkPredictApprox" -> 11)
+      Map("triangleCounts" -> 6, "linkPredict" -> 6, "linkPredictApprox" -> 11)
     ceilings.foreach { case (kernel, max) =>
       assert(jobs(kernel) <= max,
         s"constructing $kernel started ${jobs(kernel)} jobs, over $max")
     }
+  }
+
+  test("linkPredict over an empty edge set ranks nothing: the id-range " +
+      "observation of an empty degree pin still returns") {
+    val none = Seq.empty[(Long, Long)].toDF("u", "v")
+    assert(Graph.linkPredict(none, 1, 10).count() == 0L)
   }
 
   test("linkPredict: apex-degree guard suppresses hub wedges") {

@@ -33,7 +33,9 @@ class SpreadDisciplineSpec extends SparkSpec {
   private val iteratingRegistry = Seq(
     "textrank_keywords", "hits_scores", "graph_bfs_reach",
     "graph_sssp", "community_lpa", "kcore_rounds", "graph_walks",
-    "graph_ppr", "graph_ppr_recommend", "graph_betweenness")
+    "graph_walks_biased", "graph_walks_biased_extended",
+    "walk_bias_audit", "graph_ppr", "graph_ppr_recommend",
+    "graph_betweenness")
 
   test("iterating registry: no single-task stage carries the round " +
       "volume (the AQE byte-proportional coalesce trap)") {

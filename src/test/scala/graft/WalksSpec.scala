@@ -133,6 +133,15 @@ class WalksSpec extends SparkSpec {
     val want = bruteBiased(edgeSeq, 3, 1L, 4L, 2L)
       .sortBy(r => (r._1, r._2))
     assert(got == want)
+    // one edge row duplicated: the neighbor list keeps both copies as
+    // candidates, while classification stays a membership test (the
+    // twin's edge SET) — a duplicate must not double a weight
+    val dupSeq = edgeSeq :+ ((1L, 3L))
+    val gotDup = Walks.biasedWalks(dupSeq.toDF("u", "v"), length = 3,
+        wReturn = 1L, wCommon = 4L, wOut = 2L)
+      .as[(Long, Long, Long)].collect().toSeq
+    assert(gotDup == bruteBiased(dupSeq, 3, 1L, 4L, 2L)
+      .sortBy(r => (r._1, r._2)))
   }
 
   test("biased walks: every hop is an edge, full length, positive-weight guard") {
@@ -154,10 +163,10 @@ class WalksSpec extends SparkSpec {
   }
 
   test("biasedWalks is orientation-invariant (edge rows need not be u<v)") {
-    // same graph, half the rows stored reversed: the walk topology
-    // was always orientation-proof (adjacency symmetrizes), and the
-    // canonicalized edge lookup now keeps the common/outward
-    // CLASSIFICATION orientation-proof too
+    // same graph, half the rows stored reversed: the adjacency
+    // symmetrizes, so the walk topology AND the common/outward
+    // classification (a lookup over both orientations) are
+    // orientation-proof
     val reversed = Seq((2L, 1L), (1L, 3L), (3L, 2L),
       (5L, 4L), (4L, 6L), (6L, 5L), (3L, 4L)).toDF("u", "v")
     val a = Walks.biasedWalks(bridged, 3, 1L, 4L, 2L)
@@ -172,7 +181,7 @@ class WalksSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     val extended = Walks.extendBiasedWalks(
         Walks.biasedWalks(bridged, 3, 1L, 4L, 2L),
-        Walks.neighborArrays(bridged), fromLength = 3, extraSteps = 2,
+        Walks.rankedAdjacency(bridged), fromLength = 3, extraSteps = 2,
         1L, 4L, 2L)
       .as[(Long, Long, Long)].collect().toSeq
     assert(extended == full)
