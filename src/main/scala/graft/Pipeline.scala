@@ -37,18 +37,19 @@ object Pipeline {
     * rows up, and every rerun sees an empty delta. */
   private val SeedTs = java.time.LocalDateTime.of(1900, 1, 2, 0, 0, 0)
 
-  /** `strict = true` arms BOTH validation layers:
+  /** Two validation layers guard a run:
     *
-    *   - the stage-local PRE-publish gates (the reference author's
-    *     production note, SQL:1622): each load validates its candidate
-    *     frame before `StagedWrite.overwrite` and aborts — table,
-    *     watermark, success log untouched — on a violation
-    *     ([[graft.checks.Checks.prePublishDim]]/[[graft.checks.Checks.prePublishFact]]);
+    *   - every load's PRE-publish gate (the reference author's
+    *     production note, SQL:1622) always runs: each load checks its
+    *     candidate's touched keys with the Stage-5 sweep code before
+    *     the publish and aborts — table, watermark, success log
+    *     untouched — on a violation ([[graft.meta.LoadTransaction]]);
     *   - the POST-publish sweep below (the reference's own Stage 5
-    *     runs after its loads, SQL:1616-1622), which additionally
-    *     covers cross-table invariants (referential integrity,
-    *     structure) that no single stage owns, and throws on any
-    *     non-empty result instead of returning counts.
+    *     runs after its loads, SQL:1616-1622) covers whole tables and
+    *     the cross-table invariants (referential integrity, structure)
+    *     that no single load owns. It always returns its counts;
+    *     `strict = true` also throws a
+    *     [[graft.checks.CheckViolation]] on any nonzero one.
     *
     * A no-op rerun is almost all fixed per-job cost, so the run keeps
     * its job count down:
@@ -96,7 +97,7 @@ object Pipeline {
       val src = Tables.src(spark, sfDir, name)
       name -> new Scd2Dimension(name, nk, "valid_from", tracked).load(
         spark, src.withColumn("valid_from", lit(SeedTs)), Some(src.select(nk)),
-        wh.int(s"dim_$name"), tracker, log, preValidate = strict)
+        wh.int(s"dim_$name"), tracker, log)
     }
 
     // genuinely versioned dim from the events change feed. Named
@@ -109,7 +110,7 @@ object Pipeline {
     val dimUser = new Scd2Dimension("user_profile", "user_id", "valid_from",
       Seq("event_type", "value"), Seq("event_id"))
     val userInserts = dimUser.load(spark, userFeed, None,
-      wh.int("dim_user_profile"), tracker, log, preValidate = strict)
+      wh.int("dim_user_profile"), tracker, log)
 
     // (name, natural key, table) of every SCD2 dim, read once
     val dims = (snapshotDims.map(d => d._1 -> d._2) :+ ("user_profile" -> "user_id"))
@@ -129,7 +130,7 @@ object Pipeline {
           col("l_partkey"), col("p_partkey"))),
         "supplier" -> ((currentDim("supplier", "s_suppkey"),
           col("l_suppkey"), col("s_suppkey")))),
-      wh.int("factsales"), tracker, log, preValidate = strict)
+      wh.int("factsales"), tracker, log)
     val fact = Tables.read(spark, wh.int("factsales"))
 
     // 4. the validation sweep (reference Stage 5); the marts (reference
@@ -146,16 +147,11 @@ object Pipeline {
         "dim_user_profile", "factsales").map(n => n -> wh.int(n)) ++
         Seq("etl_load_tracker", "etl_run_log").map(n => n -> wh.meta(n))
     val violations = counts - "dim_date_rows" +
-      ("structure_missing" -> Checks.structure(spark, expectedTables).count())
+      ("structure_missing" -> Checks.structure(spark, expectedTables).size.toLong)
 
     val result = RunResult(counts("dim_date_rows"),
       snapshotInserts.toMap + ("user_profile" -> userInserts), factInserts, violations)
-    if (strict) {
-      val broken = violations.filter(_._2 > 0)
-      if (broken.nonEmpty)
-        throw new IllegalStateException(
-          s"validation failed: ${broken.toSeq.sortBy(_._1).mkString(", ")}")
-    }
+    if (strict) Checks.enforce(violations)
     result
   }
 

@@ -4,32 +4,26 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** Thrown by [[Checks.enforce]] with the nonzero `(check, n)` counts,
+  * sorted by check name: by every load's pre-publish gate
+  * ([[graft.meta.LoadTransaction.gate]]), where the message lands in
+  * the run log's FAIL row, and by a strict [[graft.Pipeline.runAll]]'s
+  * post-publish sweep. */
+final class CheckViolation(val counts: Seq[(String, Long)])
+  extends IllegalStateException(s"validation failed: ${counts.mkString(", ")}")
+
 /** Validation suite — reference Stage 5/X (SQL:1616-1839). The
   * reference's hard constraints (PK/FK/unique indexes, SQL:536-565)
   * are unenforceable on Parquet, so — exactly as its author frames at
   * SQL:1747-1750 — they become "soft refs with checks": each invariant
   * is a DataFrame that must come back empty (SURVEY §5).
   */
-/** Thrown by [[Checks.prePublish]] when a candidate frame violates an
-  * invariant; the failing check names ride along for the run log. */
-final class PrePublishViolation(val failing: Seq[String])
-  extends IllegalStateException(
-    s"pre-publish validation failed: ${failing.mkString(", ")}")
-
 object Checks {
 
   /** Duplicate detection (reference SQL:1642-1650 etc.):
     * GROUP BY key HAVING COUNT(*) > 1. */
   def duplicates(df: DataFrame, key: Seq[String]): DataFrame =
     df.groupBy(key.map(col): _*).count().filter(col("count") > 1)
-
-  /** At most one current row per natural key (reference SQL:1658-1663). */
-  def multipleCurrent(dim: DataFrame, nk: String): DataFrame =
-    duplicates(dim.filter(col("is_current") === 1L), Seq(nk))
-
-  /** No NULL validity bounds (reference SQL:1664-1667). */
-  def nullValidity(dim: DataFrame): DataFrame =
-    dim.filter(col("active_from").isNull || col("active_to").isNull)
 
   /** No overlapping SCD2 intervals per key (reference SQL:1668-1683
     * self theta-join). The windowed `lead` formulation detects the
@@ -69,27 +63,18 @@ object Checks {
   }
 
   /** Warehouse structure check — reference Stage 5.1 (SQL:1626-1638):
-    * the expected table list, anti-joined against what actually exists
-    * on disk. Returns the MISSING tables (empty = pass), exactly the
-    * reference's `WHERE t.name IS NULL` shape. The existence probe is
-    * driver-side metadata (one filesystem call per expected table, not
-    * a data scan). */
+    * the expected `(name, path)` list, anti-joined against what
+    * actually exists on disk. Returns the MISSING tables (empty =
+    * pass), exactly the reference's `WHERE t.name IS NULL` shape. The
+    * existence probe is driver-side metadata (one filesystem call per
+    * expected table, not a data scan). */
   def structure(spark: org.apache.spark.sql.SparkSession,
-                expected: Seq[(String, String)]): DataFrame = {
-    import scala.jdk.CollectionConverters._
+                expected: Seq[(String, String)]): Seq[(String, String)] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val missing = expected.filterNot { case (_, path) =>
+    expected.filterNot { case (_, path) =>
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(hconf).exists(p)
     }
-    spark.createDataFrame(
-      missing.map { case (n, p) =>
-        org.apache.spark.sql.Row(n, p) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("table_name",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("expected_path",
-          org.apache.spark.sql.types.StringType, nullable = false))))
   }
 
   /** Soft referential integrity (reference SQL:1746-1783): fact rows
@@ -105,10 +90,12 @@ object Checks {
   /** The post-publish Stage-5 sweep of [[graft.Pipeline.runAll]]
     * (reference SQL:1616-1783), fused into three actions instead of
     * one `count()` per check: [[factSweep]], [[dimSweep]] and
-    * [[dateSweep]]. Each returns exactly the counts the per-check
-    * functions above give when counted one by one (pinned by
-    * `SweepParitySpec`); the three are independent of each other, so
-    * a caller may run them concurrently.
+    * [[dateSweep]]. The first two are also every load's pre-publish
+    * gate, over its touched keys ([[graft.meta.LoadTransaction.gate]]).
+    * Each returns exactly the counts the per-check formulations give
+    * when counted one by one (pinned by `SweepParitySpec`); the three
+    * are independent of each other, so a caller may run them
+    * concurrently.
     *
     * The fact sweep: `ref_<dim>` per entry of `dims` (stored
     * non-Unknown surrogates that resolve to no `<dim>_id`, the
@@ -134,8 +121,9 @@ object Checks {
 
   /** The SCD2 sweep over `dims` = (name, natural key, table), as ONE
     * window over their union keyed by (dimension, natural key):
-    * `multi_current_<name>` ([[multipleCurrent]]),
-    * `null_validity_<name>` ([[nullValidity]]) and `overlaps_<name>`
+    * `multi_current_<name>` (more than one current row per natural
+    * key, reference SQL:1658-1663), `null_validity_<name>` (a NULL
+    * validity bound, SQL:1664-1667) and `overlaps_<name>`
     * ([[overlaps]] with the `active_to` tiebreak: versions can share
     * an `active_from` — two changes at one timestamp give a zero-width
     * version — and end-ordering puts the zero-width interval first so
@@ -174,8 +162,14 @@ object Checks {
     totals(dimDate.groupBy(col("date_value")).agg(count(lit(1)).as("__n")),
       Seq(col("__n").as("dim_date_rows"), flag(col("__n") > 1L).as("dup_date")))
 
+  /** Throws a [[CheckViolation]] naming every nonzero count. */
+  def enforce(counts: Map[String, Long]): Unit = {
+    val broken = counts.filter(_._2 > 0).toSeq.sortBy(_._1)
+    if (broken.nonEmpty) throw new CheckViolation(broken)
+  }
+
   /** 1 where `cond` holds, else 0 (NULL counts as not holding, as in
-    * the filters of the per-check functions). */
+    * the filters of the per-check formulations). */
   private def flag(cond: Column): Column = when(cond, 1L).otherwise(0L)
 
   /** Sum each named column of `df` into one driver-side row; an empty
@@ -187,58 +181,4 @@ object Checks {
     named.columns.zipWithIndex.map { case (c, i) =>
       c -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }.toMap
   }
-
-  /** Pre-publish validation gate — the reference author's production
-    * note ("checks should be in the pipeline and stop each stage on
-    * error", SQL:1622): invariants run against the CANDIDATE frame,
-    * before `StagedWrite.overwrite`, so a violating build aborts with
-    * the published table, the watermark, and the run log's success
-    * row all untouched. Stronger than the post-publish sweep in
-    * [[graft.Pipeline.runAll]]'s validation stage, which fires only
-    * after the run is committed.
-    *
-    * Cost: one extra pass over the candidate per check (`isEmpty` =
-    * scan-until-first-violation, not a full count). With `touchedKeys`
-    * given, the pass covers only the touched natural-key subset —
-    * untouched rows pass through the incremental loads byte-identical
-    * and were validated when they were published, and every checked
-    * invariant is per-key (dup/current/overlap within one nk), so a
-    * violation can only involve touched rows. That keeps gate cost
-    * proportional to the delta, not the table. */
-  def prePublish(checks: Seq[(String, DataFrame)]): Unit = {
-    val broken = checks.collect { case (name, df) if !df.isEmpty => name }
-    if (broken.nonEmpty)
-      throw new PrePublishViolation(broken)
-  }
-
-  private def scopeTo(candidate: DataFrame, nk: String,
-                      touchedKeys: Option[DataFrame]): DataFrame =
-    touchedKeys match {
-      case Some(keys) =>
-        candidate.join(keys.select(col(nk)).distinct(), Seq(nk), "left_semi")
-      case None => candidate
-    }
-
-  /** SCD2 dimension candidate invariants (reference SQL:1658-1683),
-    * scoped to `touchedKeys` when the caller knows which natural keys
-    * this load rewrote (None = full validation, e.g. initial load). */
-  def prePublishDim(candidate: DataFrame, nk: String,
-                    tiebreak: Seq[Column] = Nil,
-                    touchedKeys: Option[DataFrame] = None): Unit = {
-    val scoped = scopeTo(candidate, nk, touchedKeys)
-    prePublish(Seq(
-      "multi_current" -> multipleCurrent(scoped, nk),
-      "null_validity" -> nullValidity(scoped),
-      "overlaps" -> overlaps(scoped, nk, tiebreak)))
-  }
-
-  /** Fact candidate invariants: natural key uniqueness (the
-    * reference's unique index on sales_nk, SQL:536-565). Incremental
-    * loads pass the delta's key set: untouched ⋕ contested partitions
-    * are disjoint by construction, so a duplicate can only appear
-    * among touched keys. */
-  def prePublishFact(candidate: DataFrame, nk: String,
-                     touchedKeys: Option[DataFrame] = None): Unit =
-    prePublish(Seq(
-      "dup_nk" -> duplicates(scopeTo(candidate, nk, touchedKeys), Seq(nk))))
 }

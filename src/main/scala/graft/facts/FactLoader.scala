@@ -1,13 +1,12 @@
 package graft.facts
 
-import java.sql.Timestamp
-import java.time.LocalDateTime
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.meta.{LoadTracker, RunLog, StagedWrite}
+import graft.checks.Checks
+import graft.meta.{LoadTracker, LoadTransaction, RunLog, StagedWrite}
+import graft.meta.LoadTransaction.Candidate
 import graft.schema.Tables
 
 /** Fact table load — reference `etl_load_factsales` (SQL:1339-1538),
@@ -20,7 +19,10 @@ import graft.schema.Tables
   * union(existing fact, fresh delta) → keep the latest edit per
   * natural key with a window (reference guard SQL:1402) → overwrite
   * via staged swap. Unknown-mapped rows re-resolve automatically
-  * because the dim lookup reruns (reference SQL:1399-1401).
+  * because the dim lookup reruns (reference SQL:1399-1401). The
+  * transaction around that plan (watermark, gate, publish, tracker,
+  * run log) is [[graft.meta.LoadTransaction]], shared with every
+  * dimension load.
   *
   * Scale posture: the delta and existing fact shuffle once on
   * `sales_nk` (the window partition); dim lookups are broadcast
@@ -58,12 +60,15 @@ object FactLoader {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Incremental fact load against a warehouse (used by Pipeline).
+  /** Incremental fact load against a warehouse (used by Pipeline), one
+    * [[graft.meta.LoadTransaction]]: it recovers, reads the watermark,
+    * runs the delta stats, gates, publishes, advances and logs; this
+    * plan resolves the dimension lookups and keeps the latest edit per
+    * contested key. An existing fact with an empty delta is the no-op.
     *
-    * `preValidate = true` checks natural-key uniqueness of the
-    * candidate fact BEFORE the staged publish
-    * ([[graft.checks.Checks.prePublishFact]]); a violation aborts
-    * with table, watermark, and success log untouched.
+    * The gate is the Stage-5 fact sweep's natural-key uniqueness
+    * (`dup_fact_nk`, [[graft.checks.Checks.factSweep]]) over the
+    * delta's keys.
     *
     * Run-log counts: rows_inserted = delta rows consumed,
     * rows_updated = existing fact rows with a strictly newer delta
@@ -72,28 +77,13 @@ object FactLoader {
     * policy (I6). */
   def load(spark: SparkSession, lineitem: DataFrame, orders: DataFrame,
            dims: Map[String, (DataFrame, Column, Column)],
-           factPath: String, tracker: LoadTracker, log: RunLog,
-           preValidate: Boolean = false): Long = {
-    val started = new Timestamp(System.currentTimeMillis())
-    try {
-      StagedWrite.recover(spark, factPath) // heal any crashed publish first
-      val wm = tracker.watermark("factsales")
-      val editTs = greatest(col("l_shipdate"), col("o_orderdate"))
-      val delta = withMeasures(
-        lineitem.join(orders, col("l_orderkey") === col("o_orderkey")))
-        .withColumn("sales_nk", salesNk)
-        .withColumn("last_edited", editTs)
-        .filter(col("last_edited") > lit(wm))
-      // One metadata scan BEFORE any other action, so the watermark
-      // reflects at most what this run incorporates even if the source
-      // gains rows mid-load (same invariant as Scd2Dimension): later
-      // arrivals are re-read next run and deduped by keep-latest.
-      val stats = delta.agg(count(lit(1)), max(col("last_edited"))).first()
-      val inserted = stats.getLong(0)
-      val dataWm =
-        if (inserted == 0L) None
-        else Option(stats.getAs[LocalDateTime](1))
-
+           factPath: String, tracker: LoadTracker, log: RunLog): Long = {
+    val source = withMeasures(
+      lineitem.join(orders, col("l_orderkey") === col("o_orderkey")))
+      .withColumn("sales_nk", salesNk)
+      .withColumn("last_edited", greatest(col("l_shipdate"), col("o_orderdate")))
+    LoadTransaction.run(spark, "factsales", factPath, tracker, log, source,
+        "last_edited", "sales_nk", Checks.factSweep(_, Nil)) { (delta, inserted) =>
       // dim surrogate lookups, Unknown (-1) fallback; dims broadcast
       val resolved = dims.foldLeft(delta) {
         case (df, (dimName, (dim, probeKey, dimKey))) =>
@@ -108,61 +98,37 @@ object FactLoader {
           "value_posttax", "last_edited") ++
           dims.keys.toSeq.sorted.map(d => s"${d}_sk")).map(col): _*)
 
-      val existing: Option[DataFrame] =
-        if (StagedWrite.exists(spark, factPath)) Some(Tables.read(spark, factPath))
-        else None
-
-      if (existing.isDefined && inserted == 0) {
-        // no-op rerun: leave the table alone (reference SQL:71-73 —
-        // second run inserts 0 rows). No `return` here: a non-local
-        // return would unwind as an exception through the catch below.
-        tracker.advance("factsales", None)
-        log.append("etl_load_factsales", started, 0L, 0L, 0L,
-          RunLog.Success, None)
-        0L
-      } else {
+      if (!StagedWrite.exists(spark, factPath))
+        Some(Candidate(latestPerKey(projected, Seq("sales_nk"), col("last_edited")),
+          None, 0L, 0L))
+      // no-op rerun: leave the table alone (reference SQL:71-73 —
+      // second run inserts 0 rows)
+      else if (inserted == 0L) None
+      else {
         // keep-latest is scoped to CONTESTED keys (those present in
         // the delta): untouched fact rows pass through without
         // re-shuffling — at 100 TB the correction window touches a
-        // sliver of the fact, not all of it
-        val (fact, updated, touchedScope) = existing match {
-          case Some(f) =>
-            val deltaKeys = projected.select(col("sales_nk")).distinct()
-            val untouched = f.join(deltaKeys, Seq("sales_nk"), "left_anti")
-            val contested = f.join(deltaKeys, Seq("sales_nk"), "left_semi")
-              .unionByName(projected)
-            // rows_updated: stored rows the delta corrects (a strictly
-            // newer edit for the same natural key) — the delta side of
-            // the comparison is a pre-aggregated per-key max, so the
-            // probe is existing-fact ⋈ broadcast(delta keys)
-            val nUpdated = f.join(
-                projected.groupBy(col("sales_nk"))
-                  .agg(max(col("last_edited")).as("__delta_ts")),
-                Seq("sales_nk"))
-              .filter(col("__delta_ts") > col("last_edited")).count()
-            (untouched.unionByName(
-              latestPerKey(contested, Seq("sales_nk"), col("last_edited"))),
-              nUpdated, Some(deltaKeys))
-          case None =>
-            (latestPerKey(projected, Seq("sales_nk"), col("last_edited")),
-              0L, None)
-        }
-
-        // gate scoped to the delta's keys: untouched rows are
-        // byte-identical to the published (already-validated) table
-        if (preValidate)
-          graft.checks.Checks.prePublishFact(fact, "sales_nk", touchedScope)
-        StagedWrite.overwrite(fact, factPath)
-        tracker.advance("factsales", dataWm)
-        log.append("etl_load_factsales", started, inserted, updated, 0L,
-          RunLog.Success, None)
-        inserted
+        // sliver of the fact, not all of it. Untouched ⋕ contested are
+        // disjoint by construction, so the delta's keys are the gate's
+        // whole scope.
+        val f = Tables.read(spark, factPath)
+        val deltaKeys = projected.select(col("sales_nk")).distinct()
+        val untouched = f.join(deltaKeys, Seq("sales_nk"), "left_anti")
+        val contested = f.join(deltaKeys, Seq("sales_nk"), "left_semi")
+          .unionByName(projected)
+        // rows_updated: stored rows the delta corrects (a strictly
+        // newer edit for the same natural key) — the delta side of
+        // the comparison is a pre-aggregated per-key max, so the
+        // probe is existing-fact ⋈ broadcast(delta keys)
+        val nUpdated = f.join(
+            projected.groupBy(col("sales_nk"))
+              .agg(max(col("last_edited")).as("__delta_ts")),
+            Seq("sales_nk"))
+          .filter(col("__delta_ts") > col("last_edited")).count()
+        Some(Candidate(untouched.unionByName(
+            latestPerKey(contested, Seq("sales_nk"), col("last_edited"))),
+          Some(deltaKeys), nUpdated, 0L))
       }
-    } catch {
-      case e: Throwable =>
-        log.append("etl_load_factsales", started, 0L, 0L, 0L, RunLog.Fail,
-          Some(String.valueOf(e.getMessage)))
-        throw e
     }
   }
 }

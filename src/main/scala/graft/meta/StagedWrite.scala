@@ -22,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   4. delete `target.old`               (crash here: [[recover]]
   *      deletes the leftover)
   *
-  * [[recover]] must run before the first read of a load (the loaders
-  * call it) so a crashed step 2/4 is healed rather than misread as
+  * [[recover]] must run before the first read of a load
+  * ([[LoadTransaction]] calls it) so a crashed step 2/4 is healed rather than misread as
   * "table does not exist" — which would silently rebuild from the
   * delta alone. Single writer per table is assumed (the reference runs
   * its loads sequentially, SQL:1799-1811); on a real cluster this

@@ -13,7 +13,8 @@ import graft.schema.Tables
 
 /** Fault injection in the window between a load's publish and its
   * watermark advance (`StagedWrite.overwrite`, then `tracker.advance`,
-  * in both `Scd2Dimension.load` and `FactLoader.load`). A crash there
+  * in the `LoadTransaction` that `Scd2Dimension.load` and
+  * `FactLoader.load` share). A crash there
   * leaves the new table published under the old watermark. The rerun
   * must re-read the same delta and converge to the same table; the
   * watermark must never run ahead of what the table holds; the run log
@@ -50,7 +51,7 @@ class LoaderFaultSpec extends SparkSpec {
     val dim = new Scd2Dimension("user_profile", "user_id", "valid_from",
       Seq("event_type", "value"), Seq("event_id"))
     def load(tracker: LoadTracker, f: DataFrame): Long =
-      dim.load(spark, f, None, path, tracker, log, preValidate = true)
+      dim.load(spark, f, None, path, tracker, log)
     val key = Seq("user_id", "active_from", "event_id")
 
     val ts = feed.select("valid_from").distinct().orderBy("valid_from")
@@ -88,8 +89,7 @@ class LoaderFaultSpec extends SparkSpec {
     val lineitem = Tables.src(spark, sf, "lineitem")
     val orders = Tables.src(spark, sf, "orders")
     def load(tracker: LoadTracker, li: DataFrame): Long =
-      FactLoader.load(spark, li, orders, Map.empty, path, tracker, log,
-        preValidate = true)
+      FactLoader.load(spark, li, orders, Map.empty, path, tracker, log)
 
     val edit = greatest(col("l_shipdate"), col("o_orderdate"))
     val edits = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))

@@ -22,13 +22,21 @@ class PipelineSpec extends SparkSpec {
     * table read, another 16. */
   private val NoopJobCeiling = 47
 
+  /** Jobs of a strict build from an empty root on the same fixture and
+    * session: 125 measured, plus the same slack of 5. The build runs
+    * every load's pre-publish gate (one fused sweep action per load)
+    * and the post-publish sweep. */
+  private val BuildJobCeiling = 130
+
   test("runAll is idempotent and passes all validation checks") {
     val root = Files.createTempDirectory("graft_wh").toString
 
-    // strict mode arms the stage-local pre-publish gates (which must
-    // pass on every real candidate frame here) and the post-publish
-    // sweep (which must find nothing)
-    val first = Pipeline.runAll(spark, sf, root, strict = true)
+    // every load gates its candidate before the publish (the gates
+    // must pass on every real candidate frame here), and strict mode
+    // throws if the post-publish sweep finds anything
+    val (first, buildJobs) = jobsDuring(Pipeline.runAll(spark, sf, root, strict = true))
+    assert(buildJobs <= BuildJobCeiling,
+      s"a strict build ran $buildJobs Spark jobs; the ceiling is $BuildJobCeiling")
     assert(first.dimDateRows > 2000L)
     assert(first.dimInserts.values.forall(_ > 0L), s"first run must load: ${first.dimInserts}")
     assert(first.factInserts > 0L)
@@ -39,10 +47,10 @@ class PipelineSpec extends SparkSpec {
     val factAfterFirst = spark.read.parquet(s"$root/int/factsales")
       .orderBy("sales_nk").collect()
 
-    // rerun in strict mode: arms the stage-local pre-publish gates AND
-    // the post-publish sweep — a healthy warehouse must sail through.
-    // The listener counts the rerun's Spark jobs: a no-op rerun is
-    // nearly all per-job latency, so its job count is guarded
+    // strict rerun: a healthy warehouse must sail through. Its loads
+    // are no-ops, so none of them reaches its gate. The listener
+    // counts the rerun's Spark jobs: a no-op rerun is nearly all
+    // per-job latency, so its job count is guarded
     val (second, jobs) = jobsDuring(Pipeline.runAll(spark, sf, root, strict = true))
     assert(jobs <= NoopJobCeiling,
       s"a no-op rerun ran $jobs Spark jobs; the ceiling is $NoopJobCeiling")

@@ -6,7 +6,7 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.checks.Checks
+import graft.checks.{CheckViolation, Checks}
 import graft.meta.StagedWrite
 import graft.schema.Warehouse
 
@@ -17,6 +17,7 @@ import graft.schema.Warehouse
   * would fan fact rows out into false duplicates if a probe joined it
   * unaggregated. */
 class SweepParitySpec extends SparkSpec {
+  import SweepParitySpec._
 
   private val dimKeys = Seq("customer" -> "c_custkey", "part" -> "p_partkey",
     "supplier" -> "s_suppkey", "user_profile" -> "user_id")
@@ -89,8 +90,8 @@ class SweepParitySpec extends SparkSpec {
         "dup_fact_nk" -> Checks.duplicates(fact, Seq("sales_nk")).count(),
         "dup_date" -> Checks.duplicates(dimDate, Seq("date_value")).count()) ++
       dims.flatMap { case (n, nk, d) => Seq(
-        s"multi_current_$n" -> Checks.multipleCurrent(d, nk).count(),
-        s"null_validity_$n" -> Checks.nullValidity(d).count(),
+        s"multi_current_$n" -> multipleCurrent(d, nk).count(),
+        s"null_validity_$n" -> nullValidity(d).count(),
         s"overlaps_$n" -> Checks.overlaps(d, nk, Seq(col("active_to"))).count())
       }.toMap
     val planted = Map("ref_customer" -> 1L, "ref_part" -> 1L, "ref_supplier" -> 1L,
@@ -109,10 +110,24 @@ class SweepParitySpec extends SparkSpec {
     val lax = Pipeline.runAll(spark, sf, root)
     assert(lax.violations.keySet == perCheck.keySet + "structure_missing")
     assert(lax.violations == perCheck + ("dup_date" -> 0L) + ("structure_missing" -> 0L))
-    val e = intercept[IllegalStateException](Pipeline.runAll(spark, sf, root, strict = true))
+    val e = intercept[CheckViolation](Pipeline.runAll(spark, sf, root, strict = true))
     (planted - "dup_date").foreach { case (name, n) =>
       assert(e.getMessage.contains(s"($name,$n)"), s"$name missing from: ${e.getMessage}")
     }
     assert(!e.getMessage.contains("dup_date"))
+    assert(e.counts.toMap == planted - "dup_date")
   }
+}
+
+/** The per-check reference formulations of the SCD2 sweep's
+  * `multi_current` and `null_validity` counts. */
+object SweepParitySpec {
+
+  /** At most one current row per natural key (reference SQL:1658-1663). */
+  def multipleCurrent(dim: DataFrame, nk: String): DataFrame =
+    Checks.duplicates(dim.filter(col("is_current") === 1L), Seq(nk))
+
+  /** No NULL validity bounds (reference SQL:1664-1667). */
+  def nullValidity(dim: DataFrame): DataFrame =
+    dim.filter(col("active_from").isNull || col("active_to").isNull)
 }
