@@ -5,7 +5,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.checks.Checks
 import graft.dims.{DateDim, Scd2Dimension}
@@ -57,6 +59,14 @@ object Pipeline {
     *   - the control plane is read once: one [[LoadTracker]] per run
     *     (read on first use, rewritten from memory), and the run log
     *     is read with its declared schema;
+    *   - the control plane is written on the driver: a tracker advance
+    *     or a run-log row is a parquet file written with no Spark job;
+    *   - a load whose delta is proven empty from the optimized plan or
+    *     the source footers runs no stats action
+    *     ([[graft.meta.LoadTransaction]]); what is left of a no-op
+    *     load is the snapshot dims' deleted-key scan;
+    *   - `int/dim_date` is rewritten only when its build range or
+    *     schema changes; the date sweep still reads it every run;
     *   - every source is read once, and every warehouse table once,
     *     right after its last write (a DataFrame made before a
     *     `StagedWrite` of its own path would hold a stale file
@@ -82,9 +92,17 @@ object Pipeline {
     val tracker = new LoadTracker(spark, wh.meta("etl_load_tracker"))
     val log = new RunLog(spark, wh.meta("etl_run_log"))
 
-    // 1. date dimension (reference Stage 2.2)
-    StagedWrite.overwrite(DateDim.build(spark, "1995-01-01", "2001-12-31"),
-      wh.int("dim_date"))
+    // 1. date dimension (reference Stage 2.2). Its key carries the
+    // build range, so a published table whose footer schema equals the
+    // one about to be written holds this build: it is not rewritten. A
+    // change to DateDim.build's values that keeps its schema must also
+    // change this tag
+    val (dateFrom, dateTo) = ("1995-01-01", "2001-12-31")
+    val dateDim = DateDim.build(spark, dateFrom, dateTo).withMetadata("date_key",
+      new MetadataBuilder().putString("built_from", dateFrom)
+        .putString("built_to", dateTo).build())
+    if (!FooterSchema.of(spark, wh.int("dim_date")).contains(dateDim.schema))
+      StagedWrite.overwrite(dateDim, wh.int("dim_date"))
     val dimDate = Tables.read(spark, wh.int("dim_date"))
 
     // 2. SCD2 dims (reference Stage 2.3-2.5 / procs): static snapshot

@@ -177,7 +177,7 @@ object Checks {
   private def totals(df: DataFrame, cols: Seq[Column]): Map[String, Long] = {
     val named = df.select(cols: _*)
     val row = named.agg(sum(col(named.columns.head)),
-      named.columns.tail.map(c => sum(col(c))): _*).first()
+      named.columns.toSeq.tail.map(c => sum(col(c))): _*).first()
     named.columns.zipWithIndex.map { case (c, i) =>
       c -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }.toMap
   }

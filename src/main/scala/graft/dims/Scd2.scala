@@ -105,7 +105,7 @@ object Scd2 {
     * rows (SURVEY §2.J41). `values` must match `dim`'s columns. */
   def withUnknownRow(dim: DataFrame, values: Map[String, Column]): DataFrame = {
     val one = dim.sparkSession.range(1)
-    val unknown = one.select(dim.columns.map(c =>
+    val unknown = one.select(dim.columns.toSeq.map(c =>
       values.getOrElse(c, lit(null)).cast(dim.schema(c).dataType).as(c)): _*)
     dim.unionByName(unknown)
   }

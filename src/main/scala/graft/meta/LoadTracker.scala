@@ -2,9 +2,8 @@ package graft.meta
 
 import java.time.LocalDateTime
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.DriverParquet
 import org.apache.spark.sql.types._
 
 /** Watermark tracker — reference `etl_load_tracker` (SQL:242-256).
@@ -25,10 +24,11 @@ import org.apache.spark.sql.types._
   * An instance reads the table ONCE, on first use, with the declared
   * [[LoadTracker.schema]] (no schema-inference job), and afterwards
   * serves watermarks from its in-memory copy; [[advance]] rewrites the
-  * table from that copy. This is sound under the single-writer
-  * assumption [[StagedWrite]] already documents: nothing but this
-  * instance writes the table while it lives. `Pipeline.runAll` makes
-  * one instance per run, so a run reads the tracker once instead of
+  * table from that copy, as one parquet file written on the driver with
+  * no Spark job ([[DriverParquet]]) and published by [[StagedWrite]].
+  * This is sound under the single-writer assumption [[StagedWrite]]
+  * already documents: nothing but this instance writes the table while
+  * it lives. `Pipeline.runAll` makes one instance per run, so a run reads the tracker once instead of
   * twice per load. A writer that may race another process must make a
   * fresh instance per load. Not final: a test substitutes a tracker
   * whose [[advance]] fails, to crash a load between publish and
@@ -64,11 +64,10 @@ class LoadTracker(spark: SparkSession, path: String) {
     val now = LocalDateTime.now()
     val cur = read()
     val next = cur + (table -> dataWatermark.getOrElse(cur.getOrElse(table, Epoch)))
-    // LocalRelation, not parallelize: rewriting a handful of rows
-    // should not schedule an RDD job beyond the write itself
-    val rows = next.toSeq.map { case (k, v) => Row(k, v, now) }
-    StagedWrite.overwrite(
-      spark.createDataFrame(rows.asJava, schema).coalesce(1), path)
+    // written on the driver: rewriting a handful of rows runs no Spark
+    // job, and the staged swap publishes it as it does any table
+    val rows = next.iterator.map { case (k, v) => Row(k, v, now) }
+    StagedWrite.publish(spark, path)(DriverParquet.write(spark, _, schema, rows))
     state = Some(next)
   }
 }

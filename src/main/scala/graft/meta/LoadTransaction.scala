@@ -4,6 +4,9 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.datasources.parquet.FooterStats
 import org.apache.spark.sql.functions._
 
 import graft.checks.Checks
@@ -22,11 +25,17 @@ import graft.checks.Checks
   *      before the plan reads it;
   *   2. filters the source past the table's data watermark, a driver
   *      literal, so the scan prunes on push-down;
-  *   3. runs the delta's `count`/`max(ts)` as its FIRST action: a
-  *      non-snapshot source can gain rows between actions, and the
-  *      watermark must never advance past rows that were not
+  *   3. observes the delta FIRST, before any other read of the
+  *      source: a non-snapshot source can gain rows between reads, and
+  *      the watermark must never advance past rows that were not
   *      incorporated. Later arrivals are re-read next run and deduped
-  *      by the plan (version identity, keep-latest);
+  *      by the plan (version identity, keep-latest). The observation
+  *      is the footer listing when it proves the delta empty
+  *      ([[provenEmpty]]): it reads the files of the source's own
+  *      listing, the ones every later scan of the delta reads, and
+  *      counts 0 rows with no max, so only the clock advances and a
+  *      no-op rerun runs no stats job. Otherwise it is the delta's
+  *      `count`/`max(ts)` action;
   *   4. asks the plan for a [[Candidate]]. None is the no-op: only the
   *      execution clock advances, the log row carries zeros and nothing
   *      is written;
@@ -61,9 +70,15 @@ object LoadTransaction {
       log.append(s"etl_load_$table", started, inserted, updated, deleted, status, error)
     try {
       StagedWrite.recover(spark, target)
-      val delta = source.filter(col(ts) > lit(tracker.watermark(table)))
-      val stats = delta.agg(count(lit(1)), max(col(ts))).first()
-      val inserted = stats.getLong(0)
+      val wm = tracker.watermark(table)
+      val delta = source.filter(col(ts) > lit(wm))
+      // an empty delta's max is NULL: only the clock moves
+      val (inserted, deltaMax) =
+        if (provenEmpty(source, delta, ts, wm)) (0L, None)
+        else {
+          val stats = delta.agg(count(lit(1)), max(col(ts))).first()
+          (stats.getLong(0), Option(stats.getAs[LocalDateTime](1)))
+        }
       plan(delta, inserted) match {
         case None =>
           tracker.advance(table, None)
@@ -72,8 +87,7 @@ object LoadTransaction {
         case Some(c) =>
           gate(c.table, nk, c.touched, sweep)
           StagedWrite.overwrite(c.table, target)
-          // an empty delta's max is NULL: only the clock moves
-          tracker.advance(table, Option(stats.getAs[LocalDateTime](1)))
+          tracker.advance(table, deltaMax)
           logRow(inserted, c.updated, c.deleted, RunLog.Success, None)
           inserted
       }
@@ -83,6 +97,20 @@ object LoadTransaction {
         throw e
     }
   }
+
+  /** Whether `delta` (`source` past watermark `wm` on `ts`) is empty,
+    * proven with no Spark job: the optimizer has already reduced it to
+    * an empty `LocalRelation` (a snapshot dim, whose `ts` is a
+    * literal), or the parquet footers of `source`'s files bound `ts`
+    * at or below `wm` ([[FooterStats.upperBound]], the listing the
+    * delta's scan reads). False whenever either is in doubt. */
+  private def provenEmpty(source: DataFrame, delta: DataFrame, ts: String,
+                          wm: LocalDateTime): Boolean =
+    FooterStats.upperBound(source, ts).exists(!_.isAfter(wm)) ||
+      (delta.queryExecution.optimizedPlan match {
+        case l: LocalRelation => l.data.isEmpty
+        case _ => false
+      })
 
   /** The pre-publish gate: the loader's Stage-5 `sweep` as one action
     * over the candidate rows whose `nk` is in `touched` (all rows when

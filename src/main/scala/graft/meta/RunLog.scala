@@ -3,12 +3,16 @@ package graft.meta
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.DriverParquet
 import org.apache.spark.sql.types._
 
 /** Append-only ETL run log — reference `etl_run_log` (SQL:574-586):
   * (run name, start/end, rows inserted/updated/deleted, status, error).
-  * Written once per load as a tiny append; reading it back is a normal
-  * DataFrame scan, so log analytics scale like any other table.
+  * Written once per load: one row, one new parquet file, written on the
+  * driver with no Spark job ([[DriverParquet]]) and renamed into place
+  * only once complete, so a crash mid-append leaves no half-written part
+  * file. Reading it back is a normal DataFrame scan, so log analytics
+  * scale like any other table.
   */
 final class RunLog(spark: SparkSession, path: String) {
   import RunLog._
@@ -18,10 +22,7 @@ final class RunLog(spark: SparkSession, path: String) {
              status: String, errorMessage: Option[String]): Unit = {
     val row = Row(runName, startedAt, new Timestamp(System.currentTimeMillis()),
       rowsInserted, rowsUpdated, rowsDeleted, status, errorMessage.orNull)
-    // LocalRelation, not parallelize: a one-row append should not
-    // schedule an RDD job
-    spark.createDataFrame(java.util.List.of(row), schema)
-      .write.mode("append").parquet(path)
+    DriverParquet.write(spark, path, schema, Iterator(row))
   }
 
   /** Read with the declared [[RunLog.schema]]: no schema-inference

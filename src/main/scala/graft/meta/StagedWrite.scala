@@ -32,12 +32,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object StagedWrite {
 
-  def overwrite(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
+  def overwrite(df: DataFrame, target: String): Unit =
+    publish(df.sparkSession, target)(df.write.mode("overwrite").parquet(_))
+
+  /** The rename dance around any staging step: `stage` writes the
+    * complete new version into the directory it is given (step 1). */
+  def publish(spark: SparkSession, target: String)(stage: String => Unit): Unit = {
     recover(spark, target)
     val staging =
       new Path(target + ".staging-" + UUID.randomUUID().toString.take(8))
-    df.write.mode("overwrite").parquet(staging.toString)
+    stage(staging.toString)
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tgt = new Path(target)
     val old = new Path(target + ".old")

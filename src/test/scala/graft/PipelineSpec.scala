@@ -15,18 +15,26 @@ import graft.marts.Marts
 class PipelineSpec extends SparkSpec {
 
   /** Jobs of a no-op strict rerun on the sf0.001 fixture with this
-    * suite's session: 42 measured, plus a slack of 5 for planner
-    * changes (AQE can split or fold a stage). The per-check sweep and
-    * per-load tracker re-reads ran 133 jobs in the benchmark's
-    * `etl_warehouse` rerun; parquet schema inference, one job per
-    * table read, another 16. */
-  private val NoopJobCeiling = 47
+    * suite's session: 22 measured, plus a slack of 5 for planner
+    * changes (AQE can split or fold a stage). They are the three sweep
+    * actions, the snapshot dims' deleted-key scans and the tracker
+    * read. The per-check sweep and per-load tracker re-reads ran 133
+    * jobs in the benchmark's `etl_warehouse` rerun; parquet schema
+    * inference, one job per table read, another 16; the control-plane
+    * writes, the stats actions and the date-dim rewrite another 19. */
+  private val NoopJobCeiling = 27
 
   /** Jobs of a strict build from an empty root on the same fixture and
-    * session: 125 measured, plus the same slack of 5. The build runs
-    * every load's pre-publish gate (one fused sweep action per load)
-    * and the post-publish sweep. */
-  private val BuildJobCeiling = 130
+    * session: 115 measured, plus the same slack of 5. The build runs
+    * every load's stats action and pre-publish gate (one fused sweep
+    * action per load) and the post-publish sweep. */
+  private val BuildJobCeiling = 120
+
+  /** Frames no job of a no-op rerun may start from: a control-plane
+    * write, a table write (the date dim's included) or a load's stats
+    * action. */
+  private val NoopFreeFrames =
+    Seq("RunLog", "LoadTracker.advance", "StagedWrite", "LoadTransaction$.run")
 
   test("runAll is idempotent and passes all validation checks") {
     val root = Files.createTempDirectory("graft_wh").toString
@@ -34,9 +42,10 @@ class PipelineSpec extends SparkSpec {
     // every load gates its candidate before the publish (the gates
     // must pass on every real candidate frame here), and strict mode
     // throws if the post-publish sweep finds anything
-    val (first, buildJobs) = jobsDuring(Pipeline.runAll(spark, sf, root, strict = true))
-    assert(buildJobs <= BuildJobCeiling,
-      s"a strict build ran $buildJobs Spark jobs; the ceiling is $BuildJobCeiling")
+    val (first, buildJobs) = jobSitesDuring(Pipeline.runAll(spark, sf, root, strict = true))
+    assert(buildJobs.size <= BuildJobCeiling,
+      s"a strict build ran ${buildJobs.size} Spark jobs; the ceiling is $BuildJobCeiling:\n" +
+        bySite(buildJobs))
     assert(first.dimDateRows > 2000L)
     assert(first.dimInserts.values.forall(_ > 0L), s"first run must load: ${first.dimInserts}")
     assert(first.factInserts > 0L)
@@ -51,9 +60,16 @@ class PipelineSpec extends SparkSpec {
     // are no-ops, so none of them reaches its gate. The listener
     // counts the rerun's Spark jobs: a no-op rerun is nearly all
     // per-job latency, so its job count is guarded
-    val (second, jobs) = jobsDuring(Pipeline.runAll(spark, sf, root, strict = true))
-    assert(jobs <= NoopJobCeiling,
-      s"a no-op rerun ran $jobs Spark jobs; the ceiling is $NoopJobCeiling")
+    val (second, jobs) = jobSitesDuring(Pipeline.runAll(spark, sf, root, strict = true))
+    assert(jobs.size <= NoopJobCeiling,
+      s"a no-op rerun ran ${jobs.size} Spark jobs; the ceiling is $NoopJobCeiling:\n" +
+        bySite(jobs))
+    val needless = jobs.filter(s => NoopFreeFrames.exists(f => s.contains(s"graft.meta.$f")))
+    assert(needless.isEmpty, s"a no-op rerun ran jobs it cannot need:\n${bySite(needless)}")
+    // the checks that can still find something still run
+    Seq("Checks$.dimSweep", "Checks$.totals", "Scd2Dimension").foreach { f =>
+      assert(jobs.exists(_.contains(f)), s"no rerun job starts in $f:\n${bySite(jobs)}")
+    }
     assert(second.dimInserts.values.forall(_ == 0L),
       s"rerun must insert 0 dim rows: ${second.dimInserts}")
     assert(second.factInserts == 0L, "rerun must insert 0 fact rows")
